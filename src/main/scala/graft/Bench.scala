@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** Driver-run benchmark: one JSON line with per-query wall-clock at
@@ -112,13 +111,7 @@ object Bench {
       }
     }
     val loadStart = loadAvg1m()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
     val names = SparkEntry.queries.keys.toSeq.sorted
     Seq(warmDir, sfDir).foreach { dir =>

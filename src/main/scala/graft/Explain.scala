@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time one named query and print its formatted physical plan.
   * Usage: scripts/run.sh graft.Explain <queryName> [sfDir] [plan]
   */
@@ -11,14 +9,9 @@ object Explain {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val showPlan = args.contains("plan")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
+    sys.env.get("SPARK_GRAFT_AQE")
+      .foreach(spark.conf.set("spark.sql.adaptive.enabled", _))
     spark.sparkContext.setLogLevel("ERROR")
     if (sys.env.contains("SPARK_GRAFT_JOBLOG")) {
       spark.sparkContext.addSparkListener(

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: sweep EVERY declared query's optimized plan for the
   * duplicated-expensive-expression signature — a Filter whose condition
   * embeds a higher-order-function subtree (`aggregate(`/`transform(`/
@@ -27,12 +25,7 @@ object PlanSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
     var hits = 0
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>

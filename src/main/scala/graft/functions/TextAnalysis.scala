@@ -39,12 +39,10 @@ object TextAnalysis {
     * over code points — the native codegen'd [[PolyHash]] expression.
     * Oracle twin: DuckDB `list_reduce` (see `graft.queries.TextQ.sqlHash`).
     */
-  def strHash(s: Column): Column =
-    if (sys.env.get("GRAFT_PORTABLE_HASH").contains("1")) strHashPortable(s)
-    else PolyHash(s)
+  def strHash(s: Column): Column = PolyHash(s)
 
   /** Built-ins-only twin of [[strHash]] (regex scan + interpreted fold);
-    * kept as the cross-implementation check for the codegen'd expression.
+    * kept as the spec reference for the codegen'd expression.
     * `(?s)` so '.' matches newlines, like PolyHash's code-point loop.
     */
   def strHashPortable(s: Column): Column =
@@ -57,12 +55,10 @@ object TextAnalysis {
     * hash keys a corpus-wide equi-join: the 31-bit space saturates around
     * ~50k distinct values. Oracle twin: `graft.queries.TextQ.sqlWideHash`.
     */
-  def wideStrHash(s: Column): Column =
-    if (sys.env.get("GRAFT_PORTABLE_HASH").contains("1")) wideStrHashPortable(s)
-    else WidePolyHash(s)
+  def wideStrHash(s: Column): Column = WidePolyHash(s)
 
   /** Built-ins-only twin of [[wideStrHash]] — the composed two-polynomial
-    * form the single-loop expression replaces (cross-implementation check).
+    * form the single-loop expression replaces (the spec reference).
     */
   def wideStrHashPortable(s: Column): Column = {
     def poly(mult: Long): Column =

@@ -446,7 +446,7 @@ object Packing {
 
   /** RIGHT-TO-BE-FORGOTTEN over MATERIALIZED pack streams — the last
     * mile of a deletion cascade: the claims stores retract
-    * ([[graft.store.ClaimRetraction]]), the standing indexes delete
+    * ([[graft.store.ClaimLog.retract]]), the standing indexes delete
     * ([[Retrieval.bm25DeleteIndex]] family), but the training shards a
     * deleted document was already packed into still CONTAIN its tokens.
     * `forgetPacks` masks them out SHAPE-STABLY: every token position in

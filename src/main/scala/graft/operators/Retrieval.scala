@@ -352,7 +352,7 @@ object Retrieval {
   }
 
   /** DELETE documents from the standing index — the retrieval twin of
-    * the claim stores' retraction ([[graft.store.ClaimRetraction]]):
+    * the claim stores' retraction ([[graft.store.ClaimLog.retract]]):
     * recrawl deletions (DMCA, robots, tombstones) must leave the index
     * scoring EXACTLY as if the documents had never been indexed, or
     * retrieval keeps surfacing (and idf keeps discounting against)

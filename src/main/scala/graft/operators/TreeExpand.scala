@@ -160,15 +160,6 @@ object TreeExpand {
     var mode: String = DriverMode
     var frontierKnownEmpty = false
 
-    /** Measure the new frontier and pick next round's residency: one
-      * `head(cap+1)` job (cheap — the source is checkpointed); a count job
-      * only on the rare large-frontier rounds to apply the broadcast cap. */
-    val dbg = sys.env.contains("GRAFT_TREE_DEBUG")
-    def tdbg[A](label: String)(f: => A): A = {
-      val t0 = System.nanoTime(); val r = f
-      if (dbg) println(f"[tree] $label%-30s ${(System.nanoTime() - t0) / 1e9}%.3fs")
-      r
-    }
     // suspend AQE for a small-graph expansion: every stage is tiny and
     // broadcast-only, so adaptive replanning is pure per-stage latency.
     // Large graphs keep the session's setting (skew handling on the wide
@@ -184,7 +175,10 @@ object TreeExpand {
     def rowBytes(r: org.apache.spark.sql.Row): Long =
       32L + (if (r.isNullAt(3)) 0 else r.getString(3).length)
 
-    def adopt(nextFrontier: DataFrame): Unit = tdbg("adopt") {
+    /** Measure the new frontier and pick next round's residency: one
+      * `head(cap+1)` job (cheap — the source is checkpointed); a count job
+      * only on the rare large-frontier rounds to apply the broadcast cap. */
+    def adopt(nextFrontier: DataFrame): Unit = {
       val sample = nextFrontier.head(driverFrontierRows + 1)
       val sampleBytes = sample.iterator.map(rowBytes).sum
       if (sample.length <= driverFrontierRows && sampleBytes <= broadcastMaxBytes) {
@@ -250,10 +244,8 @@ object TreeExpand {
           // small (driver-frontier) rounds — 32 near-empty partitions per
           // probe is pure overhead there; wide rounds keep their parallelism
           val union = levels.reverse.reduce(_ unionAll _)
-          val batch = tdbg(s"materialize depth<=${depth + rounds} ($mode)") {
-            (if (mode == DriverMode) union.coalesce(8) else union)
-              .localCheckpoint()
-          }
+          val batch = (if (mode == DriverMode) union.coalesce(8) else union)
+            .localCheckpoint()
           depth += rounds
           adopt(batch.filter(col("_depth") === depth))
           out = out.unionAll(batch)
@@ -360,12 +352,9 @@ object TreeExpand {
     // materializing the seed (+1 job ≈ 40 ms) closes that window before any
     // broadcast is planned; every LATER checkpoint is materialized by its
     // round's measure job before the next round broadcasts it, so the rounds
-    // keep the fused lazy design. Escape hatch for the latency-sensitive:
-    // spark.graft.treeExpand.lazySeed=true restores the old behavior.
-    val lazySeed = edges.sparkSession.conf
-      .get("spark.graft.treeExpand.lazySeed", "false").toBoolean
+    // keep the fused lazy design.
     val rootSet = roots.select(col(idCol).as("_rid")).distinct()
-      .localCheckpoint(!lazySeed)
+      .localCheckpoint(true)
     // State per node: _ptr  = current jump target (null ⟺ chain resolved)
     //                 _term = terminal node once resolved (a cut point:
     //                         chosen root, or a real root — filtered later)

@@ -94,15 +94,10 @@ import graft.operators.{Decontaminate, Dedup, Mixing, Packing, Redact}
   * copies differ in extraction quality and the components pass is worth
   * its cost.
   *
-  * `audit = true` (default) eagerly materializes each stage
-  * (`localCheckpoint`) and counts it — each count then reads its own
-  * materialization instead of replaying the whole upstream lineage, and
-  * the caller's action on the returned frame starts from the last
-  * checkpoint. `audit = false` skips the materializations and counts and
-  * returns the composed plan with every Report field -1; note the plan is
-  * still not fully lazy — [[Dedup.minhashPairs]] eagerly materializes its
-  * candidate set internally, so some Spark jobs run at curate() time
-  * either way.
+  * Every stage is materialized eagerly (`localCheckpoint`) and counted —
+  * each count then reads its own materialization instead of replaying
+  * the whole upstream lineage, and the caller's action on the returned
+  * frame starts from the last checkpoint.
   */
 object Curation {
 
@@ -155,8 +150,8 @@ object Curation {
              mixBudgetTokens: Long = 0L,
              mixMaxEpochs: Long = 1L,
              packBudget: Long = 2048,
-             bpeMerges: Option[Seq[graft.operators.Bpe.Merge]] = None,
-             audit: Boolean = true): (DataFrame, Report) = {
+             bpeMerges: Option[Seq[graft.operators.Bpe.Merge]] = None)
+      : (DataFrame, Report) = {
     val outClash = docs.columns.filter(Seq("n_tokens", "pack_id").contains)
     require(outClash.isEmpty,
       s"input already has output column(s) ${outClash.mkString(", ")} — " +
@@ -165,11 +160,10 @@ object Curation {
     graft.functions.RepetitionStats.ensureRegistered(spark)
     graft.functions.TokenStats.ensureRegistered(spark)
 
-    // stage boundary: materialize once under audit so each count (and the
-    // next stage) reads the checkpoint, not the full upstream lineage
-    def stage(df: DataFrame): DataFrame =
-      if (audit) df.localCheckpoint(true) else df
-    def n(df: DataFrame): Long = if (audit) df.count() else -1L
+    // stage boundary: materialize once so each count (and the next
+    // stage) reads the checkpoint, not the full upstream lineage
+    def stage(df: DataFrame): DataFrame = df.localCheckpoint(true)
+    def n(df: DataFrame): Long = df.count()
     // temp names that cannot shadow caller data (packByBudget's pattern)
     def fresh(base: String): String = Iterator.from(0)
       .map(i => if (i == 0) base else s"$base$i")
@@ -454,8 +448,7 @@ object Curation {
       nAfterExact = n(exactDeduped),
       nAfterNearDup = n(nearDup), nAfterDecontam = nDecontam,
       nAfterMix = if (mixIsNoop) nCapped else n(mixed),
-      nPacks = if (audit)
-        packed.select(sourceCol, "pack_id").distinct().count() else -1L,
+      nPacks = packed.select(sourceCol, "pack_id").distinct().count(),
       nAfterBoilerplate = if (boilerplateOn) n(exact) else -1L,
       nAfterUrlGate = if (urlGateOn) n(urlGated) else -1L,
       nAfterClassifier =

@@ -10,7 +10,7 @@ import graft.streaming.{StreamBoilerplate, StreamCuration, StreamDataCard, Strea
   * reality, `/root/reference/hnarchive.py:123-130`) through every piece
   * of STANDING STATE a curation deployment accumulates around a
   * document, with a per-component receipt. Round 14 built the legs —
-  * claim-store retraction ([[graft.store.ClaimRetraction]]), standing
+  * claim-store retraction ([[graft.store.ClaimLog.retract]]), standing
   * BM25 / IVF / graph index deletion, pack-stream masking
   * ([[graft.operators.Packing.forgetPacks]]), card decrement
   * ([[StreamDataCard.retract]]) — this composes them, because a partial
@@ -42,9 +42,8 @@ import graft.streaming.{StreamBoilerplate, StreamCuration, StreamDataCard, Strea
   *    `IncrementalAudioDedup` / `IncrementalVideoDedup` and the
   *    curation funnels ([[StreamCuration]]/[[StreamMediaCuration]], the
   *    `textClaimsDir`/`mediaClaimsDir` legs): first-writer claim
-  *    stores (the shared `ClaimStore` mechanics) —
-  *    [[graft.store.ClaimRetraction]] clears the dead claimant's
-  *    buckets.
+  *    stores (the shared [[graft.store.ClaimLog]]) — its retraction
+  *    clears the dead claimant's buckets.
   *  - `IncrementalCdcDedup` (`cdcClaimsDir` leg): per-CHUNK first-writer
   *    claims — retraction clears the dead claimant's chunk identities so
   *    a recrawled copy is never suppressed against content that no

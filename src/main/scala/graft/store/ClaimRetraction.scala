@@ -3,30 +3,9 @@ package graft.store
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{broadcast, col}
 
-/** RETRACTION for first-writer-wins claim stores — the recrawl-reality
-  * API the streaming dedup family needs: when a claimant payload is
-  * DELETED from the corpus (DMCA, robots, tombstones — the reference's
-  * own deleted-item semantics, `/root/reference/hnarchive.py:123-130`),
-  * its claims must not keep dropping future duplicates against an
-  * identity that no longer ships — silent data loss in curation terms
-  * (every copy of a retracted document would vanish forever).
-  *
-  * Semantics: retracting ids DELETES every claim row whose claimant is
-  * one of them, CLEARING those buckets — the next arrival claims them
-  * first-writer-wins and becomes the surviving representative. The
-  * stores record only (bucket → claimant), never past members, so a
-  * copy dropped while the dead claimant held the bucket is not
-  * resurrected by retraction alone: re-ingest (recrawl/replay) the
-  * stream's source after retracting, which is exactly the workflow a
-  * deletion event triggers anyway. Spec-pinned: claim → drop a dup →
-  * retract the claimant → the replayed dup survives and becomes the new
-  * claimant; persistence across a reopened store.
-  *
-  * Cost: one O(store) rewrite via [[Snapshots.replace]] — the
-  * compaction cost, paid per retraction BATCH, not per id. Retraction
-  * is a rare administrative event; batch the deletion list (bounded
-  * loud at [[MaxRetractIds]] — past that, rebuild the store from the
-  * surviving corpus instead). */
+/** The deletion-list probes every forget leg shares — [[ClaimLog]]'s
+  * retraction, the standing indexes' deletes, [[PackForget]] and
+  * [[CorpusForget]] — and the batch ceiling they are all bounded by. */
 object ClaimRetraction {
 
   /** Ceiling on one retraction batch — a broadcastable deletion LIST
@@ -70,30 +49,4 @@ object ClaimRetraction {
     * survivor filter, same shape split as [[among]]. */
   def excluding(df: DataFrame, idCol: Column, ids: Seq[Long]): DataFrame =
     probe(df, idCol, ids, keep = false)
-
-  /** COUNT the claims whose `claimantCol` is in `ids` without touching
-    * the store — the post-cascade audit read ("did the takedown
-    * actually clear everything?"): after [[retract]] over the same ids
-    * this must read 0. */
-  def held(snaps: Snapshots, ids: Seq[Long],
-           claimantCol: String = "claimant"): Long =
-    if (ids.isEmpty) 0L
-    else among(snaps.read(), col(claimantCol), ids).count()
-
-  /** Delete every claim whose `claimantCol` is in `ids`; returns the
-    * number of claims removed (0 on an empty list or no matches — the
-    * store is untouched and not rewritten in either case). */
-  def retract(snaps: Snapshots, ids: Seq[Long],
-              claimantCol: String = "claimant"): Long = {
-    require(ids.size <= MaxRetractIds,
-      s"${ids.size} retraction ids exceed the $MaxRetractIds batch " +
-        "ceiling — rebuild the store from the surviving corpus instead")
-    if (ids.isEmpty) 0L
-    else {
-      val n = among(snaps.read(), col(claimantCol), ids).count()
-      if (n > 0L)
-        snaps.replace(excluding(snaps.read(), col(claimantCol), ids))
-      n
-    }
-  }
 }

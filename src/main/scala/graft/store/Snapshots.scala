@@ -5,8 +5,8 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** The parquet snapshot-store mechanic shared by [[ItemStore]] and
-  * [[graft.streaming.IncrementalDedup]]: versioned snapshot directories
+/** The parquet snapshot-store mechanic shared by [[ItemStore]],
+  * [[ClaimLog]] and the streaming stores: versioned snapshot directories
   * under a root, a `current` manifest file swapped atomically after each
   * write, and GC of superseded directories once the swap is durable.
   * Readers resolve through the manifest, so they never observe a
@@ -22,8 +22,10 @@ import org.apache.spark.sql.types.StructType
   *    as a new manifest line; [[read]] is the union of the base snapshot
   *    and all deltas. This is what makes a per-micro-batch writer scale:
   *    the store grows by what the batch added, never rewritten per batch.
-  *    Callers compact on their own cadence via `replace(read())` when
-  *    [[deltaCount]] grows — amortized O(store / compactEvery) per batch.
+  *  - [[commit]] — the delta-log commit policy every streaming writer
+  *    shares: skip an empty delta, append, and compact once
+  *    [[deltaCount]] reaches `compactEvery` — amortized
+  *    O(store / compactEvery) per batch.
   *
   * The manifest is newline-separated: optional `#`-prefixed metadata
   * lines, then directory names — first the base snapshot, then deltas in
@@ -58,10 +60,12 @@ import org.apache.spark.sql.types.StructType
   */
 final class Snapshots(spark: SparkSession, root: String, schema: StructType,
                       bucketBy: Option[(String, Int)] = None,
-                      partitionByCol: Option[String] = None) {
+                      partitionByCol: Option[String] = None,
+                      compactEvery: Int = Snapshots.DefaultCompactEvery) {
 
   require(bucketBy.isEmpty || partitionByCol.isEmpty,
     "bucketBy and partitionByCol are mutually exclusive store layouts")
+  Snapshots.requireCompactEvery(compactEvery)
 
   private val rootPath: Path = Paths.get(root)
   private val pointer: Path = rootPath.resolve("current")
@@ -282,6 +286,22 @@ final class Snapshots(spark: SparkSession, root: String, schema: StructType,
     }
   }
 
+  /** The one commit step of a delta log: an empty `delta` is skipped (one
+    * `head(1)` job) — a replayed or all-duplicate batch appends nothing
+    * and must not advance the compaction cadence; otherwise it is
+    * appended under `token` ([[appendDelta]]'s replay protection), and
+    * once [[deltaCount]] reaches `compactEvery` the log folds into one
+    * base via `replace(compacted)`. `compacted` is evaluated only then:
+    * [[read]] for first-writer-wins stores, the signed-count fold for
+    * additive ones. Callers materialize `delta` first when its plan is
+    * not already cheap to run twice. */
+  def commit(delta: DataFrame, token: Option[String] = None,
+             compacted: => DataFrame = read()): Unit =
+    if (delta.head(1).nonEmpty) {
+      appendDelta(delta, token)
+      if (deltaCount >= compactEvery) replace(compacted)
+    }
+
   /** Write `df` as the next base snapshot, swap the manifest, GC every
     * superseded directory (old base and deltas). `replace(read())` is the
     * delta-log compaction. Consumed delta names are recorded BEFORE the
@@ -384,4 +404,15 @@ object Snapshots {
     * magnitude past any real replay horizon while bounding the ledger
     * read that tokened appends pay. */
   val MaxConsumedTokens: Int = 10000
+
+  /** Delta depth at which [[Snapshots.commit]] compacts, unless the store
+    * names its own. */
+  val DefaultCompactEvery: Int = 16
+
+  /** The compaction-depth rule for every delta log, including the
+    * standing indexes that compact through their own stores: 0 would
+    * rewrite the whole store on every commit. */
+  def requireCompactEvery(compactEvery: Int): Unit =
+    require(compactEvery >= 1, s"compactEvery must be >= 1, got " +
+      s"$compactEvery — 0 would rewrite the whole store every commit")
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.store.Snapshots
+import graft.store.ClaimLog
 
 /** The shared CLAIMS core of the 64-bit perceptual-hash streaming twins
   * ([[IncrementalImageDedup]], [[IncrementalAudioDedup]]): band a
@@ -22,35 +22,17 @@ import graft.store.Snapshots
   * ([[graft.multimodal.Banded64.pairs]] + min-id keep) at linear cost
   * even when one signature floods a bucket. The modality owns only the
   * DECODE + HASH step. */
-private[streaming] final class IncrementalBanded64(
-    spark: SparkSession, root: String, compactEvery: Int, maxHamming: Int) {
+class IncrementalBanded64 private[streaming] (
+    spark: SparkSession, root: String, compactEvery: Int, maxHamming: Int)
+    extends ClaimLog(spark, root, IncrementalBanded64.schema,
+      compactEvery = compactEvery) {
   require(maxHamming >= 0 && maxHamming <= 64,
     s"maxHamming must be in [0, 64], got $maxHamming")
 
-  private val schema = StructType(Seq(
-    StructField("bkey", StringType, nullable = false),
-    StructField("claimant", LongType, nullable = false),
-    StructField("chash", LongType, nullable = false)))
-  private val snaps = new Snapshots(spark, root, schema)
-
-  def init(): Unit = snaps.init()
-
-  def buckets(): DataFrame = snaps.read()
-
-  /** Retract DELETED claimants ([[graft.store.ClaimRetraction]]'s
-    * contract): their buckets clear, the next arrival claims them.
-    * Returns the number of claims removed. */
-  def retract(ids: Seq[Long]): Long =
-    graft.store.ClaimRetraction.retract(snaps, ids)
-
-  /** Audit read: claims still held by `ids` (0 after [[retract]]). */
-  def held(ids: Seq[Long]): Long =
-    graft.store.ClaimRetraction.held(snaps, ids)
-
   /** `hashes` is (id: long, h: long) — the batch's decodable signatures;
     * rows of `batch` without one pass through unexamined. */
-  def filterAndClaim(batch: DataFrame, hashes: DataFrame,
-                     idCol: String): DataFrame = {
+  private[streaming] def filterAndClaim(batch: DataFrame, hashes: DataFrame,
+                                       idCol: String): DataFrame = {
     val bands = hashes
       .select(col("id"), col("h"),
         explode(array((0 until 4).map(b =>
@@ -61,7 +43,7 @@ private[streaming] final class IncrementalBanded64(
     def near(a: org.apache.spark.sql.Column,
              b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       bit_count(a.bitwiseXOR(b)) <= maxHamming
-    val storeDup = bands.join(snaps.read(), "bkey")
+    val storeDup = bands.join(read(), "bkey")
       .filter(col("claimant") =!= col("id") && near(col("h"), col("chash")))
       .select("id")
     // within-batch: smallest NEAR id wins. Identical hashes collapse to
@@ -91,20 +73,18 @@ private[streaming] final class IncrementalBanded64(
       .select(col("bkey"), col("m.id").as("min_id"), col("m.h").as("mhash"))
     val dropIds = storeDup.unionAll(batchDup).distinct()
       .withColumnRenamed("id", "_drop_id")
-    val kept = batch.join(dropIds,
-        batch(idCol).cast("long") === col("_drop_id"), "left_anti")
-      .localCheckpoint(true) // materialize BEFORE the snapshot advances
-    val newClaims = batchMin
-      .select(col("bkey"), col("min_id").as("claimant"),
-        col("mhash").as("chash"))
-      .join(snaps.read(), Seq("bkey"), "left_anti")
-      .localCheckpoint(true)
-    if (newClaims.head(1).nonEmpty) {
-      snaps.appendDelta(newClaims)
-      if (snaps.deltaCount >= compactEvery) snaps.replace(snaps.read())
-    }
-    kept
+    claim(batch.join(dropIds,
+        batch(idCol).cast("long") === col("_drop_id"), "left_anti"),
+      batchMin.select(col("bkey"), col("min_id").as("claimant"),
+        col("mhash").as("chash")))
   }
+}
+
+object IncrementalBanded64 {
+  private val schema = StructType(Seq(
+    StructField("bkey", StringType, nullable = false),
+    StructField("claimant", LongType, nullable = false),
+    StructField("chash", LongType, nullable = false)))
 }
 
 /** Streaming AUDIO near-dup claims — [[graft.multimodal.AudioDedup]]'s
@@ -113,23 +93,12 @@ private[streaming] final class IncrementalBanded64(
   * clips pass unexamined. */
 final class IncrementalAudioDedup(spark: SparkSession, root: String,
                                   compactEvery: Int = 16,
-                                  maxHamming: Int = 3) {
-  private val core = new IncrementalBanded64(spark, root, compactEvery,
-    maxHamming)
-
-  def init(): Unit = core.init()
-
-  def buckets(): DataFrame = core.buckets()
-
-  /** Retract deleted claimants' buckets (the family contract). */
-  def retract(ids: Seq[Long]): Long = core.retract(ids)
-
-  /** Audit read: claims still held by `ids` (0 after [[retract]]). */
-  def held(ids: Seq[Long]): Long = core.held(ids)
+                                  maxHamming: Int = 3)
+    extends IncrementalBanded64(spark, root, compactEvery, maxHamming) {
 
   def filterAndClaim(batch: DataFrame, bytesCol: String,
                      idCol: String): DataFrame =
-    core.filterAndClaim(batch,
+    filterAndClaim(batch,
       graft.multimodal.AudioDedup.audioHashes(batch, bytesCol, idCol)
         .withColumnRenamed("ahash", "h"),
       idCol)

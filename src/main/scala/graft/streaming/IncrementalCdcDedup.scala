@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.operators.Dedup
-import graft.store.Snapshots
+import graft.store.ClaimLog
 
 /** Streaming twin of the CDC partial-overlap dedup tier (q143-q146,
   * [[Dedup.cdcDupStats]]/[[Dedup.cdcPairs]]) — per-CHUNK first-writer
@@ -26,7 +26,7 @@ import graft.store.Snapshots
   * claim their unclaimed chunk identities first-writer-wins; DROPPED
   * documents claim NOTHING — a future copy must never be suppressed
   * against an identity that never shipped (the exact failure mode
-  * [[graft.store.ClaimRetraction]] exists to prevent on deletion).
+  * [[graft.store.ClaimLog]]'s retraction exists to prevent on deletion).
   *
   * Replay-stable without tokens: claims are anti-joined against the
   * store before appending, so a crash-replayed batch re-derives the
@@ -42,28 +42,11 @@ import graft.store.Snapshots
 final class IncrementalCdcDedup(spark: SparkSession, root: String,
                                 window: Int = 8, maskBits: Int = 5,
                                 minDupPpm: Long = 500000L,
-                                compactEvery: Int = 16) {
+                                compactEvery: Int = 16)
+    extends ClaimLog(spark, root, IncrementalCdcDedup.claimsSchema,
+      compactEvery = compactEvery) {
   require(minDupPpm >= 1L && minDupPpm <= 1000000L,
     s"minDupPpm must be in [1, 1000000], got $minDupPpm")
-  require(compactEvery >= 1, "compactEvery must be >= 1")
-
-  private val snaps =
-    new Snapshots(spark, root, IncrementalCdcDedup.claimsSchema)
-
-  def init(): Unit = snaps.init()
-
-  /** The standing (chunk hash → claimant) table. */
-  def claims(): DataFrame = snaps.read()
-
-  /** Retract DELETED claimants ([[graft.store.ClaimRetraction]]'s
-    * contract): their chunk claims clear, the next arrival claims
-    * them. Returns the number of claims removed. */
-  def retract(ids: Seq[Long]): Long =
-    graft.store.ClaimRetraction.retract(snaps, ids)
-
-  /** Audit read: claims still held by `ids` (0 after [[retract]]). */
-  def held(ids: Seq[Long]): Long =
-    graft.store.ClaimRetraction.held(snaps, ids)
 
   /** Filter one micro-batch (drop documents at or past `minDupPpm`
     * duplicated tokens) and claim the survivors' new chunk
@@ -73,7 +56,7 @@ final class IncrementalCdcDedup(spark: SparkSession, root: String,
     val ch = Dedup.cdcChunks(batch, idCol, textCol, window, maskBits)
       .select(col(idCol).cast("long").as("id"), col("n_tokens"), col("h"))
       .localCheckpoint(true)
-    val store = snaps.read()
+    val store = read()
     // duplicated occurrences: stored claimant is someone else...
     val storeDup = ch.join(store, "h")
       .filter(col("claimant") =!= col("id"))
@@ -93,20 +76,12 @@ final class IncrementalCdcDedup(spark: SparkSession, root: String,
       .filter(expr("_dup * 1000000L div _tot") >= minDupPpm)
       .select(col("id").as("_drop_id"))
       .localCheckpoint(true)
-    val kept = batch.join(dropIds,
-        batch(idCol).cast("long") === col("_drop_id"), "left_anti")
-      .localCheckpoint(true) // materialize BEFORE the snapshot advances
     // survivors claim their unclaimed identities, min kept carrier wins
-    val newClaims = unclaimed
-      .join(dropIds, col("id") === col("_drop_id"), "left_anti")
-      .groupBy("h").agg(min(col("id")).as("claimant"))
-      .join(snaps.read(), Seq("h"), "left_anti")
-      .localCheckpoint(true)
-    if (newClaims.head(1).nonEmpty) {
-      snaps.appendDelta(newClaims)
-      if (snaps.deltaCount >= compactEvery) snaps.replace(snaps.read())
-    }
-    kept
+    claim(batch.join(dropIds,
+        batch(idCol).cast("long") === col("_drop_id"), "left_anti"),
+      unclaimed
+        .join(dropIds, col("id") === col("_drop_id"), "left_anti")
+        .groupBy("h").agg(min(col("id")).as("claimant")))
   }
 }
 
@@ -123,29 +98,25 @@ object IncrementalCdcDedup {
     * built with (the claims schema is knob-free). Without this leg, a
     * takedown would leave the dead document's chunk identities standing
     * and a recrawled copy would be SUPPRESSED against content that no
-    * longer ships — the exact failure mode
-    * [[graft.store.ClaimRetraction]] exists to prevent. */
-  def retract(spark: SparkSession, root: String, ids: Seq[Long]): Long = {
-    requireStore(root, "retract from")
-    graft.store.ClaimRetraction.retract(
-      new Snapshots(spark, root, claimsSchema), ids)
-  }
+    * longer ships. */
+  def retract(spark: SparkSession, root: String, ids: Seq[Long]): Long =
+    requireStore(spark, root, "retract from").retract(ids)
 
   /** Audit read for [[retract]]: claims still held by `ids` — 0 after
     * a completed retraction (the [[graft.pipeline.Forget.verify]]
     * read). */
-  def held(spark: SparkSession, root: String, ids: Seq[Long]): Long = {
-    requireStore(root, "audit")
-    graft.store.ClaimRetraction.held(
-      new Snapshots(spark, root, claimsSchema), ids)
-  }
+  def held(spark: SparkSession, root: String, ids: Seq[Long]): Long =
+    requireStore(spark, root, "audit").held(ids)
 
   /** A cascade leg pointed at a dir with no store is a MISCONFIGURED
     * takedown (the claims it meant to clear live elsewhere) — fail
     * naming the cause, not with a manifest-read stack trace (the
     * [[StreamSplit.retract]] discipline). */
-  private def requireStore(root: String, what: String): Unit =
+  private def requireStore(spark: SparkSession, root: String,
+                           what: String): ClaimLog = {
     require(java.nio.file.Files.exists(
       java.nio.file.Paths.get(root, "current")),
       s"no CDC claim store at $root — nothing to $what")
+    new ClaimLog(spark, root, claimsSchema)
+  }
 }

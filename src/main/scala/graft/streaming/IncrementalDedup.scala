@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StringType, StructField, StructType}
 
-import graft.store.Snapshots
+import graft.store.ClaimLog
 
 /** Near-duplicate dedup under continuous ingestion: each micro-batch is
   * filtered against a persistent MinHash band-bucket index, then claims its
@@ -24,7 +24,7 @@ import graft.store.Snapshots
   * Scale: the filter is one semi-join of (id, 4 band keys) against the
   * bucket index — the corpus text never re-processes; signatures come from
   * the codegen'd [[graft.functions.MinHashSig]] in the scan. Claims are
-  * APPEND-ONLY deltas on the shared [[Snapshots]] store: a micro-batch
+  * APPEND-ONLY deltas on the shared [[ClaimLog]]: a micro-batch
   * writes O(batch) rows (one delta directory), never the whole index, and
   * the delta log compacts back into one base snapshot every `compactEvery`
   * batches — amortized O(index / compactEvery) per batch. At 100 TB the
@@ -32,26 +32,9 @@ import graft.store.Snapshots
   * unchanged.
   */
 final class IncrementalDedup(spark: SparkSession, root: String,
-                             compactEvery: Int = 16) {
-
-  private val schema = StructType(Seq(
-    StructField("bkey", StringType, nullable = false),
-    StructField("claimant", LongType, nullable = false)))
-  private val snaps = new Snapshots(spark, root, schema)
-
-  def init(): Unit = snaps.init()
-
-  def buckets(): DataFrame = snaps.read()
-
-  /** Retract DELETED claimants ([[graft.store.ClaimRetraction]]'s
-    * contract): their buckets clear, the next arrival claims them.
-    * Returns the number of claims removed. */
-  def retract(ids: Seq[Long]): Long =
-    graft.store.ClaimRetraction.retract(snaps, ids)
-
-  /** Audit read: claims still held by `ids` (0 after [[retract]]). */
-  def held(ids: Seq[Long]): Long =
-    graft.store.ClaimRetraction.held(snaps, ids)
+                             compactEvery: Int = 16)
+    extends ClaimLog(spark, root, IncrementalDedup.schema,
+      compactEvery = compactEvery) {
 
   /** (id, bkey) band-bucket keys per document: band index prefixed onto the
     * 4-row signature slice, same banding as [[graft.operators.Dedup
@@ -69,103 +52,29 @@ final class IncrementalDedup(spark: SparkSession, root: String,
   }
 
   /** Filters `batch` to its novel documents and claims all of the batch's
-    * buckets in a new snapshot. Returns the kept rows (original columns). */
-  def filterAndClaim(batch: DataFrame, idCol: String, textCol: String): DataFrame =
-    ClaimStore.filterAndClaim(snaps, compactEvery, batch,
-      bandKeys(batch, idCol, textCol), idCol)
-}
-
-/** The shared claim-store step of the incremental dedup family: given a
-  * batch and its (id, bkey) band keys, drop every row whose bucket is
-  * already claimed by another id (in the store, or by a smaller id in
-  * the same batch) and claim the batch's buckets first-writer-wins —
-  * recording the claimant, which is what makes micro-batch REPLAYS
-  * return the same rows. Keying is the caller's (MinHash bands for
-  * text; the embeddings tier keys 32-bit [[graft.functions
-  * .HyperplaneSig]] bands through [[filterAndClaimVerified]], which adds
-  * an exact-cosine check before any drop); the store mechanics are
-  * identical. */
-private[streaming] object ClaimStore {
-
-  def filterAndClaim(snaps: Snapshots, compactEvery: Int, batch: DataFrame,
-                     keys: DataFrame, idCol: String): DataFrame = {
-    val bands = keys.localCheckpoint(true)
+    * buckets: a row drops when its bucket is already claimed by another
+    * id (in the store, or by a smaller id in the same batch), and every
+    * unclaimed bucket goes to the batch's min id. Returns the kept rows
+    * (original columns). */
+  def filterAndClaim(batch: DataFrame, idCol: String, textCol: String): DataFrame = {
+    val bands = bandKeys(batch, idCol, textCol).localCheckpoint(true)
     // dropped: bucket already claimed by SOMEONE ELSE in the store…
-    val storeDup = bands.join(snaps.read(), "bkey")
+    val storeDup = bands.join(read(), "bkey")
       .filter(col("claimant") =!= col("id")).select("id")
     // …or a smaller id in this batch shares the bucket
     val batchMin = bands.groupBy("bkey").agg(min(col("id")).as("min_id"))
     val batchDup = bands.join(batchMin, "bkey")
       .filter(col("id") > col("min_id")).select("id")
     val dropIds = storeDup.unionAll(batchDup).distinct()
-    val kept = batch.join(dropIds.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
-      .localCheckpoint(true) // materialize BEFORE the snapshot advances
-    // claim: unclaimed buckets get the batch's min id; existing claims win
-    // (first-writer-wins keeps replays stable). Deltas are left_anti'd
-    // against the full store, so no bucket key ever appears in two manifest
-    // entries — read() needs no per-key precedence rule.
-    val newClaims = bands.groupBy("bkey").agg(min(col("id")).as("claimant"))
-      .join(snaps.read(), Seq("bkey"), "left_anti")
-      .localCheckpoint(true)
-    // skip empty deltas: a crash-replayed (or all-duplicate) batch claims
-    // nothing, and appending an empty delta would still advance deltaCount
-    // — letting replays re-trigger or starve the compaction cadence,
-    // against the replay-appends-nothing rationale the tokened BM25 path
-    // documents
-    if (newClaims.head(1).nonEmpty) {
-      snaps.appendDelta(newClaims)
-      if (snaps.deltaCount >= compactEvery) snaps.replace(snaps.read())
-    }
-    kept
+    claim(batch.join(dropIds.withColumnRenamed("id", idCol), Seq(idCol), "left_anti"),
+      bands.groupBy("bkey").agg(min(col("id")).as("claimant")))
   }
+}
 
-  /** The VERIFIED claim-store step ([[IncrementalEmbedDedup]]'s): `keys`
-    * carries the row's vector alongside each band key, claims store the
-    * claimant's vector, and a bucket collision only drops a row when the
-    * exact cosine against the claimant certifies a near-duplicate —
-    * band collisions alone (false positives at scale) cost one cosine
-    * evaluation, never data. Mechanics otherwise mirror
-    * [[filterAndClaim]]: first-writer-wins claims with the claimant
-    * recorded (replay-stable), O(batch) deltas, empty deltas skipped. */
-  def filterAndClaimVerified(snaps: Snapshots, compactEvery: Int,
-                             batch: DataFrame, keys: DataFrame, idCol: String,
-                             minCos: Double): DataFrame = {
-    val bands = keys.localCheckpoint(true) // (id, vecd, norm, bkey)
-    def near(v: Column, n: Column, cv: Column, cn: Column): Column =
-      round(graft.functions.VecDot(v, cv) / (n * cn), 6) >= minCos
-    // dropped: bucket claimed by SOMEONE ELSE whose stored vector is near…
-    val storeDup = bands.join(snaps.read(), "bkey")
-      .filter(col("claimant") =!= col("id") &&
-        near(col("vecd"), col("norm"), col("cvec"), col("cnorm")))
-      .select("id")
-    // …or a smaller NEAR id in this batch shares the bucket (min_by is
-    // deterministic here: ids are unique within a bucket's batch rows)
-    val batchMin = bands.groupBy("bkey")
-      .agg(min_by(struct(col("id"), col("vecd"), col("norm")), col("id")).as("m"))
-      .select(col("bkey"), col("m.id").as("min_id"),
-        col("m.vecd").as("mvec"), col("m.norm").as("mnorm"))
-    val batchDup = bands.join(batchMin, "bkey")
-      .filter(col("id") > col("min_id") &&
-        near(col("vecd"), col("norm"), col("mvec"), col("mnorm")))
-      .select("id")
-    val dropIds = storeDup.unionAll(batchDup).distinct()
-    val kept = batch.join(dropIds.withColumnRenamed("id", idCol), Seq(idCol), "left_anti")
-      .localCheckpoint(true) // materialize BEFORE the snapshot advances
-    // claim: every incoming row (kept or dropped) claims its unclaimed
-    // buckets — min id per bucket, vector attached for future verifies;
-    // existing claims win, so replays are stable and chains collapse to
-    // the earliest representative
-    val newClaims = batchMin
-      .select(col("bkey"), col("min_id").as("claimant"),
-        col("mvec").as("cvec"), col("mnorm").as("cnorm"))
-      .join(snaps.read(), Seq("bkey"), "left_anti")
-      .localCheckpoint(true)
-    if (newClaims.head(1).nonEmpty) {
-      snaps.appendDelta(newClaims)
-      if (snaps.deltaCount >= compactEvery) snaps.replace(snaps.read())
-    }
-    kept
-  }
+object IncrementalDedup {
+  private val schema = StructType(Seq(
+    StructField("bkey", StringType, nullable = false),
+    StructField("claimant", LongType, nullable = false)))
 }
 
 /** [[IncrementalDedup]] for EMBEDDINGS — banded SRP candidates with an
@@ -204,28 +113,9 @@ private[streaming] object ClaimStore {
   */
 final class IncrementalEmbedDedup(spark: SparkSession, root: String,
                                   compactEvery: Int = 16,
-                                  minCos: Double = 0.9) {
-
-  private val schema = StructType(Seq(
-    StructField("bkey", StringType, nullable = false),
-    StructField("claimant", LongType, nullable = false),
-    StructField("cvec", ArrayType(DoubleType, containsNull = true), nullable = true),
-    StructField("cnorm", DoubleType, nullable = true)))
-  private val snaps = new Snapshots(spark, root, schema)
-
-  def init(): Unit = snaps.init()
-
-  def buckets(): DataFrame = snaps.read()
-
-  /** Retract DELETED claimants ([[graft.store.ClaimRetraction]]'s
-    * contract): their buckets (and stored vectors) clear, the next
-    * arrival claims them. Returns the number of claims removed. */
-  def retract(ids: Seq[Long]): Long =
-    graft.store.ClaimRetraction.retract(snaps, ids)
-
-  /** Audit read: claims still held by `ids` (0 after [[retract]]). */
-  def held(ids: Seq[Long]): Long =
-    graft.store.ClaimRetraction.held(snaps, ids)
+                                  minCos: Double = 0.9)
+    extends ClaimLog(spark, root, IncrementalEmbedDedup.schema,
+      compactEvery = compactEvery) {
 
   /** (id, vecd, norm, bkey): band index prefixed onto each 32-bit
     * signature slice — `b0/b1` from the low-window signature, `b2/b3`
@@ -255,8 +145,43 @@ final class IncrementalEmbedDedup(spark: SparkSession, root: String,
         )).as("bkey"))
   }
 
-  /** Filters `batch` to its novel rows and claims its buckets. */
-  def filterAndClaim(batch: DataFrame, idCol: String, vecCol: String): DataFrame =
-    ClaimStore.filterAndClaimVerified(snaps, compactEvery, batch,
-      bandKeys(batch, idCol, vecCol), idCol, minCos)
+  /** Filters `batch` to its novel rows and claims its buckets. Claims
+    * store the claimant's vector, and a bucket collision only drops a
+    * row when the exact cosine against the claimant certifies a
+    * near-duplicate — band collisions alone (false positives at scale)
+    * cost one cosine evaluation, never data. */
+  def filterAndClaim(batch: DataFrame, idCol: String, vecCol: String): DataFrame = {
+    val bands = bandKeys(batch, idCol, vecCol).localCheckpoint(true)
+    def near(v: Column, n: Column, cv: Column, cn: Column): Column =
+      round(graft.functions.VecDot(v, cv) / (n * cn), 6) >= minCos
+    // dropped: bucket claimed by SOMEONE ELSE whose stored vector is near…
+    val storeDup = bands.join(read(), "bkey")
+      .filter(col("claimant") =!= col("id") &&
+        near(col("vecd"), col("norm"), col("cvec"), col("cnorm")))
+      .select("id")
+    // …or a smaller NEAR id in this batch shares the bucket (min_by is
+    // deterministic here: ids are unique within a bucket's batch rows)
+    val batchMin = bands.groupBy("bkey")
+      .agg(min_by(struct(col("id"), col("vecd"), col("norm")), col("id")).as("m"))
+      .select(col("bkey"), col("m.id").as("min_id"),
+        col("m.vecd").as("mvec"), col("m.norm").as("mnorm"))
+    val batchDup = bands.join(batchMin, "bkey")
+      .filter(col("id") > col("min_id") &&
+        near(col("vecd"), col("norm"), col("mvec"), col("mnorm")))
+      .select("id")
+    val dropIds = storeDup.unionAll(batchDup).distinct()
+    // every incoming row (kept or dropped) claims its unclaimed buckets —
+    // min id per bucket, vector attached for future verifies
+    claim(batch.join(dropIds.withColumnRenamed("id", idCol), Seq(idCol), "left_anti"),
+      batchMin.select(col("bkey"), col("min_id").as("claimant"),
+        col("mvec").as("cvec"), col("mnorm").as("cnorm")))
+  }
+}
+
+object IncrementalEmbedDedup {
+  private val schema = StructType(Seq(
+    StructField("bkey", StringType, nullable = false),
+    StructField("claimant", LongType, nullable = false),
+    StructField("cvec", ArrayType(DoubleType, containsNull = true), nullable = true),
+    StructField("cnorm", DoubleType, nullable = true)))
 }

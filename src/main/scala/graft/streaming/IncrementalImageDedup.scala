@@ -21,16 +21,8 @@ import graft.multimodal.ImageDedup
   * unexamined and claim nothing — garbage must never block a bucket. */
 final class IncrementalImageDedup(spark: SparkSession, root: String,
                                   compactEvery: Int = 16,
-                                  maxHamming: Int = 3) {
-  private val core = new IncrementalBanded64(spark, root, compactEvery,
-    maxHamming)
-
-  def init(): Unit = core.init()
-
-  def buckets(): DataFrame = core.buckets()
-
-  /** Retract deleted claimants' buckets (the family contract). */
-  def retract(ids: Seq[Long]): Long = core.retract(ids)
+                                  maxHamming: Int = 3)
+    extends IncrementalBanded64(spark, root, compactEvery, maxHamming) {
 
   /** Filters `batch` to rows that are NOT certified near-duplicates of
     * an earlier claimant (across all prior batches and within this one),
@@ -38,7 +30,7 @@ final class IncrementalImageDedup(spark: SparkSession, root: String,
     * with the batch's original columns. */
   def filterAndClaim(batch: DataFrame, bytesCol: String,
                      idCol: String): DataFrame =
-    core.filterAndClaim(batch,
+    filterAndClaim(batch,
       ImageDedup.imageHashes(batch, bytesCol, idCol)
         .withColumnRenamed("dhash", "h"),
       idCol)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.operators.Dedup
-import graft.store.Snapshots
+import graft.store.ClaimLog
 
 /** LINE-granularity keep-first dedup under continuous ingestion — the
   * streaming twin of [[graft.operators.Dedup.dedupLinesKeepFirst]] (the
@@ -39,35 +39,14 @@ import graft.store.Snapshots
   * economics of [[IncrementalDedup]]): the claim join sees COORDINATES ONLY
   * — (id, p, lhv) hashed in the scan — text crosses exactly one exchange
   * (the verdict join's doc-id shuffle); claims are APPEND-ONLY O(batch)
-  * deltas on [[Snapshots]], compacted every `compactEvery` batches. The
+  * deltas on a [[ClaimLog]], compacted every `compactEvery` batches. The
   * store grows with DISTINCT lines ever seen, not corpus bytes — 16 bytes a
   * line; at 100 TB the same log becomes a key-value table bucketed by lhv.
   */
 final class IncrementalLineDedup(spark: SparkSession, root: String,
-                                 compactEvery: Int = 16) {
-
-  private val schema = StructType(Seq(
-    StructField("lhv", LongType, nullable = false),
-    StructField("cid", LongType, nullable = false),
-    StructField("cp", IntegerType, nullable = false)))
-  private val snaps = new Snapshots(spark, root, schema)
-
-  def init(): Unit = snaps.init()
-
-  /** The claims table: (lhv, cid, cp) — one row per distinct trimmed line
-    * ever seen, claimed by its global first occurrence. */
-  def lines(): DataFrame = snaps.read()
-
-  /** Retract DELETED claimant documents ([[graft.store.ClaimRetraction]]'s
-    * contract): every line THEY claimed clears, so the next document
-    * carrying it keeps its copy. Returns the number of line claims
-    * removed. */
-  def retract(ids: Seq[Long]): Long =
-    graft.store.ClaimRetraction.retract(snaps, ids, "cid")
-
-  /** Audit read: line claims still held by `ids` (0 after [[retract]]). */
-  def held(ids: Seq[Long]): Long =
-    graft.store.ClaimRetraction.held(snaps, ids, "cid")
+                                 compactEvery: Int = 16)
+    extends ClaimLog(spark, root, IncrementalLineDedup.schema, "cid",
+      compactEvery) {
 
   /** Rewrites `batch` with every already-claimed line removed and claims
     * the batch's novel lines. Returns (idCol, clean_text, n_removed), one
@@ -78,7 +57,7 @@ final class IncrementalLineDedup(spark: SparkSession, root: String,
     val docs = batch.select(col(idCol).cast("long").as(idCol), col(textCol))
     val coords = Dedup.lineCoords(docs, idCol, textCol).localCheckpoint(true)
     // removed: the store claims the line for a DIFFERENT occurrence…
-    val storeDup = coords.join(snaps.read(), "lhv")
+    val storeDup = coords.join(read(), "lhv")
       .filter(col("cid") =!= col("id") || col("cp") =!= col("p"))
       .select("id", "p")
     // …or an earlier (id, p) occurrence in this batch holds it (min of the
@@ -91,21 +70,18 @@ final class IncrementalLineDedup(spark: SparkSession, root: String,
       .select("id", "p")
     val removals = storeDup.unionAll(batchDup).distinct()
       .groupBy("id").agg(sort_array(collect_list(col("p"))).as("rp"))
-    val cleaned = Dedup.rebuildWithoutLines(docs, idCol, textCol, removals)
-      .localCheckpoint(true) // materialize BEFORE the snapshot advances
     // claim: unclaimed hashes get this batch's first occurrence; existing
-    // claims win (first-writer-wins keeps replays stable). Anti-joined
-    // against the full store so no lhv appears in two manifest entries.
-    val newClaims = batchMin
-      .select(col("lhv"), col("mid").as("cid"), col("mp").as("cp"))
-      .join(snaps.read(), Seq("lhv"), "left_anti")
-      .localCheckpoint(true)
-    // skip empty deltas: a crash-replayed (or all-duplicate) batch claims
-    // nothing new and must not advance the compaction cadence
-    if (newClaims.head(1).nonEmpty) {
-      snaps.appendDelta(newClaims)
-      if (snaps.deltaCount >= compactEvery) snaps.replace(snaps.read())
-    }
-    cleaned
+    // claims win (first-writer-wins keeps replays stable)
+    claim(Dedup.rebuildWithoutLines(docs, idCol, textCol, removals),
+      batchMin.select(col("lhv"), col("mid").as("cid"), col("mp").as("cp")))
   }
+}
+
+object IncrementalLineDedup {
+  /** The claims table: (lhv, cid, cp) — one row per distinct trimmed line
+    * ever seen, claimed by its global first occurrence `(cid, cp)`. */
+  private val schema = StructType(Seq(
+    StructField("lhv", LongType, nullable = false),
+    StructField("cid", LongType, nullable = false),
+    StructField("cp", IntegerType, nullable = false)))
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
-import graft.store.Snapshots
+import graft.store.ClaimLog
 
 /** Streaming VIDEO near-dup claims — [[graft.multimodal.VideoDedup]]'s
   * frame-fingerprint VOTING through the claims-store discipline: each
@@ -42,7 +42,9 @@ final class IncrementalVideoDedup(spark: SparkSession, root: String,
                                   compactEvery: Int = 16,
                                   maxHamming: Int = 3,
                                   minMatch: Int =
-                                    graft.multimodal.VideoDedup.DefaultMinMatch) {
+                                    graft.multimodal.VideoDedup.DefaultMinMatch)
+    extends ClaimLog(spark, root, IncrementalVideoDedup.schema,
+      compactEvery = compactEvery) {
   require(maxHamming >= 0 && maxHamming <= 64, "maxHamming in [0,64]")
   require(minMatch >= 1, "minMatch must be >= 1")
   // the probe side samples [[graft.multimodal.VideoDedup.FrameSamples]]
@@ -53,27 +55,6 @@ final class IncrementalVideoDedup(spark: SparkSession, root: String,
     s"minMatch=$minMatch exceeds the " +
       s"${graft.multimodal.VideoDedup.FrameSamples} sampled positions " +
       "per clip — no arrival could ever reach the vote threshold")
-
-  private val schema = StructType(Seq(
-    StructField("bkey", StringType, nullable = false),
-    StructField("pos", IntegerType, nullable = false),
-    StructField("claimant", LongType, nullable = false),
-    StructField("chash", LongType, nullable = false)))
-  private val snaps = new Snapshots(spark, root, schema)
-
-  def init(): Unit = snaps.init()
-
-  def buckets(): DataFrame = snaps.read()
-
-  /** Retract DELETED claimants ([[graft.store.ClaimRetraction]]'s
-    * contract): all their (bucket, position) claims clear, the next
-    * clip claims them. Returns the number of claims removed. */
-  def retract(ids: Seq[Long]): Long =
-    graft.store.ClaimRetraction.retract(snaps, ids)
-
-  /** Audit read: claims still held by `ids` (0 after [[retract]]). */
-  def held(ids: Seq[Long]): Long =
-    graft.store.ClaimRetraction.held(snaps, ids)
 
   /** `fh` is (id: long, pos: int, fhash: long) — the batch's sampled
     * frame hashes (the probe sidecar's `vhash`, exploded); rows of
@@ -89,7 +70,7 @@ final class IncrementalVideoDedup(spark: SparkSession, root: String,
       .localCheckpoint(true)
     // cross-batch: positions verifying against the SAME stored claimant,
     // counted distinct — the vote
-    val storeDup = bands.join(snaps.read(), Seq("bkey", "pos"))
+    val storeDup = bands.join(read(), Seq("bkey", "pos"))
       .filter(col("claimant") =!= col("id") &&
         bit_count(col("fhash").bitwiseXOR(col("chash"))) <= maxHamming)
       .select(col("id"), col("claimant"), col("pos")).distinct()
@@ -104,19 +85,19 @@ final class IncrementalVideoDedup(spark: SparkSession, root: String,
       .select(col("id_b").as("id"))
     val dropIds = storeDup.unionAll(batchDup).distinct()
       .withColumnRenamed("id", "_drop_id")
-    val kept = batch.join(dropIds,
-        batch(idCol).cast("long") === col("_drop_id"), "left_anti")
-      .localCheckpoint(true) // materialize BEFORE the snapshot advances
-    val newClaims = bands.groupBy(col("bkey"), col("pos"))
-      .agg(min_by(struct(col("id"), col("fhash")), col("id")).as("m"))
-      .select(col("bkey"), col("pos"), col("m.id").as("claimant"),
-        col("m.fhash").as("chash"))
-      .join(snaps.read(), Seq("bkey"), "left_anti")
-      .localCheckpoint(true)
-    if (newClaims.head(1).nonEmpty) {
-      snaps.appendDelta(newClaims)
-      if (snaps.deltaCount >= compactEvery) snaps.replace(snaps.read())
-    }
-    kept
+    claim(batch.join(dropIds,
+        batch(idCol).cast("long") === col("_drop_id"), "left_anti"),
+      bands.groupBy(col("bkey"), col("pos"))
+        .agg(min_by(struct(col("id"), col("fhash")), col("id")).as("m"))
+        .select(col("bkey"), col("pos"), col("m.id").as("claimant"),
+          col("m.fhash").as("chash")))
   }
+}
+
+object IncrementalVideoDedup {
+  private val schema = StructType(Seq(
+    StructField("bkey", StringType, nullable = false),
+    StructField("pos", IntegerType, nullable = false),
+    StructField("claimant", LongType, nullable = false),
+    StructField("chash", LongType, nullable = false)))
 }

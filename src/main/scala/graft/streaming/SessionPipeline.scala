@@ -45,9 +45,9 @@ object SessionPipeline {
             storeRoot: String, checkpointDir: String,
             gap: String = "30 minutes", retrieved: Long = 0L,
             compactEvery: Int = 64): StreamingQuery = {
-    require(compactEvery >= 1,
-      "compactEvery must be >= 1 — 0 would rewrite the whole store every epoch")
-    val snaps = store(spark, storeRoot)
+    val snaps = new Snapshots(spark, storeRoot, sessionSchema,
+      compactEvery = compactEvery)
+    snaps.init()
     val raw = spark.readStream.format("graft.sources.ItemsStream")
       .option("start", startId.toString)
       .option("fetcher", fetcherSpec)
@@ -58,12 +58,9 @@ object SessionPipeline {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
                        epoch: Long) =>
-        if (!batch.isEmpty) {
-          snaps.appendDelta(batch.select(
-            col("author"), col("session_start"), col("session_end"),
-            col("n_items")), Some(s"epoch-$epoch"))
-          if (snaps.deltaCount >= compactEvery) snaps.replace(snaps.read())
-        }
+        snaps.commit(batch.select(
+          col("author"), col("session_start"), col("session_end"),
+          col("n_items")), Some(s"epoch-$epoch"))
       }
       .start()
   }

@@ -42,8 +42,8 @@ object StreamBoilerplate {
   /** The chunk-count store + per-batch accumulator. */
   final class ChunkCounts(spark: SparkSession, dir: String, val span: Int,
                           compactEvery: Int = 16) {
-    require(compactEvery >= 1, "compactEvery must be >= 1")
-    private val store = new Snapshots(spark, dir, countsSchema)
+    private val store = new Snapshots(spark, dir, countsSchema,
+      compactEvery = compactEvery)
     store.init()
 
     /** Observe one micro-batch: append its per-chunk distinct-doc counts
@@ -54,16 +54,9 @@ object StreamBoilerplate {
       val counts = Dedup.chunkCoords(batch, idCol, textCol, span)
         .groupBy("hv").agg(countDistinct(col("id")).as("nd"))
         .localCheckpoint(true)
-      // replays are no-ops via the batch-id token; this guard is for the
-      // other empty case — a real batch whose documents are all shorter
-      // than one span contributes no counts, and an empty delta would
-      // still advance the compaction cadence (the ClaimStore discipline)
-      if (counts.head(1).nonEmpty) {
-        store.appendDelta(counts, Some(s"b$batchId"))
-        if (store.deltaCount >= compactEvery) {
-          store.replace(merged())
-        }
-      }
+      // a batch whose documents are all shorter than one span contributes
+      // no counts and appends nothing
+      store.commit(counts, Some(s"b$batchId"), merged())
     }
 
     /** RETRACT deleted documents' chunk contributions — the forget
@@ -80,10 +73,7 @@ object StreamBoilerplate {
       val counts = Dedup.chunkCoords(deleted, idCol, textCol, span)
         .groupBy("hv").agg((-countDistinct(col("id"))).as("nd"))
         .localCheckpoint(true)
-      if (counts.head(1).nonEmpty) {
-        store.appendDelta(counts, Some(token))
-        if (store.deltaCount >= compactEvery) store.replace(merged())
-      }
+      store.commit(counts, Some(token), merged())
     }
 
     /** The merged (hv, nd) view across base + deltas; fully-retracted
@@ -130,11 +120,11 @@ object StreamBoilerplate {
   final class CdcCounts(spark: SparkSession, dir: String,
                         val window: Int = 8, val maskBits: Int = 5,
                         compactEvery: Int = 16) {
-    require(compactEvery >= 1, "compactEvery must be >= 1")
     private val schema = StructType(Seq(
       StructField("h", LongType, nullable = false),
       StructField("nd", LongType, nullable = false)))
-    private val store = new Snapshots(spark, dir, schema)
+    private val store = new Snapshots(spark, dir, schema,
+      compactEvery = compactEvery)
     store.init()
 
     def observe(batch: DataFrame, idCol: String, textCol: String,
@@ -143,10 +133,7 @@ object StreamBoilerplate {
         maskBits)
         .groupBy("h").agg(countDistinct(col(idCol)).as("nd"))
         .localCheckpoint(true)
-      if (counts.head(1).nonEmpty) {
-        store.appendDelta(counts, Some(s"b$batchId"))
-        if (store.deltaCount >= compactEvery) store.replace(merged())
-      }
+      store.commit(counts, Some(s"b$batchId"), merged())
     }
 
     /** The forget cascade's leg (the [[ChunkCounts.retract]]
@@ -158,10 +145,7 @@ object StreamBoilerplate {
         maskBits)
         .groupBy("h").agg((-countDistinct(col(idCol))).as("nd"))
         .localCheckpoint(true)
-      if (counts.head(1).nonEmpty) {
-        store.appendDelta(counts, Some(token))
-        if (store.deltaCount >= compactEvery) store.replace(merged())
-      }
+      store.commit(counts, Some(token), merged())
     }
 
     private def merged(): DataFrame =

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.operators.{Decontaminate, Dedup}
-import graft.store.Snapshots
+import graft.store.ClaimLog
 
 /** The curation funnel under continuous ingestion — [[graft.pipeline
   * .Curation]]'s stages recomposed for `foreachBatch`, with the
@@ -104,16 +104,23 @@ object StreamCuration {
     * false "duplicates" (dropped legitimate documents) from ~50k distinct
     * texts; at 2⁻⁶²-per-pair the false-drop expectation stays below one
     * document out to ~2³¹ distinct texts (docs/SCALE.md policy). */
-  private val claimsSchema = StructType(Seq(
-    StructField("bkey", LongType, nullable = false),
-    StructField("claimant", LongType, nullable = false)))
+  private def exactLog(spark: SparkSession, dir: String,
+                       compactEvery: Int = 16): ClaimLog =
+    new ClaimLog(spark, dir, StructType(Seq(
+      StructField("bkey", LongType, nullable = false),
+      StructField("claimant", LongType, nullable = false))),
+      compactEvery = compactEvery)
 
   /** Domain-cap claims: one (registered domain → claimant id) row per
-    * document that has shipped under the cap. */
-  private val capSchema = StructType(Seq(
-    StructField("domain", org.apache.spark.sql.types.StringType,
-      nullable = false),
-    StructField("claimant", LongType, nullable = false)))
+    * document that has shipped under the cap — a claim is a slot, so the
+    * whole row is its key. */
+  private def capLog(spark: SparkSession, dir: String,
+                     compactEvery: Int = 16): ClaimLog =
+    new ClaimLog(spark, dir, StructType(Seq(
+      StructField("domain", org.apache.spark.sql.types.StringType,
+        nullable = false),
+      StructField("claimant", LongType, nullable = false))),
+      compactEvery = compactEvery, key = Seq("domain", "claimant"))
 
   /** Per-BATCH funnel counts — [[graft.pipeline.Curation.Report]]'s
     * streaming twin, emitted through the `onReport` callback when a
@@ -129,7 +136,7 @@ object StreamCuration {
                                nBpeUnk: Long = -1L)
 
   /** RETRACT deleted documents from every claim store under `stateDir`
-    * ([[graft.store.ClaimRetraction]]'s contract — the recrawl-deletion
+    * ([[graft.store.ClaimLog]]'s retraction — the recrawl-deletion
     * event's entry point): exact-text claims, near-dup bands, verified
     * embed bands, line claims, and domain-cap slots held by any of
     * `ids` all clear, so future arrivals can claim them instead of
@@ -145,71 +152,27 @@ object StreamCuration {
     * lifted to the funnel-root level). Returns total claims removed
     * across stores. */
   def retract(spark: SparkSession, stateDir: String,
-              ids: Seq[Long]): Long = {
-    requireFunnelRoot(stateDir, "retract from")
-    def has(sub: String): Boolean = java.nio.file.Files
-      .exists(java.nio.file.Paths.get(s"$stateDir/$sub/current"))
-    var n = 0L
-    if (has("exact"))
-      n += graft.store.ClaimRetraction.retract(
-        new Snapshots(spark, s"$stateDir/exact", claimsSchema), ids)
-    if (has("neardup"))
-      n += new IncrementalDedup(spark, s"$stateDir/neardup").retract(ids)
-    if (has("embdedup"))
-      n += new IncrementalEmbedDedup(spark, s"$stateDir/embdedup")
-        .retract(ids)
-    if (has("linededup"))
-      n += new IncrementalLineDedup(spark, s"$stateDir/linededup")
-        .retract(ids)
-    if (has("domaincap"))
-      n += graft.store.ClaimRetraction.retract(
-        new Snapshots(spark, s"$stateDir/domaincap", capSchema), ids)
-    n
-  }
+              ids: Seq[Long]): Long =
+    requireFunnelRoot(spark, stateDir, "retract from").map(_.retract(ids)).sum
 
   /** Audit read for [[retract]]: claims still held by `ids` across every
     * store under `stateDir` — 0 after a completed retraction (the
     * takedown verification [[graft.pipeline.Forget.verify]] reads). */
-  def held(spark: SparkSession, stateDir: String, ids: Seq[Long]): Long = {
-    requireFunnelRoot(stateDir, "audit")
-    def has(sub: String): Boolean = java.nio.file.Files
-      .exists(java.nio.file.Paths.get(s"$stateDir/$sub/current"))
-    var n = 0L
-    if (has("exact"))
-      n += graft.store.ClaimRetraction.held(
-        new Snapshots(spark, s"$stateDir/exact", claimsSchema), ids)
-    if (has("neardup"))
-      n += new IncrementalDedup(spark, s"$stateDir/neardup").held(ids)
-    if (has("embdedup"))
-      n += new IncrementalEmbedDedup(spark, s"$stateDir/embdedup")
-        .held(ids)
-    if (has("linededup"))
-      n += new IncrementalLineDedup(spark, s"$stateDir/linededup")
-        .held(ids)
-    if (has("domaincap"))
-      n += graft.store.ClaimRetraction.held(
-        new Snapshots(spark, s"$stateDir/domaincap", capSchema), ids)
-    n
-  }
+  def held(spark: SparkSession, stateDir: String, ids: Seq[Long]): Long =
+    requireFunnelRoot(spark, stateDir, "audit").map(_.held(ids)).sum
 
-  /** Claim sub-stores a text funnel can accumulate under its state
-    * root — the recognition list [[requireFunnelRoot]] checks. */
-  private val ClaimSubStores =
-    Seq("exact", "neardup", "embdedup", "linededup", "domaincap")
-
-  /** A retraction or audit pointed at a dir holding NONE of the
-    * funnel's claim stores is a misconfigured takedown (wrong or
-    * never-initialized root — the claims it meant to clear live
-    * elsewhere): fail naming the cause instead of silently skipping
-    * every optional sub-store and reporting a clean 0. A real funnel
-    * root always qualifies — [[curator]] bootstraps the mandatory
-    * exact store at construction, before any batch runs. */
-  private def requireFunnelRoot(stateDir: String, what: String): Unit =
-    require(ClaimSubStores.exists(sub => java.nio.file.Files
-      .exists(java.nio.file.Paths.get(s"$stateDir/$sub/current"))),
-      s"no claim store under $stateDir (expected at least one of " +
-        s"${ClaimSubStores.mkString("/")} with a current snapshot) — " +
-        s"nothing to $what; a wrong funnel root must not audit clean")
+  /** The claim stores present under `stateDir`, failing loud when there
+    * are none ([[ClaimLog.present]]). A real funnel root always
+    * qualifies — [[curator]] bootstraps the mandatory exact store at
+    * construction, before any batch runs. */
+  private def requireFunnelRoot(spark: SparkSession, stateDir: String,
+                                what: String): Seq[ClaimLog] =
+    ClaimLog.present(stateDir, "claim store", what, Seq(
+      "exact" -> (exactLog(spark, _)),
+      "neardup" -> (new IncrementalDedup(spark, _)),
+      "embdedup" -> (new IncrementalEmbedDedup(spark, _)),
+      "linededup" -> (new IncrementalLineDedup(spark, _)),
+      "domaincap" -> (capLog(spark, _))))
 
   /** The per-batch funnel transform, closed over the stores and the
     * fold-once eval materialization. Bootstrap `init()` happens here.
@@ -275,7 +238,7 @@ object StreamCuration {
     graft.functions.RepetitionStats.ensureRegistered(spark)
     graft.functions.WidePolyHash.ensureRegistered(spark)
     graft.functions.TokenStats.ensureRegistered(spark)
-    val exactClaims = new Snapshots(spark, s"$stateDir/exact", claimsSchema)
+    val exactClaims = exactLog(spark, s"$stateDir/exact", compactEvery)
     exactClaims.init()
     val nearDup = new IncrementalDedup(spark, s"$stateDir/neardup",
       compactEvery)
@@ -341,7 +304,7 @@ object StreamCuration {
         }
       }
     val capClaims = domainCap.map { _ =>
-      val s = new Snapshots(spark, s"$stateDir/domaincap", capSchema)
+      val s = capLog(spark, s"$stateDir/domaincap", compactEvery)
       s.init()
       s
     }
@@ -349,7 +312,7 @@ object StreamCuration {
 
     // funnel observability: counts only when a report sink opted in
     // (each count is an action; un-checkpointed stages re-run their
-    // lineage for it — the audit=true economics of the batch funnel)
+    // lineage for it — the batch funnel's audit economics)
     def rc(df: DataFrame): Long =
       if (onReport.isDefined) df.count() else -1L
 
@@ -409,19 +372,9 @@ object StreamCuration {
           .filter(col("id") > col("min_id")).select("id")
         val dropIds = storeDup.unionAll(batchDup).distinct()
           .withColumnRenamed("id", idCol)
-        val exact = redacted.join(dropIds, Seq(idCol), "left_anti")
-          .localCheckpoint(true) // materialize BEFORE the store advances
-        val newClaims = keys.groupBy("bkey").agg(min(col("id")).as("claimant"))
-          .join(exactClaims.read(), Seq("bkey"), "left_anti")
-          .localCheckpoint(true)
-        // skip empty deltas (replayed or all-duplicate batches): appending
-        // one would advance deltaCount and the compaction cadence, against
-        // the replay-appends-nothing rationale (same policy as ClaimStore)
-        if (newClaims.head(1).nonEmpty) {
-          exactClaims.appendDelta(newClaims)
-          if (exactClaims.deltaCount >= compactEvery)
-            exactClaims.replace(exactClaims.read())
-        }
+        val exact = exactClaims.claim(
+          redacted.join(dropIds, Seq(idCol), "left_anti"),
+          keys.groupBy("bkey").agg(min(col("id")).as("claimant")))
 
         // 2b. optional keep-first line scrub (IncrementalLineDedup —
         // claims-store stage, replay-stable via the recorded claimant):
@@ -483,22 +436,13 @@ object StreamCuration {
                 coalesce(col("_prior_n"), lit(0L)) <= cp)
               .drop("domain", "_prior_n", "_hv", "_rk")
               .localCheckpoint(true)
-            // materialize the WHOLE result (the replayed leg reads the
-            // store's current manifest) BEFORE the store advances —
-            // compaction may retire the very directories that plan
-            // references, and the caller's sink evaluates after us
-            val result = replayed.drop("_dom", "_id")
-              .unionByName(freshKept.drop("_dom", "_id"))
-              .unionByName(exempt)
-              .localCheckpoint(true)
-            val newClaims = freshKept
-              .select(col("_dom").as("domain"), col("_id").as("claimant"))
-            if (newClaims.head(1).nonEmpty) {
-              store.appendDelta(newClaims)
-              if (store.deltaCount >= compactEvery)
-                store.replace(store.read())
-            }
-            result
+            // the WHOLE result is kept: the replayed leg reads the
+            // store's current manifest too
+            store.claim(replayed.drop("_dom", "_id")
+                .unionByName(freshKept.drop("_dom", "_id"))
+                .unionByName(exempt),
+              freshKept
+                .select(col("_dom").as("domain"), col("_id").as("claimant")))
           case _ => cleaned
         }
         val mixedOut =

@@ -53,25 +53,19 @@ import graft.store.Snapshots
   * tables, never the corpus. */
 final class StreamDataCard(spark: SparkSession, root: String,
                            compactEvery: Int = 16) {
-  require(compactEvery >= 1, "compactEvery must be >= 1")
 
   private val schema = StructType(Seq(
     StructField("metric", StringType, nullable = false),
     StructField("value", LongType, nullable = false)))
-  private val counters = new Snapshots(spark, s"$root/counters", schema)
+  private val counters = new Snapshots(spark, s"$root/counters", schema,
+    compactEvery = compactEvery)
   private val lenHist = new StreamValueHist(spark, s"$root/lenhist",
     compactEvery)
 
   def init(): Unit = { counters.init(); lenHist.init() }
 
-  private def fold(metrics: DataFrame, token: String): Unit = {
-    val nonEmpty = metrics.localCheckpoint(true)
-    if (nonEmpty.head(1).nonEmpty) {
-      counters.appendDelta(nonEmpty, Some(token))
-      if (counters.deltaCount >= compactEvery)
-        counters.replace(totals())
-    }
-  }
+  private def fold(metrics: DataFrame, token: String): Unit =
+    counters.commit(metrics.localCheckpoint(true), Some(token), totals())
 
   /** The merged (metric, value) totals across base + deltas;
     * fully-retracted metrics (value 0) leave the table, so a lang or

@@ -36,7 +36,6 @@ import graft.store.Snapshots
   * the batch contract. */
 final class StreamFertility(spark: SparkSession, root: String,
                             compactEvery: Int = 16) {
-  require(compactEvery >= 1, "compactEvery must be >= 1")
 
   private val schema = StructType(Seq(
     StructField("grp", StringType, nullable = false),
@@ -44,7 +43,8 @@ final class StreamFertility(spark: SparkSession, root: String,
     StructField("n_words", LongType, nullable = false),
     StructField("n_pieces", LongType, nullable = false),
     StructField("n_chars", LongType, nullable = false)))
-  private val store = new Snapshots(spark, root, schema)
+  private val store = new Snapshots(spark, root, schema,
+    compactEvery = compactEvery)
 
   def init(): Unit = store.init()
 
@@ -68,11 +68,8 @@ final class StreamFertility(spark: SparkSession, root: String,
     * (same `batchId`) fold nothing twice. */
   def observe(batch: DataFrame, idCol: String, textCol: String,
               groupCol: String, counts: DataFrame, batchId: Long): Unit = {
-    val r = rows(batch, idCol, textCol, groupCol, counts, 1L)
-    if (r.head(1).nonEmpty) {
-      store.appendDelta(r, Some(s"b$batchId"))
-      if (store.deltaCount >= compactEvery) store.replace(totals())
-    }
+    store.commit(rows(batch, idCol, textCol, groupCol, counts, 1L),
+      Some(s"b$batchId"), totals())
   }
 
   /** The deletion cascade's telemetry leg: subtract the DELETED
@@ -81,11 +78,8 @@ final class StreamFertility(spark: SparkSession, root: String,
     * tokenizer). `token` is the deletion event's replay token. */
   def retract(deletedRows: DataFrame, idCol: String, textCol: String,
               groupCol: String, counts: DataFrame, token: String): Unit = {
-    val r = rows(deletedRows, idCol, textCol, groupCol, counts, -1L)
-    if (r.head(1).nonEmpty) {
-      store.appendDelta(r, Some(token))
-      if (store.deltaCount >= compactEvery) store.replace(totals())
-    }
+    store.commit(rows(deletedRows, idCol, textCol, groupCol, counts, -1L),
+      Some(token), totals())
   }
 
   /** Merged per-group totals; fully-retracted groups leave. */

@@ -242,7 +242,7 @@ object StreamGraphIndex {
   def maintainer(spark: SparkSession, dir: String, idCol: String,
                  vecCol: String, m: Int = 16, efConstruction: Int = 64,
                  compactEvery: Int = 8): (DataFrame, Long) => Unit = {
-    require(compactEvery >= 1, "compactEvery must be >= 1")
+    graft.store.Snapshots.requireCompactEvery(compactEvery)
     (batch: DataFrame, batchId: Long) => {
       if (!batch.isEmpty) {
         val (g, parent, depth) = loadChain(spark, dir)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.pipeline.MediaCuration
-import graft.store.Snapshots
+import graft.store.ClaimLog
 
 /** The MEDIA curation funnel under continuous ingestion —
   * [[graft.pipeline.MediaCuration]]'s stages recomposed for
@@ -48,9 +48,12 @@ import graft.store.Snapshots
   * double-claims. */
 object StreamMediaCuration {
 
-  private val exactSchema = StructType(Seq(
-    StructField("digest", StringType, nullable = false),
-    StructField("claimant", LongType, nullable = false)))
+  private def exactLog(spark: SparkSession, dir: String,
+                       compactEvery: Int = 16): ClaimLog =
+    new ClaimLog(spark, dir, StructType(Seq(
+      StructField("digest", StringType, nullable = false),
+      StructField("claimant", LongType, nullable = false))),
+      compactEvery = compactEvery)
 
   /** Per-batch funnel counts, [[MediaCuration.Report]]'s streaming twin
     * (emitted through `onReport`; counts only computed when a sink is
@@ -71,62 +74,25 @@ object StreamMediaCuration {
     * auditing clean (the text twin's [[StreamCuration.retract]]
     * fail-loud discipline). Returns total claims removed. */
   def retract(spark: SparkSession, stateDir: String,
-              ids: Seq[Long]): Long = {
-    requireFunnelRoot(stateDir, "retract from")
-    def has(sub: String): Boolean = java.nio.file.Files
-      .exists(java.nio.file.Paths.get(s"$stateDir/$sub/current"))
-    var n = 0L
-    if (has("exact"))
-      n += graft.store.ClaimRetraction.retract(
-        new Snapshots(spark, s"$stateDir/exact", exactSchema), ids)
-    if (has("image"))
-      n += new IncrementalBanded64(spark, s"$stateDir/image", 16, 3)
-        .retract(ids)
-    if (has("audio"))
-      n += new IncrementalBanded64(spark, s"$stateDir/audio", 16, 3)
-        .retract(ids)
-    if (has("video"))
-      n += new IncrementalVideoDedup(spark, s"$stateDir/video").retract(ids)
-    n
-  }
+              ids: Seq[Long]): Long =
+    requireFunnelRoot(spark, stateDir, "retract from").map(_.retract(ids)).sum
 
   /** Audit read for [[retract]]: media claims still held by `ids` across
     * every store under `stateDir` — 0 after a completed retraction. */
-  def held(spark: SparkSession, stateDir: String, ids: Seq[Long]): Long = {
-    requireFunnelRoot(stateDir, "audit")
-    def has(sub: String): Boolean = java.nio.file.Files
-      .exists(java.nio.file.Paths.get(s"$stateDir/$sub/current"))
-    var n = 0L
-    if (has("exact"))
-      n += graft.store.ClaimRetraction.held(
-        new Snapshots(spark, s"$stateDir/exact", exactSchema), ids)
-    if (has("image"))
-      n += new IncrementalBanded64(spark, s"$stateDir/image", 16, 3)
-        .held(ids)
-    if (has("audio"))
-      n += new IncrementalBanded64(spark, s"$stateDir/audio", 16, 3)
-        .held(ids)
-    if (has("video"))
-      n += new IncrementalVideoDedup(spark, s"$stateDir/video").held(ids)
-    n
-  }
+  def held(spark: SparkSession, stateDir: String, ids: Seq[Long]): Long =
+    requireFunnelRoot(spark, stateDir, "audit").map(_.held(ids)).sum
 
-  /** Media claim sub-stores a funnel can accumulate under its state
-    * root — the recognition list [[requireFunnelRoot]] checks. */
-  private val ClaimSubStores = Seq("exact", "image", "audio", "video")
-
-  /** [[StreamCuration.requireFunnelRoot]]'s media twin: a retraction or
-    * audit pointed at a dir holding NONE of the funnel's claim stores
-    * fails naming the cause instead of reporting a clean 0 (every
-    * sub-store is individually optional; a real root always holds the
-    * mandatory exact store — [[curator]] bootstraps it at
-    * construction). */
-  private def requireFunnelRoot(stateDir: String, what: String): Unit =
-    require(ClaimSubStores.exists(sub => java.nio.file.Files
-      .exists(java.nio.file.Paths.get(s"$stateDir/$sub/current"))),
-      s"no media claim store under $stateDir (expected at least one of " +
-        s"${ClaimSubStores.mkString("/")} with a current snapshot) — " +
-        s"nothing to $what; a wrong funnel root must not audit clean")
+  /** [[StreamCuration.requireFunnelRoot]]'s media twin: the claim stores
+    * present under `stateDir`, failing loud when there are none (a real
+    * root always holds the mandatory exact store — [[curator]]
+    * bootstraps it at construction). */
+  private def requireFunnelRoot(spark: SparkSession, stateDir: String,
+                                what: String): Seq[ClaimLog] =
+    ClaimLog.present(stateDir, "media claim store", what, Seq(
+      "exact" -> (exactLog(spark, _)),
+      "image" -> (new IncrementalImageDedup(spark, _)),
+      "audio" -> (new IncrementalAudioDedup(spark, _)),
+      "video" -> (new IncrementalVideoDedup(spark, _))))
 
   def curator(spark: SparkSession, stateDir: String,
               idCol: String = "media_id", bytesCol: String = "media",
@@ -138,7 +104,7 @@ object StreamMediaCuration {
               dropUnrecognized: Boolean = false, compactEvery: Int = 16,
               onReport: Option[BatchReport => Unit] = None)
       : (DataFrame, Long) => DataFrame = {
-    val exactClaims = new Snapshots(spark, s"$stateDir/exact", exactSchema)
+    val exactClaims = exactLog(spark, s"$stateDir/exact", compactEvery)
     exactClaims.init()
     val imgCore = new IncrementalBanded64(spark, s"$stateDir/image",
       compactEvery, imageMaxHamming)
@@ -173,18 +139,9 @@ object StreamMediaCuration {
         .filter(col("id") > col("min_id")).select("id")
       val dropIds = storeDup.unionAll(batchDup).distinct()
         .withColumnRenamed("id", "_did")
-      val afterExact = sized
-        .join(dropIds, idL === col("_did"), "left_anti")
-        .localCheckpoint(true)
-      val newClaims = batchMin
-        .select(col("digest"), col("min_id").as("claimant"))
-        .join(exactClaims.read(), Seq("digest"), "left_anti")
-        .localCheckpoint(true)
-      if (newClaims.head(1).nonEmpty) {
-        exactClaims.appendDelta(newClaims)
-        if (exactClaims.deltaCount >= compactEvery)
-          exactClaims.replace(exactClaims.read())
-      }
+      val afterExact = exactClaims.claim(
+        sized.join(dropIds, idL === col("_did"), "left_anti"),
+        batchMin.select(col("digest"), col("min_id").as("claimant")))
 
       // one decode pass per batch; every tier below reads this sidecar
       val probes = MediaCuration.probe(afterExact, bytesCol, idCol)

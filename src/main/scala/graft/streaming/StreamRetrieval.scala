@@ -55,7 +55,7 @@ object StreamRetrieval {
   def indexMaintainer(spark: SparkSession, dir: String, idCol: String,
                       textCol: String, compactEvery: Int = 16)
       : (DataFrame, Long) => Unit = {
-    require(compactEvery >= 1, "compactEvery must be >= 1")
+    graft.store.Snapshots.requireCompactEvery(compactEvery)
     (batch: DataFrame, batchId: Long) => {
       if (!batch.isEmpty) {
         Retrieval.bm25AppendIndex(batch, idCol, textCol, dir, batchId)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 
 import graft.functions.TextAnalysis.strHash
 import graft.operators.Components
-import graft.store.Snapshots
+import graft.store.ClaimLog
 
 /** LEAKAGE-SAFE train/val splitting under continuous ingestion — the
   * streaming twin of [[graft.operators.Mixing.leakageSafeSplit]] (q96):
@@ -53,13 +53,12 @@ import graft.store.Snapshots
 final class StreamSplit(spark: SparkSession, root: String,
                         valMilli: Int = 100, compactEvery: Int = 16) {
   require(valMilli >= 0 && valMilli <= 1000, "valMilli must be in [0, 1000]")
-  require(compactEvery >= 1, "compactEvery must be >= 1")
 
-  private val snaps = new Snapshots(spark, root, StreamSplit.claimsSchema)
+  private val claims = StreamSplit.claimLog(spark, root, compactEvery)
 
   def init(): Unit = {
     graft.functions.PolyHash.ensureRegistered(spark) // strHash placement
-    snaps.init()
+    claims.init()
   }
 
   /** (id, bkey) MinHash band keys — the [[IncrementalDedup]] banding. */
@@ -113,10 +112,10 @@ final class StreamSplit(spark: SparkSession, root: String,
       .select(col("id"), coalesce(col("component"), col("id")).as("brep"))
     // per-bucket claims kept un-aggregated: the distinct claimed reps per
     // doc both resolve the rep (min) and detect shipped-cluster merges
-    val claims = bands.join(snaps.read(), "bkey")
+    val claimed = bands.join(claims.read(), "bkey")
       .select(col("id"), col("rep").as("crep")).distinct()
       .localCheckpoint(true)
-    val claimedRep = claims.groupBy("id").agg(min(col("crep")).as("crep"))
+    val claimedRep = claimed.groupBy("id").agg(min(col("crep")).as("crep"))
     val cand = batchRep.join(claimedRep, Seq("id"), "left")
       .select(col("id"), col("brep"),
         least(col("brep"), coalesce(col("crep"), col("brep"))).as("cand"))
@@ -129,7 +128,7 @@ final class StreamSplit(spark: SparkSession, root: String,
     // claimed rep that is not the resolved rep names a cluster that
     // already shipped under a different split than this document gets.
     // Written per batch token (overwrite) so replays are idempotent.
-    val merges = claims.join(finalRep, "id")
+    val merges = claimed.join(finalRep, "id")
       .filter(col("crep") =!= col("rep"))
       .select(lit(batchId).as("batch_id"), col("id"),
         col("rep").as("rep_kept"), col("crep").as("rep_lost"))
@@ -138,14 +137,8 @@ final class StreamSplit(spark: SparkSession, root: String,
       merges.write.mode("overwrite").parquet(s"$root/merges/b$batchId")
     // 3. claim unclaimed buckets with the resolved rep (unique per
     // bucket within a batch: sharing a bucket implies one component)
-    val newClaims = bands.join(finalRep, "id")
-      .groupBy("bkey").agg(min(col("rep")).as("rep"))
-      .join(snaps.read(), Seq("bkey"), "left_anti")
-      .localCheckpoint(true)
-    if (newClaims.head(1).nonEmpty) {
-      snaps.appendDelta(newClaims, Some(s"b$batchId"))
-      if (snaps.deltaCount >= compactEvery) snaps.replace(snaps.read())
-    }
+    claims.claim(bands.join(finalRep, "id")
+      .groupBy("bkey").agg(min(col("rep")).as("rep")), Some(s"b$batchId"))
     batch
       .join(finalRep.withColumnRenamed("id", "_rid"),
         col(idCol).cast("long") === col("_rid"), "left")
@@ -159,9 +152,21 @@ final class StreamSplit(spark: SparkSession, root: String,
 
 object StreamSplit {
 
-  private[streaming] val claimsSchema = StructType(Seq(
-    StructField("bkey", StringType, nullable = false),
-    StructField("rep", LongType, nullable = false)))
+  private def claimLog(spark: SparkSession, root: String,
+                       compactEvery: Int = 16): ClaimLog =
+    new ClaimLog(spark, root, StructType(Seq(
+      StructField("bkey", StringType, nullable = false),
+      StructField("rep", LongType, nullable = false))), "rep", compactEvery)
+
+  /** The split-claim log at `root`, which must exist: a cascade leg
+    * pointed at a dir with no store is a misconfigured takedown. */
+  private def requireStore(spark: SparkSession, root: String,
+                           what: String): ClaimLog = {
+    require(java.nio.file.Files.exists(
+      java.nio.file.Paths.get(root, "current")),
+      s"no split-claim store at $root — nothing to $what")
+    claimLog(spark, root)
+  }
 
   /** Heal the merge-log scrub's crash window BEFORE reading or
     * rewriting `merges/`: the scrub stages the filtered log at
@@ -190,7 +195,7 @@ object StreamSplit {
     * dead id's split forever), so every claim whose representative is
     * in `ids` is dropped — the next arrival in those buckets claims
     * them first-writer-wins, exactly the
-    * [[graft.store.ClaimRetraction]] semantics — and the merge audit
+    * [[graft.store.ClaimLog]] retraction semantics — and the merge audit
     * log's rows naming a dead id are scrubbed. SHIPPED splits are NOT
     * repaired (immutable by design — the class contract);
     * [[reconcile]] over the surviving corpus is the repair, as for
@@ -199,11 +204,7 @@ object StreamSplit {
     * fingerprint (collision ⇒ near-duplication). Returns claims
     * dropped. */
   def retract(spark: SparkSession, root: String, ids: Seq[Long]): Long = {
-    require(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(root, "current")),
-      s"no split-claim store at $root — nothing to retract from")
-    val snaps = new Snapshots(spark, root, claimsSchema)
-    val n = graft.store.ClaimRetraction.retract(snaps, ids, "rep")
+    val n = requireStore(spark, root, "retract from").retract(ids)
     // scrub merge-event audit rows that name a dead id (numeric ids
     // only, but a takedown receipt should not keep citing them)
     val mergesDir = new org.apache.hadoop.fs.Path(s"$root/merges")
@@ -235,11 +236,7 @@ object StreamSplit {
   def held(spark: SparkSession, root: String, ids: Seq[Long]): Long =
     if (ids.isEmpty) 0L
     else {
-      require(java.nio.file.Files.exists(
-        java.nio.file.Paths.get(root, "current")),
-        s"no split-claim store at $root — nothing to audit")
-      val snaps = new Snapshots(spark, root, claimsSchema)
-      var n = graft.store.ClaimRetraction.held(snaps, ids, "rep")
+      var n = requireStore(spark, root, "audit").held(ids)
       val mergesDir = new org.apache.hadoop.fs.Path(s"$root/merges")
       val fs = mergesDir.getFileSystem(
         spark.sparkContext.hadoopConfiguration)

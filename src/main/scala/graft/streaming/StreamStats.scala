@@ -27,28 +27,24 @@ import graft.store.Snapshots
   */
 final class StreamValueHist(spark: SparkSession, root: String,
                             compactEvery: Int = 16) {
-  require(compactEvery >= 1, "compactEvery must be >= 1")
 
   private val schema = StructType(Seq(
     StructField("v", LongType, nullable = false),
     StructField("c", LongType, nullable = false)))
-  private val store = new Snapshots(spark, root, schema)
+  private val store = new Snapshots(spark, root, schema,
+    compactEvery = compactEvery)
 
   def init(): Unit = store.init()
 
   /** Observe one micro-batch: append its (value, count) histogram as an
     * O(distinct batch values) delta. Replays are no-ops via the batch-id
-    * token; an all-NULL batch appends nothing (and must not advance the
-    * compaction cadence — the ClaimStore discipline). */
+    * token; an all-NULL batch appends nothing ([[Snapshots.commit]]). */
   def observe(batch: DataFrame, valueCol: String, batchId: Long): Unit = {
     val counts = batch.filter(col(valueCol).isNotNull)
       .groupBy(col(valueCol).cast("long").as("v"))
       .agg(count(lit(1)).as("c"))
       .localCheckpoint(true)
-    if (counts.head(1).nonEmpty) {
-      store.appendDelta(counts, Some(s"b$batchId"))
-      if (store.deltaCount >= compactEvery) store.replace(hist())
-    }
+    store.commit(counts, Some(s"b$batchId"), hist())
   }
 
   /** RETRACT one deletion batch: append its (value, count) histogram as
@@ -63,10 +59,7 @@ final class StreamValueHist(spark: SparkSession, root: String,
       .groupBy(col(valueCol).cast("long").as("v"))
       .agg((-count(lit(1))).as("c"))
       .localCheckpoint(true)
-    if (counts.head(1).nonEmpty) {
-      store.appendDelta(counts, Some(token))
-      if (store.deltaCount >= compactEvery) store.replace(hist())
-    }
+    store.commit(counts, Some(token), hist())
   }
 
   /** The merged (v, c) histogram across base + deltas; fully-retracted

@@ -43,7 +43,7 @@ object StreamVectorIndex {
   def indexMaintainer(spark: SparkSession, dir: String, idCol: String,
                       vecCol: String, compactEvery: Int = 16)
       : (DataFrame, Long) => Unit = {
-    require(compactEvery >= 1, "compactEvery must be >= 1")
+    graft.store.Snapshots.requireCompactEvery(compactEvery)
     (batch: DataFrame, batchId: Long) => {
       if (!batch.isEmpty) {
         VectorIndex.appendIndex(batch, idCol, vecCol, dir, batchId)

@@ -47,9 +47,9 @@ object Trending {
             k: Int = 3, retrieved: Long = 0L,
             compactEvery: Int = 64): StreamingQuery = {
     require(k >= 1, "k must be >= 1")
-    require(compactEvery >= 1,
-      "compactEvery must be >= 1 — 0 would rewrite the whole store every epoch")
-    val snaps = store(spark, storeRoot)
+    val snaps = new Snapshots(spark, storeRoot, trendSchema,
+      compactEvery = compactEvery)
+    snaps.init()
     val raw = spark.readStream.format("graft.sources.ItemsStream")
       .option("start", startId.toString)
       .option("fetcher", fetcherSpec)
@@ -61,47 +61,45 @@ object Trending {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
                        epoch: Long) =>
-        if (!batch.isEmpty) {
-          val sp = batch.sparkSession
-          import sp.implicits._
-          // finalized windows only: bounded top-k per window, count
-          // descending with lexicographic key tie-break. The group
-          // iterator folds through a k-bounded heap (worst entry at the
-          // head, evicted on a strictly better candidate), so memory is
-          // O(k) per window regardless of the window's key cardinality —
-          // a high-cardinality key column must not buffer a whole
-          // window's key set executor-side.
-          val typed = batch
-            .select(col("window_start"), col("window_end"), col("key"), col("n"))
-            .as[(Long, Long, String, Long)]
-          // ranking is (n desc, key asc); under this ordering the MAXIMAL
-          // element is the WORST ranked one (smallest n, then largest
-          // key), so a max-heap keeps the group's worst survivor at the
-          // head where eviction can read it in O(1)
-          val worstAtHead: Ordering[(String, Long)] =
-            Ordering.by[(String, Long), Long](_._2).reverse
-              .orElse(Ordering.by[(String, Long), String](_._1))
-          val top = typed.groupByKey(r => (r._1, r._2))
-            .flatMapGroups { (w: (Long, Long),
-                              rows: Iterator[(Long, Long, String, Long)]) =>
-              val heap =
-                scala.collection.mutable.PriorityQueue.empty[(String, Long)](
-                  worstAtHead)
-              rows.foreach { case (_, _, key, n) =>
-                if (heap.size < k) heap.enqueue((key, n))
-                else if (worstAtHead.lt((key, n), heap.head)) {
-                  heap.dequeue(); heap.enqueue((key, n))
-                }
-              }
-              val bestFirst: Seq[(String, Long)] = heap.dequeueAll.reverse
-              bestFirst.zipWithIndex.map { case ((key, n), i) =>
-                (w._1, w._2, (i + 1).toLong, key, n)
+        val sp = batch.sparkSession
+        import sp.implicits._
+        // finalized windows only: bounded top-k per window, count
+        // descending with lexicographic key tie-break. The group
+        // iterator folds through a k-bounded heap (worst entry at the
+        // head, evicted on a strictly better candidate), so memory is
+        // O(k) per window regardless of the window's key cardinality —
+        // a high-cardinality key column must not buffer a whole
+        // window's key set executor-side.
+        val typed = batch
+          .select(col("window_start"), col("window_end"), col("key"), col("n"))
+          .as[(Long, Long, String, Long)]
+        // ranking is (n desc, key asc); under this ordering the MAXIMAL
+        // element is the WORST ranked one (smallest n, then largest
+        // key), so a max-heap keeps the group's worst survivor at the
+        // head where eviction can read it in O(1)
+        val worstAtHead: Ordering[(String, Long)] =
+          Ordering.by[(String, Long), Long](_._2).reverse
+            .orElse(Ordering.by[(String, Long), String](_._1))
+        val top = typed.groupByKey(r => (r._1, r._2))
+          .flatMapGroups { (w: (Long, Long),
+                            rows: Iterator[(Long, Long, String, Long)]) =>
+            val heap =
+              scala.collection.mutable.PriorityQueue.empty[(String, Long)](
+                worstAtHead)
+            rows.foreach { case (_, _, key, n) =>
+              if (heap.size < k) heap.enqueue((key, n))
+              else if (worstAtHead.lt((key, n), heap.head)) {
+                heap.dequeue(); heap.enqueue((key, n))
               }
             }
-            .toDF("window_start", "window_end", "rank", "key", "n")
-          snaps.appendDelta(top, Some(s"epoch-$epoch"))
-          if (snaps.deltaCount >= compactEvery) snaps.replace(snaps.read())
-        }
+            val bestFirst: Seq[(String, Long)] = heap.dequeueAll.reverse
+            bestFirst.zipWithIndex.map { case ((key, n), i) =>
+              (w._1, w._2, (i + 1).toLong, key, n)
+            }
+          }
+          .toDF("window_start", "window_end", "rank", "key", "n")
+        // an empty epoch (no window finalized) appends nothing
+        snaps.commit(top, Some(s"epoch-$epoch"))
       }
       .start()
   }

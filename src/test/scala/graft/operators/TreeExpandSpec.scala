@@ -205,37 +205,31 @@ class TreeExpandSpec extends AnyFunSuite {
     assert(driverJobs + 4 <= roundJobs, s"driver=$driverJobs rounds=$roundJobs")
   }
 
-  test("seed checkpoint is eager by default (deadlock guard), lazy via conf") {
-    // the guard costs exactly one extra (tiny) job vs the lazySeed escape
-    // hatch — pin the +1 so the default stays eager and the hatch stays live
+  test("seed checkpoint is eager (deadlock guard)") {
+    // the seed root set is broadcast into the first round, so it must be
+    // materialized before that broadcast is planned: the expansion's
+    // FIRST job is the seed's own checkpoint
     val n = 200L
     val chain = (1L to n).map(i =>
       (i, if (i == 1L) Option.empty[Long] else Option(i - 1))).toDF("id", "parent")
-    def countJobs(f: => Unit): Int = {
-      var jobs = 0
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs += 1
-      }
-      spark.sparkContext.addSparkListener(l)
-      try { f; org.apache.spark.GraftTestBus.flush(spark.sparkContext) }
-      finally spark.sparkContext.removeSparkListener(l)
-      jobs
+    val jobs = scala.collection.mutable.ArrayBuffer.empty[String]
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.synchronized { jobs += j.stageInfos.map(_.name).mkString(";") }
     }
-    var eagerOut: Map[Long, (Long, Int, String)] = null
-    var lazyOut: Map[Long, (Long, Int, String)] = null
-    val eagerJobs = countJobs {
-      eagerOut = asMap(TreeExpand.expandByDoubling(chain, Seq(1L).toDF("id")))
-    }
-    spark.conf.set("spark.graft.treeExpand.lazySeed", "true")
-    val lazyJobs =
-      try countJobs {
-        lazyOut = asMap(TreeExpand.expandByDoubling(chain, Seq(1L).toDF("id")))
-      }
-      finally spark.conf.unset("spark.graft.treeExpand.lazySeed")
-    assert(eagerOut == lazyOut)
-    assert(eagerJobs == lazyJobs + 1, s"eager=$eagerJobs lazy=$lazyJobs")
+    org.apache.spark.GraftTestBus.flush(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    val out =
+      try {
+        val r = asMap(TreeExpand.expandByDoubling(chain, Seq(1L).toDF("id")))
+        org.apache.spark.GraftTestBus.flush(spark.sparkContext)
+        r
+      } finally spark.sparkContext.removeSparkListener(l)
+    assert(out.size == n && out(n) == ((1L, (n - 1).toInt,
+      (1L to n).mkString("/"))), s"chain expansion: ${out.get(n)}")
+    assert(jobs.nonEmpty && jobs.head.startsWith("localCheckpoint at TreeExpand"),
+      s"first job is not the seed checkpoint: ${jobs.take(3)}")
   }
 
   test("pointer doubling fails loud on cycles and over-deep trees") {

@@ -115,7 +115,7 @@ class CurationSpec extends AnyFunSuite {
 
   test("curation is deterministic end to end") {
     def run() = Curation.curate(docs, evalDocs,
-      nearDupThresholdMilli = 500, packBudget = 256, audit = false)._1
+      nearDupThresholdMilli = 500, packBudget = 256)._1
       .select("doc_id", "pack_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(run() == run())
@@ -158,7 +158,7 @@ class CurationSpec extends AnyFunSuite {
   test("every kept document survives for a provable reason: no flagged " +
     "pair remains intact") {
     val (out, _) = Curation.curate(docs, evalDocs,
-      nearDupThresholdMilli = 500, audit = false)
+      nearDupThresholdMilli = 500)
     val kept = out.select("doc_id").collect().map(_.getLong(0)).toSet
     // no verified near-dup pair has BOTH sides in the curated output
     val pairs = graft.operators.Dedup.minhashPairs(
@@ -174,8 +174,7 @@ class CurationSpec extends AnyFunSuite {
   test("nearDupQualityCol keeps the best copy per cluster, still no " +
     "surviving pair") {
     val (out, _) = Curation.curate(docs, evalDocs,
-      nearDupThresholdMilli = 500, nearDupQualityCol = Some("n_chars"),
-      audit = false)
+      nearDupThresholdMilli = 500, nearDupQualityCol = Some("n_chars"))
     val kept = out.select("doc_id").collect().map(_.getLong(0)).toSet
     val pairs = graft.operators.Dedup.minhashPairs(
         docs, "doc_id", "text", thresholdMilli = 500)
@@ -190,7 +189,7 @@ class CurationSpec extends AnyFunSuite {
     // greedy keep-lowest-id run on the same corpus (n_chars ordering and
     // id ordering disagree on at least one cluster of this fixture)
     val (greedy, _) = Curation.curate(docs, evalDocs,
-      nearDupThresholdMilli = 500, audit = false)
+      nearDupThresholdMilli = 500)
     val greedyKept = greedy.select("doc_id").collect().map(_.getLong(0)).toSet
     assert(kept != greedyKept,
       "quality-aware keep chose the same survivors as greedy — knob inert")

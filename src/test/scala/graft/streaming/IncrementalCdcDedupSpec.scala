@@ -52,7 +52,7 @@ class IncrementalCdcDedupSpec extends AnyFunSuite {
     // the dropped copy claimed nothing: its NOVEL chunks (the edited
     // prefix region) are still unclaimed, so a later doc made of them
     // survives
-    val claimants = d.claims().select("claimant").distinct()
+    val claimants = d.read().select("claimant").distinct()
       .as[Long].collect().toSet
     assert(!claimants.contains(10L), s"dropped doc claimed: $claimants")
   }
@@ -100,7 +100,7 @@ class IncrementalCdcDedupSpec extends AnyFunSuite {
     assert(d.retract(Seq(1L)) > 0L)
     assert(d.held(Seq(1L)) == 0L)
     assert(d.filterAndClaim(copy, "doc_id", "text").count() == 1L)
-    val claimants = d.claims().select("claimant").distinct()
+    val claimants = d.read().select("claimant").distinct()
       .as[Long].collect().toSet
     assert(claimants == Set(2L), s"$claimants")
     // and a THIRD copy now drops against the revived claimant

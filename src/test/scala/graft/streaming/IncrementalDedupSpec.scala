@@ -89,7 +89,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     dd.filterAndClaim(seed, "doc_id", "text").count()
     val before = listDirs(root)
-    val indexRows = dd.buckets().count()
+    val indexRows = dd.read().count()
     assert(indexRows >= 100) // the index is much bigger than the next batch
 
     val small = Seq((100L, "one tiny novel batch with a handful of fresh words appended"))
@@ -121,7 +121,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     // semantics preserved through compaction: both docs' buckets still claimed
     assert(dd.filterAndClaim(
       Seq((3L, base)).toDF("doc_id", "text"), "doc_id", "text").count() == 0)
-    assert(dd.buckets().select("claimant").distinct().count() == 2)
+    assert(dd.read().select("claimant").distinct().count() == 2)
   }
 
   test("drives from a real streaming query via foreachBatch") {
@@ -251,8 +251,8 @@ class IncrementalDedupSpec extends AnyFunSuite {
     // 3's are untouched
     val removed = dd.retract(Seq(1L))
     assert(removed == 4L, s"removed $removed claims (want 4 bands)")
-    assert(dd.buckets().filter(col("claimant") === 1L).count() == 0)
-    assert(dd.buckets().filter(col("claimant") === 3L).count() == 4)
+    assert(dd.read().filter(col("claimant") === 1L).count() == 0)
+    assert(dd.read().filter(col("claimant") === 3L).count() == 4)
     // the replayed dup now SURVIVES and becomes the new claimant…
     assert(dd.filterAndClaim(Seq((4L, base)).toDF("doc_id", "text"),
       "doc_id", "text").count() == 1)
@@ -262,7 +262,7 @@ class IncrementalDedupSpec extends AnyFunSuite {
     dd2.init()
     assert(dd2.filterAndClaim(Seq((5L, base)).toDF("doc_id", "text"),
       "doc_id", "text").count() == 0)
-    assert(dd2.buckets().filter(col("claimant") === 4L).count() == 4)
+    assert(dd2.read().filter(col("claimant") === 4L).count() == 4)
     // empty / no-match retractions are free no-ops
     assert(dd2.retract(Seq.empty) == 0L)
     assert(dd2.retract(Seq(999L)) == 0L)

@@ -67,7 +67,7 @@ class IncrementalLineDedupSpec extends AnyFunSuite {
     val replay = collect(dd.scrubAndClaim(b2, "doc_id", "text"))
     assert(replay == first)
     // and the claims table did not double-claim: one row per distinct line
-    val claims = dd.lines().count()
+    val claims = dd.read().count()
     assert(claims == 4L) // a b c d
   }
 
@@ -105,7 +105,7 @@ class IncrementalLineDedupSpec extends AnyFunSuite {
         "doc_id", "text").count()
     }
     // 'shared' claimed once by doc 1; five distinct line$i claims
-    assert(dd.lines().count() == 6L)
+    assert(dd.read().count() == 6L)
     val out = collect(dd.scrubAndClaim(
       Seq((9L, "shared\nline3\nnovel")).toDF("doc_id", "text"),
       "doc_id", "text"))
