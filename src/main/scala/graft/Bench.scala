@@ -421,7 +421,9 @@ object Bench {
     val jobsTotal = results.map { case (_, _, j, _, _) =>
       math.max(j, 0L) }.sum
     val compact = f"""{"metric":"total","value":$total%.3f,"unit":"sec","n_queries":${results.size},"n_errors":$nErr,"errors":$errNames,"jobs_total":$jobsTotal,"canonical_eligible":$canonicalEligible,"spread_frac2":$spreadFrac2%.3f,"agg":"min","reps":$reps,"sf":"$sfDir","sidecar":${sidecar.map(p => "\"" + p + "\"").getOrElse("null")}}"""
-    println(compact)
+    // the compact line is the run's very last output: stopping Spark
+    // first keeps its shutdown chatter from landing after it
     spark.stop()
+    println(compact)
   }
 }

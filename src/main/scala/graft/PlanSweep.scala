@@ -19,7 +19,7 @@ package graft
   * Usage: scripts/run.sh graft.PlanSweep [sfDir]
   */
 object PlanSweep {
-  private val Needles = Seq("aggregate(", "winnow_select", "pin_eval",
+  private val Needles = Seq("aggregate(", "filter(", "winnow_select", "pin_eval",
     "nearest_centroid", "nearest_residual", "transform(")
 
   def main(args: Array[String]): Unit = {

@@ -41,6 +41,11 @@ case class PinEval(child: Expression) extends UnaryExpression {
   /** PURE but declared non-deterministic — see the class doc. */
   override lazy val deterministic: Boolean = false
 
+  /** Never foldable, even over a literal child: ConstantFolding keys on
+    * `foldable`, not on determinism, so inheriting the child's flag would
+    * fold the pin away. */
+  override def foldable: Boolean = false
+
   override def eval(input: InternalRow): Any = child.eval(input)
 
   override protected def doGenCode(ctx: CodegenContext,

@@ -12,8 +12,8 @@ private[graft] object ConfWindow {
         java.util.concurrent.locks.ReentrantLock]]())
 
   /** Scoped override of a session conf (`key` := `want`) for the duration
-    * of an expansion — AQE suspension for small graphs, the one-job head()
-    * window below. The conf is session-scoped, so the flip is visible to
+    * of an expansion — AQE suspension for a small doubling state, the
+    * one-job head() window below. The conf is session-scoped, so the flip is visible to
     * any query issued on the SAME session during the window (documented at
     * the public entry points — use a separate session for
     * concurrency-sensitive work); only a lock HOLDER ever writes the conf,

@@ -748,7 +748,9 @@ object Similarity {
                                 cellCols: Seq[String]): DataFrame = {
     val g = assigned.sparkSession.conf
       .get("spark.graft.semdedup.pairblocks", "8").toLong
-    require(g >= 1, s"spark.graft.semdedup.pairblocks must be >= 1, got $g")
+    // the a-side is replicated g ways across the exchange: bound it
+    require(g >= 1 && g <= 65536,
+      s"spark.graft.semdedup.pairblocks must be in [1, 65536], got $g")
     val cells = cellCols.map(col)
     val a = assigned.select(cells ++ Seq(col(idCol).as("id_a"),
       col("vecd").as("va"), col("norm").as("na")): _*)

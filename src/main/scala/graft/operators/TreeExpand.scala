@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType,
+  StringType, StructField, StructType}
 import org.apache.spark.storage.StorageLevel
 
 /** Recursive tree expansion (SURVEY.md J3): the set-based replacement for the
@@ -10,30 +12,32 @@ import org.apache.spark.storage.StorageLevel
   * recursive CTE, so this is the classic semi-naive BFS: one self-join per
   * tree *level* (not per node), accumulating (id, root, depth, path).
   *
-  * Scale design:
-  *  - two regimes, chosen by MEASURING the edge table (one count, which
-  *    doubles as cache population). Small graphs (edge table within the
-  *    broadcast budget): every level joins against ONE broadcast of the
-  *    edge table itself — the build side is the exactly-measured relation,
-  *    every in-plan level reuses the same exchange (one build job per
-  *    round, not per level — the q11 job floor), unmeasured level outputs
-  *    only stream, and AQE (pure per-stage latency at this size) is
-  *    suspended for the expansion. Large graphs: the edge side is
-  *    repartitioned by parent key once and cached, deep levels shuffle-hash
-  *    against it, and AQE stays per session config — the 100-TB path.
-  *  - each round is `localCheckpoint`ed to cut lineage growth (otherwise the
-  *    plan doubles per level and the driver OOMs planning level ~30).
+  * Scale design — a driver pass in front of distributed rounds, chosen by
+  * MEASURING the edge table (one count, which doubles as cache population):
+  *  - driver pass: when the edge table fits the broadcast budget (rows, and
+  *    bytes at 48 B per edge) it is collected ONCE and the BFS runs level by
+  *    level on the driver, returning a local relation. A comment thread of
+  *    a few nodes costs two jobs instead of a round's fixed handful per
+  *    `levelsPerRound` levels. The pass declines — falls through to the
+  *    rounds — when its OUTPUT outgrows the same row and byte budget
+  *    (overlapping roots and long paths can multiply a small edge table).
+  *  - distributed rounds: the edge side is repartitioned by parent key once
+  *    and cached, the measured frontier is broadcast while it fits the
+  *    budget and deeper levels shuffle-hash against the edges — the 100-TB
+  *    path. Each round is `localCheckpoint`ed to cut lineage growth
+  *    (otherwise the plan doubles per level and the driver OOMs planning
+  *    level ~30).
   *  - termination is the fixpoint (empty frontier) with a maxDepth fuse
-  *    against cyclic/corrupt edge sets.
+  *    against cyclic/corrupt edge sets; both paths return the same rows and
+  *    fail with the same error (spec-pinned).
   *
-  * Concurrency note (both entry points): a SMALL-graph expansion suspends
-  * `spark.sql.adaptive.enabled` on its session for the duration (tiny
-  * broadcast-only stages gain nothing from adaptive replanning, and the
-  * per-stage replan latency dominates at that size). Concurrent expansions
-  * on the same session serialize their windows under a per-session lock
-  * (no save/restore clobber), but an unrelated query issued on the SAME
-  * session during the window also runs with AQE off — run
-  * concurrency-sensitive work on its own `spark.newSession()`.
+  * Concurrency note (both entry points): the frontier measurements run
+  * inside [[ConfWindow.headOneJob]], a session-conf override for the
+  * duration of the call. Concurrent expansions on the same session
+  * serialize their windows under a per-session lock (no save/restore
+  * clobber), but an unrelated query issued on the SAME session during the
+  * window also sees the override — run concurrency-sensitive work on its
+  * own `spark.newSession()`.
   */
 object TreeExpand {
 
@@ -59,24 +63,26 @@ object TreeExpand {
     * @param roots one column `idCol`: the subtree roots to expand (included
     *              in the output at depth 0)
     * @param levelsPerRound BFS levels expanded inside ONE physical plan per
-    *              driver round. Each round costs a fixed handful of jobs
-    *              (edge-broadcast build, materialize batch, fetch next
+    *              distributed round. Each round costs a fixed handful of
+    *              jobs (frontier build, materialize batch, fetch next
     *              frontier) regardless of how many levels it covers, so
     *              batching divides the dominant driver-scheduling cost by
-    *              the batch size; exchange reuse of the single edge-table
-    *              broadcast keeps the chained in-plan joins to one build.
+    *              the batch size.
     * @param driverFrontierRows max frontier rows kept on the driver between
-    *              rounds (the `driver` residency above)
+    *              rounds (the `driver` residency above); the driver pass
+    *              also needs the root set — its first frontier — within it
     * @param broadcastFrontierRows max frontier rows joined via broadcast;
     *              beyond this the round degrades to a shuffle-hash join
-    *              instead of OOMing the driver with the broadcast build
-    * @param broadcastMaxBytes max ESTIMATED frontier payload (path strings
-    *              dominate) for any broadcast/driver residency — rows are
-    *              not a memory unit, and paths grow with depth, so the
-    *              regime demotes mid-flight when a measured frontier
-    *              exceeds this
+    *              instead of OOMing the driver with the broadcast build.
+    *              Also the driver pass's row budget, for the edge table and
+    *              for its output.
+    * @param broadcastMaxBytes max ESTIMATED payload (path strings dominate)
+    *              for any broadcast/driver residency and for the driver
+    *              pass — rows are not a memory unit, and paths grow with
+    *              depth
     * @param modeLog when set, appends the residency chosen each round —
-    *              test observability for the size gate
+    *              test observability for the size gate (stays empty when
+    *              the driver pass answers)
     * @return (id, root, depth: int, path: string "root/…/id")
     */
   def expand(
@@ -94,133 +100,93 @@ object TreeExpand {
     require(driverFrontierRows >= 1 && broadcastFrontierRows >= driverFrontierRows,
       "need 1 <= driverFrontierRows <= broadcastFrontierRows")
     val spark = edges.sparkSession
+    val idType = edges.schema(idCol).dataType
     val childOf = edges
       .select(col(idCol).as("_id"), col(parentCol).as("_parent"))
       .filter(col("_parent").isNotNull)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // a map-only count populates the cache and decides the regime. No
-    // further edge metadata is needed: the small regime's broadcast build
-    // side is the edge table itself — the one relation this count measures
-    // EXACTLY — so there is nothing unmeasured left to cap (see step()).
-    // Frontier bytes are still not bounded by rows (paths grow with
-    // depth), so adopt() measures them each round and demotes the regime
-    // mid-flight if they blow the budget — rows are not a memory unit
-    // (same lesson as Components.of's byte gate).
-    val edgeCount = childOf.count()
-    var smallGraph = edgeCount <= broadcastFrontierRows &&
-      edgeCount * 48 <= broadcastMaxBytes
-    // large regime only: deep levels shuffle-hash every round, so pay the
+    // the rounds' deep levels shuffle-hash every round, so pay the
     // parent-key repartition once and reuse its partitioning each round
     var shuffledInit = false
     lazy val childOfShuffled = {
       shuffledInit = true
       childOf.repartition(col("_parent")).persist(StorageLevel.MEMORY_AND_DISK)
     }
-
-    def step(level: DataFrame, mode: String): DataFrame = {
-      // Small graphs broadcast the EDGE TABLE, not the frontier: the build
-      // side is then the one relation whose size the regime gate measured
-      // EXACTLY, every in-plan level joins against the SAME broadcast
-      // (exchange reuse → ONE build job per round, where frontier-side
-      // builds cost one job PER LEVEL — the q11 job floor: 27 → ~14 jobs
-      // at sf0.1), and unmeasured level outputs only ever STREAM through
-      // the chained joins — no in-round amplification can blow up a
-      // broadcast build, so batched levels need no cap. Large graphs
-      // broadcast only a within-budget MATERIALIZED frontier and
-      // shuffle-hash the lazy deeper levels: broadcasting those would risk
-      // an unbounded build on a fan-out spike.
-      val keyed = level.select(col("_id").as("_pid"), col("_root"),
-        col("_depth"), col("_path"))
-      if (mode == ShuffleMode)
-        childOfShuffled
-          .join(keyed.hint("shuffle_hash"), col("_parent") === col("_pid"))
-          .select(col("_id"), col("_root"), (col("_depth") + 1).as("_depth"),
-            concat(col("_path"), lit("/"), col("_id").cast("string")).as("_path"))
-      else if (smallGraph)
-        keyed
-          .join(broadcast(childOf), col("_parent") === col("_pid"))
-          .select(col("_id"), col("_root"), (col("_depth") + 1).as("_depth"),
-            concat(col("_path"), lit("/"), col("_id").cast("string")).as("_path"))
-      else
-        childOf
-          .join(broadcast(keyed), col("_parent") === col("_pid"))
-          .select(col("_id"), col("_root"), (col("_depth") + 1).as("_depth"),
-            concat(col("_path"), lit("/"), col("_id").cast("string")).as("_path"))
-    }
-    val frontierSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("_id", edges.schema(idCol).dataType),
-      org.apache.spark.sql.types.StructField("_root", edges.schema(idCol).dataType),
-      org.apache.spark.sql.types.StructField("_depth",
-        org.apache.spark.sql.types.IntegerType, nullable = false),
-      org.apache.spark.sql.types.StructField("_path",
-        org.apache.spark.sql.types.StringType)))
-
-    var frontierRows: Array[org.apache.spark.sql.Row] = Array.empty
-    var frontier: DataFrame = null // executor-side frontier when not driver-held
-    var mode: String = DriverMode
-    var frontierKnownEmpty = false
-
-    // suspend AQE for a small-graph expansion: every stage is tiny and
-    // broadcast-only, so adaptive replanning is pure per-stage latency.
-    // Large graphs keep the session's setting (skew handling on the wide
-    // shuffle-hash rounds is worth it there). See [[AqeWindow]] for the
-    // concurrency contract.
-    val aqe = ConfWindow.aqe(spark)
     val headWin = ConfWindow.headOneJob(spark)
-    def suspendAqe(): Unit = { if (smallGraph) aqe.suspend(); headWin.suspend() }
-    def restoreAqe(): Unit = { aqe.restore(); headWin.restore() }
-
-    /** Estimated broadcast payload of one frontier row: the path string
-      * dominates; ids/depth are a constant tax. */
-    def rowBytes(r: org.apache.spark.sql.Row): Long =
-      32L + (if (r.isNullAt(3)) 0 else r.getString(3).length)
-
-    /** Measure the new frontier and pick next round's residency: one
-      * `head(cap+1)` job (cheap — the source is checkpointed); a count job
-      * only on the rare large-frontier rounds to apply the broadcast cap. */
-    def adopt(nextFrontier: DataFrame): Unit = {
-      val sample = nextFrontier.head(driverFrontierRows + 1)
-      val sampleBytes = sample.iterator.map(rowBytes).sum
-      if (sample.length <= driverFrontierRows && sampleBytes <= broadcastMaxBytes) {
-        mode = DriverMode
-        frontierRows = sample
-        frontier = spark.createDataFrame(
-          java.util.Arrays.asList(frontierRows: _*), frontierSchema)
-        frontierKnownEmpty = sample.isEmpty
-      } else {
-        // one global map-side-combined agg: row count + payload bytes —
-        // the residency decision needs nothing per-key (at 100 TB a
-        // per-key agg here would be a full frontier shuffle per round)
-        val m = nextFrontier
-          .agg(count(lit(1)),
-            coalesce(sum(coalesce(length(col("_path")), lit(0)) + 32L),
-              lit(0L)))
-          .head()
-        val (rows, bytes) = (m.getLong(0), m.getLong(1))
-        mode = if (rows <= broadcastFrontierRows && bytes <= broadcastMaxBytes)
-          BroadcastMode else ShuffleMode
-        if (smallGraph && (bytes > broadcastMaxBytes || rows > broadcastFrontierRows)) {
-          // the frontier outgrew a broadcast budget: paths can outgrow the
-          // byte cap with depth, and overlapping roots can push (node,
-          // covering-root) pair counts past the row cap even though each
-          // level's NODES are a subset of the edge table. The edge-side
-          // broadcast would still be SAFE, but the expansion is no longer
-          // the tiny all-broadcast case the AQE suspension was priced for
-          // — demote to the shuffle regime for the rest of the expansion
-          // and give AQE (and its skew handling) back to its wide stages
-          smallGraph = false
-          restoreAqe()
+    headWin.suspend()
+    try {
+      // one map-only job populates the cache and measures the edge table
+      // (Dataset.count() plans a global aggregate that AQE runs as several
+      // jobs). Within the budget the driver pass collects it (it is then
+      // exactly what a broadcast build would hold); the id types must
+      // round-trip through the driver unchanged — keys compare as boxed
+      // values and paths are built with toString
+      val edgeCount = childOf.queryExecution.toRdd.count()
+      val local =
+        if (edgeCount <= broadcastFrontierRows && edgeCount * 48 <= broadcastMaxBytes &&
+            driverIdType(idType) && edges.schema(parentCol).dataType == idType) {
+          val rootRows = roots.select(col(idCol)).head(driverFrontierRows + 1)
+          if (rootRows.length > driverFrontierRows) None
+          else expandOnDriver(childOf.collect(), rootRows.map(_.get(0)), idCol,
+            idType, maxDepth, broadcastFrontierRows, broadcastMaxBytes, spark)
+        } else None
+      local.getOrElse {
+        // distributed rounds: `levelsPerRound` levels per physical plan,
+        // frontier residency re-chosen by size each round (see DriverMode)
+        def step(level: DataFrame, mode: String): DataFrame = {
+          // broadcast only a within-budget MATERIALIZED frontier; the lazy
+          // deeper levels shuffle-hash against the parent-keyed edges —
+          // broadcasting those would risk an unbounded build on a fan-out
+          // spike
+          val keyed = level.select(col("_id").as("_pid"), col("_root"),
+            col("_depth"), col("_path"))
+          val joined =
+            if (mode == ShuffleMode)
+              childOfShuffled.join(keyed.hint("shuffle_hash"), col("_parent") === col("_pid"))
+            else childOf.join(broadcast(keyed), col("_parent") === col("_pid"))
+          joined.select(col("_id"), col("_root"), (col("_depth") + 1).as("_depth"),
+            concat(col("_path"), lit("/"), col("_id").cast("string")).as("_path"))
         }
-        frontierRows = Array.empty
-        frontier = nextFrontier
-        frontierKnownEmpty = false
-      }
-      if (modeLog != null) modeLog += mode
-    }
+        val frontierSchema = StructType(Seq(
+          StructField("_id", idType),
+          StructField("_root", idType),
+          StructField("_depth", IntegerType, nullable = false),
+          StructField("_path", StringType)))
 
-    suspendAqe()
-    val acc =
-      try {
+        var frontier: DataFrame = null // driver-held local relation or executor-side filter
+        var mode: String = DriverMode
+        var frontierKnownEmpty = false
+
+        /** Measure the new frontier and pick next round's residency: one
+          * `head(cap+1)` job (cheap — the source is checkpointed); a count
+          * job only on the rare large-frontier rounds to apply the broadcast
+          * cap. */
+        def adopt(nextFrontier: DataFrame): Unit = {
+          val sample = nextFrontier.head(driverFrontierRows + 1)
+          val sampleBytes = sample.iterator
+            .map(r => rowBytes(if (r.isNullAt(3)) null else r.getString(3))).sum
+          if (sample.length <= driverFrontierRows && sampleBytes <= broadcastMaxBytes) {
+            mode = DriverMode
+            frontier = spark.createDataFrame(java.util.Arrays.asList(sample: _*), frontierSchema)
+            frontierKnownEmpty = sample.isEmpty
+          } else {
+            // one global map-side-combined agg: row count + payload bytes —
+            // the residency decision needs nothing per-key (at 100 TB a
+            // per-key agg here would be a full frontier shuffle per round)
+            val m = nextFrontier
+              .agg(count(lit(1)),
+                coalesce(sum(coalesce(length(col("_path")), lit(0)) + 32L),
+                  lit(0L)))
+              .head()
+            val (rows, bytes) = (m.getLong(0), m.getLong(1))
+            mode = if (rows <= broadcastFrontierRows && bytes <= broadcastMaxBytes)
+              BroadcastMode else ShuffleMode
+            frontier = nextFrontier
+            frontierKnownEmpty = false
+          }
+          if (modeLog != null) modeLog += mode
+        }
+
         adopt(roots
           .select(col(idCol).as("_id"))
           .distinct()
@@ -231,18 +197,15 @@ object TreeExpand {
         var out = frontier
         var depth = 0
         while (depth < maxDepth && !frontierKnownEmpty) {
-          // no in-round cap is needed: small-graph levels build their
-          // broadcast from the MEASURED edge table (see step()), so the
-          // unmeasured in-plan level outputs only stream — batching depth
-          // is limited by maxDepth alone
+          // unmeasured in-plan level outputs only ever feed shuffle-hash
+          // joins, so batching depth is limited by maxDepth alone
           val rounds = math.min(levelsPerRound, maxDepth - depth)
-          val deeperMode = if (smallGraph) BroadcastMode else ShuffleMode
           var levels = List(step(frontier, mode))
-          (2 to rounds).foreach { _ =>
-            levels = step(levels.head, deeperMode) :: levels }
-          // one job materializes every level of the batch; coalesce only the
-          // small (driver-frontier) rounds — 32 near-empty partitions per
-          // probe is pure overhead there; wide rounds keep their parallelism
+          (2 to rounds).foreach { _ => levels = step(levels.head, ShuffleMode) :: levels }
+          // one job materializes every level of the batch; coalesce only
+          // the small (driver-frontier) rounds — 32 near-empty partitions
+          // per probe is pure overhead there; wide rounds keep their
+          // parallelism
           val union = levels.reverse.reduce(_ unionAll _)
           val batch = (if (mode == DriverMode) union.coalesce(8) else union)
             .localCheckpoint()
@@ -250,27 +213,98 @@ object TreeExpand {
           adopt(batch.filter(col("_depth") === depth))
           out = out.unionAll(batch)
         }
-        if (!frontierKnownEmpty && frontier.head(1).nonEmpty) {
-          // nodes at exactly depth == maxDepth may simply be leaves: a tree
-          // of height maxDepth converged legitimately. Only fail if the
-          // frontier actually has children (rows at depth maxDepth + 1) —
-          // same contract as expandByDoubling (rejects _dist > maxDepth)
-          val deeper = step(frontier, mode).head(1).nonEmpty
-          if (deeper)
-            throw new IllegalStateException(
-              s"TreeExpand did not converge within maxDepth=$maxDepth — " +
-                "cyclic or corrupt edge set? (matches Components.of fail-loud policy)")
-        }
-        out
-      } finally {
-        restoreAqe()
-        // acc references only checkpointed batches / local relations, so the
-        // edge caches can go now
-        childOf.unpersist(blocking = false)
-        if (shuffledInit) childOfShuffled.unpersist(blocking = false)
+        // nodes at exactly depth == maxDepth may simply be leaves: a tree
+        // of height maxDepth converged legitimately. Only fail if the
+        // frontier actually has children (rows at depth maxDepth + 1) —
+        // same contract as expandByDoubling (rejects _dist > maxDepth)
+        if (!frontierKnownEmpty && frontier.head(1).nonEmpty &&
+            step(frontier, mode).head(1).nonEmpty)
+          notConverged(maxDepth)
+        out.select(col("_id").as(idCol), col("_root").as("root"),
+          col("_depth").as("depth"), col("_path").as("path"))
       }
-    acc.select(col("_id").as(idCol), col("_root").as("root"),
-      col("_depth").as("depth"), col("_path").as("path"))
+    } finally {
+      headWin.restore()
+      // the result references only checkpointed batches / local relations,
+      // so the edge caches can go now
+      childOf.unpersist(blocking = false)
+      if (shuffledInit) childOfShuffled.unpersist(blocking = false)
+    }
+  }
+
+  /** Estimated payload of one output/frontier row: the path string
+    * dominates; ids and depth are a constant tax. */
+  private def rowBytes(path: String): Long =
+    32L + (if (path == null) 0 else path.length)
+
+  private def notConverged(maxDepth: Int): Nothing =
+    throw new IllegalStateException(
+      s"TreeExpand did not converge within maxDepth=$maxDepth — " +
+        "cyclic or corrupt edge set? (matches Components.of fail-loud policy)")
+
+  private def outputSchema(idCol: String, idType: DataType): StructType =
+    StructType(Seq(
+      StructField(idCol, idType),
+      StructField("root", idType),
+      StructField("depth", IntegerType, nullable = false),
+      StructField("path", StringType)))
+
+  /** [[expand]]'s driver pass over the collected edge table: the rounds'
+    * BFS, level by level, with the same join semantics — one row per
+    * (node, covering root, parent-edge walk), so duplicate edges multiply
+    * rows; a null or edge-less root keeps its depth-0 row; a null child id
+    * yields a null path. Returns None once the output exceeds `maxRows` or
+    * `maxBytes` (the caller then runs the rounds). A frontier still alive
+    * at maxDepth throws only if it has children, as in the rounds. */
+  private def expandOnDriver(
+      edgeRows: Array[Row],
+      rootIds: Array[Any],
+      idCol: String,
+      idType: DataType,
+      maxDepth: Int,
+      maxRows: Long,
+      maxBytes: Long,
+      spark: org.apache.spark.sql.SparkSession): Option[DataFrame] = {
+    val children = new java.util.HashMap[Any, java.util.ArrayList[Any]]()
+    edgeRows.foreach { r =>
+      children.computeIfAbsent(r.get(1), _ => new java.util.ArrayList[Any]()).add(r.get(0))
+    }
+    val out = new java.util.ArrayList[Row]()
+    var bytes = 0L
+    def emit(id: Any, root: Any, depth: Int, path: String): Boolean = {
+      out.add(Row(id, root, depth, path))
+      bytes += rowBytes(path)
+      out.size <= maxRows && bytes <= maxBytes
+    }
+    // frontier entries: (id, root, path) at the current depth
+    var frontier = rootIds.distinct.toSeq.map { id =>
+      (id, id, if (id == null) null else String.valueOf(id)) }
+    if (!frontier.forall { case (id, root, path) => emit(id, root, 0, path) })
+      return None
+    var depth = 0
+    while (depth < maxDepth && frontier.nonEmpty) {
+      depth += 1
+      val next = Seq.newBuilder[(Any, Any, String)]
+      val it = frontier.iterator
+      while (it.hasNext) {
+        val (id, root, path) = it.next()
+        val kids = children.get(id)
+        if (kids != null) {
+          var i = 0
+          while (i < kids.size) {
+            val kid = kids.get(i)
+            val kidPath = if (kid == null) null else path + "/" + kid
+            if (!emit(kid, root, depth, kidPath)) return None
+            next += ((kid, root, kidPath))
+            i += 1
+          }
+        }
+      }
+      frontier = next.result()
+    }
+    if (frontier.exists { case (id, _, _) => children.containsKey(id) })
+      notConverged(maxDepth)
+    Some(spark.createDataFrame(out, outputSchema(idCol, idType)))
   }
 
   /** Pointer-doubling expansion: [[expand]]'s output contract in
@@ -498,13 +532,10 @@ object TreeExpand {
   /** Id types whose driver-side toString matches Spark's string cast — the
     * driver tier builds `path` strings locally, so it only engages for
     * these (anything else keeps the distributed rounds). */
-  private def driverIdType(t: org.apache.spark.sql.types.DataType): Boolean =
-    t match {
-      case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.StringType => true
-      case _ => false
-    }
+  private def driverIdType(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType | StringType => true
+    case _ => false
+  }
 
   /** [[expandByDoubling]]'s driver tier: the complete (proven by the caller)
     * seed state resolves in one local pass — walk each unresolved chain to
@@ -517,15 +548,14 @@ object TreeExpand {
     * maxDepth throws the subtree error — so the same input never flips
     * between success and failure across the size gate. */
   private def resolveOnDriver(
-      sample: Array[org.apache.spark.sql.Row],
+      sample: Array[Row],
       rootSet: DataFrame,
       idCol: String,
-      idType: org.apache.spark.sql.types.DataType,
+      idType: DataType,
       maxDepth: Int,
       fuse: Long,
       withPath: Boolean,
       pathBytesBudget: Long): Option[DataFrame] = {
-    import org.apache.spark.sql.Row
     val n = sample.length
     val parentOf = new java.util.HashMap[Any, Any](n * 2) // unresolved → parent
     val termOf = new java.util.HashMap[Any, Any](n * 2)   // resolved → terminal
@@ -604,13 +634,6 @@ object TreeExpand {
       rows.add(Row(id, termOf.get(id), distOf.get(id).toInt,
         if (withPath) pathFor(id) else idStr(id)))
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(idCol, idType),
-      org.apache.spark.sql.types.StructField("root", idType),
-      org.apache.spark.sql.types.StructField("depth",
-        org.apache.spark.sql.types.IntegerType, nullable = false),
-      org.apache.spark.sql.types.StructField("path",
-        org.apache.spark.sql.types.StringType)))
-    Some(rootSet.sparkSession.createDataFrame(rows, schema))
+    Some(rootSet.sparkSession.createDataFrame(rows, outputSchema(idCol, idType)))
   }
 }

@@ -6,15 +6,17 @@ import java.util.Locale
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.operators.TreeExpand
 
 /** R1-R5: the HTML rendering pipeline (SURVEY.md §2.10; reference
   * `/root/reference/hnarchive.py:292-488`). The data-parallel part — subtree
-  * expansion — runs distributed via [[TreeExpand]] (replacing the
-  * reference's one-query-per-node recursion, SURVEY.md E3); rendering itself
-  * happens on the driver after a bounded collect, same as the reference's
-  * post-query Python.
+  * expansion — runs via [[TreeExpand]] (replacing the reference's
+  * one-query-per-node recursion, SURVEY.md E3): one driver pass over the
+  * collected edge table within its budget, distributed rounds past it;
+  * rendering itself happens on the driver after a bounded collect, same as
+  * the reference's post-query Python.
   */
 object Render {
 
@@ -25,15 +27,18 @@ object Render {
 
   final case class Node(item: RItem, children: Seq[Node])
 
-  /** R1 `build_item_tree` (hnarchive.py:306-319): distributed subtree
-    * expansion + driver-side assembly, children sorted by (time, id) —
-    * the reference's `list_children(sort=time)` (O2) with an id tie-break
-    * for determinism. */
+  /** R1 `build_item_tree` (hnarchive.py:306-319): subtree expansion +
+    * driver-side assembly, children sorted by (time, id) — the reference's
+    * `list_children(sort=time)` (O2) with an id tie-break for determinism.
+    * The root is handed to [[TreeExpand]] as a local relation (it returns a
+    * depth-0 row for it either way), so the only lookup against `items` is
+    * the final join; a root id absent from `items` fails loud naming it. */
   def buildTree(items: DataFrame, rootId: Long): Node = {
     val edges = items.select(col("id"), col("parent"))
-    val roots = items.filter(col("id") === rootId).select(col("id"))
+    val roots = items.sparkSession.createDataFrame(java.util.List.of(Row(rootId)),
+      StructType(Seq(StructField("id", LongType))))
     val nodes = TreeExpand.expand(edges, roots)
-      .select(col("id"), col("depth"))
+      .select(col("id"))
       .join(items, Seq("id"))
       .select("id", "type", "author", "time", "text", "url", "score", "title", "parent")
       .collect()
@@ -44,6 +49,8 @@ object Render {
       Option(r.get(6)).map(_.asInstanceOf[Long]),
       Option(r.get(7)).map(_.toString),
       Option(r.get(8)).map(_.asInstanceOf[Long]))).toMap
+    if (!byId.contains(rootId))
+      throw new NoSuchElementException(s"buildTree: item $rootId is not in the store")
     val childMap = byId.values.toSeq
       .filter(i => i.id != rootId && i.parent.exists(byId.contains))
       .groupBy(_.parent.get)

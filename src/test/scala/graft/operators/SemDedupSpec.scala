@@ -126,6 +126,20 @@ class SemDedupSpec extends AnyFunSuite {
     assert(p.contains("_pb"), s"pair join not block-salted:\n${p.take(3000)}")
   }
 
+  test("pairblocks outside [1, 65536] fails loud before any pair join") {
+    val key = "spark.graft.semdedup.pairblocks"
+    for (g <- Seq("0", "65537")) {
+      spark.conf.set(key, g)
+      try {
+        val e = intercept[IllegalArgumentException] {
+          Similarity.semDedup(handBuilt, "vec_id", "embedding",
+            minCos = 0.9, centroidEvery = 4)
+        }
+        assert(e.getMessage.contains(s"pairblocks must be in [1, 65536], got $g"))
+      } finally spark.conf.unset(key)
+    }
+  }
+
   test("semDedup drops nothing when the threshold exceeds every cosine") {
     val none = Similarity.semDedup(handBuilt, "vec_id", "embedding",
       minCos = 1.1, centroidEvery = 4)

@@ -87,9 +87,10 @@ class TreeExpandSpec extends AnyFunSuite {
     assert(modes.head == "driver")
     assert(modes.contains("shuffle"))
     // middle ground: a cap that admits broadcast but not driver residency
+    // (and stays below the 80 edges, so the driver pass is not taken)
     val modes2 = scala.collection.mutable.Buffer.empty[String]
     val bcast = TreeExpand.expand(wideDf, Seq(1L).toDF("id"),
-      levelsPerRound = 1, driverFrontierRows = 4, broadcastFrontierRows = 100,
+      levelsPerRound = 1, driverFrontierRows = 4, broadcastFrontierRows = 50,
       modeLog = modes2)
     assert(asMap(bcast) == expected)
     assert(modes2.contains("broadcast") && !modes2.contains("shuffle"))
@@ -118,11 +119,10 @@ class TreeExpandSpec extends AnyFunSuite {
   }
 
   test("mid-flight demotion: path growth flips a small graph to shuffle") {
-    // 190-char string ids: 20 edges pass the initial small-graph gate
-    // (20 * 48 bytes < 1500), but depth-1 paths are ~380 chars, so the
-    // first adopted 4-row frontier blows the byte budget mid-flight —
-    // exercising the demote branch (smallGraph off, AQE restored), not
-    // just the initial gate
+    // 190-char string ids: 20 edges pass the edge-table gate (20 * 48
+    // bytes < 1500), so the driver pass runs first — but its output paths
+    // (~380 chars at depth 1) blow the byte budget, so it declines to the
+    // rounds, whose first 4-row frontier is over budget too and shuffles
     def n(i: Int) = f"n$i%0190d"
     val edges = (Seq((n(1), Option.empty[String])) ++
       (2 to 5).map(i => (n(i), Option(n(1)))) ++
@@ -136,6 +136,7 @@ class TreeExpandSpec extends AnyFunSuite {
         ((r.getString(1), r.getInt(2), r.getString(3)))).toMap
     val expected = asStrMap(TreeExpand.expand(edges, roots))
     assert(asStrMap(gated) == expected)
+    // a non-empty log proves the rounds ran
     assert(modes.head == "driver" && modes.contains("shuffle"), modes)
     // pointer doubling: seed segs fit the budget, round-1 concatenations
     // exceed it — demotes between rounds, output unchanged
@@ -147,6 +148,45 @@ class TreeExpandSpec extends AnyFunSuite {
   private def asMap(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r =>
       r.getLong(0) -> ((r.getLong(1), r.getInt(2), r.getString(3)))).toMap
+
+  /** Output rows as a multiset (duplicate edges make rows repeat). */
+  private def bag(df: org.apache.spark.sql.DataFrame): Map[Seq[Any], Int] =
+    df.collect().toSeq.map(_.toSeq).groupBy(identity).map { case (k, v) => k -> v.size }
+
+  private def countJobs(f: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftTestBus.flush(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try { f; org.apache.spark.GraftTestBus.flush(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(l)
+    jobs.get
+  }
+
+  /** A seeded random forest over ids 1..n: ~n/20 trees, no node deeper
+    * than `height`, plus a bare chain of exactly `height` levels below
+    * node n + 1 and a few duplicated edges. Parents precede children. */
+  private def randomForest(seed: Long, n: Int, height: Int): Seq[(Long, Option[Long])] = {
+    val rnd = new scala.util.Random(seed)
+    val depth = new Array[Int](n + 1)
+    val nodes = (1 to n).map { i =>
+      val candidates = (math.max(1, i - 40) until i).filter(depth(_) < height)
+      if (candidates.isEmpty || rnd.nextInt(20) == 0) (i.toLong, None)
+      else {
+        val p = candidates(rnd.nextInt(candidates.size))
+        depth(i) = depth(p) + 1
+        (i.toLong, Some(p.toLong))
+      }
+    }
+    val chain = (0 to height).map(k =>
+      ((n + 1 + k).toLong, if (k == 0) None else Some((n + k).toLong)))
+    val dups = (1 to 4).map(_ => nodes(rnd.nextInt(n))).filter(_._2.isDefined)
+    nodes ++ chain ++ dups
+  }
 
   test("pointer doubling matches BFS on the forest, incl. subtree roots") {
     val bfs = asMap(TreeExpand.expand(edges, Seq(1L, 2L).toDF("id")))
@@ -179,18 +219,6 @@ class TreeExpandSpec extends AnyFunSuite {
     val n = 200L
     val chain = (1L to n).map(i =>
       (i, if (i == 1L) Option.empty[Long] else Option(i - 1))).toDF("id", "parent")
-    def countJobs(f: => Unit): Int = {
-      var jobs = 0
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs += 1
-      }
-      spark.sparkContext.addSparkListener(l)
-      try { f; org.apache.spark.GraftTestBus.flush(spark.sparkContext) }
-      finally spark.sparkContext.removeSparkListener(l)
-      jobs
-    }
     var driverOut: Map[Long, (Long, Int, String)] = null
     var roundsOut: Map[Long, (Long, Int, String)] = null
     val driverJobs = countJobs {
@@ -292,30 +320,31 @@ class TreeExpandSpec extends AnyFunSuite {
   test("batched DAG rounds need no amplification cap: edge-side builds " +
     "keep multi-parent expansions exact") {
     // duplicate (2,1) edges: each level multiplies (node, path) rows by
-    // the parent multiplicity. The former frontier-side broadcasts made
-    // levels 2..levelsPerRound UNMEASURED builds (a round-capping hazard);
-    // with the edge table as the only build side, amplified level outputs
-    // just stream, so a batched round must match the one-level-per-round
+    // the parent multiplicity. Only the MEASURED frontier is ever a build
+    // side; the unmeasured levels 2..levelsPerRound of a batch feed
+    // shuffle-hash joins against the edges, so amplified level outputs
+    // need no cap: a batched round must match the one-level-per-round
     // reference bit for bit with no cap entries in the mode log.
     val dag = Seq(
       (2L, Option(1L)), (2L, Option(1L)), // duplicate edge: multiplicity 2
       (3L, Option(2L)), (4L, Option(3L)), (5L, Option(4L)), (6L, Option(5L))
     ).toDF("id", "parent")
     val modes = scala.collection.mutable.Buffer.empty[String]
+    // 5 rows < 6 edges: pinned to the rounds, not the driver pass
     val out = TreeExpand.expand(dag, Seq(1L).toDF("id"),
-      levelsPerRound = 4, driverFrontierRows = 12, broadcastFrontierRows = 12,
+      levelsPerRound = 4, driverFrontierRows = 5, broadcastFrontierRows = 5,
       modeLog = modes)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getString(3)))
       .sortBy(x => (x._1, x._4)).toSeq
     // reference: one measured level per round
     val ref = TreeExpand.expand(dag, Seq(1L).toDF("id"),
-      levelsPerRound = 1, driverFrontierRows = 12, broadcastFrontierRows = 12)
+      levelsPerRound = 1, driverFrontierRows = 5, broadcastFrontierRows = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getString(3)))
       .sortBy(x => (x._1, x._4)).toSeq
     assert(out == ref)
     // node 2's duplicate parent rows double every path below it
     assert(out.count(x => x._1 == 6L) == 2)
-    assert(!modes.exists(_.startsWith("cap")), modes)
+    assert(modes.nonEmpty && !modes.exists(_.startsWith("cap")), modes)
   }
 
   test("concurrent small-graph expansions restore AQE exactly once") {
@@ -330,9 +359,10 @@ class TreeExpandSpec extends AnyFunSuite {
     }))
     val results = Await.result(runs, 120.seconds)
     assert(results.forall(_ == expected))
-    // the per-session lock serializes the suspend/restore windows, so the
-    // saved value can never be another window's "false"
+    // expand leaves AQE alone, and the per-session lock serializes the
+    // head-window suspend/restore, so no window's override leaks out
     assert(spark.conf.get("spark.sql.adaptive.enabled") == "true")
+    assert(spark.conf.get("spark.sql.limit.initialNumPartitions", "1") == "1")
   }
 
   test("pointer doubling emits depth-0 rows for roots absent from edges") {
@@ -343,5 +373,80 @@ class TreeExpandSpec extends AnyFunSuite {
     val dblDist = asMap(TreeExpand.expandByDoubling(edges, Seq(1L, 42L).toDF("id"),
       driverStateRows = 0))
     assert(dblDist == bfs)
+  }
+
+  test("driver pass matches the rounds on a seeded random forest") {
+    val height = 6
+    for (seed <- Seq(11L, 12L, 13L)) {
+      val forest = randomForest(seed, 400, height)
+      val rnd = new scala.util.Random(seed)
+      // every tree root (the chain's too), random nodes inside those
+      // trees (overlapping roots), absent ids and a null root
+      val rootIds = forest.filter(_._2.isEmpty).map(r => Option(r._1)) ++
+        (1 to 25).map(_ => Option(1L + rnd.nextInt(400))) ++
+        Seq(Option(9999L), Option(10000L), None)
+      val edgeCount = forest.count(_._2.isDefined).toLong
+      val longIds = (forest.toDF("id", "parent"), rootIds.toDF("id"))
+      val strIds = (forest.map { case (i, p) => (s"n$i", p.map(x => s"n$x")) }
+        .toDF("id", "parent"), rootIds.map(_.map(x => s"n$x")).toDF("id"))
+      for ((edges, roots) <- Seq(longIds, strIds)) {
+        val modes = scala.collection.mutable.Buffer.empty[String]
+        val driver = bag(TreeExpand.expand(edges, roots, maxDepth = height,
+          modeLog = modes))
+        assert(modes.isEmpty, s"seed=$seed: the driver pass declined: $modes")
+        // the same rows from the rounds, forced once by the row gate and
+        // once by the byte gate
+        val byRows = bag(TreeExpand.expand(edges, roots, maxDepth = height,
+          driverFrontierRows = 64, broadcastFrontierRows = edgeCount - 1))
+        val byBytes = bag(TreeExpand.expand(edges, roots, maxDepth = height,
+          broadcastMaxBytes = edgeCount * 48 - 1))
+        assert(driver == byRows && driver == byBytes, s"seed=$seed")
+        assert(driver.keys.groupBy(_(0)).exists(_._2.map(_(1)).toSet.size > 1),
+          s"seed=$seed: no node under two roots")
+        assert(driver.exists(_._2 > 1), s"seed=$seed: duplicate edges multiply rows")
+        assert(driver.keys.exists(_(2) == height), s"seed=$seed: chain at maxDepth")
+        assert(driver.contains(Seq(null, null, 0, null)), s"seed=$seed: null root")
+      }
+    }
+  }
+
+  test("driver pass and rounds fail with the same error on a cycle") {
+    val cyc = Seq((1L, Option(2L)), (2L, Option(1L)), (3L, Option(1L)))
+      .toDF("id", "parent")
+    val modes = scala.collection.mutable.Buffer.empty[String]
+    val driver = intercept[IllegalStateException] {
+      TreeExpand.expand(cyc, Seq(3L, 1L).toDF("id"), maxDepth = 5, modeLog = modes)
+    }
+    val rounds = intercept[IllegalStateException] {
+      TreeExpand.expand(cyc, Seq(3L, 1L).toDF("id"), maxDepth = 5,
+        driverFrontierRows = 2, broadcastFrontierRows = 2)
+    }
+    assert(modes.isEmpty && driver.getMessage == rounds.getMessage)
+    assert(driver.getMessage.contains("maxDepth=5"))
+  }
+
+  test("an over-budget driver pass falls back to the rounds with identical rows") {
+    // a 30-node chain expanded from every node: 29 edges fit a 100-row
+    // budget, but the output is 30 * 31 / 2 = 465 rows
+    val chain = (1L to 30L).map(i =>
+      (i, if (i == 1L) Option.empty[Long] else Option(i - 1))).toDF("id", "parent")
+    val roots = (1L to 30L).toDF("id")
+    val modes = scala.collection.mutable.Buffer.empty[String]
+    val fallback = bag(TreeExpand.expand(chain, roots, driverFrontierRows = 50,
+      broadcastFrontierRows = 100, modeLog = modes))
+    assert(modes.nonEmpty, "the over-budget output must run the rounds")
+    val driverModes = scala.collection.mutable.Buffer.empty[String]
+    val driver = bag(TreeExpand.expand(chain, roots, modeLog = driverModes))
+    assert(driverModes.isEmpty)
+    assert(fallback == driver && driver.values.sum == 465)
+  }
+
+  test("a small-graph expansion of a 1000-node forest runs at most 2 jobs") {
+    val forest = randomForest(7L, 1000, 8).toDF("id", "parent")
+    val roots = Seq(1L, 2L, 3L, 500L).toDF("id")
+    var rows = 0
+    val jobs = countJobs { rows = TreeExpand.expand(forest, roots).collect().length }
+    assert(rows >= 4)
+    assert(jobs <= 2, s"jobs=$jobs")
   }
 }

@@ -27,6 +27,11 @@ class RenderSpec extends AnyFunSuite {
     assert(tree.children.head.children.map(_.item.id) == Seq(4L))
   }
 
+  test("buildTree fails loud naming a root id absent from the store") {
+    val e = intercept[NoSuchElementException](Render.buildTree(items, 99L))
+    assert(e.getMessage.contains("item 99 is not in the store"), e.getMessage)
+  }
+
   test("story page: escaped title, url link, userinfo, nested sorted comments") {
     val html = Render.renderPage(Render.buildTree(items, 1L))
     assert(html.contains("""<h1><a href="https://example.com">Big &lt;News&gt;</a></h1>"""))
