@@ -27,12 +27,16 @@ import graft.streaming.LivestreamRunner
   *                prints the first N rows
   *
   * `--fetcher http|fake:KEY` selects the transport (http needs egress).
+  * By default the store is clustered by id: `get`, `update` and
+  * `livestream` append above the max id and rewrite only the open tail,
+  * and `get`'s store size is read from the parquet footers (see
+  * ItemStore).
   * `--buckets N` opens the store in bucketed-by-id mode (merges plan with
   * no Exchange on the store side — see ItemStore); use the same N on
   * every command against one store directory.
   * `--compact_every N` switches merges to the O(batch) delta log (each
   * commit appends one delta directory; the log compacts every N commits —
-  * the continuous-ingestion write path; see ItemStore).
+  * the write path for update-heavy streams; see ItemStore).
   */
 object Cli {
 
@@ -78,7 +82,7 @@ object Cli {
         val batch = ingest.BulkFetch.fetchItems(spark, fetcher, lower, upper,
           threads, now())
         store.merge(batch)
-        println(s"[get] merged ids [$lower,$upper]; store=${store.current().count()}")
+        println(s"[get] merged ids [$lower,$upper]; store=${store.count()}")
 
       case "update" =>
         val rounds = Update.catchUp(spark, store, fetcherOf(rest), threads, now)

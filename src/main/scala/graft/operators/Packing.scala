@@ -444,6 +444,24 @@ object Packing {
       .groupBy((partCols :+ "pack_id").map(col): _*)
       .agg(count(lit(1)).as("n_docs"), sum(col(weightCol)).as("pack_weight"))
 
+  /** The distinct deleted ids, failing loud past
+    * [[graft.store.ClaimRetraction.MaxRetractIds]] — the batch ceiling of
+    * every forget leg. [[forgetPacks]] and [[repackForgotten]] broadcast
+    * both this list and the per-pack index built from it (one row per
+    * touched pack), so an oversized deletion would otherwise die in the
+    * driver's broadcast build. Costs one count job over the list. */
+  private def deadIds(deleted: DataFrame, deletedIdCol: String,
+                      caller: String): DataFrame = {
+    val ceiling = graft.store.ClaimRetraction.MaxRetractIds
+    val dead = deleted
+      .select(col(deletedIdCol).cast("long").as("_fp_dead")).distinct()
+    val n = dead.limit(ceiling + 1).count()
+    require(n <= ceiling, s"$caller: more than $ceiling distinct deleted " +
+      "ids — the deletion list and its per-pack index are broadcast; " +
+      s"split the deletion into batches of at most $ceiling ids")
+    dead
+  }
+
   /** RIGHT-TO-BE-FORGOTTEN over MATERIALIZED pack streams — the last
     * mile of a deletion cascade: the claims stores retract
     * ([[graft.store.ClaimLog.retract]]), the standing indexes delete
@@ -487,8 +505,7 @@ object Packing {
       .foreach(c => require(packs.columns.contains(c),
         s"forgetPacks needs column '$c' — pack with " +
           "packTokenStreams(docIdCol = Some(...))"))
-    val dead = deleted
-      .select(col(deletedIdCol).cast("long").as("_fp_dead")).distinct()
+    val dead = deadIds(deleted, deletedIdCol, "forgetPacks")
     val deadIdx = packs
       .select(col("pack_id").as("_fp_pack"),
         posexplode(col("doc_ids")).as(Seq("_fp_idx", "_fp_doc")))
@@ -502,8 +519,9 @@ object Packing {
         .otherwise(col("n_tokens").cast("long")).as("e")))
     val keep = packs.columns.map(col).toSeq
     // deadIdx is administrative-sized (<= one row per TOUCHED pack, itself
-    // bounded by the deletion list) — broadcast it, or the left join
-    // shuffles every pack's token payload on pack_id just to attach it
+    // bounded by the deletion list, which deadIds caps) — broadcast it, or
+    // the left join shuffles every pack's token payload on pack_id just to
+    // attach it
     graft.functions.PinEval.ensureRegistered(packs.sparkSession)
     packs
       .join(broadcast(deadIdx), col("pack_id") === col("_fp_pack"), "left")
@@ -554,8 +572,7 @@ object Packing {
       "doc_ids").foreach(c => require(packs.columns.contains(c),
       s"repackForgotten needs column '$c' — pack with " +
         "packTokenStreams(docIdCol = Some(...))"))
-    val dead = deleted
-      .select(col(deletedIdCol).cast("long").as("_fp_dead")).distinct()
+    val dead = deadIds(deleted, deletedIdCol, "repackForgotten")
     val deadIdx = packs
       .select(col("pack_id").as("_fp_pack"),
         posexplode(col("doc_ids")).as(Seq("_fp_idx", "_fp_doc")))

@@ -31,15 +31,17 @@ object Render {
     * driver-side assembly, children sorted by (time, id) — the reference's
     * `list_children(sort=time)` (O2) with an id tie-break for determinism.
     * The root is handed to [[TreeExpand]] as a local relation (it returns a
-    * depth-0 row for it either way), so the only lookup against `items` is
-    * the final join; a root id absent from `items` fails loud naming it. */
+    * depth-0 row for it either way); the page's nodes are then fetched with
+    * `id IN (expanded ids)`, which the parquet scan pushes down, so an
+    * id-clustered store skips every row group outside the page. A root id
+    * absent from `items` fails loud naming it. */
   def buildTree(items: DataFrame, rootId: Long): Node = {
     val edges = items.select(col("id"), col("parent"))
     val roots = items.sparkSession.createDataFrame(java.util.List.of(Row(rootId)),
       StructType(Seq(StructField("id", LongType))))
-    val nodes = TreeExpand.expand(edges, roots)
-      .select(col("id"))
-      .join(items, Seq("id"))
+    val ids = TreeExpand.expand(edges, roots).select(col("id")).collect()
+      .map(_.get(0)).distinct
+    val nodes = items.filter(col("id").isin(ids.toIndexedSeq: _*))
       .select("id", "type", "author", "time", "text", "url", "score", "title", "parent")
       .collect()
     val byId = nodes.map(r => r.getLong(0) -> RItem(

@@ -1,5 +1,7 @@
 package graft.store
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -9,28 +11,39 @@ import graft.schema.Item
 /** The item archive: a parquet snapshot store with the reference's upsert
   * semantics (SURVEY.md S6-S8; `/root/reference/hnarchive.py:197-290`).
   *
-  * Plain parquet has no MERGE, so a merge writes a new snapshot directory
-  * and atomically swaps a `current` pointer file (see [[Snapshots]]) — the
-  * batch analog of the reference's per-200-row transactional commit
+  * Plain parquet has no MERGE, so a merge writes new directories and
+  * atomically swaps a `current` manifest (see [[Snapshots]]) — the batch
+  * analog of the reference's per-200-row transactional commit
   * (hnarchive.py:255-262). Upsert column asymmetry mirrors `insert_item`
   * (hnarchive.py:231-246): incoming NULL keeps the stored value for
   * author/text/poll/url/score/title; flags, parent, descendants, type and
   * time always overwrite; `retrieved` always refreshes. Tombstones never
   * delete (README.md:18).
   *
-  * Scale: the merge is one key-shuffle full-outer join (broadcast when the
-  * batch is small). With `buckets > 0` every snapshot is stored BUCKETED
-  * by id ([[Snapshots]] bucketed mode), so the merge join plans with no
-  * Exchange on the store side — successive merges shuffle only the
-  * incoming batch, never the accumulated archive. That asymmetry is the
-  * whole 100 TB story: the store is ~25M rows × years, the batch is
-  * whatever one crawl returned.
+  * Default layout (`buckets = 0`, `compactEvery = 0`): CLUSTERED BY ID.
+  * The manifest holds a base snapshot range-partitioned by `id` and
+  * sorted within each file, then sealed segments, then at most one open
+  * tail; every file is sorted by `id` and the files' id ranges are
+  * disjoint in manifest order. HN ids only grow, so an append — every
+  * batch id above the store's max, the livestream and `get`/`update`
+  * catch-up case — rewrites only the open tail as `tail ∪ batch`
+  * (O(tail) I/O; the base is neither read nor written). The tail seals
+  * once it holds as many rows as the largest base file, and the next
+  * append opens a new one. A batch touching an id at or below the max (an
+  * update or a recrawl) runs one [[graft.operators.Merge.upsert]] and
+  * writes its output as a fresh clustered base, folding the segments
+  * back in. Reads need no fold: [[current]] is the plain union of the
+  * live directories, a point read is pruned by the parquet row-group
+  * statistics on `id`, and [[latestId]] and [[count]] read the footers.
   *
-  * With `compactEvery > 0` the WRITE side becomes O(batch) too — the last
-  * piece of the continuous-ingestion scale story (the reference's own sink
-  * commits 200-row deltas, hnarchive.py:255-262; `replace` rewrites the
-  * whole archive per micro-batch). A merge then just appends the
-  * (deduplicated) batch as one delta directory; [[current]] is
+  * With `buckets > 0` every snapshot is stored BUCKETED by id
+  * ([[Snapshots]] bucketed mode) and each merge rewrites it: the merge
+  * join plans with no Exchange on the store side, so successive merges
+  * shuffle only the incoming batch, never the accumulated archive.
+  *
+  * With `compactEvery > 0` the store is a delta log, the shape for
+  * update-heavy streams, whose batches are not appends. A merge appends
+  * the (deduplicated) batch as one delta directory; [[current]] is
   * merge-on-read — the deltas fold to one row per id under the EXACT
   * sequential-upsert semantics (overwrite columns: latest delta wins;
   * coalesce columns: latest NON-NULL delta wins, else the base value — see
@@ -39,12 +52,19 @@ import graft.schema.Item
   * bucketed base still joins Exchange-free. Every `compactEvery` commits
   * the log compacts back into one base snapshot — amortized
   * O(store / compactEvery) I/O per batch instead of O(store).
+  *
+  * Either mode reopens the other's store: deltas (`delta-` directories)
+  * always fold on read, and a default merge over them upserts into a
+  * fresh clustered base; segments (`seg-`) hold disjoint ids, so the
+  * delta log folds them like any delta.
   */
 final class ItemStore(spark: SparkSession, root: String, buckets: Int = 0,
                       compactEvery: Int = 0) {
 
   private val snaps = new Snapshots(spark, root, Item.schema,
     if (buckets > 0) Some(("id", buckets)) else None)
+
+  private val itemCols = Item.schema.fieldNames.toIndexedSeq.map(col)
 
   /** Reference column groups (hnarchive.py:231-246). */
   val coalesceCols: Seq[String] = Seq("author", "text", "poll", "url", "score", "title")
@@ -54,11 +74,28 @@ final class ItemStore(spark: SparkSession, root: String, buckets: Int = 0,
   /** S6 `init_db`: create an empty snapshot iff absent (idempotent). */
   def init(): Unit = snaps.init()
 
-  def current(): DataFrame = foldedDeltas() match {
-    case None => snaps.read()
-    case Some(folded) =>
-      Merge.upsert(snaps.readBase(), folded, "id", coalesceCols, overwriteCols)
-        .select(Item.schema.fieldNames.toIndexedSeq.map(col): _*)
+  /** True when no live entry overlaps another on `id`: a base followed
+    * only by segments. Such a store reads as a plain union. */
+  private def disjoint(live: Seq[String]): Boolean =
+    live.tail.forall(_.startsWith(Snapshots.SegmentPrefix))
+
+  /** The DataFrame [[current]] last built, with the manifest it read. */
+  @volatile private var cached: Option[(Seq[String], DataFrame)] = None
+
+  /** The store's rows, one per id. The same DataFrame comes back while
+    * the manifest is unchanged, so repeated reads skip the file listing
+    * and analysis of the relation. */
+  def current(): DataFrame = {
+    val live = snaps.live
+    cached.collect { case (m, df) if m == live => df }.getOrElse {
+      val df =
+        if (disjoint(live)) snaps.read()
+        else Merge.upsert(snaps.readBase(), foldedDeltas(), "id", coalesceCols,
+            overwriteCols)
+          .select(itemCols: _*)
+      cached = Some((live, df))
+      df
+    }
   }
 
   /** The delta log folded to ONE row per id, reproducing what sequentially
@@ -73,41 +110,108 @@ final class ItemStore(spark: SparkSession, root: String, buckets: Int = 0,
     * NULL ordering key on NULL values, which max_by ignores); ids are
     * unique per delta ([[merge]] dedupes before appending), so the
     * ordering key never ties. */
-  private def foldedDeltas(): Option[DataFrame] = snaps.readDeltas().map { d =>
+  private def foldedDeltas(): DataFrame = {
+    val d = snaps.readDeltas().get
     val aggs =
       coalesceCols.map(c =>
         max_by(col(c), when(col(c).isNotNull, col("_seq"))).as(c)) ++
       overwriteCols.map(c => max_by(col(c), col("_seq")).as(c))
-    d.groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
-      .select(Item.schema.fieldNames.toIndexedSeq.map(col): _*)
+    d.groupBy(col("id")).agg(aggs.head, aggs.tail: _*).select(itemCols: _*)
   }
+
+  private def dedupe(batch: DataFrame): DataFrame =
+    Merge.dedupeByKey(batch, "id", Seq("retrieved")).select(itemCols: _*)
 
   /** S7/S8: merge a normalized item batch into the store and commit it
     * atomically. Idempotent by id (re-merging the same batch is a no-op
-    * modulo `retrieved`). `compactEvery == 0`: rewrite one merged snapshot
-    * (O(store) I/O). `compactEvery > 0`: append the batch as one delta
-    * directory (O(batch) I/O) and compact the log every `compactEvery`
-    * commits. */
-  def merge(batch: DataFrame): Unit =
+    * modulo `retrieved`). Default store: see the class doc — an append
+    * rewrites only the open tail, anything else one clustered base.
+    * `buckets > 0`: rewrite one merged bucketed snapshot (O(store) I/O).
+    * `compactEvery > 0`: append the batch as one delta directory
+    * (O(batch) I/O) and compact the log every `compactEvery` commits. */
+  def merge(batch: DataFrame): Unit = {
+    val live = snaps.live
     if (compactEvery > 0) {
-      val deduped = Merge.dedupeByKey(batch, "id", Seq("retrieved"))
-        .select(Item.schema.fieldNames.toIndexedSeq.map(col): _*)
-      snaps.appendDelta(deduped)
+      snaps.appendDelta(dedupe(batch))
       if (snaps.deltaCount >= compactEvery)
         snaps.replace(current()) // old dirs deleted only after the swap
+    } else if (buckets > 0)
+      snaps.replace(upserted(batch))
+    else if (live.size == 1 && footers(live.head).forall(_.rows == 0)) {
+      // empty store: the batch becomes the base. Range partitioning
+      // clusters ids, so the dedupe needs no shuffle of its own. The batch
+      // is checkpointed because the partitioner samples its input: the
+      // sampling job fills the checkpoint and the shuffle reads it back
+      val rows = batch.select(itemCols: _*).localCheckpoint(eager = false)
+      snaps.replace(dedupe(rows.repartitionByRange(col("id")))
+        .sortWithinPartitions("id"))
     } else {
-      val merged = Merge.upsert(current(), batch, "id", coalesceCols, overwriteCols,
-          precedenceCols = Seq("retrieved"))
-        .select(Item.schema.fieldNames.toIndexedSeq.map(col): _*)
-      snaps.replace(merged)
+      val rows = dedupe(batch).localCheckpoint(eager = false)
+      // the smallest id, in one map-only job that also fills the
+      // checkpoint (a global aggregate would add a shuffle)
+      val lo = rows.queryExecution.toRdd.mapPartitions(_.map(_.getLong(0)).minOption.iterator)
+        .collect().minOption
+      lo match {
+        case None => // empty batch: nothing to commit
+        case Some(id) if disjoint(live) && latestId(live).forall(_ < id) =>
+          appendTail(live, rows)
+        case _ => // written clustered: range-partitioned, sorted per file
+          snaps.replace(upserted(rows).repartitionByRange(col("id"))
+            .sortWithinPartitions("id"))
+      }
     }
+  }
+
+  private def upserted(batch: DataFrame): DataFrame =
+    Merge.upsert(current(), batch, "id", coalesceCols, overwriteCols,
+      precedenceCols = Seq("retrieved")).select(itemCols: _*)
+
+  /** Commit deduplicated `rows`, all above the store's max id: rewrite the
+    * open tail as `tail ∪ rows` in one sorted file, or open a new tail
+    * once the last one holds as many rows as the largest base file. */
+  private def appendTail(live: Seq[String], rows: DataFrame): Unit = {
+    val sealAt = footers(live.head).map(_.rows).maxOption.getOrElse(0L)
+    val open = live.tail.lastOption.filter(t => footers(t).map(_.rows).sum < sealAt)
+    val next = open.fold(rows)(t =>
+      spark.read.schema(Item.schema).parquet(snaps.dir(t)).unionByName(rows))
+    snaps.appendSegment(next.coalesce(1).sortWithinPartitions("id"),
+      replaceLast = open.isDefined)
+  }
+
+  private def footers(entry: String): Seq[ItemStore.Footer] =
+    ParquetSurgery.dataFiles(snaps.dir(entry)).map(ParquetSurgery.readFooter(spark, _) { f =>
+      val blocks = f.getBlocks.asScala.toSeq
+      val maxes = blocks.filter(_.getRowCount > 0).map(_.getColumns.asScala
+        .find(_.getPath.toDotString == "id").map(_.getStatistics)
+        .filter(s => s != null && s.hasNonNullValue)
+        .map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue))
+      ItemStore.Footer(blocks.map(_.getRowCount).sum,
+        if (maxes.nonEmpty && maxes.forall(_.isDefined)) Some(maxes.flatten.max) else None)
+    })
 
   /** A1 `select_latest_id` (hnarchive.py:285-290): resume offset. */
-  def latestId(): Option[Long] =
-    current().agg(max(col("id"))).head().get(0) match {
+  def latestId(): Option[Long] = latestId(snaps.live)
+
+  /** On a disjoint store the max id sits in the last entry, and its
+    * footers hold it: no Spark job. A delta log, or a footer without `id`
+    * statistics, falls back to an aggregate over [[current]]. */
+  private def latestId(live: Seq[String]): Option[Long] = {
+    val last = if (disjoint(live)) footers(live.last).filter(_.rows > 0) else Nil
+    if (live.size == 1 && last.isEmpty) None
+    else if (last.nonEmpty && last.forall(_.maxId.isDefined)) Some(last.flatMap(_.maxId).max)
+    else current().agg(max(col("id"))).head().get(0) match {
       case null => None
       case v: Long => Some(v)
     }
+  }
+
+  /** Number of items: the footer row counts of a disjoint store (no
+    * Spark job), else a count over [[current]]. */
+  def count(): Long = {
+    val live = snaps.live
+    if (disjoint(live)) live.flatMap(footers).map(_.rows).sum
+    else current().count()
+  }
 
   /** P4/P5 re-crawl candidates (`update_items_argparse` hnarchive.py:540-549):
     * ids whose age-at-retrieval is within `days`, optionally only items past
@@ -121,4 +225,10 @@ final class ItemStore(spark: SparkSession, root: String, buckets: Int = 0,
       else base
     filtered.select("id")
   }
+}
+
+private object ItemStore {
+  /** Row count of one parquet file and its largest `id`, from the footer;
+    * `maxId` is None for an empty file or one without `id` statistics. */
+  final case class Footer(rows: Long, maxId: Option[Long])
 }

@@ -219,16 +219,22 @@ object ParquetSurgery {
     Files.deleteIfExists(original); ()
   }
 
-  /** Row count straight from a parquet file's footer — free relative to
-    * a Spark job (the writer just produced the file; its footer is in
-    * page cache). */
-  private def parquetRowCount(spark: SparkSession, p: Path): Long = {
+  /** `f` over one parquet file's footer, read on the driver — no Spark
+    * job. */
+  def readFooter[A](spark: SparkSession, p: Path)(
+      f: org.apache.parquet.hadoop.metadata.ParquetMetadata => A): A = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(p.toUri),
       spark.sessionState.newHadoopConf())
     val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try r.getRecordCount finally r.close()
+    try f(r.getFooter) finally r.close()
   }
+
+  /** Row count straight from a parquet file's footer — free relative to
+    * a Spark job (the writer just produced the file; its footer is in
+    * page cache). */
+  private def parquetRowCount(spark: SparkSession, p: Path): Long =
+    readFooter(spark, p)(_.getBlocks.stream().mapToLong(_.getRowCount).sum())
 
   /** [[compact]]'s receipt: rows carried through, file counts either
     * side, and how many inputs wore a `.forget` chain. */

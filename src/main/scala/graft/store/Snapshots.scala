@@ -15,7 +15,7 @@ import org.apache.spark.sql.types.StructType
   * transactional commit (`/root/reference/hnarchive.py:199-201,255-262`).
   * Single-writer by design, like the reference's one SQLite file.
   *
-  * Two write shapes:
+  * Write shapes:
   *  - [[replace]] — full-snapshot rewrite; right whenever the new content
   *    is already O(store) (e.g. a merge that rewrote every row).
   *  - [[appendDelta]] — adds one O(batch) parquet directory and commits it
@@ -26,15 +26,20 @@ import org.apache.spark.sql.types.StructType
   *    shares: skip an empty delta, append, and compact once
   *    [[deltaCount]] reaches `compactEvery` — amortized
   *    O(store / compactEvery) per batch.
+  *  - [[appendSegment]] — adds one `seg-` directory after the last
+  *    manifest entry, or in place of it. A writer that keeps every entry
+  *    disjoint on its key (the clustered [[ItemStore]]) grows its open
+  *    tail this way in O(tail) I/O; the `seg-` prefix marks the entry as
+  *    disjoint, so a reader may union it without a fold.
   *
   * The manifest is newline-separated: optional `#`-prefixed metadata
-  * lines, then directory names — first the base snapshot, then deltas in
-  * commit order (a bare single line is exactly the old pointer format, so
-  * pre-delta stores read unchanged). A bucketed store records its bucket
-  * spec as `#bucketed-by <key> <n>`; every open validates the caller's
-  * spec against it and FAILS LOUD on mismatch — Spark trusts declared
-  * bucketing and would silently return wrong joins over files hashed
-  * into a different bucket count.
+  * lines, then directory names — first the base snapshot, then deltas
+  * and segments in commit order (a bare single line is exactly the old
+  * pointer format, so pre-delta stores read unchanged). A bucketed store
+  * records its bucket spec as `#bucketed-by <key> <n>`; every open
+  * validates the caller's spec against it and FAILS LOUD on mismatch —
+  * Spark trusts declared bucketing and would silently return wrong joins
+  * over files hashed into a different bucket count.
   *
   * Optional `bucketBy = Some((key, n))` stores every snapshot bucketed by
   * `key` (hash, n buckets, sorted within): bucket metadata only flows
@@ -152,7 +157,8 @@ final class Snapshots(spark: SparkSession, root: String, schema: StructType,
         try listing.iterator().asScala
           .filter(Files.isDirectory(_))
           .map(_.getFileName.toString)
-          .filter(d => (d.startsWith("snap-") || d.startsWith("delta-")) && !live(d))
+          .filter(d => Seq("snap-", "delta-", Snapshots.SegmentPrefix)
+            .exists(d.startsWith) && !live(d))
           .toList
         finally listing.close()
       orphans.foreach { orphan =>
@@ -215,6 +221,13 @@ final class Snapshots(spark: SparkSession, root: String, schema: StructType,
   /** Number of delta directories since the last base snapshot — the
     * caller's compaction trigger. */
   def deltaCount: Int = manifest.size - 1
+
+  /** The live directory names: the base first, then deltas and segments
+    * in commit order. */
+  def live: Seq[String] = manifest
+
+  /** The path of one live directory. */
+  def dir(entry: String): String = rootPath.resolve(entry).toString
 
   /** Ledger of TOKEN-named delta directories a compaction has folded into
     * a base snapshot. Token idempotence must survive [[replace]]: without
@@ -301,6 +314,24 @@ final class Snapshots(spark: SparkSession, root: String, schema: StructType,
       appendDelta(delta, token)
       if (deltaCount >= compactEvery) replace(compacted)
     }
+
+  /** Write `df` as one new segment directory (`seg-<nanotime>`) and commit
+    * it after the last manifest entry, or in its place when
+    * `replaceLast` — the replaced directory is deleted only after the
+    * swap, so a crash leaves either the old entry live or an orphan that
+    * [[init]] sweeps. The caller guarantees `df` shares no key with any
+    * other live entry; readers rely on that to union segments without a
+    * fold. I/O is O(df). */
+  def appendSegment(df: DataFrame, replaceLast: Boolean): Unit = {
+    require(bucketBy.isEmpty && partitionByCol.isEmpty,
+      "segments are plain parquet directories")
+    val old = manifest
+    require(!replaceLast || old.size > 1, "the base snapshot is not a segment")
+    val seg = s"${Snapshots.SegmentPrefix}${System.nanoTime()}"
+    df.write.mode("overwrite").parquet(dir(seg))
+    commitManifest(if (replaceLast) old.init :+ seg else old :+ seg)
+    if (replaceLast) deleteRecursively(rootPath.resolve(old.last))
+  }
 
   /** Write `df` as the next base snapshot, swap the manifest, GC every
     * superseded directory (old base and deltas). `replace(read())` is the
@@ -408,6 +439,9 @@ object Snapshots {
   /** Delta depth at which [[Snapshots.commit]] compacts, unless the store
     * names its own. */
   val DefaultCompactEvery: Int = 16
+
+  /** Name prefix of an [[appendSegment]] directory. */
+  val SegmentPrefix: String = "seg-"
 
   /** The compaction-depth rule for every delta log, including the
     * standing indexes that compact through their own stores: 0 would

@@ -15,14 +15,14 @@ import graft.store.ItemStore
   * (hnarchive.py:164); each batch-merge is atomic (S8/T6 — the snapshot
   * swap is the transaction).
   *
-  * Scale: pass a BUCKETED [[ItemStore]] (`buckets > 0`, CLI `--buckets`)
-  * so each micro-batch merge shuffles only the incoming `commitPeriod`-row
-  * batch — the accumulated archive joins Exchange-free off its bucketed
-  * snapshot (spec-pinned in ItemStoreSpec). Pass `compactEvery > 0` (CLI
-  * `--compact_every`) to make the WRITE O(batch) too: each commit appends
-  * one delta directory and the log compacts every N commits — matching
-  * the reference's own O(batch) sink (hnarchive.py:255-262), spec-pinned
-  * byte-for-byte in ItemStoreSpec.
+  * Scale: on the default id-clustered [[ItemStore]] every commit is an
+  * append above the max id, so it rewrites only the store's open tail
+  * (O(tail) I/O, the base untouched) and the offset bootstrap reads the
+  * parquet footers, with no Spark job. A `buckets > 0` store (CLI
+  * `--buckets`) rewrites its bucketed snapshot per merge, shuffling only
+  * the incoming batch (spec-pinned in ItemStoreSpec); a `compactEvery > 0`
+  * store (CLI `--compact_every`) appends one delta directory per commit
+  * and compacts every N commits — the shape for update-heavy streams.
   */
 object LivestreamRunner {
 

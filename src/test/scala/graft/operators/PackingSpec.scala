@@ -434,6 +434,30 @@ class PackingSpec extends AnyFunSuite {
     }
   }
 
+  test("a deletion list past the forget ceiling fails loud before any " +
+    "broadcast; one at the ceiling runs") {
+    val rows = Seq((0L, 1L, Seq(10L, 11L)), (1L, 2L, Seq(20L))
+    ).toDF("shard", "pos", "token_ids")
+    val packs = Packing.packTokenStreams(rows, "shard", "pos",
+      "token_ids", budget = 8L, sepId = 99L, docIdCol = Some("pos"))
+      .localCheckpoint(true)
+    val ceiling = graft.store.ClaimRetraction.MaxRetractIds.toLong
+    // duplicates count once: ceiling + 1 distinct ids, 2 rows for id 1
+    val over = spark.range(1L, ceiling + 2).union(spark.range(1L, 2L))
+      .toDF("doc_id")
+    for ((name, run) <- Seq[(String, () => Any)](
+        "forgetPacks" -> (() => Packing.forgetPacks(packs, over, "doc_id", 88L)),
+        "repackForgotten" -> (() => Packing.repackForgotten(packs, over, "doc_id")))) {
+      val e = intercept[IllegalArgumentException](run())
+      assert(e.getMessage.contains(s"$name: more than $ceiling distinct deleted ids"),
+        e.getMessage)
+    }
+    val atCeiling = spark.range(1L, ceiling + 1).toDF("doc_id")
+    val out = Packing.forgetPacks(packs, atCeiling, "doc_id", 88L)
+      .select("pack_id", "n_forgotten").as[(Long, Long)].collect().toMap
+    assert(out.values.sum == 2L, out)
+  }
+
   test("locate maps global offsets to pack/position/document — pack " +
     "boundaries, separator attribution, out-of-range fail-loud") {
     import org.apache.spark.sql.functions._

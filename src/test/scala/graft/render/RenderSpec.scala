@@ -32,6 +32,45 @@ class RenderSpec extends AnyFunSuite {
     assert(e.getMessage.contains("item 99 is not in the store"), e.getMessage)
   }
 
+  test("buildTree over a stored archive: at most 3 jobs, nodes fetched by " +
+    "a pushed-down In filter, no join against the items") {
+    import org.apache.spark.sql.functions.lit
+    val dir = java.nio.file.Files.createTempDirectory("graft-render-store").toString
+    val st = new graft.store.ItemStore(spark, dir)
+    st.init()
+    // story 1 with 30 comments (id i replies to i / 2), then unrelated items
+    val bodies = (1L -> """{"id":1,"type":"story","by":"s","time":1,"title":"t"}""") +:
+      ((2L to 31L).map(i => i -> s"""{"id":$i,"type":"comment","by":"u$i","time":$i,"parent":${i / 2}}""") ++
+        (32L to 400L).map(i => i -> s"""{"id":$i,"type":"story","by":"v","time":$i}"""))
+    st.merge(graft.schema.Item.normalize(bodies.toDF("id", "body"), lit(100L)))
+    val items = st.current()
+    Render.buildTree(items, 32L) // warm: first-use planning of the scan
+    val plans = scala.collection.mutable.ArrayBuffer.empty[String]
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val qel = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        plans.synchronized(plans += qe.executedPlan.toString)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    val jl = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftTestBus.flush(spark.sparkContext)
+    spark.listenerManager.register(qel)
+    spark.sparkContext.addSparkListener(jl)
+    val tree =
+      try { val t = Render.buildTree(items, 1L); org.apache.spark.GraftTestBus.flush(spark.sparkContext); t }
+      finally { spark.listenerManager.unregister(qel); spark.sparkContext.removeSparkListener(jl) }
+    def ids(n: Render.Node): Seq[Long] = n.item.id +: n.children.flatMap(ids)
+    assert(ids(tree).sorted == (1L to 31L))
+    assert(tree.children.map(_.item.id) == Seq(2L, 3L)) // (time, id) order kept
+    assert(jobs.get <= 3, s"${jobs.get} jobs for one page")
+    assert(plans.exists(p => p.contains("FileScan parquet") && p.contains("In(id, [")),
+      s"no pushed In filter on the items scan:\n${plans.mkString("\n")}")
+    assert(!plans.exists(_.contains("Join")), s"a join against items:\n${plans.mkString("\n")}")
+  }
+
   test("story page: escaped title, url link, userinfo, nested sorted comments") {
     val html = Render.renderPage(Render.buildTree(items, 1L))
     assert(html.contains("""<h1><a href="https://example.com">Big &lt;News&gt;</a></h1>"""))

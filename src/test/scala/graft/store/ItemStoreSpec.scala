@@ -1,6 +1,8 @@
 package graft.store
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -163,10 +165,12 @@ class ItemStoreSpec extends AnyFunSuite {
     assert(st.current().count() == 3)
     assert(st.latestId().contains(3L))
     // a fresh-session analog: drop the catalog entry, read() must re-register
+    // (a fresh instance: current() reuses its DataFrame while the manifest
+    // is unchanged, as a new session would not)
     spark.catalog.listTables().collect()
       .filter(_.name.startsWith("graft_snap_"))
       .foreach(t => spark.sql(s"DROP TABLE ${t.name}"))
-    assert(st.current().count() == 3)
+    assert(new ItemStore(spark, dir, buckets = 4).current().count() == 3)
   }
 
   test("bucket spec mismatch fails loud instead of corrupting joins") {
@@ -204,8 +208,12 @@ class ItemStoreSpec extends AnyFunSuite {
     Files.createDirectories(orphanSnap)
     Files.write(orphanSnap.resolve("part-junk.parquet"), Array[Byte](1, 2, 3))
     Files.createDirectories(orphanDelta)
+    val orphanTail = dir.resolve("seg-99999")
+    Files.createDirectories(orphanTail)
+    Files.write(orphanTail.resolve("part-junk.parquet"), Array[Byte](1, 2, 3))
     new ItemStore(spark, dir.toString).init()
     assert(!Files.exists(orphanSnap) && !Files.exists(orphanDelta))
+    assert(!Files.exists(orphanTail), "orphan tail survived init")
     assert(st.current().count() == 1) // live snapshot untouched
   }
 
@@ -403,5 +411,255 @@ class ItemStoreSpec extends AnyFunSuite {
     LivestreamRunner.run(spark, st, f2, maxItems = 1, commitPeriod = 3,
       sleep = _ => (), now = () => 600L)
     assert(st.current().count() == 8)
+  }
+
+  // ---- the id-clustered default layout ----
+
+  private def manifestOf(dir: String): Seq[String] =
+    new String(Files.readAllBytes(Paths.get(dir, "current"))).split("\n").toSeq
+      .map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
+
+  private def storeDirs(dir: String): Set[String] = {
+    val s = Files.list(Paths.get(dir))
+    try s.iterator().asScala.filter(Files.isDirectory(_))
+      .map(_.getFileName.toString)
+      .filter(d => Seq("snap-", "delta-", "seg-").exists(d.startsWith)).toSet
+    finally s.close()
+  }
+
+  /** (entry, file, ids in file order) for every live file, files in
+    * manifest order and by name within an entry. One Spark job: a split
+    * reads its files whole and in order, so grouping the collected rows
+    * by file keeps each file's row order. */
+  private def liveFiles(dir: String): Seq[(String, String, Seq[Long])] = {
+    val files = manifestOf(dir).flatMap(e =>
+      ParquetSurgery.dataFiles(Paths.get(dir, e).toString).map(_.toString).sorted
+        .map(e -> _))
+    val ids = spark.read.schema(Item.schema).parquet(files.map(_._2): _*)
+      .select(col("_metadata.file_path"), col("id")).collect()
+      .groupBy(r => Paths.get(java.net.URI.create(r.getString(0))).toString)
+      .map { case (f, rs) => f -> rs.toSeq.map(_.getLong(1)) }
+    files.map { case (e, f) => (e, f, ids.getOrElse(f, Nil)) }
+  }
+
+  /** The layout invariants: base then segments only; every file sorted
+    * by id; id ranges disjoint and ascending in manifest order; every
+    * segment but the last (the one open tail) sealed, i.e. holding at
+    * least as many rows as the largest base file; no directory outside
+    * the manifest. */
+  private def assertClustered(dir: String): Unit = {
+    val entries = manifestOf(dir)
+    assert(entries.tail.forall(_.startsWith("seg-")), s"not clustered: $entries")
+    assert(storeDirs(dir) == entries.toSet,
+      s"superseded directories left: ${storeDirs(dir) -- entries}")
+    val files = liveFiles(dir)
+    files.foreach { case (_, f, ids) =>
+      assert(ids == ids.sorted && ids.distinct.size == ids.size, s"$f is not sorted by id: $ids")
+    }
+    val ranges = files.map(_._3).filter(_.nonEmpty).map(ids => (ids.head, ids.last))
+    ranges.zip(ranges.drop(1)).foreach { case (a, b) =>
+      assert(a._2 < b._1, s"overlapping id ranges $a, $b in $entries")
+    }
+    val sealAt = files.filter(_._1 == entries.head).map(_._3.size).maxOption.getOrElse(0)
+    entries.drop(1).dropRight(1).foreach { seg =>
+      val rows = files.filter(_._1 == seg).map(_._3.size).sum
+      assert(rows >= sealAt, s"segment $seg ($rows rows) is open before the tail (seal at $sealAt)")
+    }
+  }
+
+  private def rowsById(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Any]] =
+    df.collect().map(r => r.getAs[Long]("id") -> r.toSeq).toMap
+
+  private val itemCols = Item.schema.fieldNames.toIndexedSeq.map(col)
+
+  /** The replace-mode semantics every store mode must reproduce: one
+    * upsert of each batch into the previous state. */
+  private def upsertRef(ref: org.apache.spark.sql.DataFrame, batch: org.apache.spark.sql.DataFrame,
+                        st: ItemStore) =
+    graft.operators.Merge.upsert(ref, batch, "id", st.coalesceCols, st.overwriteCols,
+      precedenceCols = Seq("retrieved")).select(itemCols: _*).localCheckpoint()
+
+  private def emptyItems =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Item.schema)
+
+  /** A random item body: optional author/score/text/descendants, so the
+    * coalesce and overwrite columns both see NULLs. */
+  private def randomBody(rnd: scala.util.Random, i: Long): String = {
+    def opt(field: String, v: => String) = if (rnd.nextInt(3) == 0) "" else s""","$field":$v"""
+    s"""{"id":$i,"type":"comment","time":${i * 10 + rnd.nextInt(5)}""" +
+      opt("by", s""""u${rnd.nextInt(50)}"""") + opt("score", rnd.nextInt(100).toString) +
+      opt("text", s""""t${rnd.nextInt(1000)}"""") +
+      opt("descendants", rnd.nextInt(9).toString) + s""","parent":${math.max(1L, i / 4)}}"""
+  }
+
+  test("clustered merges equal sequential upserts over seeded random batch sequences") {
+    for (seed <- Seq(41, 42)) {
+      val rnd = new scala.util.Random(seed)
+      val dir = Files.createTempDirectory("graft-store-parity").toString
+      val st = new ItemStore(spark, dir)
+      st.init()
+      var ref = emptyItems
+      var known = Vector.empty[Long]
+      var maxId = 0L
+      var prev = Seq.empty[(Long, String)]
+      val kinds = Seq("append", "append", "append", "dups", "update", "gap", "empty", "replay")
+      (1 to 12).foreach { step =>
+        val kind = if (step == 1) "append" else kinds(rnd.nextInt(kinds.size))
+        // appends skip every fourth id, so a gap fill has ids below the max to use
+        def fresh(n: Int) = (maxId + 1 to maxId + n).filter(_ % 4 != 0)
+        val rows: Seq[(Long, String)] = kind match {
+          case "append" => fresh(1 + rnd.nextInt(12)).map(i => i -> randomBody(rnd, i))
+          case "dups" => fresh(1 + rnd.nextInt(6)).flatMap(i =>
+            Seq(i -> randomBody(rnd, i), i -> randomBody(rnd, i)))
+          case "update" => Seq.fill(1 + rnd.nextInt(4))(known(rnd.nextInt(known.size)))
+            .map(i => i -> randomBody(rnd, i)) :+ (maxId + 1 -> randomBody(rnd, maxId + 1))
+          case "gap" => (1L to maxId).filter(i => i % 4 == 0 && !known.contains(i))
+            .take(3).map(i => i -> randomBody(rnd, i))
+          case "empty" => Seq(maxId + 1 -> null) // a tombstone: normalizes to no rows
+          case "replay" => prev
+        }
+        val batch = Item.normalize(rows.toDF("id", "body"), lit(100L + step))
+        st.merge(batch)
+        ref = upsertRef(ref, batch, st)
+        prev = rows
+        known = (known ++ rows.filter(_._2 != null).map(_._1)).distinct
+        maxId = (maxId +: known).max
+        val clue = s"seed $seed step $step ($kind)"
+        assert(rowsById(st.current()) == rowsById(ref), clue)
+        assert(st.count() == known.size, clue)
+        assert(st.latestId() == known.maxOption, clue)
+        withClue(clue)(assertClustered(dir))
+      }
+    }
+  }
+
+  test("an append rewrites only the open tail, which seals at the largest base file") {
+    val dir = Files.createTempDirectory("graft-store-tail").toString
+    val st = new ItemStore(spark, dir)
+    st.init()
+    def items(ids: Seq[Long]) = normalized(ids.map(i =>
+      i -> s"""{"id":$i,"type":"comment","time":${i * 10}}"""): _*)
+    st.merge(items(1L to 4L))
+    val base = manifestOf(dir)
+    assert(base.size == 1)
+    // AQE coalesces the 4-row range shuffle into one file: the seal is at 4 rows
+    assert(liveFiles(dir).map(_._3.size) == Seq(4))
+    st.merge(items(Seq(5L, 6L)))
+    val Seq(_, tailA) = manifestOf(dir)
+    st.merge(items(Seq(7L, 8L))) // 2 < 4 rows: tail A is rewritten as A ∪ batch
+    val Seq(_, tailB) = manifestOf(dir)
+    assert(tailB != tailA && !Files.exists(Paths.get(dir, tailA)), "superseded tail not GC'd")
+    assert(liveFiles(dir).filter(_._1 == tailB).map(_._3) == Seq(Seq(5L, 6L, 7L, 8L)))
+    val sealedSizes = dirSizes(Paths.get(dir, tailB))
+    st.merge(items(Seq(9L))) // tail B holds 4 rows: it seals and a new tail opens
+    val Seq(b, s, tailC) = manifestOf(dir)
+    assert(b == base.head && s == tailB && tailC != tailB)
+    assert(dirSizes(Paths.get(dir, tailB)) == sealedSizes, "a sealed segment was rewritten")
+    st.merge(items(Seq(10L)))
+    assert(manifestOf(dir).take(2) == Seq(b, s))
+    assertClustered(dir)
+    assert(st.current().count() == 10)
+    assert(st.latestId().contains(10L))
+  }
+
+  private def dirSizes(p: java.nio.file.Path): Map[String, Long] = {
+    val s = Files.list(p)
+    try s.iterator().asScala.map(f => f.getFileName.toString -> Files.size(f)).toMap
+    finally s.close()
+  }
+
+  test("a 200-row append leaves the base directory's files untouched") {
+    val dir = Files.createTempDirectory("graft-store-append").toString
+    val st = new ItemStore(spark, dir)
+    st.init()
+    val rnd = new scala.util.Random(5)
+    st.merge(normalized((1L to 4000L).map(i => i -> randomBody(rnd, i)): _*))
+    val base = manifestOf(dir).head
+    val before = dirSizes(Paths.get(dir, base))
+    st.merge(normalized((4001L to 4200L).map(i => i -> randomBody(rnd, i)): _*))
+    val Seq(b, tail) = manifestOf(dir)
+    assert(b == base && dirSizes(Paths.get(dir, base)) == before)
+    val written = dirSizes(Paths.get(dir, tail)).values.sum
+    assert(written * 5 < before.values.sum, s"tail $written B vs base ${before.values.sum} B")
+    assert(st.count() == 4200L && st.latestId().contains(4200L))
+  }
+
+  private def countJobs(f: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftTestBus.flush(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try { f; org.apache.spark.GraftTestBus.flush(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(l)
+    jobs.get
+  }
+
+  test("latestId and count read the footers: no job on a clustered store, " +
+    "right on an unsorted snapshot, the aggregate when statistics are missing") {
+    val st = freshStore()
+    assert(countJobs(assert(st.latestId().isEmpty && st.count() == 0L)) == 0)
+    st.merge(normalized((1L to 30L).map(i => i -> s"""{"id":$i,"type":"story","time":$i}"""): _*))
+    st.merge(normalized(31L -> """{"id":31,"type":"story","time":31}"""))
+    assert(countJobs(assert(st.latestId().contains(31L) && st.count() == 31L)) == 0)
+    // a snapshot written the old way: one directory, ids hash-scattered
+    // over several files, no `seg-` entries
+    def oldStore(write: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row] =>
+        org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row]) = {
+      val dir = Files.createTempDirectory("graft-store-old")
+      write(normalized((1L to 50L).map(i => i -> s"""{"id":$i,"type":"story","time":$i}"""): _*)
+        .repartition(3, col("time") % 7).write).parquet(dir.resolve("snap-1").toString)
+      Files.write(dir.resolve("current"), "snap-1".getBytes)
+      new ItemStore(spark, dir.toString)
+    }
+    val old = oldStore(identity)
+    assert(countJobs(assert(old.latestId().contains(50L))) == 0)
+    val noStats = oldStore(_.option("parquet.column.statistics.enabled", "false"))
+    assert(countJobs(assert(noStats.latestId().contains(50L))) > 0,
+      "a footer without id statistics must fall back to the aggregate")
+    // both read as before and take appends clustered
+    old.merge(normalized(51L -> """{"id":51,"type":"story","time":51}"""))
+    assert(old.count() == 51L && old.current().count() == 51L)
+  }
+
+  test("a delta-log store reopened with defaults, and a clustered store " +
+    "reopened as a delta log, read and merge the same rows") {
+    val rnd = new scala.util.Random(9)
+    def batch(ids: Seq[Long], at: Long) =
+      Item.normalize(ids.map(i => i -> randomBody(rnd, i)).toDF("id", "body"), lit(at))
+    val batches = Seq(batch(1L to 20L, 100), batch(21L to 25L, 101),
+      batch(Seq(3L, 22L, 26L), 102), batch(27L to 30L, 103), batch(Seq(1L, 31L), 104))
+    val probe = freshStore() // only for its column groups
+    val refs = batches.scanLeft(emptyItems)((r, b) => upsertRef(r, b, probe)).tail
+    // delta log → defaults: reads fold the deltas; the next default merge
+    // (an append) upserts everything into one clustered base
+    val dDir = Files.createTempDirectory("graft-store-d2c").toString
+    val delta = new ItemStore(spark, dDir, compactEvery = 10)
+    delta.init()
+    batches.take(3).foreach(delta.merge)
+    val reopened = new ItemStore(spark, dDir)
+    assert(rowsById(reopened.current()) == rowsById(refs(2)))
+    assert(reopened.latestId().contains(26L) && reopened.count() == 26L)
+    reopened.merge(batches(3))
+    assert(rowsById(reopened.current()) == rowsById(refs(3)))
+    assertClustered(dDir)
+    // clustered → delta log: segments fold like deltas; back to defaults
+    val cDir = Files.createTempDirectory("graft-store-c2d").toString
+    val clustered = new ItemStore(spark, cDir)
+    clustered.init()
+    batches.take(2).foreach(clustered.merge)
+    assert(manifestOf(cDir).exists(_.startsWith("seg-")))
+    val asLog = new ItemStore(spark, cDir, compactEvery = 10)
+    assert(rowsById(asLog.current()) == rowsById(refs(1)))
+    asLog.merge(batches(2))
+    asLog.merge(batches(3))
+    assert(rowsById(asLog.current()) == rowsById(refs(3)))
+    val back = new ItemStore(spark, cDir)
+    assert(rowsById(back.current()) == rowsById(refs(3)))
+    back.merge(batches(4))
+    assert(rowsById(back.current()) == rowsById(refs(4)))
+    assertClustered(cDir)
   }
 }
