@@ -27,10 +27,10 @@ import graft.streaming.LivestreamRunner
   *                prints the first N rows
   *
   * `--fetcher http|fake:KEY` selects the transport (http needs egress).
-  * By default the store is clustered by id: `get`, `update` and
-  * `livestream` append above the max id and rewrite only the open tail,
-  * and `get`'s store size is read from the parquet footers (see
-  * ItemStore).
+  * By default the store is clustered by id: the first `get` into an
+  * empty store writes the base, later `get`, `update` and `livestream`
+  * batches append above the max id and rewrite only the open tail, and
+  * `get`'s store size is read from the parquet footers (see ItemStore).
   * `--buckets N` opens the store in bucketed-by-id mode (merges plan with
   * no Exchange on the store side — see ItemStore); use the same N on
   * every command against one store directory.

@@ -21,20 +21,27 @@ import graft.schema.Item
   * delete (README.md:18).
   *
   * Default layout (`buckets = 0`, `compactEvery = 0`): CLUSTERED BY ID.
-  * The manifest holds a base snapshot range-partitioned by `id` and
-  * sorted within each file, then sealed segments, then at most one open
-  * tail; every file is sorted by `id` and the files' id ranges are
-  * disjoint in manifest order. HN ids only grow, so an append — every
-  * batch id above the store's max, the livestream and `get`/`update`
-  * catch-up case — rewrites only the open tail as `tail ∪ batch`
-  * (O(tail) I/O; the base is neither read nor written). The tail seals
-  * once it holds as many rows as the largest base file, and the next
-  * append opens a new one. A batch touching an id at or below the max (an
-  * update or a recrawl) runs one [[graft.operators.Merge.upsert]] and
-  * writes its output as a fresh clustered base, folding the segments
-  * back in. Reads need no fold: [[current]] is the plain union of the
-  * live directories, a point read is pruned by the parquet row-group
-  * statistics on `id`, and [[latestId]] and [[count]] read the footers.
+  * The manifest holds a base snapshot, then sealed segments, then at
+  * most one open tail; every segment file is sorted by `id` and the
+  * entries' id ranges are disjoint in manifest order. The first batch an
+  * empty store takes becomes the base, clustered too: files sorted by
+  * `id` with disjoint ranges. A batch that already has that shape (a
+  * bulk fetch: contiguous ascending id slices, one per task) is written
+  * as it comes, with no shuffle; any other goes through one range
+  * shuffle that also carries the dedupe. HN ids only grow, so later
+  * appends — every batch id above the store's max, the livestream and
+  * `get`/`update` catch-up case — rewrite only the open tail as
+  * `tail ∪ batch` (O(tail) I/O; the base is neither read nor written).
+  * The tail seals once it holds as many rows as the largest base file,
+  * and the next append opens a new one. A batch touching an id at or
+  * below the max (an update or a recrawl) runs one
+  * [[graft.operators.Merge.upsert]] and writes its output as the join
+  * leaves it, hash-partitioned, folding the segments back in; point
+  * reads on that base scan every base file, as they did before the
+  * clustered layout. Reads need no fold: [[current]] is the plain union
+  * of the live directories, a point read is pruned by the parquet
+  * row-group statistics on `id` (on a clustered base and on every
+  * segment), and [[latestId]] and [[count]] read the footers.
   *
   * With `buckets > 0` every snapshot is stored BUCKETED by id
   * ([[Snapshots]] bucketed mode) and each merge rewrites it: the merge
@@ -55,7 +62,7 @@ import graft.schema.Item
   *
   * Either mode reopens the other's store: deltas (`delta-` directories)
   * always fold on read, and a default merge over them upserts into a
-  * fresh clustered base; segments (`seg-`) hold disjoint ids, so the
+  * fresh base; segments (`seg-`) hold disjoint ids, so the
   * delta log folds them like any delta.
   */
 final class ItemStore(spark: SparkSession, root: String, buckets: Int = 0,
@@ -125,42 +132,44 @@ final class ItemStore(spark: SparkSession, root: String, buckets: Int = 0,
   /** S7/S8: merge a normalized item batch into the store and commit it
     * atomically. Idempotent by id (re-merging the same batch is a no-op
     * modulo `retrieved`). Default store: see the class doc — an append
-    * rewrites only the open tail, anything else one clustered base.
+    * rewrites only the open tail (or, on an empty store, writes the
+    * clustered base), anything else upserts into one new base.
     * `buckets > 0`: rewrite one merged bucketed snapshot (O(store) I/O).
     * `compactEvery > 0`: append the batch as one delta directory
     * (O(batch) I/O) and compact the log every `compactEvery` commits. */
-  def merge(batch: DataFrame): Unit = {
-    val live = snaps.live
+  def merge(batch: DataFrame): Unit =
     if (compactEvery > 0) {
       snaps.appendDelta(dedupe(batch))
       if (snaps.deltaCount >= compactEvery)
         snaps.replace(current()) // old dirs deleted only after the swap
     } else if (buckets > 0)
       snaps.replace(upserted(batch))
-    else if (live.size == 1 && footers(live.head).forall(_.rows == 0)) {
-      // empty store: the batch becomes the base. Range partitioning
-      // clusters ids, so the dedupe needs no shuffle of its own. The batch
-      // is checkpointed because the partitioner samples its input: the
-      // sampling job fills the checkpoint and the shuffle reads it back
+    else {
+      // the batch is materialized once: the run scan fills the checkpoint
+      // and the write reads it back
       val rows = batch.select(itemCols: _*).localCheckpoint(eager = false)
-      snaps.replace(dedupe(rows.repartitionByRange(col("id")))
-        .sortWithinPartitions("id"))
-    } else {
-      val rows = dedupe(batch).localCheckpoint(eager = false)
-      // the smallest id, in one map-only job that also fills the
-      // checkpoint (a global aggregate would add a shuffle)
-      val lo = rows.queryExecution.toRdd.mapPartitions(_.map(_.getLong(0)).minOption.iterator)
-        .collect().minOption
-      lo match {
-        case None => // empty batch: nothing to commit
-        case Some(id) if disjoint(live) && latestId(live).forall(_ < id) =>
-          appendTail(live, rows)
-        case _ => // written clustered: range-partitioned, sorted per file
-          snaps.replace(upserted(rows).repartitionByRange(col("id"))
-            .sortWithinPartitions("id"))
-      }
+      val runs = ItemStore.runs(rows)
+      // each partition strictly ascending and their id ranges disjoint:
+      // the batch already has the clustered layout and no repeated id
+      val sorted = runs.sortBy(_.lo)
+      val clustered = runs.forall(_.ascending) &&
+        sorted.zip(sorted.drop(1)).forall { case (a, b) => a.hi < b.lo }
+      val live = snaps.live
+      lazy val top = latestId(live)
+      if (runs.isEmpty) () // empty batch: nothing to commit
+      else if (!disjoint(live) || top.exists(_ >= sorted.head.lo))
+        // an update, recrawl or gap fill: the join's output is written as
+        // it comes, hash-partitioned, and folds the segments in. A range
+        // rewrite of it would cluster the base again, at about 1.5 times
+        // the write
+        snaps.replace(upserted(rows))
+      else if (top.isEmpty) // empty store: the batch becomes the base
+        snaps.replace(if (clustered) rows
+          // one range shuffle; the dedupe's aggregate runs after it on the
+          // clustered key, with no exchange of its own
+          else dedupe(rows.repartitionByRange(col("id"))).sortWithinPartitions("id"))
+      else appendTail(live, if (clustered) rows else dedupe(rows))
     }
-  }
 
   private def upserted(batch: DataFrame): DataFrame =
     Merge.upsert(current(), batch, "id", coalesceCols, overwriteCols,
@@ -170,15 +179,26 @@ final class ItemStore(spark: SparkSession, root: String, buckets: Int = 0,
     * open tail as `tail ∪ rows` in one sorted file, or open a new tail
     * once the last one holds as many rows as the largest base file. */
   private def appendTail(live: Seq[String], rows: DataFrame): Unit = {
-    val sealAt = footers(live.head).map(_.rows).maxOption.getOrElse(0L)
-    val open = live.tail.lastOption.filter(t => footers(t).map(_.rows).sum < sealAt)
+    val sealAt = footers(live, live.head).map(_.rows).maxOption.getOrElse(0L)
+    val open = live.tail.lastOption.filter(t => footers(live, t).map(_.rows).sum < sealAt)
     val next = open.fold(rows)(t =>
       spark.read.schema(Item.schema).parquet(snaps.dir(t)).unionByName(rows))
     snaps.appendSegment(next.coalesce(1).sortWithinPartitions("id"),
       replaceLast = open.isDefined)
   }
 
-  private def footers(entry: String): Seq[ItemStore.Footer] =
+  /** Footers by live directory name. A committed directory never changes
+    * (a rewritten tail is a new directory), so each is read once; names
+    * that left the manifest are dropped on the next read. */
+  private val footerCache =
+    scala.collection.concurrent.TrieMap.empty[String, Seq[ItemStore.Footer]]
+
+  private def footers(live: Seq[String], entry: String): Seq[ItemStore.Footer] = {
+    footerCache.keys.filterNot(live.contains).foreach(footerCache.remove)
+    footerCache.getOrElseUpdate(entry, readFooters(entry))
+  }
+
+  private def readFooters(entry: String): Seq[ItemStore.Footer] =
     ParquetSurgery.dataFiles(snaps.dir(entry)).map(ParquetSurgery.readFooter(spark, _) { f =>
       val blocks = f.getBlocks.asScala.toSeq
       val maxes = blocks.filter(_.getRowCount > 0).map(_.getColumns.asScala
@@ -196,7 +216,7 @@ final class ItemStore(spark: SparkSession, root: String, buckets: Int = 0,
     * footers hold it: no Spark job. A delta log, or a footer without `id`
     * statistics, falls back to an aggregate over [[current]]. */
   private def latestId(live: Seq[String]): Option[Long] = {
-    val last = if (disjoint(live)) footers(live.last).filter(_.rows > 0) else Nil
+    val last = if (disjoint(live)) footers(live, live.last).filter(_.rows > 0) else Nil
     if (live.size == 1 && last.isEmpty) None
     else if (last.nonEmpty && last.forall(_.maxId.isDefined)) Some(last.flatMap(_.maxId).max)
     else current().agg(max(col("id"))).head().get(0) match {
@@ -209,7 +229,7 @@ final class ItemStore(spark: SparkSession, root: String, buckets: Int = 0,
     * Spark job), else a count over [[current]]. */
   def count(): Long = {
     val live = snaps.live
-    if (disjoint(live)) live.flatMap(footers).map(_.rows).sum
+    if (disjoint(live)) live.flatMap(footers(live, _)).map(_.rows).sum
     else current().count()
   }
 
@@ -231,4 +251,26 @@ private object ItemStore {
   /** Row count of one parquet file and its largest `id`, from the footer;
     * `maxId` is None for an empty file or one without `id` statistics. */
   final case class Footer(rows: Long, maxId: Option[Long])
+
+  /** One non-empty partition of a batch: its smallest and largest id, and
+    * whether its ids strictly ascend (so none repeats). A null id counts
+    * as out of order and as the smallest id. */
+  final case class Run(lo: Long, hi: Long, ascending: Boolean)
+
+  /** The [[Run]] of every non-empty partition of `rows` (`id` first), in
+    * one map-only job. */
+  def runs(rows: DataFrame): Seq[Run] =
+    rows.queryExecution.toRdd.mapPartitions { it =>
+      var n = 0L; var lo = Long.MaxValue; var hi = Long.MinValue; var asc = true
+      it.foreach { r =>
+        if (r.isNullAt(0)) { asc = false; lo = Long.MinValue }
+        else {
+          val id = r.getLong(0)
+          asc &&= n == 0 || id > hi
+          lo = math.min(lo, id); hi = math.max(hi, id)
+        }
+        n += 1
+      }
+      if (n == 0) Iterator.empty else Iterator(Run(lo, hi, asc))
+    }.collect().toSeq
 }

@@ -442,23 +442,35 @@ class ItemStoreSpec extends AnyFunSuite {
     files.map { case (e, f) => (e, f, ids.getOrElse(f, Nil)) }
   }
 
-  /** The layout invariants: base then segments only; every file sorted
-    * by id; id ranges disjoint and ascending in manifest order; every
-    * segment but the last (the one open tail) sealed, i.e. holding at
-    * least as many rows as the largest base file; no directory outside
-    * the manifest. */
-  private def assertClustered(dir: String): Unit = {
+  /** The layout invariants: base then segments only; every segment file
+    * sorted by id; the entries' id ranges disjoint and ascending in
+    * manifest order; every segment but the last (the one open tail)
+    * sealed, i.e. holding at least as many rows as the largest base file;
+    * no directory outside the manifest. With `clusteredBase` (a base
+    * written by the first append into an empty store) the base's files
+    * are also sorted by id with disjoint ranges; a base an update wrote is
+    * hash-partitioned. */
+  private def assertLayout(dir: String, clusteredBase: Boolean): Unit = {
     val entries = manifestOf(dir)
     assert(entries.tail.forall(_.startsWith("seg-")), s"not clustered: $entries")
     assert(storeDirs(dir) == entries.toSet,
       s"superseded directories left: ${storeDirs(dir) -- entries}")
     val files = liveFiles(dir)
-    files.foreach { case (_, f, ids) =>
-      assert(ids == ids.sorted && ids.distinct.size == ids.size, s"$f is not sorted by id: $ids")
+    def sortedFiles(fs: Seq[(String, String, Seq[Long])]): Unit = {
+      fs.foreach { case (_, f, ids) =>
+        assert(ids == ids.sorted && ids.distinct.size == ids.size, s"$f is not sorted by id: $ids")
+      }
+      val ranges = fs.map(_._3).filter(_.nonEmpty).map(ids => (ids.head, ids.last)).sorted
+      ranges.zip(ranges.drop(1)).foreach { case (a, b) =>
+        assert(a._2 < b._1, s"overlapping file id ranges $a, $b in $entries")
+      }
     }
-    val ranges = files.map(_._3).filter(_.nonEmpty).map(ids => (ids.head, ids.last))
+    entries.tail.foreach(seg => sortedFiles(files.filter(_._1 == seg)))
+    if (clusteredBase) sortedFiles(files.filter(_._1 == entries.head))
+    val ranges = entries.map(e => files.filter(_._1 == e).flatMap(_._3)).filter(_.nonEmpty)
+      .map(ids => (ids.min, ids.max))
     ranges.zip(ranges.drop(1)).foreach { case (a, b) =>
-      assert(a._2 < b._1, s"overlapping id ranges $a, $b in $entries")
+      assert(a._2 < b._1, s"overlapping entry id ranges $a, $b in $entries")
     }
     val sealAt = files.filter(_._1 == entries.head).map(_._3.size).maxOption.getOrElse(0)
     entries.drop(1).dropRight(1).foreach { seg =>
@@ -502,6 +514,7 @@ class ItemStoreSpec extends AnyFunSuite {
       var known = Vector.empty[Long]
       var maxId = 0L
       var prev = Seq.empty[(Long, String)]
+      var clusteredBase = false
       val kinds = Seq("append", "append", "append", "dups", "update", "gap", "empty", "replay")
       (1 to 12).foreach { step =>
         val kind = if (step == 1) "append" else kinds(rnd.nextInt(kinds.size))
@@ -519,7 +532,11 @@ class ItemStoreSpec extends AnyFunSuite {
           case "replay" => prev
         }
         val batch = Item.normalize(rows.toDF("id", "body"), lit(100L + step))
+        val baseBefore = manifestOf(dir).head
         st.merge(batch)
+        // the first rows an empty store takes become a clustered base; an
+        // update writes a new, hash-partitioned one
+        if (manifestOf(dir).head != baseBefore) clusteredBase = known.isEmpty
         ref = upsertRef(ref, batch, st)
         prev = rows
         known = (known ++ rows.filter(_._2 != null).map(_._1)).distinct
@@ -528,7 +545,7 @@ class ItemStoreSpec extends AnyFunSuite {
         assert(rowsById(st.current()) == rowsById(ref), clue)
         assert(st.count() == known.size, clue)
         assert(st.latestId() == known.maxOption, clue)
-        withClue(clue)(assertClustered(dir))
+        withClue(clue)(assertLayout(dir, clusteredBase))
       }
     }
   }
@@ -539,10 +556,10 @@ class ItemStoreSpec extends AnyFunSuite {
     st.init()
     def items(ids: Seq[Long]) = normalized(ids.map(i =>
       i -> s"""{"id":$i,"type":"comment","time":${i * 10}}"""): _*)
-    st.merge(items(1L to 4L))
+    st.merge(items(1L to 4L).coalesce(1))
     val base = manifestOf(dir)
     assert(base.size == 1)
-    // AQE coalesces the 4-row range shuffle into one file: the seal is at 4 rows
+    // one sorted partition is written as it is, one file: the seal is at 4 rows
     assert(liveFiles(dir).map(_._3.size) == Seq(4))
     st.merge(items(Seq(5L, 6L)))
     val Seq(_, tailA) = manifestOf(dir)
@@ -557,7 +574,7 @@ class ItemStoreSpec extends AnyFunSuite {
     assert(dirSizes(Paths.get(dir, tailB)) == sealedSizes, "a sealed segment was rewritten")
     st.merge(items(Seq(10L)))
     assert(manifestOf(dir).take(2) == Seq(b, s))
-    assertClustered(dir)
+    assertLayout(dir, clusteredBase = true)
     assert(st.current().count() == 10)
     assert(st.latestId().contains(10L))
   }
@@ -582,6 +599,59 @@ class ItemStoreSpec extends AnyFunSuite {
     val written = dirSizes(Paths.get(dir, tail)).values.sum
     assert(written * 5 < before.values.sum, s"tail $written B vs base ${before.values.sum} B")
     assert(st.count() == 4200L && st.latestId().contains(4200L))
+  }
+
+  /** Shuffle bytes written by the stages `f` runs. */
+  private def shuffleBytes(f: => Unit): Long = {
+    val bytes = new java.util.concurrent.atomic.AtomicLong()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        Option(e.stageInfo.taskMetrics).foreach(m => bytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+    }
+    org.apache.spark.GraftTestBus.flush(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try { f; org.apache.spark.GraftTestBus.flush(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(l)
+    bytes.get
+  }
+
+  test("an empty store writes a clustered batch as its base with no shuffle, " +
+    "and range-clusters and deduplicates any other") {
+    val rnd = new scala.util.Random(17)
+    val bodies = (1L to 400L).map(i => i -> randomBody(rnd, i)).toMap
+    val ref = upsertRef(emptyItems, normalized(bodies.toSeq: _*), freshStore())
+    // a bulk fetch: contiguous ascending id slices, one per task
+    val dirA = Files.createTempDirectory("graft-store-bulk").toString
+    val a = new ItemStore(spark, dirA)
+    a.init()
+    val fetched = graft.ingest.BulkFetch.fetchItems(spark, new FakeFetcher(bodies, 400L),
+      1L, 400L, parallelism = 4, retrievedAt = 100L)
+    assert(shuffleBytes(a.merge(fetched)) == 0L)
+    assert(liveFiles(dirA).map(_._3.size).sum == 400 && liveFiles(dirA).size == 4)
+    assertLayout(dirA, clusteredBase = true)
+    assert(rowsById(a.current()) == rowsById(ref))
+    // the same items scattered round-robin over 3 partitions, each id twice
+    val dirB = Files.createTempDirectory("graft-store-scattered").toString
+    val b = new ItemStore(spark, dirB)
+    b.init()
+    val twice = (bodies.toSeq ++ bodies.toSeq).toDF("id", "body").repartition(3)
+    assert(shuffleBytes(b.merge(Item.normalize(twice, lit(100L)))) > 0L)
+    assertLayout(dirB, clusteredBase = true)
+    assert(rowsById(b.current()) == rowsById(ref))
+    assert(b.count() == 400L && b.latestId().contains(400L))
+    // each id twice in a row in one sorted partition: a repeat does not
+    // ascend, so the base and the tail path both deduplicate
+    def sortedTwice(ids: Seq[Long]) = Item.normalize(ids.flatMap(i => Seq.fill(2)(i -> bodies(i)))
+      .toDF("id", "body").coalesce(1), lit(100L))
+    val dirC = Files.createTempDirectory("graft-store-repeats").toString
+    val c = new ItemStore(spark, dirC)
+    c.init()
+    c.merge(sortedTwice(1L to 200L))
+    assert(c.count() == 200L)
+    c.merge(sortedTwice(201L to 400L))
+    assert(c.count() == 400L && manifestOf(dirC).size == 2)
+    assertLayout(dirC, clusteredBase = true)
+    assert(rowsById(c.current()) == rowsById(ref))
   }
 
   private def countJobs(f: => Unit): Int = {
@@ -634,7 +704,7 @@ class ItemStoreSpec extends AnyFunSuite {
     val probe = freshStore() // only for its column groups
     val refs = batches.scanLeft(emptyItems)((r, b) => upsertRef(r, b, probe)).tail
     // delta log → defaults: reads fold the deltas; the next default merge
-    // (an append) upserts everything into one clustered base
+    // (an append) upserts everything into one base
     val dDir = Files.createTempDirectory("graft-store-d2c").toString
     val delta = new ItemStore(spark, dDir, compactEvery = 10)
     delta.init()
@@ -644,7 +714,7 @@ class ItemStoreSpec extends AnyFunSuite {
     assert(reopened.latestId().contains(26L) && reopened.count() == 26L)
     reopened.merge(batches(3))
     assert(rowsById(reopened.current()) == rowsById(refs(3)))
-    assertClustered(dDir)
+    assertLayout(dDir, clusteredBase = false)
     // clustered → delta log: segments fold like deltas; back to defaults
     val cDir = Files.createTempDirectory("graft-store-c2d").toString
     val clustered = new ItemStore(spark, cDir)
@@ -660,6 +730,6 @@ class ItemStoreSpec extends AnyFunSuite {
     assert(rowsById(back.current()) == rowsById(refs(3)))
     back.merge(batches(4))
     assert(rowsById(back.current()) == rowsById(refs(4)))
-    assertClustered(cDir)
+    assertLayout(cDir, clusteredBase = false)
   }
 }
