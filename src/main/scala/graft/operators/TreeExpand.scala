@@ -21,6 +21,8 @@ import org.apache.spark.storage.StorageLevel
   *    `levelsPerRound` levels. The pass declines — falls through to the
   *    rounds — when its OUTPUT outgrows the same row and byte budget
   *    (overlapping roots and long paths can multiply a small edge table).
+  *    [[expandCollected]] is the same pass over child lists a caller
+  *    already holds (the item store's, for a page render): no job at all.
   *  - distributed rounds: the edge side is repartitioned by parent key once
   *    and cached, the measured frontier is broadcast while it fits the
   *    budget and deeper levels shuffle-hash against the edges — the 100-TB
@@ -59,6 +61,17 @@ object TreeExpand {
   private val BroadcastMode = "broadcast"
   private val ShuffleMode = "shuffle"
 
+  /** The driver pass's default budget: edge rows, and bytes at
+    * [[EdgeBytes]] per edge (also its output budget, at 32 B + path
+    * length per row). */
+  val DriverBudgetRows: Long = 1000000L
+  val DriverBudgetBytes: Long = 64L << 20
+  private val EdgeBytes = 48L
+
+  /** Whether `edges` collected edges fit the default driver budget. */
+  def fitsDriver(edges: Long): Boolean =
+    edges <= DriverBudgetRows && edges * EdgeBytes <= DriverBudgetBytes
+
   /** @param edges (idCol, parentCol) adjacency rows, parent NULL for roots
     * @param roots one column `idCol`: the subtree roots to expand (included
     *              in the output at depth 0)
@@ -93,8 +106,8 @@ object TreeExpand {
       maxDepth: Int = 1000,
       levelsPerRound: Int = 4,
       driverFrontierRows: Int = 8192,
-      broadcastFrontierRows: Long = 1000000L,
-      broadcastMaxBytes: Long = 64L << 20,
+      broadcastFrontierRows: Long = DriverBudgetRows,
+      broadcastMaxBytes: Long = DriverBudgetBytes,
       modeLog: scala.collection.mutable.Buffer[String] = null): DataFrame = {
     require(levelsPerRound >= 1, "levelsPerRound must be >= 1")
     require(driverFrontierRows >= 1 && broadcastFrontierRows >= driverFrontierRows,
@@ -123,7 +136,7 @@ object TreeExpand {
       // values and paths are built with toString
       val edgeCount = childOf.queryExecution.toRdd.count()
       val local =
-        if (edgeCount <= broadcastFrontierRows && edgeCount * 48 <= broadcastMaxBytes &&
+        if (edgeCount <= broadcastFrontierRows && edgeCount * EdgeBytes <= broadcastMaxBytes &&
             driverIdType(idType) && edges.schema(parentCol).dataType == idType) {
           val rootRows = roots.select(col(idCol)).head(driverFrontierRows + 1)
           if (rootRows.length > driverFrontierRows) None
@@ -249,13 +262,7 @@ object TreeExpand {
       StructField("depth", IntegerType, nullable = false),
       StructField("path", StringType)))
 
-  /** [[expand]]'s driver pass over the collected edge table: the rounds'
-    * BFS, level by level, with the same join semantics — one row per
-    * (node, covering root, parent-edge walk), so duplicate edges multiply
-    * rows; a null or edge-less root keeps its depth-0 row; a null child id
-    * yields a null path. Returns None once the output exceeds `maxRows` or
-    * `maxBytes` (the caller then runs the rounds). A frontier still alive
-    * at maxDepth throws only if it has children, as in the rounds. */
+  /** [[expand]]'s driver pass over the collected edge table. */
   private def expandOnDriver(
       edgeRows: Array[Row],
       rootIds: Array[Any],
@@ -265,10 +272,31 @@ object TreeExpand {
       maxRows: Long,
       maxBytes: Long,
       spark: org.apache.spark.sql.SparkSession): Option[DataFrame] = {
-    val children = new java.util.HashMap[Any, java.util.ArrayList[Any]]()
+    val children = new java.util.HashMap[Any, java.util.List[Any]]()
     edgeRows.foreach { r =>
       children.computeIfAbsent(r.get(1), _ => new java.util.ArrayList[Any]()).add(r.get(0))
     }
+    expandCollected(children.get, rootIds.toSeq, maxDepth, maxRows, maxBytes)
+      .map(spark.createDataFrame(_, outputSchema(idCol, idType)))
+  }
+
+  /** The driver BFS over child lists already on the driver: `childrenOf`
+    * gives the ids whose parent is the given id (null or empty for none).
+    * It is [[expand]]'s driver pass, level by level, with the rounds' join
+    * semantics — one row per (node, covering root, parent-edge walk), so
+    * duplicate edges multiply rows; a null or edge-less root keeps its
+    * depth-0 row; a null child id yields a null path. Returns the rows
+    * (id, root, depth, path), or None once they exceed `maxRows` or
+    * `maxBytes` (the caller then takes the distributed path). A frontier
+    * still alive at maxDepth throws [[expand]]'s error only if it has
+    * children, as in the rounds. */
+  def expandCollected(
+      childrenOf: Any => java.util.List[Any],
+      rootIds: Seq[Any],
+      maxDepth: Int = 1000,
+      maxRows: Long = DriverBudgetRows,
+      maxBytes: Long = DriverBudgetBytes): Option[java.util.List[Row]] = {
+    def hasChildren(id: Any) = { val k = childrenOf(id); k != null && !k.isEmpty }
     val out = new java.util.ArrayList[Row]()
     var bytes = 0L
     def emit(id: Any, root: Any, depth: Int, path: String): Boolean = {
@@ -277,7 +305,7 @@ object TreeExpand {
       out.size <= maxRows && bytes <= maxBytes
     }
     // frontier entries: (id, root, path) at the current depth
-    var frontier = rootIds.distinct.toSeq.map { id =>
+    var frontier = rootIds.distinct.map { id =>
       (id, id, if (id == null) null else String.valueOf(id)) }
     if (!frontier.forall { case (id, root, path) => emit(id, root, 0, path) })
       return None
@@ -288,7 +316,7 @@ object TreeExpand {
       val it = frontier.iterator
       while (it.hasNext) {
         val (id, root, path) = it.next()
-        val kids = children.get(id)
+        val kids = childrenOf(id)
         if (kids != null) {
           var i = 0
           while (i < kids.size) {
@@ -302,9 +330,9 @@ object TreeExpand {
       }
       frontier = next.result()
     }
-    if (frontier.exists { case (id, _, _) => children.containsKey(id) })
+    if (frontier.exists { case (id, _, _) => hasChildren(id) })
       notConverged(maxDepth)
-    Some(spark.createDataFrame(out, outputSchema(idCol, idType)))
+    Some(out)
   }
 
   /** Pointer-doubling expansion: [[expand]]'s output contract in

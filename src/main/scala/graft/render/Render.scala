@@ -4,17 +4,21 @@ import java.time.{Instant, ZoneOffset}
 import java.time.format.DateTimeFormatter
 import java.util.Locale
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.operators.TreeExpand
+import graft.store.ItemStore
 
 /** R1-R5: the HTML rendering pipeline (SURVEY.md §2.10; reference
   * `/root/reference/hnarchive.py:292-488`). The data-parallel part — subtree
   * expansion — runs via [[TreeExpand]] (replacing the reference's
   * one-query-per-node recursion, SURVEY.md E3): one driver pass over the
-  * collected edge table within its budget, distributed rounds past it;
+  * store's cached child lists or the collected edge table within its
+  * budget, distributed rounds past it;
   * rendering itself happens on the driver after a bounded collect, same as
   * the reference's post-query Python.
   */
@@ -30,17 +34,28 @@ object Render {
   /** R1 `build_item_tree` (hnarchive.py:306-319): subtree expansion +
     * driver-side assembly, children sorted by (time, id) — the reference's
     * `list_children(sort=time)` (O2) with an id tie-break for determinism.
-    * The root is handed to [[TreeExpand]] as a local relation (it returns a
-    * depth-0 row for it either way); the page's nodes are then fetched with
-    * `id IN (expanded ids)`, which the parquet scan pushes down, so an
-    * id-clustered store skips every row group outside the page. A root id
-    * absent from `items` fails loud naming it. */
+    * When `items` is exactly [[ItemStore.current]] of a disjoint default
+    * store (no filter or projection on top) within the driver budget, the
+    * page's ids come from [[TreeExpand.expandCollected]] over the store's
+    * cached child lists: no job on an unchanged store, one for the lists
+    * of directories committed since the last render. Any other frame goes
+    * through [[TreeExpand.expand]], with the root as a local relation (it
+    * returns a depth-0 row for it either way). Both fail with the same
+    * maxDepth error on a cycle. The page's nodes are then fetched with
+    * `id IN (expanded ids)`, which the store's file index and the parquet
+    * scan push down, so an id-clustered store reads only the files and
+    * pages holding the page. A root id absent from `items` fails loud
+    * naming it. */
   def buildTree(items: DataFrame, rootId: Long): Node = {
-    val edges = items.select(col("id"), col("parent"))
-    val roots = items.sparkSession.createDataFrame(java.util.List.of(Row(rootId)),
-      StructType(Seq(StructField("id", LongType))))
-    val ids = TreeExpand.expand(edges, roots).select(col("id")).collect()
-      .map(_.get(0)).distinct
+    val ids = ItemStore.childrenOf(items)
+      .flatMap(TreeExpand.expandCollected(_, Seq(rootId)))
+      .map(_.asScala.map(_.get(0)).toSeq)
+      .getOrElse {
+        val edges = items.select(col("id"), col("parent"))
+        val roots = items.sparkSession.createDataFrame(java.util.List.of(Row(rootId)),
+          StructType(Seq(StructField("id", LongType))))
+        TreeExpand.expand(edges, roots).select(col("id")).collect().map(_.get(0)).toSeq
+      }.distinct
     val nodes = items.filter(col("id").isin(ids.toIndexedSeq: _*))
       .select("id", "type", "author", "time", "text", "url", "score", "title", "parent")
       .collect()

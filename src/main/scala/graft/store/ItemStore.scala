@@ -1,11 +1,17 @@
 package graft.store
 
+import java.nio.file.{Files, Paths}
+
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
-import graft.operators.Merge
+import graft.operators.{Merge, TreeExpand}
 import graft.schema.Item
 
 /** The item archive: a parquet snapshot store with the reference's upsert
@@ -38,10 +44,14 @@ import graft.schema.Item
   * [[graft.operators.Merge.upsert]] and writes its output as the join
   * leaves it, hash-partitioned, folding the segments back in; point
   * reads on that base scan every base file, as they did before the
-  * clustered layout. Reads need no fold: [[current]] is the plain union
-  * of the live directories, a point read is pruned by the parquet
-  * row-group statistics on `id` (on a clustered base and on every
-  * segment), and [[latestId]] and [[count]] read the footers.
+  * clustered layout. Reads need no fold: [[current]] is one relation
+  * over an [[IdRangeIndex]] of the live files, built from their cached
+  * footers, so a read with `id` filters lists only the files whose id
+  * range can match (on the driver: a point lookup runs one task), and
+  * within a file the column index of its 1000-row pages narrows the read
+  * to about one page per column. [[latestId]] and [[count]] read the
+  * footers. [[ItemStore.childrenOf]] serves a page render the store's
+  * parent → children lists, read once per directory.
   *
   * With `buckets > 0` every snapshot is stored BUCKETED by id
   * ([[Snapshots]] bucketed mode) and each merge rewrites it: the merge
@@ -69,7 +79,11 @@ final class ItemStore(spark: SparkSession, root: String, buckets: Int = 0,
                       compactEvery: Int = 0) {
 
   private val snaps = new Snapshots(spark, root, Item.schema,
-    if (buckets > 0) Some(("id", buckets)) else None)
+    if (buckets > 0) Some(("id", buckets)) else None,
+    // 1000-row pages, not the writer's 20000: the column index then narrows
+    // a point read in a file to about one page per column
+    writeOptions = if (buckets == 0 && compactEvery == 0)
+      Map("parquet.page.row.count.limit" -> "1000") else Map.empty)
 
   private val itemCols = Item.schema.fieldNames.toIndexedSeq.map(col)
 
@@ -82,7 +96,7 @@ final class ItemStore(spark: SparkSession, root: String, buckets: Int = 0,
   def init(): Unit = snaps.init()
 
   /** True when no live entry overlaps another on `id`: a base followed
-    * only by segments. Such a store reads as a plain union. */
+    * only by segments. Such a store reads with no fold. */
   private def disjoint(live: Seq[String]): Boolean =
     live.tail.forall(_.startsWith(Snapshots.SegmentPrefix))
 
@@ -96,13 +110,47 @@ final class ItemStore(spark: SparkSession, root: String, buckets: Int = 0,
     val live = snaps.live
     cached.collect { case (m, df) if m == live => df }.getOrElse {
       val df =
-        if (disjoint(live)) snaps.read()
+        if (buckets == 0 && disjoint(live)) scan(live, live)
+        else if (disjoint(live)) snaps.read()
         else Merge.upsert(snaps.readBase(), foldedDeltas(), "id", coalesceCols,
             overwriteCols)
           .select(itemCols: _*)
       cached = Some((live, df))
       df
     }
+  }
+
+  /** One relation over the files of `entries` through an [[IdRangeIndex]]
+    * built from their cached footers: no file listing, and reads plan
+    * their files by `id` range on the driver. */
+  private def scan(live: Seq[String], entries: Seq[String]): DataFrame = {
+    val index = new IdRangeIndex(
+      entries.map(e => new Path(Paths.get(snaps.dir(e)).toUri)),
+      entries.flatMap(footers(live, _)), () => childLists(live))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, new StructType(),
+      ItemStore.readSchema, None, new ParquetFileFormat, Map.empty)(spark))
+  }
+
+  /** Each live directory's parent → children lists, read and dropped like
+    * the footers: a committed directory never changes, so each is read
+    * once, and one job reads every directory not yet read. */
+  private val childCache =
+    scala.collection.concurrent.TrieMap.empty[String, ItemStore.ChildList]
+
+  private def childLists(live: Seq[String]): Seq[ItemStore.ChildList] = {
+    childCache.keys.filterNot(live.contains).foreach(childCache.remove)
+    val unread = live.filterNot(childCache.contains).filter(footers(live, _).exists(_.rows > 0))
+    if (unread.nonEmpty) {
+      val edges = unread.zipWithIndex.map { case (e, i) =>
+        scan(live, Seq(e)).where(col("parent").isNotNull && col("id").isNotNull)
+          .select(lit(i), col("parent"), col("id"))
+      }.reduce(_ unionAll _)
+      val read = ItemStore.childLists(edges)
+      unread.zipWithIndex.foreach { case (e, i) =>
+        childCache.put(e, read.getOrElse(i, ItemStore.ChildList.empty))
+      }
+    }
+    live.map(childCache.getOrElse(_, ItemStore.ChildList.empty))
   }
 
   /** The delta log folded to ONE row per id, reproducing what sequentially
@@ -199,15 +247,22 @@ final class ItemStore(spark: SparkSession, root: String, buckets: Int = 0,
   }
 
   private def readFooters(entry: String): Seq[ItemStore.Footer] =
-    ParquetSurgery.dataFiles(snaps.dir(entry)).map(ParquetSurgery.readFooter(spark, _) { f =>
-      val blocks = f.getBlocks.asScala.toSeq
-      val maxes = blocks.filter(_.getRowCount > 0).map(_.getColumns.asScala
-        .find(_.getPath.toDotString == "id").map(_.getStatistics)
-        .filter(s => s != null && s.hasNonNullValue)
-        .map(_.genericGetMax.asInstanceOf[java.lang.Long].longValue))
-      ItemStore.Footer(blocks.map(_.getRowCount).sum,
-        if (maxes.nonEmpty && maxes.forall(_.isDefined)) Some(maxes.flatten.max) else None)
-    })
+    ParquetSurgery.dataFiles(snaps.dir(entry)).map { p =>
+      val status = new FileStatus(Files.size(p), false, 1, 32L << 20,
+        Files.getLastModifiedTime(p).toMillis, new Path(p.toUri))
+      ParquetSurgery.readFooter(spark, p) { f =>
+        val blocks = f.getBlocks.asScala.toSeq
+        val ranges = blocks.filter(_.getRowCount > 0).map(_.getColumns.asScala
+          .find(_.getPath.toDotString == "id").map(_.getStatistics)
+          .filter(s => s != null && s.hasNonNullValue)
+          .map(s => (s.genericGetMin.asInstanceOf[java.lang.Long].longValue,
+            s.genericGetMax.asInstanceOf[java.lang.Long].longValue)))
+        ItemStore.Footer(status, blocks.map(_.getRowCount).sum,
+          if (ranges.nonEmpty && ranges.forall(_.isDefined))
+            Some((ranges.flatten.map(_._1).min, ranges.flatten.map(_._2).max))
+          else None)
+      }
+    }
 
   /** A1 `select_latest_id` (hnarchive.py:285-290): resume offset. */
   def latestId(): Option[Long] = latestId(snaps.live)
@@ -247,19 +302,73 @@ final class ItemStore(spark: SparkSession, root: String, buckets: Int = 0,
   }
 }
 
-private object ItemStore {
-  /** Row count of one parquet file and its largest `id`, from the footer;
-    * `maxId` is None for an empty file or one without `id` statistics. */
-  final case class Footer(rows: Long, maxId: Option[Long])
+object ItemStore {
+  /** The children of each id, from the store's per-directory child lists,
+    * when `items` is exactly [[ItemStore.current]] of a disjoint default
+    * store (its [[IdRangeIndex]] relation, no filter or projection on top)
+    * whose footer row count fits [[TreeExpand]]'s driver budget; None for
+    * any other frame. The first call after a commit reads the child lists
+    * of every directory not yet read, in one job; later calls run none. */
+  def childrenOf(items: DataFrame): Option[Any => java.util.List[Any]] =
+    items.queryExecution.logical match {
+      case LogicalRelation(h: HadoopFsRelation, _, _, _, _) => h.location match {
+        case ix: IdRangeIndex if TreeExpand.fitsDriver(ix.rows) =>
+          val lists = ix.children()
+          Some {
+            case p: java.lang.Long =>
+              val out = new java.util.ArrayList[Any]()
+              lists.foreach(_.addChildren(p, out))
+              out
+            case _ => null
+          }
+        case _ => None
+      }
+      case _ => None
+    }
+
+  /** What a plain `spark.read.schema(Item.schema).parquet` scan reads:
+    * every column nullable. */
+  private val readSchema = StructType(Item.schema.map(_.copy(nullable = true)))
+
+  /** One parquet file: its status, row count and `id` range, from the
+    * footer; `ids` is None for an empty file or one without `id`
+    * statistics. */
+  private[store] final case class Footer(status: FileStatus, rows: Long,
+                                         ids: Option[(Long, Long)]) {
+    def maxId: Option[Long] = ids.map(_._2)
+  }
+
+  /** The (parent, child) edges of one directory, sorted by parent. */
+  private[store] final class ChildList(parents: Array[Long], kids: Array[Long]) {
+    /** Append the children of `p` to `out`. */
+    def addChildren(p: Long, out: java.util.List[Any]): Unit = {
+      var lo = 0
+      var hi = parents.length
+      while (lo < hi) { val m = (lo + hi) >>> 1; if (parents(m) < p) lo = m + 1 else hi = m }
+      while (lo < parents.length && parents(lo) == p) { out.add(kids(lo)); lo += 1 }
+    }
+  }
+
+  private[store] object ChildList {
+    val empty = new ChildList(Array.emptyLongArray, Array.emptyLongArray)
+  }
+
+  /** The child lists of `edges` — rows (tag: int, parent, id), both ids
+    * non-null — by tag, in one job. */
+  private def childLists(edges: DataFrame): Map[Int, ChildList] =
+    edges.collect().groupBy(_.getInt(0)).map { case (t, rows) =>
+      val sorted = rows.sortBy(_.getLong(1))
+      t -> new ChildList(sorted.map(_.getLong(1)), sorted.map(_.getLong(2)))
+    }
 
   /** One non-empty partition of a batch: its smallest and largest id, and
     * whether its ids strictly ascend (so none repeats). A null id counts
     * as out of order and as the smallest id. */
-  final case class Run(lo: Long, hi: Long, ascending: Boolean)
+  private[store] final case class Run(lo: Long, hi: Long, ascending: Boolean)
 
   /** The [[Run]] of every non-empty partition of `rows` (`id` first), in
     * one map-only job. */
-  def runs(rows: DataFrame): Seq[Run] =
+  private[store] def runs(rows: DataFrame): Seq[Run] =
     rows.queryExecution.toRdd.mapPartitions { it =>
       var n = 0L; var lo = Long.MaxValue; var hi = Long.MinValue; var asc = true
       it.foreach { r =>

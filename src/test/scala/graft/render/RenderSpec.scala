@@ -71,6 +71,108 @@ class RenderSpec extends AnyFunSuite {
     assert(!plans.exists(_.contains("Join")), s"a join against items:\n${plans.mkString("\n")}")
   }
 
+  // ---- per-directory child lists (a disjoint default store) ----
+
+  private def store(bodies: Seq[(Long, String)], parts: Int = 4): graft.store.ItemStore = {
+    val dir = java.nio.file.Files.createTempDirectory("graft-render-lists").toString
+    val st = new graft.store.ItemStore(spark, dir)
+    st.init()
+    st.merge(graft.ingest.BulkFetch.fetchItems(spark,
+      new graft.ingest.FakeFetcher(bodies.toMap, bodies.map(_._1).max), 1L, bodies.map(_._1).max,
+      parallelism = parts, retrievedAt = 100L))
+    st
+  }
+
+  private def comment(i: Long, parent: Long, time: Long) =
+    i -> s"""{"id":$i,"type":"comment","by":"u$i","time":$time,"parent":$parent}"""
+  private def story(i: Long) = i -> s"""{"id":$i,"type":"story","by":"s","time":$i,"title":"t$i"}"""
+
+  /** (job, tasks) of every job `f` starts, and its result. */
+  private def jobsOf[A](f: => A): (A, Seq[Int]) = {
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        tasks.add(j.stageInfos.map(_.numTasks).sum)
+    }
+    org.apache.spark.GraftTestBus.flush(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    val a = try { val a = f; org.apache.spark.GraftTestBus.flush(spark.sparkContext); a }
+      finally spark.sparkContext.removeSparkListener(l)
+    import scala.jdk.CollectionConverters._
+    (a, tasks.asScala.toSeq)
+  }
+
+  private def ids(n: Render.Node): Seq[Long] = n.item.id +: n.children.flatMap(ids)
+
+  test("child lists: an unchanged store renders in 1 job, the node fetch; " +
+    "after an append the next render reads only the new tail's lists") {
+    // stories 1 and 100, each with a comment chain; 400 items over 4 base files
+    val bodies = (1L to 400L).map {
+      case i if i == 1L || i == 100L => story(i)
+      case i if i < 100L => comment(i, i - 1, i)
+      case i if i < 150L => comment(i, 100L, i)
+      case i => story(i)
+    }
+    val st = store(bodies)
+    Render.buildTree(st.current(), 1L) // the first render reads the base's lists
+    val (t100, jobs) = jobsOf(Render.buildTree(st.current(), 100L))
+    assert(ids(t100).sorted == (100L +: (101L to 149L)))
+    assert(jobs.size == 1, s"jobs: $jobs")
+    // an append: comments under story 100 in a new tail
+    st.merge(graft.schema.Item.normalize(Seq(comment(401L, 100L, 401L), comment(402L, 401L, 402L))
+      .toDF("id", "body"), org.apache.spark.sql.functions.lit(101L)))
+    val (t2, jobs2) = jobsOf(Render.buildTree(st.current(), 100L))
+    assert(ids(t2).sorted == (100L +: ((101L to 149L) :+ 401L :+ 402L)))
+    // the child-list job reads the tail's one file, not the base's four
+    assert(jobs2.size == 2 && jobs2.head == 1, s"jobs (tasks each): $jobs2")
+    assert(jobsOf(Render.buildTree(st.current(), 1L))._2.size == 1)
+  }
+
+  test("child-list pages equal the TreeExpand path over seeded random forests") {
+    import org.apache.spark.sql.functions.lit
+    for (seed <- Seq(3, 4)) {
+      val rnd = new scala.util.Random(seed)
+      // each item replies to an earlier one or starts a story; times are
+      // shuffled so page order is by (time, id), not by id
+      val bodies = (1L to 300L).map { i =>
+        if (i == 1L || rnd.nextInt(8) == 0) story(i)
+        else comment(i, 1L + rnd.nextInt(i.toInt - 1), rnd.nextInt(50).toLong)
+      }
+      val st = store(bodies, parts = 1 + rnd.nextInt(4))
+      val roots = bodies.filter(_._2.contains("story")).map(_._1).take(4) :+ 2L
+      def check(clue: String): Unit = roots.foreach { r =>
+        assert(graft.store.ItemStore.childrenOf(st.current()).nonEmpty)
+        val filtered = st.current().where(lit(true))
+        assert(graft.store.ItemStore.childrenOf(filtered).isEmpty, "a filtered frame took the lists")
+        val viaLists = Render.buildTree(st.current(), r)
+        assert(viaLists == Render.buildTree(filtered, r), s"$clue root $r")
+        def ordered(n: Render.Node): Unit = {
+          assert(n.children.map(c => (c.item.time, c.item.id)) ==
+            n.children.map(c => (c.item.time, c.item.id)).sorted, s"$clue root $r")
+          n.children.foreach(ordered)
+        }
+        ordered(viaLists)
+      }
+      check(s"seed $seed")
+      // an update rewrites the base hash-partitioned: the lists still hold
+      val moved = (2L to 300L).filter(_ => rnd.nextInt(10) == 0).map(i => comment(i, 1L, i))
+      st.merge(graft.schema.Item.normalize(moved.toDF("id", "body"), lit(101L)))
+      check(s"seed $seed after an update")
+    }
+  }
+
+  test("child lists fail on a cycle with TreeExpand's maxDepth error") {
+    import org.apache.spark.sql.functions.lit
+    // 2 and 3 reply to each other
+    val st = store(Seq(story(1L), comment(2L, 3L, 2L), comment(3L, 2L, 3L), story(4L)), parts = 1)
+    val viaLists = intercept[IllegalStateException](Render.buildTree(st.current(), 2L))
+    val viaExpand = intercept[IllegalStateException](
+      Render.buildTree(st.current().where(lit(true)), 2L))
+    assert(viaLists.getMessage.contains("maxDepth=1000"), viaLists.getMessage)
+    assert(viaLists.getMessage == viaExpand.getMessage)
+    assert(ids(Render.buildTree(st.current(), 1L)) == Seq(1L))
+  }
+
   test("story page: escaped title, url link, userinfo, nested sorted comments") {
     val html = Render.renderPage(Render.buildTree(items, 1L))
     assert(html.contains("""<h1><a href="https://example.com">Big &lt;News&gt;</a></h1>"""))

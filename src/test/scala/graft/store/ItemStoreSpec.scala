@@ -694,6 +694,101 @@ class ItemStoreSpec extends AnyFunSuite {
     assert(old.count() == 51L && old.current().count() == 51L)
   }
 
+  /** The parquet scans of `df`'s executed plan, after running it. */
+  private def scans(df: org.apache.spark.sql.DataFrame)
+      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] =
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      }
+
+  test("a point lookup runs 1 job on the one file covering the id; " +
+    "an IN list scans only the covering files") {
+    val rnd = new scala.util.Random(23)
+    val dir = Files.createTempDirectory("graft-store-lookup").toString
+    val st = new ItemStore(spark, dir)
+    st.init()
+    val bodies = (1L to 800L).map(i => i -> randomBody(rnd, i)).toMap
+    st.merge(graft.ingest.BulkFetch.fetchItems(spark, new FakeFetcher(bodies, 800L),
+      1L, 800L, parallelism = 4, retrievedAt = 100L))
+    st.merge(normalized((801L to 850L).map(i => i -> randomBody(rnd, i)): _*))
+    val files = liveFiles(dir)
+    assert(files.size == 5, s"files: ${files.map(_._2)}")
+    def fileOf(id: Long) = files.find(_._3.contains(id)).get._2
+    for (id <- Seq(1L, 333L, 800L, 825L)) {
+      val lookup = st.current().filter(col("id") === id)
+      var rows = Array.empty[org.apache.spark.sql.Row]
+      assert(countJobs { rows = lookup.collect() } == 1, s"id $id")
+      assert(rows.map(_.getAs[Long]("id")).toSeq == Seq(id))
+      val Seq(scan) = scans(lookup)
+      assert(scan.metrics("numFiles").value == 1, s"id $id")
+      // the one listed file is the one the id lives in
+      val listed = scan.relation.location.listFiles(Nil, scan.dataFilters)
+        .flatMap(_.files.map(f => Paths.get(f.getPath.toUri).toString))
+      assert(listed == Seq(fileOf(id)), s"id $id")
+    }
+    val in = st.current().filter(col("id").isin(2L, 5L, 830L))
+    assert(in.collect().length == 3)
+    assert(scans(in).head.metrics("numFiles").value == 2)
+    // past 10 values the optimizer plans an InSet: still only the covering files
+    val inSet = st.current().filter(col("id").isin((2L to 40L) :+ 826L: _*))
+    assert(inSet.collect().length == 40)
+    assert(scans(inSet).head.metrics("numFiles").value == 2)
+    // a predicate on another column keeps every file
+    val other = st.current().filter(col("id") === 3L || col("time") < 0L)
+    other.collect()
+    assert(scans(other).head.metrics("numFiles").value == 5)
+  }
+
+  test("lookups through the file index equal a plain read of the live " +
+    "directories on a clustered, an updated and a statistics-less store") {
+    val rnd = new scala.util.Random(29)
+    def bodies(ids: Seq[Long]) = ids.map(i => i -> randomBody(rnd, i))
+    // clustered: a bulk base and two tails
+    val clustered = Files.createTempDirectory("graft-store-idx-c").toString
+    val c = new ItemStore(spark, clustered)
+    c.init()
+    c.merge(graft.ingest.BulkFetch.fetchItems(spark, new FakeFetcher(bodies(1L to 600L).toMap, 600L),
+      1L, 600L, parallelism = 3, retrievedAt = 100L))
+    c.merge(normalized(bodies(601L to 900L): _*))
+    c.merge(normalized(bodies(901L to 950L): _*))
+    // updated: an upsert writes the base hash-partitioned
+    val updated = Files.createTempDirectory("graft-store-idx-u").toString
+    val u = new ItemStore(spark, updated)
+    u.init()
+    u.merge(normalized(bodies(1L to 500L): _*))
+    u.merge(normalized(bodies((1L to 500L by 7) ++ (501L to 520L)): _*))
+    u.merge(normalized(bodies(521L to 540L): _*))
+    // a base file written without column statistics, then a clustered tail
+    val noStats = Files.createTempDirectory("graft-store-idx-n")
+    normalized(bodies(1L to 400L): _*).repartition(2).write
+      .option("parquet.column.statistics.enabled", "false")
+      .parquet(noStats.resolve("snap-1").toString)
+    Files.write(noStats.resolve("current"), "snap-1".getBytes)
+    val n = new ItemStore(spark, noStats.toString)
+    n.merge(normalized(bodies(401L to 450L): _*))
+    for ((st, dir) <- Seq(c -> clustered, u -> updated, n -> noStats.toString)) {
+      assert(ItemStore.childrenOf(st.current()).nonEmpty, s"$dir is not read through the index")
+      val plain = spark.read.schema(Item.schema)
+        .parquet(manifestOf(dir).map(e => Paths.get(dir, e).toString): _*)
+      val top = st.latestId().get
+      val probes = Seq.fill(9)(1L + rnd.nextInt(top.toInt + 10))
+      // every file's smallest and largest id, where an off-by-one in the
+      // range test would drop the file
+      val bounds = liveFiles(dir).map(_._3).filter(_.nonEmpty).flatMap(ids => Seq(ids.min, ids.max))
+      val preds = (bounds ++ probes.take(3)).distinct.map(id => col("id") === id) ++ Seq(
+        col("id").isin(probes.take(3): _*), col("id").isin(probes: _*),
+        col("id") < probes(0), col("id") <= probes(1), col("id") > probes(2),
+        col("id") >= probes(3), lit(probes(4)) > col("id"),
+        col("id") > math.min(probes(5), probes(6)) && col("id") <= math.max(probes(5), probes(6)),
+        col("id") === probes(7) || col("id") === probes(8), col("score") < 20L,
+        col("id") === top + 5)
+      preds.foreach { p =>
+        assert(rowsById(st.current().filter(p)) == rowsById(plain.filter(p)), s"$dir: $p")
+      }
+    }
+  }
+
   test("a delta-log store reopened with defaults, and a clustered store " +
     "reopened as a delta log, read and merge the same rows") {
     val rnd = new scala.util.Random(9)
@@ -710,6 +805,8 @@ class ItemStoreSpec extends AnyFunSuite {
     delta.init()
     batches.take(3).foreach(delta.merge)
     val reopened = new ItemStore(spark, dDir)
+    // deltas overlap: the reopened store folds them, not the file index
+    assert(ItemStore.childrenOf(reopened.current()).isEmpty)
     assert(rowsById(reopened.current()) == rowsById(refs(2)))
     assert(reopened.latestId().contains(26L) && reopened.count() == 26L)
     reopened.merge(batches(3))

@@ -1,0 +1,98 @@
+package graft.store
+
+import java.nio.file.Files
+
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.TestSpark
+
+/** [[Snapshots.init]] on a new store: an unbucketed store's empty `snap-0`
+  * is an empty directory, made with no Spark job; every mode reads it
+  * back as 0 rows and then writes as usual, and a `snap-0` written as an
+  * empty parquet table still opens. */
+class SnapshotsInitSpec extends AnyFunSuite {
+  private lazy val spark = TestSpark.spark
+  import spark.implicits._
+
+  private val schema = StructType(Seq(
+    StructField("k", LongType), StructField("p", LongType)))
+
+  private def countJobs(f: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftTestBus.flush(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try { f; org.apache.spark.GraftTestBus.flush(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(l)
+    jobs.get
+  }
+
+  private def rows(s: Snapshots): Set[(Long, Long)] = s.read().as[(Long, Long)].collect().toSet
+
+  private val batch = Seq((1L, 0L), (2L, 1L))
+
+  test("init of an unbucketed store runs no job; every mode reads it empty, then writes") {
+    def fresh(partitioned: Boolean) = {
+      val root = Files.createTempDirectory("graft-snap-init").toString
+      val s = new Snapshots(spark, root, schema,
+        partitionByCol = if (partitioned) Some("p") else None, compactEvery = 2)
+      assert(countJobs(s.init()) == 0)
+      assert(s.read().count() == 0 && s.readBase().count() == 0 && s.readDeltas().isEmpty)
+      s
+    }
+    // replace
+    val replaced = fresh(partitioned = false)
+    replaced.replace(batch.toDF("k", "p"))
+    assert(rows(replaced) == batch.toSet)
+    // a delta log, through the commit step and its compaction
+    val log = fresh(partitioned = false)
+    log.commit(batch.toDF("k", "p"))
+    assert(rows(log) == batch.toSet && log.deltaCount == 1)
+    log.commit(Seq((3L, 1L)).toDF("k", "p"))
+    assert(rows(log) == (batch :+ ((3L, 1L))).toSet && log.deltaCount == 0)
+    // segments
+    val segs = fresh(partitioned = false)
+    segs.appendSegment(batch.toDF("k", "p"), replaceLast = false)
+    segs.appendSegment(Seq((3L, 1L)).toDF("k", "p"), replaceLast = true)
+    assert(rows(segs) == Set((3L, 1L)))
+    // hive-partitioned
+    val part = fresh(partitioned = true)
+    part.appendDelta(batch.toDF("k", "p"), token = Some("e-1"))
+    assert(rows(part) == batch.toSet)
+    part.replace(part.read())
+    assert(rows(part) == batch.toSet)
+  }
+
+  test("a bucketed store keeps its table write and reads it empty, then merges") {
+    val root = Files.createTempDirectory("graft-snap-init-b").toString
+    val s = new Snapshots(spark, root, schema, bucketBy = Some(("k", 2)))
+    s.init()
+    assert(s.read().count() == 0)
+    s.replace(batch.toDF("k", "p"))
+    assert(rows(s) == batch.toSet)
+  }
+
+  test("a snap-0 written as an empty parquet table still opens") {
+    val root = Files.createTempDirectory("graft-snap-init-old")
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      .write.parquet(root.resolve("snap-0").toString)
+    Files.write(root.resolve("current"), "snap-0".getBytes)
+    val s = new Snapshots(spark, root.toString, schema)
+    s.init()
+    assert(s.read().count() == 0)
+    s.appendDelta(batch.toDF("k", "p"))
+    assert(rows(s) == batch.toSet)
+    // and an item store over it reads through its file index
+    val items = Files.createTempDirectory("graft-snap-init-items")
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      graft.schema.Item.schema).write.parquet(items.resolve("snap-0").toString)
+    Files.write(items.resolve("current"), "snap-0".getBytes)
+    val st = new ItemStore(spark, items.toString)
+    st.init()
+    assert(st.current().count() == 0 && st.latestId().isEmpty && st.count() == 0)
+  }
+}
