@@ -47,11 +47,10 @@ import graft.schema.Item
   * clustered layout. Reads need no fold: [[current]] is one relation
   * over an [[IdRangeIndex]] of the live files, built from their cached
   * footers, so a read with `id` filters lists only the files whose id
-  * range can match (on the driver: a point lookup runs one task), and
-  * within a file the column index of its 1000-row pages narrows the read
-  * to about one page per column. [[latestId]] and [[count]] read the
-  * footers. [[ItemStore.childrenOf]] serves a page render the store's
-  * parent → children lists, read once per directory.
+  * range can match (on the driver: a point lookup runs one task).
+  * [[latestId]] and [[count]] read the footers. [[ItemStore.childrenOf]]
+  * serves a page render the store's parent → children lists, read once
+  * per directory.
   *
   * With `buckets > 0` every snapshot is stored BUCKETED by id
   * ([[Snapshots]] bucketed mode) and each merge rewrites it: the merge
@@ -79,11 +78,7 @@ final class ItemStore(spark: SparkSession, root: String, buckets: Int = 0,
                       compactEvery: Int = 0) {
 
   private val snaps = new Snapshots(spark, root, Item.schema,
-    if (buckets > 0) Some(("id", buckets)) else None,
-    // 1000-row pages, not the writer's 20000: the column index then narrows
-    // a point read in a file to about one page per column
-    writeOptions = if (buckets == 0 && compactEvery == 0)
-      Map("parquet.page.row.count.limit" -> "1000") else Map.empty)
+    if (buckets > 0) Some(("id", buckets)) else None)
 
   private val itemCols = Item.schema.fieldNames.toIndexedSeq.map(col)
 

@@ -53,9 +53,6 @@ import org.apache.spark.sql.types.StructType
   * scan, and the caller folds [[readDeltas]] (tiny by construction) into
   * it — compaction then rewrites one bucketed base again.
   *
-  * `writeOptions` go to every parquet write of the store (the default
-  * [[ItemStore]] sets its page size this way).
-  *
   * Optional `partitionByCol = Some(col)` (exclusive with bucketBy) lays
   * every snapshot AND delta out hive-partitioned by `col` — the
   * directory-pruning layout (`col=v/` subdirs): a reader filtering on
@@ -69,8 +66,7 @@ import org.apache.spark.sql.types.StructType
 final class Snapshots(spark: SparkSession, root: String, schema: StructType,
                       bucketBy: Option[(String, Int)] = None,
                       partitionByCol: Option[String] = None,
-                      compactEvery: Int = Snapshots.DefaultCompactEvery,
-                      writeOptions: Map[String, String] = Map.empty) {
+                      compactEvery: Int = Snapshots.DefaultCompactEvery) {
 
   require(bucketBy.isEmpty || partitionByCol.isEmpty,
     "bucketBy and partitionByCol are mutually exclusive store layouts")
@@ -299,7 +295,7 @@ final class Snapshots(spark: SparkSession, root: String, schema: StructType,
     val replayed = old.contains(delta) ||
       (token.isDefined && consumedTokens.contains(delta))
     if (!replayed) {
-      val w = df.write.mode("overwrite").options(writeOptions)
+      val w = df.write.mode("overwrite")
       partitionByCol.fold(w)(c => w.partitionBy(c))
         .parquet(rootPath.resolve(delta).toString)
       commitManifest(old :+ delta)
@@ -335,7 +331,7 @@ final class Snapshots(spark: SparkSession, root: String, schema: StructType,
     val old = manifest
     require(!replaceLast || old.size > 1, "the base snapshot is not a segment")
     val seg = s"${Snapshots.SegmentPrefix}${System.nanoTime()}"
-    df.write.mode("overwrite").options(writeOptions).parquet(dir(seg))
+    df.write.mode("overwrite").parquet(dir(seg))
     commitManifest(if (replaceLast) old.init :+ seg else old :+ seg)
     if (replaceLast) deleteRecursively(rootPath.resolve(old.last))
   }
@@ -367,12 +363,12 @@ final class Snapshots(spark: SparkSession, root: String, schema: StructType,
       // cannot wedge the store on TableAlreadyExists / non-empty location
       spark.sql(s"DROP TABLE IF EXISTS ${tableFor(snap)}")
       deleteRecursively(rootPath.resolve(snap))
-      df.write.format("parquet").options(writeOptions)
+      df.write.format("parquet")
         .bucketBy(n, key).sortBy(key)
         .option("path", rootPath.resolve(snap).toString)
         .saveAsTable(tableFor(snap))
     case None =>
-      val w = df.write.mode("overwrite").options(writeOptions)
+      val w = df.write.mode("overwrite")
       partitionByCol.fold(w)(c => w.partitionBy(c))
         .parquet(rootPath.resolve(snap).toString)
   }
