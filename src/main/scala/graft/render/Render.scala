@@ -37,14 +37,15 @@ object Render {
     * When `items` is exactly [[ItemStore.current]] of a disjoint default
     * store (no filter or projection on top) within the driver budget, the
     * page's ids come from [[TreeExpand.expandCollected]] over the store's
-    * cached child lists: no job on an unchanged store, one for the lists
-    * of directories committed since the last render. Any other frame goes
+    * cached child lists, read once per directory (a tail on the driver,
+    * with no job). Any other frame goes
     * through [[TreeExpand.expand]], with the root as a local relation (it
     * returns a depth-0 row for it either way). Both fail with the same
     * maxDepth error on a cycle. The page's nodes are then fetched with
-    * `id IN (expanded ids)`, which the store's file index and the parquet
-    * scan push down, so an id-clustered store reads only the files and
-    * pages holding the page. A root id absent from `items` fails loud
+    * `id IN (expanded ids)`, which the store's file index pushes down, so
+    * an id-clustered store reads only the files holding the page: on the
+    * driver with no job when they form one file partition (a page in one
+    * file), else in one job. A root id absent from `items` fails loud
     * naming it. */
   def buildTree(items: DataFrame, rootId: Long): Node = {
     val ids = ItemStore.childrenOf(items)

@@ -3,8 +3,8 @@ package graft.store
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata,
-  PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.{FileFormat, FileIndex,
+  FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory, PartitionedFile}
 import org.apache.spark.sql.types.{LongType, StructType}
 
 /** The file index of a disjoint default [[ItemStore]]: its live files with
@@ -12,13 +12,16 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * driver. Spark's parquet scan checks row-group statistics only inside
   * its tasks, one task per file; here [[listFiles]] drops every file whose
   * `[min, max]` id range cannot satisfy the pushed `id` filters, and a
-  * point lookup runs one task on the one file that can hold the id.
+  * point lookup reads only the one file that can hold the id. A read whose
+  * listed files form one file partition is planned by [[IdRangeScan]] and
+  * runs on the driver, with no Spark job.
   *
   * Pruning is never wrong, whatever the layout: only `=`, `IN`, `<`, `<=`,
   * `>`, `>=` on `id` against literals, and their `AND`, skip a file; any
   * other predicate, and a file without `id` statistics, keeps it. On a
   * hash-partitioned base (after an update) every range spans the store,
-  * so nothing is skipped. Committed files never change, so the index is
+  * so nothing is skipped and a read of its several files takes Spark's
+  * scan and a job. Committed files never change, so the index is
   * immutable: the store builds a new one when its manifest changes.
   *
   * @param children the child lists of every directory in the manifest
@@ -46,6 +49,21 @@ final class IdRangeIndex private[store] (
 
   /** Rows in the listed files, from their footers. */
   private[store] def rows: Long = files.map(_.rows).sum
+
+  private val readers = scala.collection.concurrent.TrieMap
+    .empty[StructType, PartitionedFile => Iterator[InternalRow]]
+
+  /** The parquet read function of `relation` (over this index) for the
+    * columns `schema`, built once per schema with the session's conf at
+    * the time: each build broadcasts the Hadoop conf. No filter is pushed
+    * into it, so one function serves every `id` literal; the files are
+    * already chosen by [[listFiles]]. */
+  private[store] def reader(relation: HadoopFsRelation,
+                            schema: StructType): PartitionedFile => Iterator[InternalRow] =
+    readers.getOrElseUpdate(schema, relation.fileFormat.buildReaderWithPartitionValues(
+      relation.sparkSession, relation.dataSchema, relation.partitionSchema, schema, Nil,
+      relation.options + (FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      relation.sparkSession.sessionState.newHadoopConfWithOptions(relation.options)))
 }
 
 private[store] object IdRangeIndex {

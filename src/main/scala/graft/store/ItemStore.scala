@@ -47,7 +47,9 @@ import graft.schema.Item
   * clustered layout. Reads need no fold: [[current]] is one relation
   * over an [[IdRangeIndex]] of the live files, built from their cached
   * footers, so a read with `id` filters lists only the files whose id
-  * range can match (on the driver: a point lookup runs one task).
+  * range can match, and a read whose files form one file partition (a
+  * point lookup, a page's node fetch) runs on the driver with no job
+  * ([[IdRangeScan]], which the store installs on its session).
   * [[latestId]] and [[count]] read the footers. [[ItemStore.childrenOf]]
   * serves a page render the store's parent → children lists, read once
   * per directory.
@@ -80,6 +82,8 @@ final class ItemStore(spark: SparkSession, root: String, buckets: Int = 0,
   private val snaps = new Snapshots(spark, root, Item.schema,
     if (buckets > 0) Some(("id", buckets)) else None)
 
+  IdRangeScan.install(spark)
+
   private val itemCols = Item.schema.fieldNames.toIndexedSeq.map(col)
 
   /** Reference column groups (hnarchive.py:231-246). */
@@ -100,7 +104,11 @@ final class ItemStore(spark: SparkSession, root: String, buckets: Int = 0,
 
   /** The store's rows, one per id. The same DataFrame comes back while
     * the manifest is unchanged, so repeated reads skip the file listing
-    * and analysis of the relation. */
+    * and analysis of the relation, and reuse its index's parquet read
+    * functions. On a disjoint default store, a collect or take over
+    * files of one file partition runs on the driver ([[IdRangeScan]]);
+    * a hash-partitioned base after an update lists all its files and
+    * takes a Spark job. */
   def current(): DataFrame = {
     val live = snaps.live
     cached.collect { case (m, df) if m == live => df }.getOrElse {
@@ -128,24 +136,19 @@ final class ItemStore(spark: SparkSession, root: String, buckets: Int = 0,
 
   /** Each live directory's parent → children lists, read and dropped like
     * the footers: a committed directory never changes, so each is read
-    * once, and one job reads every directory not yet read. */
+    * once, decoding only `(parent, id)`. A directory of one file partition
+    * (an open tail, a small base) is read on the driver by [[IdRangeScan]]
+    * with no job; a larger one, a base of several files, in one job. */
   private val childCache =
     scala.collection.concurrent.TrieMap.empty[String, ItemStore.ChildList]
 
   private def childLists(live: Seq[String]): Seq[ItemStore.ChildList] = {
     childCache.keys.filterNot(live.contains).foreach(childCache.remove)
-    val unread = live.filterNot(childCache.contains).filter(footers(live, _).exists(_.rows > 0))
-    if (unread.nonEmpty) {
-      val edges = unread.zipWithIndex.map { case (e, i) =>
-        scan(live, Seq(e)).where(col("parent").isNotNull && col("id").isNotNull)
-          .select(lit(i), col("parent"), col("id"))
-      }.reduce(_ unionAll _)
-      val read = ItemStore.childLists(edges)
-      unread.zipWithIndex.foreach { case (e, i) =>
-        childCache.put(e, read.getOrElse(i, ItemStore.ChildList.empty))
-      }
-    }
-    live.map(childCache.getOrElse(_, ItemStore.ChildList.empty))
+    live.map(e => childCache.getOrElseUpdate(e,
+      if (footers(live, e).forall(_.rows == 0)) ItemStore.ChildList.empty
+      else ItemStore.ChildList(scan(live, Seq(e))
+        .where(col("parent").isNotNull && col("id").isNotNull)
+        .select(col("parent"), col("id")).collect())))
   }
 
   /** The delta log folded to ONE row per id, reproducing what sequentially
@@ -303,7 +306,9 @@ object ItemStore {
     * store (its [[IdRangeIndex]] relation, no filter or projection on top)
     * whose footer row count fits [[TreeExpand]]'s driver budget; None for
     * any other frame. The first call after a commit reads the child lists
-    * of every directory not yet read, in one job; later calls run none. */
+    * of every directory not yet read: on the driver for a directory of one
+    * file partition (a tail), in one job for a larger one; later calls
+    * read none. */
   def childrenOf(items: DataFrame): Option[Any => java.util.List[Any]] =
     items.queryExecution.logical match {
       case LogicalRelation(h: HadoopFsRelation, _, _, _, _) => h.location match {
@@ -346,15 +351,13 @@ object ItemStore {
 
   private[store] object ChildList {
     val empty = new ChildList(Array.emptyLongArray, Array.emptyLongArray)
-  }
 
-  /** The child lists of `edges` — rows (tag: int, parent, id), both ids
-    * non-null — by tag, in one job. */
-  private def childLists(edges: DataFrame): Map[Int, ChildList] =
-    edges.collect().groupBy(_.getInt(0)).map { case (t, rows) =>
-      val sorted = rows.sortBy(_.getLong(1))
-      t -> new ChildList(sorted.map(_.getLong(1)), sorted.map(_.getLong(2)))
+    /** The list of `(parent, id)` rows, both non-null. */
+    def apply(edges: Array[org.apache.spark.sql.Row]): ChildList = {
+      val sorted = edges.sortBy(_.getLong(0))
+      new ChildList(sorted.map(_.getLong(0)), sorted.map(_.getLong(1)))
     }
+  }
 
   /** One non-empty partition of a batch: its smallest and largest id, and
     * whether its ids strictly ascend (so none repeats). A null id counts

@@ -65,11 +65,15 @@ class RenderSpec extends AnyFunSuite {
     def ids(n: Render.Node): Seq[Long] = n.item.id +: n.children.flatMap(ids)
     assert(ids(tree).sorted == (1L to 31L))
     assert(tree.children.map(_.item.id) == Seq(2L, 3L)) // (time, id) order kept
-    assert(jobs.get <= 3, s"${jobs.get} jobs for one page")
-    assert(plans.exists(p => p.contains("FileScan parquet") && p.contains("In(id, [")),
-      s"no pushed In filter on the items scan:\n${plans.mkString("\n")}")
+    assert(jobs.get == 0, s"${jobs.get} jobs for one page")
+    assert(plans.exists(idScanFilter.findFirstIn(_).isDefined),
+      s"no In filter on id in an id-range scan:\n${plans.mkString("\n")}")
     assert(!plans.exists(_.contains("Join")), s"a join against items:\n${plans.mkString("\n")}")
   }
+
+  /** An id-range scan of the store, with an `IN` or `INSET` on `id` among
+    * its filters, in a plan's string. */
+  private val idScanFilter = """IdRangeScan .*filters=\[.*\bid#\d+L (IN|INSET) """.r
 
   // ---- per-directory child lists (a disjoint default store) ----
 
@@ -104,28 +108,53 @@ class RenderSpec extends AnyFunSuite {
 
   private def ids(n: Render.Node): Seq[Long] = n.item.id +: n.children.flatMap(ids)
 
-  test("child lists: an unchanged store renders in 1 job, the node fetch; " +
-    "after an append the next render reads only the new tail's lists") {
-    // stories 1 and 100, each with a comment chain; 400 items over 4 base files
+  /** The executed plan of every query `f` runs, and its result. */
+  private def plansOf[A](f: => A): (A, Seq[String]) = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val qel = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(n: String, qe: org.apache.spark.sql.execution.QueryExecution, d: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      def onFailure(n: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(qel)
+    val a = try { val a = f; org.apache.spark.GraftTestBus.flush(spark.sparkContext); a }
+      finally spark.listenerManager.unregister(qel)
+    import scala.jdk.CollectionConverters._
+    (a, plans.asScala.toSeq)
+  }
+
+  test("child lists: an unchanged store renders with no job; after an append " +
+    "the next render reads only the new tail's lists, on the driver") {
+    // stories 101 and 201 with comments in their own base files (ids
+    // 101-200 and 201-300 of 400 items over 4 base files)
     val bodies = (1L to 400L).map {
-      case i if i == 1L || i == 100L => story(i)
-      case i if i < 100L => comment(i, i - 1, i)
-      case i if i < 150L => comment(i, 100L, i)
+      case i if i == 101L || i == 201L => story(i)
+      case i if i > 101L && i < 150L => comment(i, i - 1, i)
+      case i if i > 201L && i < 250L => comment(i, 201L, i)
       case i => story(i)
     }
     val st = store(bodies)
-    Render.buildTree(st.current(), 1L) // the first render reads the base's lists
-    val (t100, jobs) = jobsOf(Render.buildTree(st.current(), 100L))
-    assert(ids(t100).sorted == (100L +: (101L to 149L)))
-    assert(jobs.size == 1, s"jobs: $jobs")
-    // an append: comments under story 100 in a new tail
-    st.merge(graft.schema.Item.normalize(Seq(comment(401L, 100L, 401L), comment(402L, 401L, 402L))
-      .toDF("id", "body"), org.apache.spark.sql.functions.lit(101L)))
-    val (t2, jobs2) = jobsOf(Render.buildTree(st.current(), 100L))
-    assert(ids(t2).sorted == (100L +: ((101L to 149L) :+ 401L :+ 402L)))
-    // the child-list job reads the tail's one file, not the base's four
-    assert(jobs2.size == 2 && jobs2.head == 1, s"jobs (tasks each): $jobs2")
-    assert(jobsOf(Render.buildTree(st.current(), 1L))._2.size == 1)
+    Render.buildTree(st.current(), 101L) // the first render reads the base's lists
+    val (t201, jobs) = jobsOf(Render.buildTree(st.current(), 201L))
+    assert(ids(t201).sorted == (201L to 249L))
+    assert(jobs.isEmpty, s"jobs: $jobs")
+    // an append: a story with a reply, and a reply to story 201, in a new tail
+    val base = st.current().inputFiles.toSet
+    st.merge(graft.schema.Item.normalize(Seq(story(401L), comment(402L, 401L, 402L),
+      comment(403L, 201L, 403L)).toDF("id", "body"), org.apache.spark.sql.functions.lit(101L)))
+    val ((t401, jobs2), plans) = plansOf(jobsOf(Render.buildTree(st.current(), 401L)))
+    assert(ids(t401) == Seq(401L, 402L))
+    assert(jobs2.isEmpty, s"jobs: $jobs2")
+    // the child-list read and the node fetch each list the tail's one file
+    val Seq(tail) = (st.current().inputFiles.toSet -- base).toSeq
+      .map(f => java.nio.file.Paths.get(java.net.URI.create(f)).getFileName)
+    val scanned = plans.flatMap("""files=\[([^\]]*)\]""".r.findAllMatchIn(_).map(_.group(1)))
+    assert(plans.size == 2 && scanned == Seq(tail.toString, tail.toString), plans.mkString("\n"))
+    // a page across the base and the tail: two file partitions, one job
+    val (t2, jobs3) = jobsOf(Render.buildTree(st.current(), 201L))
+    assert(ids(t2).sorted == ((201L to 249L) :+ 403L))
+    assert(jobs3.size == 1, s"jobs: $jobs3")
+    assert(jobsOf(Render.buildTree(st.current(), 101L))._2.isEmpty)
   }
 
   test("child-list pages equal the TreeExpand path over seeded random forests") {

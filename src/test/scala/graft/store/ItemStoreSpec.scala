@@ -702,8 +702,16 @@ class ItemStoreSpec extends AnyFunSuite {
         case s: org.apache.spark.sql.execution.FileSourceScanExec => s
       }
 
-  test("a point lookup runs 1 job on the one file covering the id; " +
-    "an IN list scans only the covering files") {
+  /** The id-range scans of `df`'s executed plan. */
+  private def idScans(df: org.apache.spark.sql.DataFrame): Seq[IdRangeScanExec] =
+    new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(df.queryExecution.executedPlan) { case s: IdRangeScanExec => s }
+
+  private def localPath(f: org.apache.spark.sql.execution.datasources.PartitionedFile) =
+    Paths.get(f.toPath.toUri).toString
+
+  test("a point lookup runs no job: the id-range scan reads the one file " +
+    "covering the id on the driver; an IN list scans only the covering files") {
     val rnd = new scala.util.Random(23)
     val dir = Files.createTempDirectory("graft-store-lookup").toString
     val st = new ItemStore(spark, dir)
@@ -715,36 +723,46 @@ class ItemStoreSpec extends AnyFunSuite {
     val files = liveFiles(dir)
     assert(files.size == 5, s"files: ${files.map(_._2)}")
     def fileOf(id: Long) = files.find(_._3.contains(id)).get._2
+    def read(df: org.apache.spark.sql.DataFrame, ids: Long*): Int = {
+      var rows = Array.empty[org.apache.spark.sql.Row]
+      val jobs = countJobs { rows = df.collect() }
+      assert(rows.map(_.getAs[Long]("id")).toSeq.sorted == ids, df.queryExecution.executedPlan)
+      jobs
+    }
     for (id <- Seq(1L, 333L, 800L, 825L)) {
       val lookup = st.current().filter(col("id") === id)
-      var rows = Array.empty[org.apache.spark.sql.Row]
-      assert(countJobs { rows = lookup.collect() } == 1, s"id $id")
-      assert(rows.map(_.getAs[Long]("id")).toSeq == Seq(id))
-      val Seq(scan) = scans(lookup)
-      assert(scan.metrics("numFiles").value == 1, s"id $id")
+      assert(read(lookup, id) == 0, s"id $id")
+      assert(scans(lookup).isEmpty, s"id $id")
+      val Seq(node) = idScans(lookup)
       // the one listed file is the one the id lives in
-      val listed = scan.relation.location.listFiles(Nil, scan.dataFilters)
-        .flatMap(_.files.map(f => Paths.get(f.getPath.toUri).toString))
-      assert(listed == Seq(fileOf(id)), s"id $id")
+      assert(node.files.map(localPath) == Seq(fileOf(id)), s"id $id")
     }
+    // an IN list or InSet (past 10 values) inside one file: the same driver read
+    val in1 = st.current().filter(col("id").isin(2L, 5L))
+    val inSet1 = st.current().filter(col("id").isin(2L to 40L: _*))
+    assert(read(in1, 2L, 5L) == 0 && read(inSet1, 2L to 40L: _*) == 0)
+    Seq(in1, inSet1).foreach(df => assert(idScans(df).map(_.files.map(localPath)) ==
+      Seq(Seq(fileOf(2L)))))
+    // two small files are two file partitions: Spark's parquet scan, still
+    // over only the covering files
     val in = st.current().filter(col("id").isin(2L, 5L, 830L))
-    assert(in.collect().length == 3)
-    assert(scans(in).head.metrics("numFiles").value == 2)
-    // past 10 values the optimizer plans an InSet: still only the covering files
     val inSet = st.current().filter(col("id").isin((2L to 40L) :+ 826L: _*))
-    assert(inSet.collect().length == 40)
-    assert(scans(inSet).head.metrics("numFiles").value == 2)
+    assert(read(in, 2L, 5L, 830L) > 0 && read(inSet, (2L to 40L) :+ 826L: _*) > 0)
+    Seq(in, inSet).foreach { df =>
+      assert(idScans(df).isEmpty && scans(df).head.metrics("numFiles").value == 2)
+    }
     // a predicate on another column keeps every file
     val other = st.current().filter(col("id") === 3L || col("time") < 0L)
     other.collect()
-    assert(scans(other).head.metrics("numFiles").value == 5)
+    assert(idScans(other).isEmpty && scans(other).head.metrics("numFiles").value == 5)
   }
 
-  test("lookups through the file index equal a plain read of the live " +
-    "directories on a clustered, an updated and a statistics-less store") {
-    val rnd = new scala.util.Random(29)
+  /** The three stores the file-index reads are checked on, with their
+    * directories: clustered (a bulk base and two tails), updated (an
+    * upsert writes the base hash-partitioned) and a base file written
+    * without column statistics under a clustered tail. */
+  private def indexedStores(rnd: scala.util.Random): Seq[(ItemStore, String)] = {
     def bodies(ids: Seq[Long]) = ids.map(i => i -> randomBody(rnd, i))
-    // clustered: a bulk base and two tails
     val clustered = Files.createTempDirectory("graft-store-idx-c").toString
     val c = new ItemStore(spark, clustered)
     c.init()
@@ -767,7 +785,13 @@ class ItemStoreSpec extends AnyFunSuite {
     Files.write(noStats.resolve("current"), "snap-1".getBytes)
     val n = new ItemStore(spark, noStats.toString)
     n.merge(normalized(bodies(401L to 450L): _*))
-    for ((st, dir) <- Seq(c -> clustered, u -> updated, n -> noStats.toString)) {
+    Seq(c -> clustered, u -> updated, n -> noStats.toString)
+  }
+
+  test("lookups through the file index equal a plain read of the live " +
+    "directories on a clustered, an updated and a statistics-less store") {
+    val rnd = new scala.util.Random(29)
+    for ((st, dir) <- indexedStores(rnd)) {
       assert(ItemStore.childrenOf(st.current()).nonEmpty, s"$dir is not read through the index")
       val plain = spark.read.schema(Item.schema)
         .parquet(manifestOf(dir).map(e => Paths.get(dir, e).toString): _*)
@@ -787,6 +811,70 @@ class ItemStoreSpec extends AnyFunSuite {
         assert(rowsById(st.current().filter(p)) == rowsById(plain.filter(p)), s"$dir: $p")
       }
     }
+  }
+
+  test("id-range scans equal a plain read for collect, head, rdd, count and " +
+    "a join over seeded predicates and projections; other reads fall back") {
+    val rnd = new scala.util.Random(31)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    val stores = indexedStores(rnd)
+    for ((st, dir) <- stores) {
+      val plain = spark.read.schema(Item.schema)
+        .parquet(manifestOf(dir).map(e => Paths.get(dir, e).toString): _*)
+      val top = st.latestId().get.toInt
+      var driverReads = 0
+      (1 to 12).foreach { _ =>
+        val id = 1L + rnd.nextInt(top + 5)
+        val span = rnd.nextInt(40).toLong
+        val pred = Seq(col("id") === id, col("id").isin(id, id + 1, id + 3),
+          col("id").between(id, id + span), col("id") >= id && col("score") < rnd.nextInt(100),
+          col("id") <= id && col("author").isNotNull)(rnd.nextInt(5))
+        val project = Seq(Seq(col("*")), Seq(col("parent"), col("id")),
+          Seq((col("score") + col("id")).as("s"), upper(col("author")).as("a"),
+            coalesce(col("title"), col("text"), lit("-")).as("t"), col("id")))(rnd.nextInt(3))
+        val (got, want) = (st.current().filter(pred).select(project: _*),
+          plain.filter(pred).select(project: _*))
+        val clue = s"$dir: $pred ${project.mkString(", ")}"
+        assert(rows(got) == rows(want), clue)
+        val n = 1 + rnd.nextInt(3)
+        val head = got.head(n).map(_.toString)
+        assert(head.length == math.min(n, rows(want).size) && head.toSet.subsetOf(rows(want).toSet), clue)
+        assert(got.rdd.map(_.toString).collect().sorted.toSeq == rows(want), clue)
+        assert(got.count() == want.count(), clue)
+        val keys = spark.range(id - 2, id + 50).toDF("id")
+        assert(rows(got.join(keys, "id")) == rows(want.join(keys, "id")), clue)
+        if (idScans(got).nonEmpty) driverReads += 1
+      }
+      // no file without statistics can be skipped: every read there lists
+      // the two base files, two file partitions
+      if (dir.contains("idx-n")) assert(driverReads == 0, dir)
+      else assert(driverReads > 0, s"$dir: no read took the id-range scan")
+      // the whole store is several file partitions: Spark's parquet scan
+      val all = st.current()
+      assert(rows(all) == rows(plain) && idScans(all).isEmpty && scans(all).nonEmpty, dir)
+    }
+    val (st, dir) = stores.head // clustered
+    // a subquery in the filter falls back to Spark's scan, also over one file
+    st.current().createOrReplaceTempView("idx_items")
+    val sub = spark.sql(
+      "SELECT id, title FROM idx_items WHERE id <= 4 AND id = (SELECT min(id) + 3 FROM idx_items)")
+    assert(sub.collect().map(_.getLong(0)).toSeq == Seq(4L) && idScans(sub).isEmpty && scans(sub).nonEmpty)
+    // a `_metadata` column falls back and names the covering file
+    val meta = st.current().filter(col("id") === 4L).select(col("id"), col("_metadata.file_path"))
+    val Seq(m) = meta.collect().toSeq
+    assert(idScans(meta).isEmpty)
+    assert(Paths.get(java.net.URI.create(m.getString(1))).toString ==
+      liveFiles(dir).find(_._3.contains(4L)).get._2)
+    // many stores on one session, some built at once: the strategy once
+    val session = spark.newSession()
+    assert(!session.experimental.extraStrategies.contains(IdRangeScan))
+    val built = (1 to 8).map(_ => scala.concurrent.Future(
+      new ItemStore(session, Files.createTempDirectory("graft-store-many").toString))(
+      scala.concurrent.ExecutionContext.global))
+    built.foreach(scala.concurrent.Await.result(_, scala.concurrent.duration.Duration.Inf))
+    (1 to 3).foreach(_ => new ItemStore(session, dir))
+    assert(session.experimental.extraStrategies.count(_ == IdRangeScan) == 1)
+    assert(spark.experimental.extraStrategies.count(_ == IdRangeScan) == 1)
   }
 
   test("a delta-log store reopened with defaults, and a clustered store " +
