@@ -27,18 +27,27 @@ import graft.streaming.LivestreamRunner
   *                prints the first N rows
   *
   * `--fetcher http|fake:KEY` selects the transport (http needs egress).
-  * By default the store is clustered by id: the first `get` into an
-  * empty store writes the base, later `get`, `update` and `livestream`
-  * batches append above the max id and rewrite only the open tail, and
-  * `get`'s store size is read from the parquet footers (see ItemStore).
-  * `--buckets N` opens the store in bucketed-by-id mode (merges plan with
-  * no Exchange on the store side — see ItemStore); use the same N on
-  * every command against one store directory.
-  * `--compact_every N` switches merges to the O(batch) delta log (each
-  * commit appends one delta directory; the log compacts every N commits —
-  * the write path for update-heavy streams; see ItemStore).
+  * The store is clustered by id: the first `get` into an empty store
+  * writes the base, later `get`, `update` and `livestream` batches append
+  * above the max id and rewrite only the open tail, and `get`'s store
+  * size is read from the parquet footers (see ItemStore).
+  *
+  * Each verb accepts only its own options (`verbOptions`); any other
+  * `--name` fails, naming it and the verb, rather than being ignored.
   */
 object Cli {
+
+  /** The options each verb reads. */
+  private val verbOptions: Map[String, Set[String]] = Map(
+    "get" -> Set("db", "fetcher", "lower", "upper", "threads"),
+    "update" -> Set("db", "fetcher", "threads"),
+    "update_items" -> Set("db", "fetcher", "days", "only_mature", "threads"),
+    "livestream" -> Set("db", "fetcher", "max_items", "commit_period"),
+    "html_render" -> Set("db", "ids", "output"),
+    "query" -> Set("name", "sf", "out", "limit"),
+    "trending" -> Set("store", "checkpoint", "fetcher", "start", "key", "window", "k",
+      "compact_every", "drain", "timeout_sec", "limit"),
+    "datacard" -> Set("sf", "threshold_milli", "out"))
 
   private def opt(args: Array[String], name: String): Option[String] = {
     val i = args.indexOf(s"--$name")
@@ -62,13 +71,15 @@ object Cli {
     ItemsSource.resolve(opt(rest, "fetcher").getOrElse("http"))
 
   def run(spark: SparkSession, cmd: String, rest: Array[String]): Unit = {
+    val accepted = verbOptions.getOrElse(cmd, sys.error(s"unknown command: $cmd"))
+    rest.filter(_.startsWith("--")).map(_.stripPrefix("--")).find(!accepted(_))
+      .foreach(o => throw new IllegalArgumentException(s"$cmd does not accept --$o " +
+        s"(it accepts ${accepted.toSeq.sorted.map("--" + _).mkString(" ")})"))
     if (cmd == "query") { runQuery(spark, rest); return }
     if (cmd == "trending") { runTrending(spark, rest); return }
     if (cmd == "datacard") { runDataCard(spark, rest); return }
     val db = opt(rest, "db").getOrElse(sys.error("--db required"))
-    val store = new ItemStore(spark, db,
-      buckets = opt(rest, "buckets").map(_.toInt).getOrElse(0),
-      compactEvery = opt(rest, "compact_every").map(_.toInt).getOrElse(0))
+    val store = new ItemStore(spark, db)
     val threads = opt(rest, "threads").map(_.toInt).getOrElse(4)
     val now = () => System.currentTimeMillis() / 1000
 
@@ -106,18 +117,7 @@ object Cli {
         val items = store.current()
         ids.foreach { id =>
           val tree = Render.buildTree(items, id)
-          val opts =
-            if (tree.item.itemType == "poll")
-              items.filter(org.apache.spark.sql.functions.col("poll") === id)
-                .collect().map(r => Render.RItem(
-                  r.getAs[Long]("id"), r.getAs[String]("type"),
-                  Option(r.getAs[String]("author")), r.getAs[Long]("time"),
-                  Option(r.getAs[String]("text")), Option(r.getAs[String]("url")),
-                  Option(r.get(r.fieldIndex("score"))).map(_.asInstanceOf[Long]),
-                  Option(r.getAs[String]("title")),
-                  Option(r.get(r.fieldIndex("parent"))).map(_.asInstanceOf[Long])))
-                .toSeq.sortBy(i => (i.time, i.id))
-            else Nil
+          val opts = if (tree.item.itemType == "poll") Render.pollOptions(items, id) else Nil
           val html = Render.renderPage(tree, opts)
           opt(rest, "output") match {
             case Some(template) =>
@@ -128,7 +128,6 @@ object Cli {
           }
         }
 
-      case other => sys.error(s"unknown command: $other")
     }
   }
 

@@ -14,9 +14,9 @@ import org.apache.spark.sql.functions._
   * The reference runs this row-at-a-time against SQLite; the Spark-native
   * shape is a single set-based plan: full-outer join on the key + a
   * per-column coalesce/conditional projection. At scale this is one shuffle
-  * on the key (or zero if both sides are bucketed by the key); when the
-  * incoming batch is small relative to the store, pass it pre-`broadcast`-
-  * hinted and Catalyst/AQE turn the join into a broadcast join.
+  * on the key; when the incoming batch is small relative to the store,
+  * pass it pre-`broadcast`-hinted and Catalyst/AQE turn the join into a
+  * broadcast join.
   */
 object Merge {
 
@@ -49,9 +49,9 @@ object Merge {
     * a deterministic total tiebreak; struct comparison ranks NULL lowest, so
     * populated values beat NULLs). Duplicate ids in one batch would otherwise
     * fan out through the full-outer join and permanently duplicate store
-    * rows. Public because delta-log writers apply the same batch dedup
-    * BEFORE persisting a delta, so later cross-delta folds see one row per
-    * (key, delta). */
+    * rows. Public because [[graft.store.ItemStore]] applies the same dedup
+    * to a batch it writes without this join (its first base, or an append
+    * to its open tail). */
   def dedupeByKey(
       incoming: DataFrame, key: String, precedenceCols: Seq[String]): DataFrame = {
     val rest = incoming.columns.filterNot(_ == key).toSeq

@@ -34,14 +34,13 @@ object Render {
   /** R1 `build_item_tree` (hnarchive.py:306-319): subtree expansion +
     * driver-side assembly, children sorted by (time, id) — the reference's
     * `list_children(sort=time)` (O2) with an id tie-break for determinism.
-    * When `items` is exactly [[ItemStore.current]] of a disjoint default
-    * store (no filter or projection on top) within the driver budget, the
-    * page's ids come from [[TreeExpand.expandCollected]] over the store's
-    * cached child lists, read once per directory (a tail on the driver,
-    * with no job). Any other frame goes
-    * through [[TreeExpand.expand]], with the root as a local relation (it
-    * returns a depth-0 row for it either way). Both fail with the same
-    * maxDepth error on a cycle. The page's nodes are then fetched with
+    * When `items` is exactly [[ItemStore.current]] (no filter or
+    * projection on top) within the driver budget, the page's ids come from
+    * [[TreeExpand.expandCollected]] over the store's cached child lists,
+    * read once per directory (a tail on the driver, with no job). Any
+    * other frame goes through [[TreeExpand.expand]], with the root as a
+    * local relation (it returns a depth-0 row for it either way). Both
+    * fail with the same maxDepth error on a cycle. The page's nodes are then fetched with
     * `id IN (expanded ids)`, which the store's file index pushes down, so
     * an id-clustered store reads only the files holding the page: on the
     * driver with no job when they form one file partition (a page in one
@@ -57,16 +56,8 @@ object Render {
           StructType(Seq(StructField("id", LongType))))
         TreeExpand.expand(edges, roots).select(col("id")).collect().map(_.get(0)).toSeq
       }.distinct
-    val nodes = items.filter(col("id").isin(ids.toIndexedSeq: _*))
-      .select("id", "type", "author", "time", "text", "url", "score", "title", "parent")
-      .collect()
-    val byId = nodes.map(r => r.getLong(0) -> RItem(
-      r.getLong(0), r.getString(1),
-      Option(r.get(2)).map(_.toString), r.getLong(3),
-      Option(r.get(4)).map(_.toString), Option(r.get(5)).map(_.toString),
-      Option(r.get(6)).map(_.asInstanceOf[Long]),
-      Option(r.get(7)).map(_.toString),
-      Option(r.get(8)).map(_.asInstanceOf[Long]))).toMap
+    val byId = rItems(items.filter(col("id").isin(ids.toIndexedSeq: _*)))
+      .map(i => i.id -> i).toMap
     if (!byId.contains(rootId))
       throw new NoSuchElementException(s"buildTree: item $rootId is not in the store")
     val childMap = byId.values.toSeq
@@ -76,6 +67,22 @@ object Render {
       childMap.getOrElse(id, Nil).sortBy(i => (i.time, i.id)).map(i => assemble(i.id)))
     assemble(rootId)
   }
+
+  /** J4 poll → pollopt lookup: the options of poll `pollId` in `items`,
+    * sorted by (time, id) like a comment's children. */
+  def pollOptions(items: DataFrame, pollId: Long): Seq[RItem] =
+    rItems(items.filter(col("poll") === pollId)).toSeq.sortBy(i => (i.time, i.id))
+
+  /** Collect `items` as [[RItem]]s. */
+  private def rItems(items: DataFrame): Array[RItem] =
+    items.select("id", "type", "author", "time", "text", "url", "score", "title", "parent")
+      .collect().map(r => RItem(
+        r.getLong(0), r.getString(1),
+        Option(r.get(2)).map(_.toString), r.getLong(3),
+        Option(r.get(4)).map(_.toString), Option(r.get(5)).map(_.toString),
+        Option(r.get(6)).map(_.asInstanceOf[Long]),
+        Option(r.get(7)).map(_.toString),
+        Option(r.get(8)).map(_.asInstanceOf[Long])))
 
   // ---- string-building (driver-side presentation, R2-R5) ----
 
@@ -139,8 +146,8 @@ object Render {
       s"<p>${i.score.getOrElse(0L)} points</p></div>"
 
   /** `html_render_poll` (hnarchive.py:370-375): story shell + options
-    * (J4 poll → pollopt lookup join happens in [[renderPage]]'s caller via
-    * the items DF). */
+    * (the J4 poll → pollopt lookup is [[pollOptions]], run by
+    * [[renderPage]]'s caller). */
   def renderPoll(i: RItem, options: Seq[RItem]): String = {
     val story = renderStory(i)
     story.stripSuffix("</div>") + options.map(renderPollopt).mkString + "</div>"

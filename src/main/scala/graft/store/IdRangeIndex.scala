@@ -7,14 +7,15 @@ import org.apache.spark.sql.execution.datasources.{FileFormat, FileIndex,
   FileStatusWithMetadata, HadoopFsRelation, PartitionDirectory, PartitionedFile}
 import org.apache.spark.sql.types.{LongType, StructType}
 
-/** The file index of a disjoint default [[ItemStore]]: its live files with
-  * their footers' `id` ranges, so a read plans which files to scan on the
-  * driver. Spark's parquet scan checks row-group statistics only inside
-  * its tasks, one task per file; here [[listFiles]] drops every file whose
-  * `[min, max]` id range cannot satisfy the pushed `id` filters, and a
-  * point lookup reads only the one file that can hold the id. A read whose
-  * listed files form one file partition is planned by [[IdRangeScan]] and
-  * runs on the driver, with no Spark job.
+/** The file index of an [[ItemStore]], under the one relation every read
+  * of the store goes through: its live files with their footers' `id`
+  * ranges, so a read plans which files to scan on the driver. Spark's
+  * parquet scan checks row-group statistics only inside its tasks, one
+  * task per file; here [[listFiles]] drops every file whose `[min, max]`
+  * id range cannot satisfy the pushed `id` filters, and a point lookup
+  * reads only the one file that can hold the id. A read whose listed
+  * files form one file partition is planned by [[IdRangeScan]] and runs
+  * on the driver, with no Spark job.
   *
   * Pruning is never wrong, whatever the layout: only `=`, `IN`, `<`, `<=`,
   * `>`, `>=` on `id` against literals, and their `AND`, skip a file; any

@@ -26,7 +26,7 @@ import graft.schema.Item
   * time always overwrite; `retrieved` always refreshes. Tombstones never
   * delete (README.md:18).
   *
-  * Default layout (`buckets = 0`, `compactEvery = 0`): CLUSTERED BY ID.
+  * The layout is CLUSTERED BY ID.
   * The manifest holds a base snapshot, then sealed segments, then at
   * most one open tail; every segment file is sorted by `id` and the
   * entries' id ranges are disjoint in manifest order. The first batch an
@@ -54,33 +54,16 @@ import graft.schema.Item
   * serves a page render the store's parent → children lists, read once
   * per directory.
   *
-  * With `buckets > 0` every snapshot is stored BUCKETED by id
-  * ([[Snapshots]] bucketed mode) and each merge rewrites it: the merge
-  * join plans with no Exchange on the store side, so successive merges
-  * shuffle only the incoming batch, never the accumulated archive.
-  *
-  * With `compactEvery > 0` the store is a delta log, the shape for
-  * update-heavy streams, whose batches are not appends. A merge appends
-  * the (deduplicated) batch as one delta directory; [[current]] is
-  * merge-on-read — the deltas fold to one row per id under the EXACT
-  * sequential-upsert semantics (overwrite columns: latest delta wins;
-  * coalesce columns: latest NON-NULL delta wins, else the base value — see
-  * [[foldedDeltas]] for why that reproduces upsert-after-upsert), and one
-  * [[graft.operators.Merge.upsert]] applies the fold to the base, so a
-  * bucketed base still joins Exchange-free. Every `compactEvery` commits
-  * the log compacts back into one base snapshot — amortized
-  * O(store / compactEvery) I/O per batch instead of O(store).
-  *
-  * Either mode reopens the other's store: deltas (`delta-` directories)
-  * always fold on read, and a default merge over them upserts into a
-  * fresh base; segments (`seg-`) hold disjoint ids, so the
-  * delta log folds them like any delta.
+  * Every live entry after the base is a `seg-` directory; that is what
+  * lets reads skip the fold. A store whose manifest lists anything else
+  * there (the `delta-` directories of the delta log earlier releases
+  * offered) fails loud on open rather than read overlapping rows
+  * without their upsert fold; so does a bucketed store (see
+  * [[Snapshots]]).
   */
-final class ItemStore(spark: SparkSession, root: String, buckets: Int = 0,
-                      compactEvery: Int = 0) {
+final class ItemStore(spark: SparkSession, root: String) {
 
-  private val snaps = new Snapshots(spark, root, Item.schema,
-    if (buckets > 0) Some(("id", buckets)) else None)
+  private val snaps = new Snapshots(spark, root, Item.schema)
 
   IdRangeScan.install(spark)
 
@@ -92,12 +75,21 @@ final class ItemStore(spark: SparkSession, root: String, buckets: Int = 0,
     Seq("deleted", "type", "time", "dead", "parent", "descendants", "retrieved")
 
   /** S6 `init_db`: create an empty snapshot iff absent (idempotent). */
-  def init(): Unit = snaps.init()
+  def init(): Unit = { snaps.init(); live }
 
-  /** True when no live entry overlaps another on `id`: a base followed
-    * only by segments. Such a store reads with no fold. */
-  private def disjoint(live: Seq[String]): Boolean =
-    live.tail.forall(_.startsWith(Snapshots.SegmentPrefix))
+  /** The live directory names, base first: the store's manifest, after
+    * checking that every entry past the base is a segment. */
+  private def live: Seq[String] = {
+    val entries = snaps.live
+    entries.tail.find(!_.startsWith(Snapshots.SegmentPrefix)).foreach { e =>
+      throw new IllegalStateException(
+        s"item store at $root lists '$e' after its base: a store with " +
+          "delta directories was written by the delta-log layout, which " +
+          "is no longer supported. Rewrite the store with a release that " +
+          "reads it, or rebuild it from its source.")
+    }
+    entries
+  }
 
   /** The DataFrame [[current]] last built, with the manifest it read. */
   @volatile private var cached: Option[(Seq[String], DataFrame)] = None
@@ -105,20 +97,14 @@ final class ItemStore(spark: SparkSession, root: String, buckets: Int = 0,
   /** The store's rows, one per id. The same DataFrame comes back while
     * the manifest is unchanged, so repeated reads skip the file listing
     * and analysis of the relation, and reuse its index's parquet read
-    * functions. On a disjoint default store, a collect or take over
-    * files of one file partition runs on the driver ([[IdRangeScan]]);
-    * a hash-partitioned base after an update lists all its files and
-    * takes a Spark job. */
+    * functions. A collect or take over files of one file partition runs
+    * on the driver ([[IdRangeScan]]); a hash-partitioned base after an
+    * update lists all its files and takes a Spark job. */
   def current(): DataFrame = {
-    val live = snaps.live
-    cached.collect { case (m, df) if m == live => df }.getOrElse {
-      val df =
-        if (buckets == 0 && disjoint(live)) scan(live, live)
-        else if (disjoint(live)) snaps.read()
-        else Merge.upsert(snaps.readBase(), foldedDeltas(), "id", coalesceCols,
-            overwriteCols)
-          .select(itemCols: _*)
-      cached = Some((live, df))
+    val entries = live
+    cached.collect { case (m, df) if m == entries => df }.getOrElse {
+      val df = scan(entries, entries)
+      cached = Some((entries, df))
       df
     }
   }
@@ -151,71 +137,40 @@ final class ItemStore(spark: SparkSession, root: String, buckets: Int = 0,
         .select(col("parent"), col("id")).collect())))
   }
 
-  /** The delta log folded to ONE row per id, reproducing what sequentially
-    * upserting each delta would leave: an overwrite column takes its value
-    * from the LATEST delta carrying the id (upsert overwrites uncondition-
-    * ally whenever an incoming row exists); a coalesce column takes the
-    * latest NON-NULL delta value (each upsert keeps the stored value on
-    * incoming NULL, so values chain through `coalesce` newest-first) and
-    * stays NULL only if every delta left it NULL — in which case the outer
-    * [[Merge.upsert]] coalesces in the base value. `max_by` over the
-    * manifest commit order `_seq` implements both ("latest non-null" via a
-    * NULL ordering key on NULL values, which max_by ignores); ids are
-    * unique per delta ([[merge]] dedupes before appending), so the
-    * ordering key never ties. */
-  private def foldedDeltas(): DataFrame = {
-    val d = snaps.readDeltas().get
-    val aggs =
-      coalesceCols.map(c =>
-        max_by(col(c), when(col(c).isNotNull, col("_seq"))).as(c)) ++
-      overwriteCols.map(c => max_by(col(c), col("_seq")).as(c))
-    d.groupBy(col("id")).agg(aggs.head, aggs.tail: _*).select(itemCols: _*)
-  }
-
   private def dedupe(batch: DataFrame): DataFrame =
     Merge.dedupeByKey(batch, "id", Seq("retrieved")).select(itemCols: _*)
 
   /** S7/S8: merge a normalized item batch into the store and commit it
     * atomically. Idempotent by id (re-merging the same batch is a no-op
-    * modulo `retrieved`). Default store: see the class doc — an append
-    * rewrites only the open tail (or, on an empty store, writes the
-    * clustered base), anything else upserts into one new base.
-    * `buckets > 0`: rewrite one merged bucketed snapshot (O(store) I/O).
-    * `compactEvery > 0`: append the batch as one delta directory
-    * (O(batch) I/O) and compact the log every `compactEvery` commits. */
-  def merge(batch: DataFrame): Unit =
-    if (compactEvery > 0) {
-      snaps.appendDelta(dedupe(batch))
-      if (snaps.deltaCount >= compactEvery)
-        snaps.replace(current()) // old dirs deleted only after the swap
-    } else if (buckets > 0)
-      snaps.replace(upserted(batch))
-    else {
-      // the batch is materialized once: the run scan fills the checkpoint
-      // and the write reads it back
-      val rows = batch.select(itemCols: _*).localCheckpoint(eager = false)
-      val runs = ItemStore.runs(rows)
-      // each partition strictly ascending and their id ranges disjoint:
-      // the batch already has the clustered layout and no repeated id
-      val sorted = runs.sortBy(_.lo)
-      val clustered = runs.forall(_.ascending) &&
-        sorted.zip(sorted.drop(1)).forall { case (a, b) => a.hi < b.lo }
-      val live = snaps.live
-      lazy val top = latestId(live)
-      if (runs.isEmpty) () // empty batch: nothing to commit
-      else if (!disjoint(live) || top.exists(_ >= sorted.head.lo))
-        // an update, recrawl or gap fill: the join's output is written as
-        // it comes, hash-partitioned, and folds the segments in. A range
-        // rewrite of it would cluster the base again, at about 1.5 times
-        // the write
-        snaps.replace(upserted(rows))
-      else if (top.isEmpty) // empty store: the batch becomes the base
-        snaps.replace(if (clustered) rows
-          // one range shuffle; the dedupe's aggregate runs after it on the
-          // clustered key, with no exchange of its own
-          else dedupe(rows.repartitionByRange(col("id"))).sortWithinPartitions("id"))
-      else appendTail(live, if (clustered) rows else dedupe(rows))
-    }
+    * modulo `retrieved`). See the class doc: an append rewrites only the
+    * open tail (or, on an empty store, writes the clustered base),
+    * anything else upserts into one new base. */
+  def merge(batch: DataFrame): Unit = {
+    val entries = live
+    // the batch is materialized once: the run scan fills the checkpoint
+    // and the write reads it back
+    val rows = batch.select(itemCols: _*).localCheckpoint(eager = false)
+    val runs = ItemStore.runs(rows)
+    // each partition strictly ascending and their id ranges disjoint:
+    // the batch already has the clustered layout and no repeated id
+    val sorted = runs.sortBy(_.lo)
+    val clustered = runs.forall(_.ascending) &&
+      sorted.zip(sorted.drop(1)).forall { case (a, b) => a.hi < b.lo }
+    lazy val top = latestId(entries)
+    if (runs.isEmpty) () // empty batch: nothing to commit
+    else if (top.exists(_ >= sorted.head.lo))
+      // an update, recrawl or gap fill: the join's output is written as
+      // it comes, hash-partitioned, and folds the segments in. A range
+      // rewrite of it would cluster the base again, at about 1.5 times
+      // the write
+      snaps.replace(upserted(rows))
+    else if (top.isEmpty) // empty store: the batch becomes the base
+      snaps.replace(if (clustered) rows
+        // one range shuffle; the dedupe's aggregate runs after it on the
+        // clustered key, with no exchange of its own
+        else dedupe(rows.repartitionByRange(col("id"))).sortWithinPartitions("id"))
+    else appendTail(entries, if (clustered) rows else dedupe(rows))
+  }
 
   private def upserted(batch: DataFrame): DataFrame =
     Merge.upsert(current(), batch, "id", coalesceCols, overwriteCols,
@@ -263,13 +218,13 @@ final class ItemStore(spark: SparkSession, root: String, buckets: Int = 0,
     }
 
   /** A1 `select_latest_id` (hnarchive.py:285-290): resume offset. */
-  def latestId(): Option[Long] = latestId(snaps.live)
+  def latestId(): Option[Long] = latestId(live)
 
-  /** On a disjoint store the max id sits in the last entry, and its
-    * footers hold it: no Spark job. A delta log, or a footer without `id`
-    * statistics, falls back to an aggregate over [[current]]. */
+  /** The max id sits in the last entry, and its footers hold it: no Spark
+    * job. A footer without `id` statistics falls back to an aggregate
+    * over [[current]]. */
   private def latestId(live: Seq[String]): Option[Long] = {
-    val last = if (disjoint(live)) footers(live, live.last).filter(_.rows > 0) else Nil
+    val last = footers(live, live.last).filter(_.rows > 0)
     if (live.size == 1 && last.isEmpty) None
     else if (last.nonEmpty && last.forall(_.maxId.isDefined)) Some(last.flatMap(_.maxId).max)
     else current().agg(max(col("id"))).head().get(0) match {
@@ -278,12 +233,10 @@ final class ItemStore(spark: SparkSession, root: String, buckets: Int = 0,
     }
   }
 
-  /** Number of items: the footer row counts of a disjoint store (no
-    * Spark job), else a count over [[current]]. */
+  /** Number of items: the footer row counts, with no Spark job. */
   def count(): Long = {
-    val live = snaps.live
-    if (disjoint(live)) live.flatMap(footers(live, _)).map(_.rows).sum
-    else current().count()
+    val entries = live
+    entries.flatMap(footers(entries, _)).map(_.rows).sum
   }
 
   /** P4/P5 re-crawl candidates (`update_items_argparse` hnarchive.py:540-549):
@@ -302,13 +255,12 @@ final class ItemStore(spark: SparkSession, root: String, buckets: Int = 0,
 
 object ItemStore {
   /** The children of each id, from the store's per-directory child lists,
-    * when `items` is exactly [[ItemStore.current]] of a disjoint default
-    * store (its [[IdRangeIndex]] relation, no filter or projection on top)
-    * whose footer row count fits [[TreeExpand]]'s driver budget; None for
-    * any other frame. The first call after a commit reads the child lists
-    * of every directory not yet read: on the driver for a directory of one
-    * file partition (a tail), in one job for a larger one; later calls
-    * read none. */
+    * when `items` is exactly [[ItemStore.current]] (its [[IdRangeIndex]]
+    * relation, no filter or projection on top) and its footer row count
+    * fits [[TreeExpand]]'s driver budget; None for any other frame. The
+    * first call after a commit reads the child lists of every directory
+    * not yet read: on the driver for a directory of one file partition (a
+    * tail), in one job for a larger one; later calls read none. */
   def childrenOf(items: DataFrame): Option[Any => java.util.List[Any]] =
     items.queryExecution.logical match {
       case LogicalRelation(h: HadoopFsRelation, _, _, _, _) => h.location match {

@@ -35,122 +35,41 @@ import org.apache.spark.sql.types.StructType
   * The manifest is newline-separated: optional `#`-prefixed metadata
   * lines, then directory names — first the base snapshot, then deltas
   * and segments in commit order (a bare single line is exactly the old
-  * pointer format, so pre-delta stores read unchanged). A bucketed store
-  * records its bucket spec as `#bucketed-by <key> <n>`; every open
-  * validates the caller's spec against it and FAILS LOUD on mismatch —
-  * Spark trusts declared bucketing and would silently return wrong joins
-  * over files hashed into a different bucket count.
+  * pointer format, so pre-delta stores read unchanged). A manifest with a
+  * `#bucketed-by` line was written by the bucketed layout earlier
+  * releases offered; its snapshots are catalog tables this class no
+  * longer registers, so opening one FAILS LOUD instead of reading files
+  * whose layout it does not know.
   *
-  * Optional `bucketBy = Some((key, n))` stores every snapshot bucketed by
-  * `key` (hash, n buckets, sorted within): bucket metadata only flows
-  * through the catalog, so each snapshot is additionally registered as an
-  * EXTERNAL table over its directory (re-registered on first read in a
-  * fresh session — the files plus the manifest remain the durable truth).
-  * A reader joining on `key` then plans WITHOUT an Exchange on the store
-  * side: successive merges shuffle only the incoming batch, never the
-  * accumulated store. Deltas on a bucketed store are plain (unbucketed)
-  * parquet side directories: [[readBase]] keeps the Exchange-free bucketed
-  * scan, and the caller folds [[readDeltas]] (tiny by construction) into
-  * it — compaction then rewrites one bucketed base again.
-  *
-  * Optional `partitionByCol = Some(col)` (exclusive with bucketBy) lays
-  * every snapshot AND delta out hive-partitioned by `col` — the
-  * directory-pruning layout (`col=v/` subdirs): a reader filtering on
-  * `col` opens only the matching directories in every manifest entry,
-  * which is what the BM25 standing index's term-hash buckets need
-  * ([[graft.operators.Retrieval]]). The spec is recorded in the manifest
-  * (`#partitioned-by col`) and validated on open, like the bucket spec —
-  * a mismatched writer would silently flatten the layout and lose
-  * pruning, so it fails loud instead.
+  * Optional `partitionByCol = Some(col)` lays every snapshot AND delta out
+  * hive-partitioned by `col` — the directory-pruning layout (`col=v/`
+  * subdirs): a reader filtering on `col` opens only the matching
+  * directories in every manifest entry, which is what the BM25 standing
+  * index's term-hash buckets need ([[graft.operators.Retrieval]]). The
+  * spec is recorded in the manifest (`#partitioned-by col`) and validated
+  * on open — a mismatched writer would silently flatten the layout and
+  * lose pruning, so it fails loud instead.
   */
 final class Snapshots(spark: SparkSession, root: String, schema: StructType,
-                      bucketBy: Option[(String, Int)] = None,
                       partitionByCol: Option[String] = None,
                       compactEvery: Int = Snapshots.DefaultCompactEvery) {
 
-  require(bucketBy.isEmpty || partitionByCol.isEmpty,
-    "bucketBy and partitionByCol are mutually exclusive store layouts")
   Snapshots.requireCompactEvery(compactEvery)
 
   private val rootPath: Path = Paths.get(root)
   private val pointer: Path = rootPath.resolve("current")
 
-  /** Catalog identifier for a snapshot directory (bucketed mode): derived
-    * from the NORMALIZED store root via SHA-256 (64 hex-bit prefix) so two
-    * stores never collide — a 32-bit `hashCode` prefix plus the fixed
-    * bootstrap name `snap-0` made same-session collisions realistic, and
-    * `registerTable`'s exists short-circuit would then silently serve one
-    * store's files to the other. [[registerTable]] additionally verifies an
-    * existing entry's LOCATION before reuse, so even a name collision (or a
-    * stale entry surviving an external delete/recreate) fails loud. */
-  private def tableFor(snap: String): String = {
-    val norm = rootPath.toAbsolutePath.normalize.toString
-    val hex = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(norm.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .take(8).map(b => f"$b%02x").mkString
-    s"graft_snap_${hex}_${snap.replace('-', '_')}"
-  }
-
-  private def registerTable(snap: String): Unit = bucketBy.foreach { case (key, n) =>
-    val tbl = tableFor(snap)
-    val expected = rootPath.resolve(snap).toAbsolutePath.normalize.toString
-    if (!spark.catalog.tableExists(tbl))
-      spark.sql(
-        s"""CREATE TABLE $tbl (${schema.toDDL}) USING PARQUET
-           |CLUSTERED BY ($key) SORTED BY ($key) INTO $n BUCKETS
-           |LOCATION '$expected'""".stripMargin)
-    else {
-      // never trust a pre-existing entry blindly: verify location AND the
-      // bucket spec AND the schema before reuse (DESCRIBE FORMATTED is
-      // driver-only). A stale entry at the SAME location but a different
-      // bucket spec (store externally deleted and recreated, old session
-      // entry surviving) would otherwise make Spark trust bucket metadata
-      // over files hashed into a different bucket count — silently wrong
-      // joins, the exact failure this verification exists to catch.
-      def fail(what: String, got: String, want: String): Nothing =
-        throw new IllegalStateException(
-          s"catalog table $tbl $what is '$got', expected '$want' — " +
-            "another store registered a colliding table name in this " +
-            "session, or a stale entry survived an external change. DROP " +
-            "TABLE it (the table is EXTERNAL; files are untouched) and " +
-            "reopen the store.")
-      val desc = spark.sql(s"DESCRIBE FORMATTED $tbl")
-        .select("col_name", "data_type").collect()
-        .map(r => r.getString(0) -> r.getString(1)).toMap
-      val loc = desc.getOrElse("Location", "")
-      // hadoop Path tolerates unencoded chars (a raw space in the store
-      // root breaks java.net.URI and would fail a LEGITIMATE reuse)
-      val locPath = try java.nio.file.Paths.get(
-        new org.apache.hadoop.fs.Path(loc).toUri.getPath)
-        .toAbsolutePath.normalize.toString
-      catch { case _: Exception => loc }
-      if (locPath != expected) fail("location", locPath, expected)
-      val gotBuckets = desc.getOrElse("Num Buckets", "").trim
-      if (gotBuckets != n.toString) fail("bucket count", gotBuckets, n.toString)
-      val gotCols = desc.getOrElse("Bucket Columns", "").replace("`", "").trim
-      if (gotCols != s"[$key]") fail("bucket columns", gotCols, s"[$key]")
-      val gotSchema = spark.table(tbl).schema
-        .map(f => (f.name, f.dataType)).toSeq
-      val wantSchema = schema.map(f => (f.name, f.dataType)).toSeq
-      if (gotSchema != wantSchema)
-        fail("schema", gotSchema.mkString(","), wantSchema.mkString(","))
-    }
-  }
-
   /** Create an empty snapshot iff absent (idempotent bootstrap — S6, safe
-    * under crash-retry); on an existing store, validate the bucket spec
-    * and sweep orphan directories left by a crash between a snapshot
-    * write and its manifest commit (they are unreferenced forever, and a
-    * continuously-restarting streaming writer would otherwise accumulate
-    * them without bound). */
+    * under crash-retry; an empty directory reads as 0 rows under the
+    * explicit schema, so no Spark job); on an existing store, validate the
+    * manifest's layout lines and sweep orphan directories left by a crash
+    * between a snapshot write and its manifest commit (they are
+    * unreferenced forever, and a continuously-restarting streaming writer
+    * would otherwise accumulate them without bound). */
   def init(): Unit = {
     Files.createDirectories(rootPath)
     if (!Files.exists(pointer)) {
-      // an empty directory reads as 0 rows under the explicit schema, so
-      // only a bucketed store needs its (catalog-registered) table write
-      if (bucketBy.isEmpty) Files.createDirectories(rootPath.resolve("snap-0"))
-      else writeSnapshot(spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema), "snap-0")
+      Files.createDirectories(rootPath.resolve("snap-0"))
       commitManifest(Seq("snap-0"))
     } else {
       val live = manifest.toSet
@@ -164,62 +83,26 @@ final class Snapshots(spark: SparkSession, root: String, schema: StructType,
             .exists(d.startsWith) && !live(d))
           .toList
         finally listing.close()
-      orphans.foreach { orphan =>
-        if (bucketBy.nonEmpty)
-          spark.sql(s"DROP TABLE IF EXISTS ${tableFor(orphan)}")
-        deleteRecursively(rootPath.resolve(orphan))
-      }
+      orphans.foreach(orphan => deleteRecursively(rootPath.resolve(orphan)))
     }
   }
 
-  def read(): DataFrame = bucketBy match {
-    case Some(_) =>
-      val m = manifest
-      registerTable(m.head) // fresh session: catalog entry may not exist yet
-      val base = spark.table(tableFor(m.head))
-      // deltas (plain parquet) union in AFTER the bucketed base: callers
-      // that need per-key precedence across deltas (versioned rows) read
-      // [[readBase]]/[[readDeltas]] instead and merge themselves
-      m.tail.foldLeft(base)((acc, d) =>
-        acc.unionAll(spark.read.schema(schema)
-          .parquet(rootPath.resolve(d).toString)))
-    case None =>
-      val dirs = manifest.map(d => rootPath.resolve(d).toString)
-      partitionByCol match {
-        // hive-partitioned dirs must load one root at a time: partition
-        // discovery across multiple roots demands a single common base
-        // and fails loud on the snapshot/delta sibling layout
-        case Some(_) =>
-          dirs.map(d => spark.read.schema(schema).parquet(d))
-            .reduce(_ unionAll _)
-        case None => spark.read.schema(schema).parquet(dirs: _*)
-      }
+  def read(): DataFrame = {
+    val dirs = manifest.map(d => rootPath.resolve(d).toString)
+    partitionByCol match {
+      // hive-partitioned dirs must load one root at a time: partition
+      // discovery across multiple roots demands a single common base
+      // and fails loud on the snapshot/delta sibling layout
+      case Some(_) =>
+        dirs.map(d => spark.read.schema(schema).parquet(d))
+          .reduce(_ unionAll _)
+      case None => spark.read.schema(schema).parquet(dirs: _*)
+    }
   }
 
-  /** The base snapshot only (bucketed stores: the catalog table, so joins
-    * on the bucket key plan Exchange-free), excluding any deltas. */
-  def readBase(): DataFrame = bucketBy match {
-    case Some(_) =>
-      val snap = manifest.head
-      registerTable(snap)
-      spark.table(tableFor(snap))
-    case None =>
-      spark.read.schema(schema)
-        .parquet(rootPath.resolve(manifest.head).toString)
-  }
-
-  /** All delta directories since the base, each row tagged with `_seq` —
-    * the 1-based manifest commit order — so callers can apply last-writer-
-    * wins (or any per-key precedence) across deltas. None when the store
-    * has no deltas. */
-  def readDeltas(): Option[DataFrame] = {
-    val dirs = manifest.tail
-    if (dirs.isEmpty) None
-    else Some(dirs.zipWithIndex.map { case (d, i) =>
-      spark.read.schema(schema).parquet(rootPath.resolve(d).toString)
-        .withColumn("_seq", org.apache.spark.sql.functions.lit((i + 1).toLong))
-    }.reduce(_ unionAll _))
-  }
+  /** The base snapshot only, excluding any deltas. */
+  def readBase(): DataFrame =
+    spark.read.schema(schema).parquet(rootPath.resolve(manifest.head).toString)
 
   /** Number of delta directories since the last base snapshot — the
     * caller's compaction trigger. */
@@ -237,9 +120,9 @@ final class Snapshots(spark: SparkSession, root: String, schema: StructType,
     * this, a replayed epoch whose delta was just compacted away would
     * re-append its rows as duplicates (the manifest alone forgets
     * consumed tokens). Costs are kept off the hot path: tokenless appends
-    * (content-idempotent callers like the item-store merge) never read
-    * the ledger, auto-named (`delta-<nanotime>`, purely numeric) deltas
-    * are never recorded, and retention is bounded to the most recent
+    * (content-idempotent callers) never read the ledger, auto-named
+    * (`delta-<nanotime>`, purely numeric) deltas are never recorded, and
+    * retention is bounded to the most recent
     * [[Snapshots.MaxConsumedTokens]] entries in append order — far beyond
     * any streaming engine's replay horizon (the engine replays at most
     * the epochs since its last checkpoint, not months of history). */
@@ -295,9 +178,7 @@ final class Snapshots(spark: SparkSession, root: String, schema: StructType,
     val replayed = old.contains(delta) ||
       (token.isDefined && consumedTokens.contains(delta))
     if (!replayed) {
-      val w = df.write.mode("overwrite")
-      partitionByCol.fold(w)(c => w.partitionBy(c))
-        .parquet(rootPath.resolve(delta).toString)
+      write(df, delta)
       commitManifest(old :+ delta)
     }
   }
@@ -326,8 +207,7 @@ final class Snapshots(spark: SparkSession, root: String, schema: StructType,
     * other live entry; readers rely on that to union segments without a
     * fold. I/O is O(df). */
   def appendSegment(df: DataFrame, replaceLast: Boolean): Unit = {
-    require(bucketBy.isEmpty && partitionByCol.isEmpty,
-      "segments are plain parquet directories")
+    require(partitionByCol.isEmpty, "segments are plain parquet directories")
     val old = manifest
     require(!replaceLast || old.size > 1, "the base snapshot is not a segment")
     val seg = s"${Snapshots.SegmentPrefix}${System.nanoTime()}"
@@ -345,60 +225,33 @@ final class Snapshots(spark: SparkSession, root: String, schema: StructType,
   def replace(df: DataFrame): Unit = {
     val previous = manifest
     val snap = s"snap-${System.nanoTime()}"
-    writeSnapshot(df, snap)
+    write(df, snap)
     recordConsumed(previous)
     commitManifest(Seq(snap))
-    previous.foreach { d =>
-      if (bucketBy.nonEmpty)
-        spark.sql(s"DROP TABLE IF EXISTS ${tableFor(d)}") // EXTERNAL: files stay
-      deleteRecursively(rootPath.resolve(d))
-    }
+    previous.foreach(d => deleteRecursively(rootPath.resolve(d)))
   }
 
-  private def writeSnapshot(df: DataFrame, snap: String): Unit = bucketBy match {
-    case Some((key, n)) =>
-      // crash-retry safety: a previous attempt may have left the table
-      // and/or a half-written directory with no manifest entry — clear
-      // both so the CTAS (which has no overwrite mode with bucketBy)
-      // cannot wedge the store on TableAlreadyExists / non-empty location
-      spark.sql(s"DROP TABLE IF EXISTS ${tableFor(snap)}")
-      deleteRecursively(rootPath.resolve(snap))
-      df.write.format("parquet")
-        .bucketBy(n, key).sortBy(key)
-        .option("path", rootPath.resolve(snap).toString)
-        .saveAsTable(tableFor(snap))
-    case None =>
-      val w = df.write.mode("overwrite")
-      partitionByCol.fold(w)(c => w.partitionBy(c))
-        .parquet(rootPath.resolve(snap).toString)
+  /** Write `df` as directory `entry`, in the store's partition layout. */
+  private def write(df: DataFrame, entry: String): Unit = {
+    val w = df.write.mode("overwrite")
+    partitionByCol.fold(w)(c => w.partitionBy(c)).parquet(dir(entry))
   }
 
-  private def bucketHeader: Seq[String] =
-    bucketBy.toSeq.map { case (key, n) => s"#bucketed-by $key $n" } ++
-      partitionByCol.toSeq.map(c => s"#partitioned-by $c")
+  private def layoutHeader: Seq[String] =
+    partitionByCol.toSeq.map(c => s"#partitioned-by $c")
 
-  /** Directory names from the manifest, after validating that the stored
-    * bucket spec matches this instance's — mismatched bucketing must fail
-    * loud, never return wrong joins. */
+  /** Directory names from the manifest, after validating its layout
+    * lines: a bucketed store and a mismatched partition layout both fail
+    * loud, never read wrong. */
   private def manifest: Seq[String] = {
     val lines = new String(Files.readAllBytes(pointer)).trim
       .split("\n").toSeq.map(_.trim).filter(_.nonEmpty)
-    val stored = lines.filter(_.startsWith("#")) match {
-      case Seq() => None
-      case metas => metas.collectFirst {
-        case m if m.startsWith("#bucketed-by ") =>
-          val Array(key, n) = m.stripPrefix("#bucketed-by ").split(" ")
-          (key, n.toInt)
-      }
-    }
-    if (stored != bucketBy)
+    lines.find(_.startsWith("#bucketed-by")).foreach { line =>
       throw new IllegalStateException(
-        s"store at $root records bucket spec ${specStr(stored)} but was " +
-          s"opened with ${specStr(bucketBy)} — Spark trusts declared " +
-          "bucketing, so a mismatch silently corrupts joins. Reopen with " +
-          "the recorded spec; to change specs, compact through an instance " +
-          "matching the recorded one and rewrite with the new one. (A store " +
-          "with no recorded spec was written unbucketed.)")
+        s"store at $root has the manifest line '$line': the bucketed " +
+          "layout is no longer supported. Rewrite the store with a " +
+          "release that reads it, or rebuild it from its source.")
+    }
     val storedPart = lines.collectFirst {
       case m if m.startsWith("#partitioned-by ") =>
         m.stripPrefix("#partitioned-by ").trim
@@ -413,12 +266,9 @@ final class Snapshots(spark: SparkSession, root: String, schema: StructType,
     lines.filterNot(_.startsWith("#"))
   }
 
-  private def specStr(s: Option[(String, Int)]): String =
-    s.map { case (k, n) => s"bucketed-by($k, $n)" }.getOrElse("unbucketed")
-
   private def commitManifest(dirs: Seq[String]): Unit = {
     val tmp = rootPath.resolve("current.tmp")
-    Files.write(tmp, (bucketHeader ++ dirs).mkString("\n").getBytes)
+    Files.write(tmp, (layoutHeader ++ dirs).mkString("\n").getBytes)
     Files.move(tmp, pointer, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }

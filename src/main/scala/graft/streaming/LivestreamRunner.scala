@@ -15,14 +15,10 @@ import graft.store.ItemStore
   * (hnarchive.py:164); each batch-merge is atomic (S8/T6 — the snapshot
   * swap is the transaction).
   *
-  * Scale: on the default id-clustered [[ItemStore]] every commit is an
-  * append above the max id, so it rewrites only the store's open tail
-  * (O(tail) I/O, the base untouched) and the offset bootstrap reads the
-  * parquet footers, with no Spark job. A `buckets > 0` store (CLI
-  * `--buckets`) rewrites its bucketed snapshot per merge, shuffling only
-  * the incoming batch (spec-pinned in ItemStoreSpec); a `compactEvery > 0`
-  * store (CLI `--compact_every`) appends one delta directory per commit
-  * and compacts every N commits — the shape for update-heavy streams.
+  * Scale: on the id-clustered [[ItemStore]] every commit is an append
+  * above the max id, so it rewrites only the store's open tail (O(tail)
+  * I/O, the base untouched, no shuffle) and the offset bootstrap reads
+  * the parquet footers, with no Spark job.
   */
 object LivestreamRunner {
 

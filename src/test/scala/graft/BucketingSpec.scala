@@ -3,10 +3,9 @@ package graft
 import org.apache.spark.sql.execution.ExplainMode
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Bucketed co-located joins — the physical design the ItemStore scale note
-  * promises: two tables bucketed by the join key sort-merge-join with NO
-  * exchange, so repeated merges against a bucketed store never re-shuffle
-  * the store side. */
+/** Bucketed co-located joins, Spark's primitive: two tables bucketed by
+  * the join key sort-merge-join with NO exchange. No graft store relies
+  * on it; the spec pins the primitive for any table a user buckets. */
 class BucketingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 

@@ -41,6 +41,30 @@ class CliSpec extends AnyFunSuite {
     assert(html.contains("""<div class="comment" id="3">"""))
   }
 
+  /** The message `args` fails with, which must name the option and the
+    * verb; the store directory stays empty. Callers pass an unregistered
+    * fake fetcher, so a verb that ran anyway could not reach the network. */
+  private def rejected(verb: String, option: String, args: String*): String = {
+    val db = Files.createTempDirectory("graft-cli-opts")
+    val e = intercept[IllegalArgumentException](
+      Cli.run(spark, verb, (Seq("--db", db.toString) ++ args).toArray))
+    assert(e.getMessage.contains(s"$verb does not accept --$option"), e.getMessage)
+    val listing = Files.list(db)
+    try assert(!listing.iterator().hasNext, "the store was opened") finally listing.close()
+    e.getMessage
+  }
+
+  test("get fails loud on an option it does not read: --buckets") {
+    val msg = rejected("get", "buckets", "--fetcher", "fake:unregistered", "--buckets", "4")
+    assert(msg.contains("--lower") && msg.contains("--upper"), msg)
+  }
+
+  test("livestream fails loud on an option it does not read: --compact_every") {
+    val msg = rejected("livestream", "compact_every", "--fetcher", "fake:unregistered",
+      "--compact_every", "8", "--max_items", "1")
+    assert(msg.contains("--commit_period"), msg)
+  }
+
   test("trending verb drains the feed and commits ranked windows") {
     // one finalized 10-min window [600,1200): u1 x2 beats u2 x1; item 9
     // is the far-future watermark pusher that finalizes it

@@ -232,6 +232,39 @@ class RenderSpec extends AnyFunSuite {
     assert(html.indexOf("opt B") < pollEnd) // options nested inside poll div
   }
 
+  test("poll options from a stored archive: (time, id) order, inside the poll div") {
+    import org.apache.spark.sql.functions.lit
+    val dir = java.nio.file.Files.createTempDirectory("graft-render-poll").toString
+    val st = new graft.store.ItemStore(spark, dir)
+    st.init()
+    def opt(i: Long, poll: Long, time: Long, text: String, score: Long) =
+      i -> s"""{"id":$i,"type":"pollopt","by":"p","time":$time,"poll":$poll,"text":"$text","score":$score}"""
+    // options 12 and 13 tie on time: id breaks the tie, so the order is
+    // neither by id (11, 12, 13) nor by text or score
+    val first = Seq(story(1L),
+      10L -> """{"id":10,"type":"poll","by":"p","time":100,"title":"Which?","score":5}""",
+      opt(11L, 10L, 300L, "opt C", 2L), opt(12L, 10L, 200L, "opt B", 7L))
+    val second = Seq(opt(13L, 10L, 200L, "opt A", 1L), comment(14L, 10L, 400L),
+      opt(15L, 99L, 50L, "other poll", 9L))
+    st.merge(graft.schema.Item.normalize(first.toDF("id", "body"), lit(100L)))
+    st.merge(graft.schema.Item.normalize(second.toDF("id", "body"), lit(100L)))
+    val items = st.current()
+    val opts = Render.pollOptions(items, 10L)
+    assert(opts.map(_.id) == Seq(12L, 13L, 11L))
+    assert(opts.head == Render.RItem(12L, "pollopt", Some("p"), 200L, Some("opt B"), None,
+      Some(7L), None, None))
+    val html = Render.renderPage(Render.buildTree(items, 10L), opts)
+    val pollStart = html.indexOf("""<div class="poll" id="10">""")
+    // the poll div's close: the </div> that brings the nesting back to 0
+    val divs = """<div|</div>""".r.findAllMatchIn(html).filter(_.start >= pollStart).toSeq
+    val pollEnd = divs.scanLeft(0)((d, m) => d + (if (m.matched == "<div") 1 else -1)).tail
+      .zip(divs).collectFirst { case (0, m) => m.start }.get
+    val at = Seq("opt B", "opt A", "opt C").map(html.indexOf(_))
+    assert(pollStart >= 0 && at == at.sorted && at.head > pollStart && at.last < pollEnd, html)
+    assert(html.indexOf("""<div class="comment" id="14">""") > pollEnd)
+    assert(!html.contains("other poll"))
+  }
+
   test("job renders title and optional text, no userinfo") {
     val job = Render.RItem(7L, "job", None, 0L, Some("apply<p>now"), None, None,
       Some("Hiring"), None)

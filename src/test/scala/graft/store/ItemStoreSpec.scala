@@ -28,51 +28,6 @@ class ItemStoreSpec extends AnyFunSuite {
   private def normalized(rows: (Long, String)*) =
     Item.normalize(rows.toSeq.toDF("id", "body"), lit(100L))
 
-  test("bucketed table reuse verifies location — stale/colliding entries fail loud") {
-    val dirA = Files.createTempDirectory("graft-snap-loc-a")
-    val dirB = Files.createTempDirectory("graft-snap-loc-b").toString
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType)))
-    val snaps = new Snapshots(spark, dirA.toString, schema, Some(("id", 2)))
-    snaps.init()
-    assert(snaps.read().count() == 0) // legit reuse: location matches
-    // simulate a colliding/stale catalog entry: same table name the store
-    // derives (replicating tableFor's sha-256 naming), pointing elsewhere
-    val norm = dirA.toAbsolutePath.normalize.toString
-    val hex = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(norm.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .take(8).map(b => f"$b%02x").mkString
-    val tbl = s"graft_snap_${hex}_snap_0"
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    spark.sql(
-      s"""CREATE TABLE $tbl (id BIGINT) USING PARQUET
-         |CLUSTERED BY (id) SORTED BY (id) INTO 2 BUCKETS
-         |LOCATION '$dirB'""".stripMargin)
-    val e = intercept[IllegalStateException] { snaps.read() }
-    assert(e.getMessage.contains("location"), e.getMessage)
-    // stale entry at the SAME location but a DIFFERENT bucket spec (store
-    // externally recreated, old catalog entry surviving): Spark would
-    // trust the stale bucket metadata over files hashed into another
-    // bucket count — must fail loud, not silently mis-join
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    spark.sql(
-      s"""CREATE TABLE $tbl (id BIGINT) USING PARQUET
-         |CLUSTERED BY (id) SORTED BY (id) INTO 8 BUCKETS
-         |LOCATION '${dirA.resolve("snap-0")}'""".stripMargin)
-    val eb = intercept[IllegalStateException] { snaps.read() }
-    assert(eb.getMessage.contains("bucket count"), eb.getMessage)
-    // same location and bucket count, different schema: same refusal
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-    spark.sql(
-      s"""CREATE TABLE $tbl (id BIGINT, extra STRING) USING PARQUET
-         |CLUSTERED BY (id) SORTED BY (id) INTO 2 BUCKETS
-         |LOCATION '${dirA.resolve("snap-0")}'""".stripMargin)
-    val es = intercept[IllegalStateException] { snaps.read() }
-    assert(es.getMessage.contains("schema"), es.getMessage)
-    spark.sql(s"DROP TABLE IF EXISTS $tbl")
-  }
-
   test("init is idempotent and yields an empty typed table") {
     val st = freshStore()
     st.init()
@@ -138,65 +93,6 @@ class ItemStoreSpec extends AnyFunSuite {
     assert(st.current().count() == 4)
   }
 
-  test("bucketed store: second merge plans with no Exchange on the store side") {
-    import org.apache.spark.sql.execution.ExplainMode
-    val dir = Files.createTempDirectory("graft-store-bucketed").toString
-    val st = new ItemStore(spark, dir, buckets = 4)
-    st.init()
-    st.merge(normalized(
-      1L -> """{"id":1,"type":"story","by":"a","time":10}""",
-      2L -> """{"id":2,"type":"story","by":"b","time":20}"""))
-    // the second merge joins the BUCKETED store snapshot against the batch:
-    // the store side must scan bucketed (no Exchange above it); only the
-    // incoming batch may shuffle
-    val batch2 = normalized(3L -> """{"id":3,"type":"story","by":"c","time":30}""")
-    val merged = graft.operators.Merge.upsert(st.current(), batch2, "id",
-      st.coalesceCols, st.overwriteCols, precedenceCols = Seq("retrieved"))
-    val plan = merged.queryExecution
-      .explainString(ExplainMode.fromString("formatted"))
-    assert(plan.contains("Bucketed: true"), s"store scan not bucketed:\n$plan")
-    // exactly the batch-side Exchange: 0 would mean the counter went
-    // vacuous (a full-outer equi-join must shuffle the unbucketed batch),
-    // 2+ would mean the store side shuffled too
-    val exchanges = graft.PlanChecks.shuffleExchanges(plan)
-    assert(exchanges == 1, s"expected exactly the batch-side Exchange:\n$plan")
-    // and the store semantics are unchanged through the bucketed layout
-    st.merge(batch2)
-    assert(st.current().count() == 3)
-    assert(st.latestId().contains(3L))
-    // a fresh-session analog: drop the catalog entry, read() must re-register
-    // (a fresh instance: current() reuses its DataFrame while the manifest
-    // is unchanged, as a new session would not)
-    spark.catalog.listTables().collect()
-      .filter(_.name.startsWith("graft_snap_"))
-      .foreach(t => spark.sql(s"DROP TABLE ${t.name}"))
-    assert(new ItemStore(spark, dir, buckets = 4).current().count() == 3)
-  }
-
-  test("bucket spec mismatch fails loud instead of corrupting joins") {
-    val dir = Files.createTempDirectory("graft-store-spec").toString
-    val st4 = new ItemStore(spark, dir, buckets = 4)
-    st4.init()
-    st4.merge(normalized(1L -> """{"id":1,"type":"story","time":10}"""))
-    // different bucket count: Spark would trust the declared bucketing and
-    // silently mis-join files hashed into 4 buckets — must throw instead
-    val e8 = intercept[IllegalStateException] {
-      new ItemStore(spark, dir, buckets = 8).current().count()
-    }
-    assert(e8.getMessage.contains("bucket"))
-    // unbucketed open of a bucketed store: same hazard, same refusal
-    intercept[IllegalStateException] { new ItemStore(spark, dir).current() }
-    // bucketed open of an unbucketed store: files are not bucketed at all
-    val plainDir = Files.createTempDirectory("graft-store-plain").toString
-    val plain = new ItemStore(spark, plainDir)
-    plain.init()
-    intercept[IllegalStateException] {
-      new ItemStore(spark, plainDir, buckets = 4).current()
-    }
-    // the matching spec still reads fine
-    assert(st4.current().count() == 1)
-  }
-
   test("init sweeps orphan directories left by a crashed write") {
     val dir = Files.createTempDirectory("graft-store-orphan")
     val st = new ItemStore(spark, dir.toString)
@@ -215,184 +111,6 @@ class ItemStoreSpec extends AnyFunSuite {
     assert(!Files.exists(orphanSnap) && !Files.exists(orphanDelta))
     assert(!Files.exists(orphanTail), "orphan tail survived init")
     assert(st.current().count() == 1) // live snapshot untouched
-  }
-
-  test("livestream runner on a bucketed store keeps merges Exchange-free") {
-    import org.apache.spark.sql.execution.ExplainMode
-    val dir = Files.createTempDirectory("graft-store-ls-bucketed").toString
-    val st = new ItemStore(spark, dir, buckets = 4)
-    val items = (1L to 9L).map(i =>
-      i -> s"""{"id":$i,"type":"comment","by":"u$i","time":${i * 10}}""").toMap
-    // commitPeriod 2 → five micro-batch merges, five snapshot swaps
-    val n = LivestreamRunner.run(spark, st, new FakeFetcher(items, maxId = 9),
-      maxItems = 9, commitPeriod = 2, sleep = _ => (), now = () => 500L)
-    assert(n == 9)
-    assert(st.current().count() == 9)
-    assert(st.latestId().contains(9L))
-    // superseded generations must not accumulate in the catalog: exactly one
-    // live snapshot table for this store root after five swaps
-    val prefix = "graft_snap_" + java.security.MessageDigest
-      .getInstance("SHA-256")
-      .digest(java.nio.file.Paths.get(dir).toAbsolutePath.normalize.toString
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      .take(8).map(b => f"$b%02x").mkString
-    val tables = spark.catalog.listTables().collect().map(_.name)
-      .filter(_.startsWith(prefix))
-    assert(tables.length == 1, s"stale snapshot tables: ${tables.mkString(",")}")
-    // and the NEXT merge, five generations in, still scans the store
-    // bucketed with at most the batch-side Exchange
-    val batch = normalized(10L -> """{"id":10,"type":"comment","time":100}""")
-    val merged = graft.operators.Merge.upsert(st.current(), batch, "id",
-      st.coalesceCols, st.overwriteCols, precedenceCols = Seq("retrieved"))
-    val plan = merged.queryExecution
-      .explainString(ExplainMode.fromString("formatted"))
-    assert(plan.contains("Bucketed: true"), s"store scan not bucketed:\n$plan")
-    assert(graft.PlanChecks.shuffleExchanges(plan) == 1,
-      s"expected exactly the batch-side Exchange:\n$plan")
-    // resume + replay through the runner path stays idempotent on buckets
-    LivestreamRunner.run(spark, st,
-      new FakeFetcher(items + (10L ->
-        """{"id":10,"type":"comment","by":"u10","time":100}"""), maxId = 10),
-      maxItems = 1, commitPeriod = 2, sleep = _ => (), now = () => 600L)
-    assert(st.current().count() == 10)
-    assert(st.latestId().contains(10L))
-  }
-
-  private def dirBytes(p: java.nio.file.Path): Long = {
-    import scala.jdk.CollectionConverters._
-    val s = Files.walk(p)
-    try s.iterator().asScala.filter(Files.isRegularFile(_))
-      .map(Files.size).sum
-    finally s.close()
-  }
-
-  test("delta-mode merge writes O(batch) per commit, not O(store)") {
-    val dir = Files.createTempDirectory("graft-store-delta")
-    val st = new ItemStore(spark, dir.toString, compactEvery = 100)
-    st.init()
-    // seed a "large" store state: one 60-row batch
-    st.merge(Item.normalize((1L to 60L).map(i =>
-      i -> s"""{"id":$i,"type":"comment","by":"u$i","time":${i * 10}}""")
-      .toDF("id", "body"), lit(100L)))
-    def entries() = {
-      import scala.jdk.CollectionConverters._
-      val s = Files.list(dir)
-      try s.iterator().asScala.map(_.getFileName.toString)
-        .filter(d => d.startsWith("snap-") || d.startsWith("delta-")).toSet
-      finally s.close()
-    }
-    val before = entries()
-    val baseBytes = before.map(d => dirBytes(dir.resolve(d))).sum
-    // five 1-row merges: each must add EXACTLY one delta directory and
-    // leave every pre-existing directory byte-identical (no rewrite)
-    (61L to 65L).foreach { i =>
-      val snapshot = entries()
-      val snapshotBytes = snapshot.map(d => d -> dirBytes(dir.resolve(d))).toMap
-      st.merge(normalized(i -> s"""{"id":$i,"type":"comment","time":${i * 10}}"""))
-      val now = entries()
-      val added = now -- snapshot
-      assert(added.size == 1 && added.head.startsWith("delta-"),
-        s"expected one new delta dir, got $added")
-      snapshot.foreach { d =>
-        assert(dirBytes(dir.resolve(d)) == snapshotBytes(d),
-          s"pre-existing dir $d was rewritten")
-      }
-      // a 1-row delta must be far smaller than the accumulated base
-      assert(dirBytes(dir.resolve(added.head)) < baseBytes,
-        "delta write is not O(batch)")
-    }
-    assert(st.current().count() == 65)
-    assert(st.latestId().contains(65L))
-  }
-
-  test("delta-mode store matches replace-mode semantics exactly") {
-    val deltaSt = new ItemStore(spark,
-      Files.createTempDirectory("graft-store-dsem").toString, compactEvery = 100)
-    val fullSt = freshStore()
-    deltaSt.init()
-    val batches = Seq(
-      Seq(1L -> """{"id":1,"type":"story","by":"alice","time":50,"score":10,"title":"t1"}""",
-        2L -> """{"id":2,"type":"comment","by":"bob","time":60,"text":"hi"}"""),
-      // id 1 re-crawled: score/author null (coalesce keeps), descendants
-      // appears (overwrite applies); id 3 new
-      Seq(1L -> """{"id":1,"type":"story","time":50,"descendants":5}""",
-        3L -> """{"id":3,"type":"comment","by":"eve","time":70}"""),
-      // id 1 again: author returns with a NEW value (latest non-null wins),
-      // descendants null-out is impossible (overwrite via absent field →
-      // null overwrites!) — exactly the asymmetry worth pinning across 3 deltas
-      Seq(1L -> """{"id":1,"type":"story","by":"alice2","time":50}"""))
-    batches.zipWithIndex.foreach { case (b, i) =>
-      val n = Item.normalize(b.toDF("id", "body"), lit(100L + i))
-      deltaSt.merge(n); fullSt.merge(n)
-    }
-    def asMap(st: ItemStore) = st.current().collect()
-      .map(r => r.getAs[Long]("id") -> r.toSeq).toMap
-    assert(asMap(deltaSt) == asMap(fullSt))
-    // replay the last batch: both stay idempotent and equal
-    val replay = Item.normalize(batches.last.toDF("id", "body"), lit(102L))
-    deltaSt.merge(replay); fullSt.merge(replay)
-    assert(asMap(deltaSt) == asMap(fullSt))
-  }
-
-  test("delta log compacts to one snapshot at compactEvery, preserving rows") {
-    val dir = Files.createTempDirectory("graft-store-compact")
-    val st = new ItemStore(spark, dir.toString, compactEvery = 3)
-    st.init()
-    (1 to 7).foreach { i =>
-      st.merge(normalized(
-        i.toLong -> s"""{"id":$i,"type":"comment","time":${i * 10}}"""))
-    }
-    // 7 merges at compactEvery=3: compactions at merge 3 and 6, then one
-    // trailing delta — manifest holds one base + one delta, old dirs GC'd
-    import scala.jdk.CollectionConverters._
-    val listing = Files.list(dir)
-    val dirs = try listing.iterator().asScala.map(_.getFileName.toString)
-      .filter(d => d.startsWith("snap-") || d.startsWith("delta-")).toList
-    finally listing.close()
-    assert(dirs.count(_.startsWith("snap-")) == 1, s"stale bases: $dirs")
-    assert(dirs.count(_.startsWith("delta-")) == 1, s"deltas not GC'd: $dirs")
-    assert(st.current().count() == 7)
-    assert(st.latestId().contains(7L))
-  }
-
-  test("bucketed delta store: merge-on-read keeps the base scan Exchange-free") {
-    import org.apache.spark.sql.execution.ExplainMode
-    val dir = Files.createTempDirectory("graft-store-bdelta").toString
-    val st = new ItemStore(spark, dir, buckets = 4, compactEvery = 100)
-    st.init()
-    st.merge(normalized(
-      1L -> """{"id":1,"type":"story","by":"a","time":10}""",
-      2L -> """{"id":2,"type":"story","by":"b","time":20}"""))
-    st.merge(normalized(3L -> """{"id":3,"type":"story","by":"c","time":30}"""))
-    // current() = upsert(bucketed base, folded deltas): the base must scan
-    // bucketed with no Exchange above it; only the (tiny) delta fold and
-    // its join alignment may shuffle
-    val plan = st.current().queryExecution
-      .explainString(ExplainMode.fromString("formatted"))
-    assert(plan.contains("Bucketed: true"), s"base scan not bucketed:\n$plan")
-    assert(graft.PlanChecks.shuffleExchanges(plan) <= 2,
-      s"store side shuffled:\n$plan")
-    assert(st.current().count() == 3)
-    assert(st.latestId().contains(3L))
-  }
-
-  test("livestream runner over a delta-log store drains and compacts") {
-    val dir = Files.createTempDirectory("graft-store-ls-delta").toString
-    val st = new ItemStore(spark, dir, compactEvery = 3)
-    val items = (1L to 9L).map(i =>
-      i -> s"""{"id":$i,"type":"comment","by":"u$i","time":${i * 10}}""").toMap
-    val n = LivestreamRunner.run(spark, st, new FakeFetcher(items, maxId = 9),
-      maxItems = 9, commitPeriod = 2, sleep = _ => (), now = () => 500L)
-    assert(n == 9)
-    assert(st.current().count() == 9)
-    assert(st.latestId().contains(9L))
-    // resume across a fresh instance (manifest is the durable truth)
-    val st2 = new ItemStore(spark, dir, compactEvery = 3)
-    LivestreamRunner.run(spark, st2,
-      new FakeFetcher(items + (10L ->
-        """{"id":10,"type":"comment","by":"u10","time":100}"""), maxId = 10),
-      maxItems = 1, commitPeriod = 2, sleep = _ => (), now = () => 600L)
-    assert(st2.current().count() == 10)
   }
 
   test("livestream runner drains batches into the store idempotently") {
@@ -484,8 +202,8 @@ class ItemStoreSpec extends AnyFunSuite {
 
   private val itemCols = Item.schema.fieldNames.toIndexedSeq.map(col)
 
-  /** The replace-mode semantics every store mode must reproduce: one
-    * upsert of each batch into the previous state. */
+  /** The reference semantics the store must reproduce: one upsert of
+    * each batch into the previous state. */
   private def upsertRef(ref: org.apache.spark.sql.DataFrame, batch: org.apache.spark.sql.DataFrame,
                         st: ItemStore) =
     graft.operators.Merge.upsert(ref, batch, "id", st.coalesceCols, st.overwriteCols,
@@ -877,44 +595,277 @@ class ItemStoreSpec extends AnyFunSuite {
     assert(spark.experimental.extraStrategies.count(_ == IdRangeScan) == 1)
   }
 
+  // ---- one layout: what the removed bucketed and delta-log modes did ----
+
+  private def catalogTables(): Set[String] =
+    spark.catalog.listTables().collect().map(_.name).toSet
+
+  private def story(i: Long) = i -> s"""{"id":$i,"type":"story","time":$i}"""
+
+  test("bucketed table reuse verifies location — stale/colliding entries fail loud") {
+    // the store keeps no catalog state: reads resolve through the manifest
+    // alone, so a catalog table named the way the bucketed layout named its
+    // snapshots, pointing at another store, changes nothing; init, appends,
+    // an update, reads, a reopen and an orphan sweep register no table
+    val dir = Files.createTempDirectory("graft-store-catalog")
+    val other = Files.createTempDirectory("graft-store-catalog-other")
+    val hex = java.security.MessageDigest.getInstance("SHA-256")
+      .digest(dir.toAbsolutePath.normalize.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      .take(8).map(b => f"$b%02x").mkString
+    val stale = s"graft_snap_${hex}_snap_0"
+    spark.sql(s"CREATE TABLE $stale (id BIGINT) USING PARQUET LOCATION '$other'")
+    try {
+      val before = catalogTables()
+      val st = new ItemStore(spark, dir.toString)
+      st.init()
+      st.merge(normalized((1L to 20L).map(story): _*))
+      st.merge(normalized(story(21L)))
+      st.merge(normalized(3L -> """{"id":3,"type":"story","time":3,"by":"x"}"""))
+      Files.createDirectories(dir.resolve("snap-99999"))
+      val reopened = new ItemStore(spark, dir.toString)
+      reopened.init()
+      assert(!Files.exists(dir.resolve("snap-99999")))
+      assert(reopened.current().count() == 21 && reopened.latestId().contains(21L) && reopened.count() == 21)
+      assert(reopened.current().filter(col("id") === 3L).select("author").head().getString(0) == "x")
+      assert(catalogTables() == before)
+    } finally spark.sql(s"DROP TABLE IF EXISTS $stale")
+  }
+
+  test("bucket spec mismatch fails loud instead of corrupting joins") {
+    // stores the removed layouts wrote, made by hand: a bucketed manifest,
+    // and a delta directory after the base. Every entry point refuses
+    // them, naming the store and the offending line or directory, before
+    // it writes anything
+    def handMade(manifest: String, dirs: (String, Seq[Long])*): java.nio.file.Path = {
+      val dir = Files.createTempDirectory("graft-store-removed")
+      dirs.foreach { case (d, ids) =>
+        normalized(ids.map(story): _*).write.parquet(dir.resolve(d).toString)
+      }
+      Files.write(dir.resolve("current"), manifest.getBytes)
+      dir
+    }
+    val bucketed = handMade("#bucketed-by id 4\nsnap-1", "snap-1" -> (1L to 10L))
+    val deltas = handMade("snap-1\nseg-2\ndelta-3",
+      "snap-1" -> (1L to 10L), "seg-2" -> Seq(11L, 12L), "delta-3" -> Seq(2L, 13L))
+    for ((dir, offending) <- Seq(bucketed -> "#bucketed-by id 4", deltas -> "delta-3")) {
+      val manifest = Files.readString(dir.resolve("current"))
+      val dirs = storeDirs(dir.toString)
+      val st = new ItemStore(spark, dir.toString)
+      val ops = Seq[(String, () => Any)]("init" -> (() => st.init()),
+        "current" -> (() => st.current()), "latestId" -> (() => st.latestId()),
+        "count" -> (() => st.count()), "merge" -> (() => st.merge(normalized(story(20L)))),
+        "recrawlIds" -> (() => st.recrawlIds(1, onlyMature = false, now = 0L)),
+        "livestream" -> (() => LivestreamRunner.run(spark, st,
+          new FakeFetcher(Map(20L -> story(20L)._2), maxId = 20), maxItems = 1)))
+      ops.foreach { case (op, f) =>
+        val e = intercept[IllegalStateException](f())
+        assert(e.getMessage.contains(dir.toString) && e.getMessage.contains(offending) &&
+          e.getMessage.contains("no longer supported"), s"$op: ${e.getMessage}")
+      }
+      assert(Files.readString(dir.resolve("current")) == manifest && storeDirs(dir.toString) == dirs,
+        s"a refused store was changed: $dir")
+    }
+  }
+
+  /** The number of shuffle exchanges in `df`'s formatted plan. */
+  private def exchanges(df: org.apache.spark.sql.DataFrame): Int =
+    graft.PlanChecks.shuffleExchanges(df.queryExecution.explainString(
+      org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
+
+  test("bucketed delta store: merge-on-read keeps the base scan Exchange-free") {
+    // reads never fold: on a base with segments, and on the base an update
+    // wrote, current() is one scan of the store with no exchange, join or
+    // aggregate
+    val st = freshStore()
+    st.merge(normalized((1L to 40L).map(story): _*))
+    st.merge(normalized(story(41L)))
+    st.merge(normalized(story(42L)))
+    def oneScan(clue: String): Unit = {
+      val plan = st.current().queryExecution.executedPlan.toString
+      assert(exchanges(st.current()) == 0 && !plan.contains("Join") && !plan.contains("Aggregate"),
+        s"$clue:\n$plan")
+    }
+    oneScan("base and segments")
+    st.merge(normalized(story(2L), story(43L)))
+    oneScan("updated base")
+    assert(st.current().count() == 43 && st.latestId().contains(43L))
+  }
+
+  test("bucketed store: second merge plans with no Exchange on the store side") {
+    // an append reads only the open tail and the batch: a clustered batch
+    // shuffles nothing, and the base stays byte-identical. An update, by
+    // contrast, shuffles for its join, so the counter is not vacuous
+    val dir = Files.createTempDirectory("graft-store-append-plan").toString
+    val st = new ItemStore(spark, dir)
+    st.init()
+    st.merge(normalized((1L to 30L).map(story): _*))
+    val base = manifestOf(dir).head
+    val before = dirSizes(Paths.get(dir, base))
+    assert(shuffleBytes(st.merge(normalized(story(31L), story(32L)))) == 0L)
+    assert(shuffleBytes(st.merge(normalized(story(33L)))) == 0L) // rewrites the tail
+    assert(manifestOf(dir).head == base && dirSizes(Paths.get(dir, base)) == before)
+    assert(shuffleBytes(st.merge(normalized(story(5L)))) > 0L)
+    assert(st.count() == 33L && st.latestId().contains(33L))
+  }
+
+  test("livestream runner on a bucketed store keeps merges Exchange-free") {
+    // every livestream commit is an append above the max id: five commits
+    // shuffle nothing, keep the clustered layout and register no catalog
+    // table; a resume picks up from the footers
+    val dir = Files.createTempDirectory("graft-store-ls-append").toString
+    val st = new ItemStore(spark, dir)
+    val items = (1L to 9L).map(i =>
+      i -> s"""{"id":$i,"type":"comment","by":"u$i","time":${i * 10}}""").toMap
+    val tables = catalogTables()
+    var n = 0L
+    // commitPeriod 2 → five micro-batch merges
+    assert(shuffleBytes { n = LivestreamRunner.run(spark, st, new FakeFetcher(items, maxId = 9),
+      maxItems = 9, commitPeriod = 2, sleep = _ => (), now = () => 500L) } == 0L)
+    assert(n == 9 && st.current().count() == 9 && st.latestId().contains(9L))
+    assert(manifestOf(dir).size > 1 && catalogTables() == tables)
+    assertLayout(dir, clusteredBase = true)
+    LivestreamRunner.run(spark, st,
+      new FakeFetcher(items + (10L ->
+        """{"id":10,"type":"comment","by":"u10","time":100}"""), maxId = 10),
+      maxItems = 1, commitPeriod = 2, sleep = _ => (), now = () => 600L)
+    assert(st.current().count() == 10 && st.latestId().contains(10L))
+    assertLayout(dir, clusteredBase = true)
+  }
+
+  test("delta log compacts to one snapshot at compactEvery, preserving rows") {
+    // one-row appends over a one-row base each seal at once: the manifest
+    // grows a segment per commit, and the next update folds them all back
+    // into one base snapshot, the superseded directories deleted
+    val dir = Files.createTempDirectory("graft-store-compact").toString
+    val st = new ItemStore(spark, dir)
+    st.init()
+    val batches = (1L to 7L).map(i => normalized(i -> s"""{"id":$i,"type":"comment","time":${i * 10}}"""))
+    batches.foreach(st.merge)
+    assert(manifestOf(dir).size == 7, manifestOf(dir))
+    val update = normalized(3L -> """{"id":3,"type":"comment","by":"c","time":30}""")
+    st.merge(update)
+    assert(manifestOf(dir).size == 1 && storeDirs(dir) == manifestOf(dir).toSet,
+      s"segments not folded: ${storeDirs(dir)}")
+    val ref = (batches :+ update).foldLeft(emptyItems)(upsertRef(_, _, st))
+    assert(rowsById(st.current()) == rowsById(ref))
+    assert(st.count() == 7 && st.latestId().contains(7L))
+    assertLayout(dir, clusteredBase = false)
+  }
+
+  private def dirBytes(p: java.nio.file.Path): Long = {
+    val s = Files.walk(p)
+    try s.iterator().asScala.filter(Files.isRegularFile(_)).map(Files.size).sum
+    finally s.close()
+  }
+
+  test("delta-mode merge writes O(batch) per commit, not O(store)") {
+    // five one-row appends onto a 60-row base: each commit writes one new
+    // tail directory, far smaller than the base, in place of the previous
+    // tail, and leaves every other directory byte-identical
+    val dir = Files.createTempDirectory("graft-store-otail")
+    val st = new ItemStore(spark, dir.toString)
+    st.init()
+    st.merge(Item.normalize((1L to 60L).map(i =>
+      i -> s"""{"id":$i,"type":"comment","by":"u$i","time":${i * 10}}""")
+      .toDF("id", "body"), lit(100L)))
+    val baseBytes = dirBytes(dir.resolve(manifestOf(dir.toString).head))
+    (61L to 65L).foreach { i =>
+      val entries = manifestOf(dir.toString)
+      val bytes = entries.map(d => d -> dirBytes(dir.resolve(d))).toMap
+      st.merge(normalized(i -> s"""{"id":$i,"type":"comment","time":${i * 10}}"""))
+      val now = manifestOf(dir.toString)
+      val added = now.toSet -- entries
+      assert(added.size == 1 && added.head.startsWith("seg-") && now.last == added.head,
+        s"expected one new tail, got $added")
+      assert((entries.toSet -- now).forall(_.startsWith("seg-")), "the base left the manifest")
+      now.init.foreach(d => assert(dirBytes(dir.resolve(d)) == bytes(d), s"$d was rewritten"))
+      assert(dirBytes(dir.resolve(added.head)) < baseBytes, "the tail write is not O(tail)")
+    }
+    assert(st.current().count() == 65 && st.latestId().contains(65L))
+    assertLayout(dir.toString, clusteredBase = true)
+  }
+
+  test("delta-mode store matches replace-mode semantics exactly") {
+    // the reference's NULL asymmetry across three merges of id 1 (and a
+    // replay): coalesce columns keep the stored value on incoming NULL and
+    // take the latest non-NULL one, overwrite columns take the incoming
+    // value even when it is NULL
+    val st = freshStore()
+    val batches = Seq(
+      Seq(1L -> """{"id":1,"type":"story","by":"alice","time":50,"score":10,"title":"t1"}""",
+        2L -> """{"id":2,"type":"comment","by":"bob","time":60,"text":"hi"}"""),
+      // id 1 re-crawled: author/score/title absent (kept), descendants
+      // appears (overwrites); id 3 new
+      Seq(1L -> """{"id":1,"type":"story","time":50,"descendants":5}""",
+        3L -> """{"id":3,"type":"comment","by":"eve","time":70}"""),
+      // id 1 again: a new author wins; descendants absent, so NULL overwrites
+      Seq(1L -> """{"id":1,"type":"story","by":"alice2","time":50}"""))
+    var ref = emptyItems
+    batches.zipWithIndex.foreach { case (b, i) =>
+      val n = Item.normalize(b.toDF("id", "body"), lit(100L + i))
+      st.merge(n)
+      ref = upsertRef(ref, n, st)
+      assert(rowsById(st.current()) == rowsById(ref), s"batch $i")
+    }
+    val one = st.current().filter(col("id") === 1L).head()
+    assert(one.getAs[String]("author") == "alice2" && one.getAs[Long]("score") == 10L &&
+      one.getAs[String]("title") == "t1" && one.isNullAt(one.fieldIndex("descendants")) &&
+      one.getAs[Long]("retrieved") == 102L)
+    // replay the last batch: idempotent, still equal to the reference
+    val replay = Item.normalize(batches.last.toDF("id", "body"), lit(102L))
+    st.merge(replay)
+    ref = upsertRef(ref, replay, st)
+    assert(rowsById(st.current()) == rowsById(ref))
+  }
+
+  test("livestream runner over a delta-log store drains and compacts") {
+    // the runner drains into base and segments; a recrawl folds them into
+    // one base; a fresh instance resumes from that base's footers
+    val dir = Files.createTempDirectory("graft-store-ls-fold").toString
+    val st = new ItemStore(spark, dir)
+    val items = (1L to 9L).map(i =>
+      i -> s"""{"id":$i,"type":"comment","by":"u$i","time":${i * 10}}""").toMap
+    val n = LivestreamRunner.run(spark, st, new FakeFetcher(items, maxId = 9),
+      maxItems = 9, commitPeriod = 2, sleep = _ => (), now = () => 500L)
+    assert(n == 9 && st.current().count() == 9 && st.latestId().contains(9L))
+    assert(manifestOf(dir).size > 1)
+    st.merge(normalized(2L -> """{"id":2,"type":"comment","by":"v2","time":20}""",
+      5L -> """{"id":5,"type":"comment","time":50}"""))
+    assert(manifestOf(dir).size == 1)
+    val st2 = new ItemStore(spark, dir)
+    LivestreamRunner.run(spark, st2,
+      new FakeFetcher(items + (10L ->
+        """{"id":10,"type":"comment","by":"u10","time":100}"""), maxId = 10),
+      maxItems = 1, commitPeriod = 2, sleep = _ => (), now = () => 600L)
+    assert(st2.current().count() == 10 && st2.latestId().contains(10L))
+    val byId = rowsById(st2.current().select("id", "author"))
+    assert(byId(2L) == Seq(2L, "v2") && byId(5L) == Seq(5L, "u5") && byId(10L) == Seq(10L, "u10"))
+  }
+
   test("a delta-log store reopened with defaults, and a clustered store " +
     "reopened as a delta log, read and merge the same rows") {
+    // the manifest and the files are the whole store: a fresh instance for
+    // every merge, and one kept across them all, read the same rows as
+    // sequential upserts, through appends and updates
     val rnd = new scala.util.Random(9)
     def batch(ids: Seq[Long], at: Long) =
       Item.normalize(ids.map(i => i -> randomBody(rnd, i)).toDF("id", "body"), lit(at))
     val batches = Seq(batch(1L to 20L, 100), batch(21L to 25L, 101),
       batch(Seq(3L, 22L, 26L), 102), batch(27L to 30L, 103), batch(Seq(1L, 31L), 104))
-    val probe = freshStore() // only for its column groups
-    val refs = batches.scanLeft(emptyItems)((r, b) => upsertRef(r, b, probe)).tail
-    // delta log → defaults: reads fold the deltas; the next default merge
-    // (an append) upserts everything into one base
-    val dDir = Files.createTempDirectory("graft-store-d2c").toString
-    val delta = new ItemStore(spark, dDir, compactEvery = 10)
-    delta.init()
-    batches.take(3).foreach(delta.merge)
-    val reopened = new ItemStore(spark, dDir)
-    // deltas overlap: the reopened store folds them, not the file index
-    assert(ItemStore.childrenOf(reopened.current()).isEmpty)
-    assert(rowsById(reopened.current()) == rowsById(refs(2)))
-    assert(reopened.latestId().contains(26L) && reopened.count() == 26L)
-    reopened.merge(batches(3))
-    assert(rowsById(reopened.current()) == rowsById(refs(3)))
-    assertLayout(dDir, clusteredBase = false)
-    // clustered → delta log: segments fold like deltas; back to defaults
-    val cDir = Files.createTempDirectory("graft-store-c2d").toString
-    val clustered = new ItemStore(spark, cDir)
-    clustered.init()
-    batches.take(2).foreach(clustered.merge)
-    assert(manifestOf(cDir).exists(_.startsWith("seg-")))
-    val asLog = new ItemStore(spark, cDir, compactEvery = 10)
-    assert(rowsById(asLog.current()) == rowsById(refs(1)))
-    asLog.merge(batches(2))
-    asLog.merge(batches(3))
-    assert(rowsById(asLog.current()) == rowsById(refs(3)))
-    val back = new ItemStore(spark, cDir)
-    assert(rowsById(back.current()) == rowsById(refs(3)))
-    back.merge(batches(4))
-    assert(rowsById(back.current()) == rowsById(refs(4)))
-    assertLayout(cDir, clusteredBase = false)
+    val dir = Files.createTempDirectory("graft-store-reopen").toString
+    val kept = new ItemStore(spark, dir)
+    kept.init()
+    var ref = emptyItems
+    batches.zipWithIndex.foreach { case (b, i) =>
+      new ItemStore(spark, dir).merge(b)
+      ref = upsertRef(ref, b, kept)
+      val fresh = new ItemStore(spark, dir)
+      for ((st, which) <- Seq(fresh -> "fresh", kept -> "kept")) {
+        val clue = s"batch $i, $which instance"
+        assert(rowsById(st.current()) == rowsById(ref), clue)
+        assert(st.count() == ref.count() && st.latestId() == Some(ref.agg(max("id")).head().getLong(0)), clue)
+      }
+    }
+    assertLayout(dir, clusteredBase = false)
   }
 }

@@ -2,15 +2,18 @@ package graft.store
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** [[Snapshots.init]] on a new store: an unbucketed store's empty `snap-0`
-  * is an empty directory, made with no Spark job; every mode reads it
-  * back as 0 rows and then writes as usual, and a `snap-0` written as an
-  * empty parquet table still opens. */
+/** [[Snapshots.init]] on a new store: the empty `snap-0` is an empty
+  * directory, made with no Spark job; every write shape reads it back as
+  * 0 rows and then writes as usual, and a `snap-0` written as an empty
+  * parquet table still opens. A store the removed bucketed layout wrote
+  * fails loud. */
 class SnapshotsInitSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -41,7 +44,7 @@ class SnapshotsInitSpec extends AnyFunSuite {
       val s = new Snapshots(spark, root, schema,
         partitionByCol = if (partitioned) Some("p") else None, compactEvery = 2)
       assert(countJobs(s.init()) == 0)
-      assert(s.read().count() == 0 && s.readBase().count() == 0 && s.readDeltas().isEmpty)
+      assert(s.read().count() == 0 && s.readBase().count() == 0 && s.deltaCount == 0)
       s
     }
     // replace
@@ -68,12 +71,30 @@ class SnapshotsInitSpec extends AnyFunSuite {
   }
 
   test("a bucketed store keeps its table write and reads it empty, then merges") {
-    val root = Files.createTempDirectory("graft-snap-init-b").toString
-    val s = new Snapshots(spark, root, schema, bucketBy = Some(("k", 2)))
-    s.init()
-    assert(s.read().count() == 0)
-    s.replace(batch.toDF("k", "p"))
-    assert(rows(s) == batch.toSet)
+    // a manifest the bucketed layout wrote, made by hand: every read and
+    // write refuses it, naming the store and the line, before it changes
+    // a file
+    val root = Files.createTempDirectory("graft-snap-init-b")
+    batch.toDF("k", "p").write.parquet(root.resolve("snap-1").toString)
+    val manifest = "#bucketed-by k 2\nsnap-1"
+    Files.write(root.resolve("current"), manifest.getBytes)
+    val s = new Snapshots(spark, root.toString, schema)
+    val ops = Seq[(String, () => Any)]("init" -> (() => s.init()), "read" -> (() => s.read()),
+      "readBase" -> (() => s.readBase()), "live" -> (() => s.live),
+      "deltaCount" -> (() => s.deltaCount), "replace" -> (() => s.replace(batch.toDF("k", "p"))),
+      "appendDelta" -> (() => s.appendDelta(batch.toDF("k", "p"))),
+      "commit" -> (() => s.commit(batch.toDF("k", "p"))),
+      "appendSegment" -> (() => s.appendSegment(batch.toDF("k", "p"), replaceLast = false)))
+    ops.foreach { case (op, f) =>
+      val e = intercept[IllegalStateException](f())
+      assert(e.getMessage.contains(root.toString) && e.getMessage.contains("#bucketed-by k 2") &&
+        e.getMessage.contains("no longer supported"), s"$op: ${e.getMessage}")
+    }
+    assert(Files.readString(root.resolve("current")) == manifest)
+    val listing = Files.list(root)
+    try assert(listing.iterator().asScala.map(_.getFileName.toString).toSet == Set("current", "snap-1"))
+    finally listing.close()
+    assert(spark.read.parquet(root.resolve("snap-1").toString).as[(Long, Long)].collect().toSet == batch.toSet)
   }
 
   test("a snap-0 written as an empty parquet table still opens") {

@@ -55,8 +55,5 @@ class SnapshotsPartitionSpec extends AnyFunSuite {
     val other = new Snapshots(spark, root, schema, partitionByCol = Some("k"))
     val e2 = intercept[IllegalStateException](other.read())
     assert(e2.getMessage.contains("partition layout"))
-    // bucketing and partitioning are exclusive layouts
-    intercept[IllegalArgumentException](new Snapshots(spark, root, schema,
-      bucketBy = Some(("k", 4)), partitionByCol = Some("p")))
   }
 }
