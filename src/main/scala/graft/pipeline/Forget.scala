@@ -61,12 +61,12 @@ import graft.streaming.{StreamBoilerplate, StreamCuration, StreamDataCard, Strea
   *  - `StreamRetrieval` / `StreamVectorIndex` maintain the standing
   *    BM25 / IVF indexes (`bm25IndexDir`/`vectorIndexDir` legs).
   *  - [[StreamDataCard]] / `StreamValueHist` (StreamStats) /
-  *    [[StreamBoilerplate]] counts: additive accumulators with exact
-  *    `retract` decrements (`card`/`boiler`/`cdcBoiler` legs; a
-  *    ValueHist is retracted through its own `retract` — it tracks
-  *    whatever value column the deployment feeds it, so the caller
-  *    supplies the deleted rows' values the same way the card leg
-  *    does).
+  *    [[StreamBoilerplate]] counts: additive [[graft.store.CountLog]]s
+  *    with exact `retract` decrements, loud on a negative total
+  *    (`card`/`boiler`/`cdcBoiler` legs; a ValueHist is retracted
+  *    through its own `retract` — it tracks whatever value column the
+  *    deployment feeds it, so the caller supplies the deleted rows'
+  *    values the same way the card leg does).
   *
   * NO per-document standing state — deletion waiver, with the reason:
   *  - `StreamDedup` (`flatMapGroupsWithState` first-per-key): its state

@@ -25,7 +25,11 @@ import org.apache.spark.sql.types.StructType
   *  - [[commit]] — the delta-log commit policy every streaming writer
   *    shares: skip an empty delta, append, and compact once
   *    [[deltaCount]] reaches `compactEvery` — amortized
-  *    O(store / compactEvery) per batch.
+  *    O(store / compactEvery) per batch. Its two store users are
+  *    [[ClaimLog]] (first-writer-wins keys; compacts to [[read]]) and
+  *    [[CountLog]] (signed counts; compacts to the per-key sums); the
+  *    append-only `Trending` and `SessionPipeline` logs call it
+  *    directly.
   *  - [[appendSegment]] — adds one `seg-` directory after the last
   *    manifest entry, or in place of it. A writer that keeps every entry
   *    disjoint on its key (the clustered [[ItemStore]]) grows its open
@@ -189,8 +193,8 @@ final class Snapshots(spark: SparkSession, root: String, schema: StructType,
     * appended under `token` ([[appendDelta]]'s replay protection), and
     * once [[deltaCount]] reaches `compactEvery` the log folds into one
     * base via `replace(compacted)`. `compacted` is evaluated only then:
-    * [[read]] for first-writer-wins stores, the signed-count fold for
-    * additive ones. Callers materialize `delta` first when its plan is
+    * [[read]] for first-writer-wins stores ([[ClaimLog]]), the
+    * signed-count fold for additive ones ([[CountLog]]). Callers materialize `delta` first when its plan is
     * not already cheap to run twice. */
   def commit(delta: DataFrame, token: Option[String] = None,
              compacted: => DataFrame = read()): Unit =

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.store.ClaimLog
+import graft.store.{ClaimLog, Snapshots}
 
 /** The shared CLAIMS core of the 64-bit perceptual-hash streaming twins
   * ([[IncrementalImageDedup]], [[IncrementalAudioDedup]]): band a
@@ -92,7 +92,7 @@ object IncrementalBanded64 {
   * drops against stored claimant hashes, replay-stable, undecodable
   * clips pass unexamined. */
 final class IncrementalAudioDedup(spark: SparkSession, root: String,
-                                  compactEvery: Int = 16,
+                                  compactEvery: Int = Snapshots.DefaultCompactEvery,
                                   maxHamming: Int = 3)
     extends IncrementalBanded64(spark, root, compactEvery, maxHamming) {
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.operators.Dedup
-import graft.store.ClaimLog
+import graft.store.{ClaimLog, Snapshots}
 
 /** Streaming twin of the CDC partial-overlap dedup tier (q143-q146,
   * [[Dedup.cdcDupStats]]/[[Dedup.cdcPairs]]) — per-CHUNK first-writer
@@ -42,7 +42,7 @@ import graft.store.ClaimLog
 final class IncrementalCdcDedup(spark: SparkSession, root: String,
                                 window: Int = 8, maskBits: Int = 5,
                                 minDupPpm: Long = 500000L,
-                                compactEvery: Int = 16)
+                                compactEvery: Int = Snapshots.DefaultCompactEvery)
     extends ClaimLog(spark, root, IncrementalCdcDedup.claimsSchema,
       compactEvery = compactEvery) {
   require(minDupPpm >= 1L && minDupPpm <= 1000000L,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, LongType, StringType, StructField, StructType}
 
-import graft.store.ClaimLog
+import graft.store.{ClaimLog, Snapshots}
 
 /** Near-duplicate dedup under continuous ingestion: each micro-batch is
   * filtered against a persistent MinHash band-bucket index, then claims its
@@ -32,7 +32,7 @@ import graft.store.ClaimLog
   * unchanged.
   */
 final class IncrementalDedup(spark: SparkSession, root: String,
-                             compactEvery: Int = 16)
+                             compactEvery: Int = Snapshots.DefaultCompactEvery)
     extends ClaimLog(spark, root, IncrementalDedup.schema,
       compactEvery = compactEvery) {
 
@@ -112,7 +112,7 @@ object IncrementalDedup {
   * dropped (outside the family contract, same as the batch operators).
   */
 final class IncrementalEmbedDedup(spark: SparkSession, root: String,
-                                  compactEvery: Int = 16,
+                                  compactEvery: Int = Snapshots.DefaultCompactEvery,
                                   minCos: Double = 0.9)
     extends ClaimLog(spark, root, IncrementalEmbedDedup.schema,
       compactEvery = compactEvery) {

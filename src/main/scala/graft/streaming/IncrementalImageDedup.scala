@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.multimodal.ImageDedup
+import graft.store.Snapshots
 
 /** [[IncrementalDedup]] for IMAGE columns — the streaming twin of
   * [[graft.multimodal.ImageDedup]]: banded dHash candidates against a
@@ -20,7 +21,7 @@ import graft.multimodal.ImageDedup
   * compaction. Undecodable payloads carry no hash: they pass through
   * unexamined and claim nothing — garbage must never block a bucket. */
 final class IncrementalImageDedup(spark: SparkSession, root: String,
-                                  compactEvery: Int = 16,
+                                  compactEvery: Int = Snapshots.DefaultCompactEvery,
                                   maxHamming: Int = 3)
     extends IncrementalBanded64(spark, root, compactEvery, maxHamming) {
 

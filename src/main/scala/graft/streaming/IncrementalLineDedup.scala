@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 import graft.operators.Dedup
-import graft.store.ClaimLog
+import graft.store.{ClaimLog, Snapshots}
 
 /** LINE-granularity keep-first dedup under continuous ingestion — the
   * streaming twin of [[graft.operators.Dedup.dedupLinesKeepFirst]] (the
@@ -44,7 +44,7 @@ import graft.store.ClaimLog
   * line; at 100 TB the same log becomes a key-value table bucketed by lhv.
   */
 final class IncrementalLineDedup(spark: SparkSession, root: String,
-                                 compactEvery: Int = 16)
+                                 compactEvery: Int = Snapshots.DefaultCompactEvery)
     extends ClaimLog(spark, root, IncrementalLineDedup.schema, "cid",
       compactEvery) {
 

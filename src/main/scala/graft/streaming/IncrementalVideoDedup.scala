@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
 
-import graft.store.ClaimLog
+import graft.store.{ClaimLog, Snapshots}
 
 /** Streaming VIDEO near-dup claims — [[graft.multimodal.VideoDedup]]'s
   * frame-fingerprint VOTING through the claims-store discipline: each
@@ -39,7 +39,7 @@ import graft.store.ClaimLog
   * depth-triggered compaction, replay-stable (a replayed claimant
   * passes and never double-claims). */
 final class IncrementalVideoDedup(spark: SparkSession, root: String,
-                                  compactEvery: Int = 16,
+                                  compactEvery: Int = Snapshots.DefaultCompactEvery,
                                   maxHamming: Int = 3,
                                   minMatch: Int =
                                     graft.multimodal.VideoDedup.DefaultMinMatch)

@@ -5,14 +5,14 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.operators.Dedup
-import graft.store.Snapshots
+import graft.store.{CountLog, Snapshots}
 
 /** Incremental cross-document boilerplate DETECTION under continuous
   * ingestion — the streaming half of [[graft.operators.Dedup
   * .scrubDupSpans]], split where the semantics split:
   *
   *  - MEASUREMENT is incremental: each micro-batch appends its per-chunk
-  *    distinct-document counts to a crash-atomic [[Snapshots]] store.
+  *    distinct-document counts to a crash-atomic [[CountLog]].
   *    The counts are ADDITIVE across batches with no sketch and no
   *    approximation, because a document belongs to exactly one batch —
   *    the per-batch `COUNT(DISTINCT id)` values for a chunk hash sum to
@@ -35,29 +35,31 @@ import graft.store.Snapshots
   */
 object StreamBoilerplate {
 
-  private val countsSchema = StructType(Seq(
-    StructField("hv", LongType, nullable = false),
-    StructField("nd", LongType, nullable = false)))
+  /** A chunk-count log: one (key, nd) row per chunk hash. */
+  private def countLog(spark: SparkSession, dir: String, key: String,
+                       compactEvery: Int): CountLog = {
+    val log = new CountLog(spark, dir, StructType(Seq(
+      StructField(key, LongType, nullable = false),
+      StructField("nd", LongType, nullable = false))), key, compactEvery)
+    log.init()
+    log
+  }
 
   /** The chunk-count store + per-batch accumulator. */
   final class ChunkCounts(spark: SparkSession, dir: String, val span: Int,
-                          compactEvery: Int = 16) {
-    private val store = new Snapshots(spark, dir, countsSchema,
-      compactEvery = compactEvery)
-    store.init()
+                          compactEvery: Int = Snapshots.DefaultCompactEvery) {
+    private val log = countLog(spark, dir, "hv", compactEvery)
 
     /** Observe one micro-batch: append its per-chunk distinct-doc counts
       * (batch-id token → replays are no-ops), compacting by additive
-      * merge every `compactEvery` deltas. */
+      * merge every `compactEvery` deltas. A batch whose documents are
+      * all shorter than one span contributes no counts and appends
+      * nothing. */
     def observe(batch: DataFrame, idCol: String, textCol: String,
-                batchId: Long): Unit = {
-      val counts = Dedup.chunkCoords(batch, idCol, textCol, span)
-        .groupBy("hv").agg(countDistinct(col("id")).as("nd"))
-        .localCheckpoint(true)
-      // a batch whose documents are all shorter than one span contributes
-      // no counts and appends nothing
-      store.commit(counts, Some(s"b$batchId"), merged())
-    }
+                batchId: Long): Unit =
+      log.add(Dedup.chunkCoords(batch, idCol, textCol, span)
+        .groupBy("hv").agg(countDistinct(col("id")).as("nd")),
+        s"b$batchId")
 
     /** RETRACT deleted documents' chunk contributions — the forget
       * cascade's boilerplate leg: a chunk whose every carrier was
@@ -69,31 +71,16 @@ object StreamBoilerplate {
       * event's replay token. Over-retraction fails loud at the next
       * [[dupChunks]] read. */
     def retract(deleted: DataFrame, idCol: String, textCol: String,
-                token: String): Unit = {
-      val counts = Dedup.chunkCoords(deleted, idCol, textCol, span)
-        .groupBy("hv").agg((-countDistinct(col("id"))).as("nd"))
-        .localCheckpoint(true)
-      store.commit(counts, Some(token), merged())
-    }
-
-    /** The merged (hv, nd) view across base + deltas; fully-retracted
-      * chunks (nd = 0) leave the view. */
-    private def merged(): DataFrame =
-      store.read().groupBy("hv").agg(sum(col("nd")).as("nd"))
-        .filter(col("nd") =!= 0)
+                token: String): Unit =
+      log.add(Dedup.chunkCoords(deleted, idCol, textCol, span)
+        .groupBy("hv").agg((-countDistinct(col("id"))).as("nd")), token)
 
     /** Chunk hashes currently at ≥ `minDocs` distinct documents. Fails
       * loud on a negative count (a retraction of documents never
       * observed). */
     def dupChunks(minDocs: Int): DataFrame = {
       require(minDocs >= 2, "minDocs must be >= 2")
-      val m = merged().localCheckpoint(true)
-      val neg = m.filter(col("nd") < 0).head(1)
-      require(neg.isEmpty,
-        s"chunk-count store holds a negative count " +
-          s"(${neg.headOption.getOrElse("")}) — a retraction exceeded " +
-          "what was observed")
-      m.filter(col("nd") >= minDocs).select("hv")
+      log.checkedTotals().filter(col("nd") >= minDocs).select("hv")
     }
   }
 
@@ -119,50 +106,28 @@ object StreamBoilerplate {
     * the accumulator counted. */
   final class CdcCounts(spark: SparkSession, dir: String,
                         val window: Int = 8, val maskBits: Int = 5,
-                        compactEvery: Int = 16) {
-    private val schema = StructType(Seq(
-      StructField("h", LongType, nullable = false),
-      StructField("nd", LongType, nullable = false)))
-    private val store = new Snapshots(spark, dir, schema,
-      compactEvery = compactEvery)
-    store.init()
+                        compactEvery: Int = Snapshots.DefaultCompactEvery) {
+    private val log = countLog(spark, dir, "h", compactEvery)
 
     def observe(batch: DataFrame, idCol: String, textCol: String,
-                batchId: Long): Unit = {
-      val counts = Dedup.cdcChunks(batch, idCol, textCol, window,
-        maskBits)
-        .groupBy("h").agg(countDistinct(col(idCol)).as("nd"))
-        .localCheckpoint(true)
-      store.commit(counts, Some(s"b$batchId"), merged())
-    }
+                batchId: Long): Unit =
+      log.add(Dedup.cdcChunks(batch, idCol, textCol, window, maskBits)
+        .groupBy("h").agg(countDistinct(col(idCol)).as("nd")),
+        s"b$batchId")
 
     /** The forget cascade's leg (the [[ChunkCounts.retract]]
       * contract): deleted carriers' chunk contributions fold in
       * negated under the event's replay token. */
     def retract(deleted: DataFrame, idCol: String, textCol: String,
-                token: String): Unit = {
-      val counts = Dedup.cdcChunks(deleted, idCol, textCol, window,
-        maskBits)
-        .groupBy("h").agg((-countDistinct(col(idCol))).as("nd"))
-        .localCheckpoint(true)
-      store.commit(counts, Some(token), merged())
-    }
-
-    private def merged(): DataFrame =
-      store.read().groupBy("h").agg(sum(col("nd")).as("nd"))
-        .filter(col("nd") =!= 0)
+                token: String): Unit =
+      log.add(Dedup.cdcChunks(deleted, idCol, textCol, window, maskBits)
+        .groupBy("h").agg((-countDistinct(col(idCol))).as("nd")), token)
 
     /** Chunk hashes currently at ≥ `minDocs` distinct documents; loud
       * on a negative count (over-retraction). */
     def dupChunks(minDocs: Int): DataFrame = {
       require(minDocs >= 2, "minDocs must be >= 2")
-      val m = merged().localCheckpoint(true)
-      val neg = m.filter(col("nd") < 0).head(1)
-      require(neg.isEmpty,
-        s"CDC chunk-count store holds a negative count " +
-          s"(${neg.headOption.getOrElse("")}) — a retraction exceeded " +
-          "what was observed")
-      m.filter(col("nd") >= minDocs).select("h")
+      log.checkedTotals().filter(col("nd") >= minDocs).select("h")
     }
   }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.operators.{Decontaminate, Dedup}
-import graft.store.ClaimLog
+import graft.store.{ClaimLog, Snapshots}
 
 /** The curation funnel under continuous ingestion — [[graft.pipeline
   * .Curation]]'s stages recomposed for `foreachBatch`, with the
@@ -105,7 +105,7 @@ object StreamCuration {
     * texts; at 2⁻⁶²-per-pair the false-drop expectation stays below one
     * document out to ~2³¹ distinct texts (docs/SCALE.md policy). */
   private def exactLog(spark: SparkSession, dir: String,
-                       compactEvery: Int = 16): ClaimLog =
+                       compactEvery: Int = Snapshots.DefaultCompactEvery): ClaimLog =
     new ClaimLog(spark, dir, StructType(Seq(
       StructField("bkey", LongType, nullable = false),
       StructField("claimant", LongType, nullable = false))),
@@ -115,7 +115,7 @@ object StreamCuration {
     * document that has shipped under the cap — a claim is a slot, so the
     * whole row is its key. */
   private def capLog(spark: SparkSession, dir: String,
-                     compactEvery: Int = 16): ClaimLog =
+                     compactEvery: Int = Snapshots.DefaultCompactEvery): ClaimLog =
     new ClaimLog(spark, dir, StructType(Seq(
       StructField("domain", org.apache.spark.sql.types.StringType,
         nullable = false),
@@ -195,7 +195,7 @@ object StreamCuration {
               mixRatesMilli: Map[String, Int] = Map.empty,
               mixDefaultMilli: Int = 1000,
               sourceCol: String = "source",
-              compactEvery: Int = 16,
+              compactEvery: Int = Snapshots.DefaultCompactEvery,
               vecCol: Option[String] = None,
               embedMinCos: Double = 0.9,
               piiRedact: Boolean = false,

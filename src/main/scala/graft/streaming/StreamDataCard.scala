@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.pipeline.DataCard
-import graft.store.Snapshots
+import graft.store.{CountLog, Snapshots}
 
 /** The DATA CARD for a LIVE corpus — [[DataCard.build]]'s streaming
   * twin: every batch of SHIPPED rows (the curation funnel's output)
@@ -36,7 +36,7 @@ import graft.store.Snapshots
   * additive state).
   *
   * Cross-batch state: one (metric, value) counter store + one value
-  * histogram, both [[Snapshots]]-backed with BATCH-ID TOKENED deltas —
+  * histogram, both [[CountLog]]s with BATCH-ID TOKENED deltas —
   * a crash-replayed batch folds NOTHING twice (the funnel's replay
   * contract extends to its telemetry), and reopening the card from the
   * same state dir resumes the counts (spec-pinned). Media-funnel
@@ -52,28 +52,29 @@ import graft.store.Snapshots
   * metrics + distinct token counts) state; `card()` reads counter
   * tables, never the corpus. */
 final class StreamDataCard(spark: SparkSession, root: String,
-                           compactEvery: Int = 16) {
+                           compactEvery: Int = Snapshots.DefaultCompactEvery) {
 
-  private val schema = StructType(Seq(
-    StructField("metric", StringType, nullable = false),
-    StructField("value", LongType, nullable = false)))
-  private val counters = new Snapshots(spark, s"$root/counters", schema,
-    compactEvery = compactEvery)
+  private val counters = new CountLog(spark, s"$root/counters",
+    StructType(Seq(
+      StructField("metric", StringType, nullable = false),
+      StructField("value", LongType, nullable = false))), "metric",
+    compactEvery)
   private val lenHist = new StreamValueHist(spark, s"$root/lenhist",
     compactEvery)
 
   def init(): Unit = { counters.init(); lenHist.init() }
 
-  private def fold(metrics: DataFrame, token: String): Unit =
-    counters.commit(metrics.localCheckpoint(true), Some(token), totals())
+  /** Fold one delta of (metric, value) pairs under `token`. */
+  private def fold(metrics: Seq[(String, Long)], token: String): Unit = {
+    import spark.implicits._
+    counters.add(metrics.toDF("metric", "value"), token)
+  }
 
   /** The merged (metric, value) totals across base + deltas;
     * fully-retracted metrics (value 0) leave the table, so a lang or
     * source whose every document was deleted vanishes from the card the
     * way it is absent from a batch card over the survivors. */
-  def totals(): DataFrame =
-    counters.read().groupBy("metric").agg(sum(col("value")).as("value"))
-      .filter(col("value") =!= 0)
+  def totals(): DataFrame = counters.totals()
 
   /** The batch card's exact additive metrics for one batch — shared by
     * [[observe]] (positive fold) and [[retract]] (negated fold). */
@@ -128,9 +129,7 @@ final class StreamDataCard(spark: SparkSession, root: String,
   def observe(batch: DataFrame, batchId: Long,
               textCol: String = "text", langCol: String = "lang",
               sourceCol: String = "source"): Unit = {
-    import spark.implicits._
-    fold(batchMetrics(batch, textCol, langCol, sourceCol)
-      .toDF("metric", "value"), s"b$batchId")
+    fold(batchMetrics(batch, textCol, langCol, sourceCol), s"b$batchId")
     lenHist.observe(tokenCounts(batch, textCol), "_ntok", batchId)
   }
 
@@ -152,18 +151,15 @@ final class StreamDataCard(spark: SparkSession, root: String,
   def retract(deleted: DataFrame, eventId: Long,
               textCol: String = "text", langCol: String = "lang",
               sourceCol: String = "source"): Unit = {
-    import spark.implicits._
     fold(batchMetrics(deleted, textCol, langCol, sourceCol)
-      .map { case (k, v) => (k, -v) }
-      .toDF("metric", "value"), s"r$eventId")
+      .map { case (k, v) => (k, -v) }, s"r$eventId")
     lenHist.retract(tokenCounts(deleted, textCol), "_ntok", s"r$eventId")
   }
 
   /** Fold one media-funnel batch report into the cumulative media
     * section (counts additive; stage counts of -1 — a sink that did
     * not compute them — contribute nothing). */
-  def observeMedia(r: StreamMediaCuration.BatchReport): Unit = {
-    import spark.implicits._
+  def observeMedia(r: StreamMediaCuration.BatchReport): Unit =
     fold(Seq(
       "media.n_input" -> math.max(r.nBatch, 0L),
       "media.n_after_size" -> math.max(r.nAfterSize, 0L),
@@ -171,36 +167,28 @@ final class StreamDataCard(spark: SparkSession, root: String,
       "media.n_after_image_dedup" -> math.max(r.nAfterImageDedup, 0L),
       "media.n_after_video_dedup" -> math.max(r.nAfterVideoDedup, 0L),
       "media.n_after_audio_dedup" -> math.max(r.nAfterAudioDedup, 0L),
-      "media.n_out" -> math.max(r.nOut, 0L))
-      .toDF("metric", "value"), s"m${r.batchId}")
-  }
+      "media.n_out" -> math.max(r.nOut, 0L)), s"m${r.batchId}")
 
   /** Fold one text-funnel batch report: cumulative per-stage totals
     * (readable via [[totals]] as `funnel.*`) plus the tokenizer unk
     * drift. */
-  def observeFunnel(r: StreamCuration.BatchReport): Unit = {
-    import spark.implicits._
+  def observeFunnel(r: StreamCuration.BatchReport): Unit =
     fold(Seq(
       "funnel.n_batch" -> math.max(r.nBatch, 0L),
       "funnel.n_after_quality" -> math.max(r.nAfterQuality, 0L),
       "funnel.n_after_exact" -> math.max(r.nAfterExact, 0L),
       "funnel.n_after_near_dup" -> math.max(r.nAfterNearDup, 0L),
       "funnel.n_after_decontam" -> math.max(r.nAfterDecontam, 0L),
-      "funnel.n_out" -> math.max(r.nOut, 0L))
-      .toDF("metric", "value"), s"f${r.batchId}")
-  }
+      "funnel.n_out" -> math.max(r.nOut, 0L)), s"f${r.batchId}")
 
   /** The cumulative card, on demand. `tokenizerShape` supplies the
     * frozen artifact's (nMerges, vocabSize) when the deployment encodes
     * (the observed token/unk totals come from the folded state); the
     * media section appears iff media reports were folded. */
   def card(tokenizerShape: Option[(Long, Long)] = None): DataCard.Card = {
-    val m = totals().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val neg = m.filter(_._2 < 0)
-    require(neg.isEmpty,
-      s"cumulative card at $root went negative on ${neg.keys.toSeq.sorted
-        .mkString(", ")} — a retraction exceeded what was observed")
+    val rows = totals().collect().toSeq
+    counters.requireNonNegative(rows)
+    val m = rows.map(r => r.getString(0) -> r.getLong(1)).toMap
     def g(k: String): Long = m.getOrElse(k, 0L)
     val quantiles =
       if (g("n_docs") == 0L) Map.empty[Int, Long]

@@ -4,13 +4,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.store.Snapshots
+import graft.store.{CountLog, Snapshots}
 
 /** TOKENIZER FERTILITY under continuous ingestion — the streaming twin
   * of [[graft.operators.Bpe.fertility]] / q142 (and
   * [[graft.operators.Unigram.fertility]] / q148): per-group additive
   * counters (docs, words, pieces, chars) folded per micro-batch into
-  * the crash-atomic [[Snapshots]] store, served as the exact q142
+  * the crash-atomic [[CountLog]], served as the exact q142
   * report of EVERYTHING shipped so far. This is the monitor that makes
   * the retrain signal OPERATIONAL: a language slice drifting toward
   * the byte-fallback fertility ceiling shows up batch by batch, not at
@@ -35,18 +35,17 @@ import graft.store.Snapshots
   * (the [[StreamDataCard]] discipline). NULL-text rows are absent,
   * the batch contract. */
 final class StreamFertility(spark: SparkSession, root: String,
-                            compactEvery: Int = 16) {
+                            compactEvery: Int = Snapshots.DefaultCompactEvery) {
 
-  private val schema = StructType(Seq(
+  private val log = new CountLog(spark, root, StructType(Seq(
     StructField("grp", StringType, nullable = false),
     StructField("n_docs", LongType, nullable = false),
     StructField("n_words", LongType, nullable = false),
     StructField("n_pieces", LongType, nullable = false),
-    StructField("n_chars", LongType, nullable = false)))
-  private val store = new Snapshots(spark, root, schema,
-    compactEvery = compactEvery)
+    StructField("n_chars", LongType, nullable = false))), "grp",
+    compactEvery)
 
-  def init(): Unit = store.init()
+  def init(): Unit = log.init()
 
   /** One batch's per-group counter rows, sign ±1 (observe/retract). */
   private def rows(batch: DataFrame, idCol: String, textCol: String,
@@ -61,51 +60,34 @@ final class StreamFertility(spark: SparkSession, root: String,
         (sum(col("n_words")) * sign).as("n_words"),
         (sum(col("n_pieces")) * sign).as("n_pieces"),
         (sum(col("_sf_chars")) * sign).as("n_chars"))
-      .localCheckpoint(true)
 
   /** Fold one shipped batch. `counts` is the batch's per-document
     * `(idCol, n_words, n_pieces)` under the FROZEN tokenizer. Replays
     * (same `batchId`) fold nothing twice. */
   def observe(batch: DataFrame, idCol: String, textCol: String,
-              groupCol: String, counts: DataFrame, batchId: Long): Unit = {
-    store.commit(rows(batch, idCol, textCol, groupCol, counts, 1L),
-      Some(s"b$batchId"), totals())
-  }
+              groupCol: String, counts: DataFrame, batchId: Long): Unit =
+    log.add(rows(batch, idCol, textCol, groupCol, counts, 1L),
+      s"b$batchId")
 
   /** The deletion cascade's telemetry leg: subtract the DELETED
     * documents' original rows (same shape the card leg reads — the
     * rows `observe` folded, re-counted under the same frozen
     * tokenizer). `token` is the deletion event's replay token. */
   def retract(deletedRows: DataFrame, idCol: String, textCol: String,
-              groupCol: String, counts: DataFrame, token: String): Unit = {
-    store.commit(rows(deletedRows, idCol, textCol, groupCol, counts, -1L),
-      Some(token), totals())
-  }
+              groupCol: String, counts: DataFrame, token: String): Unit =
+    log.add(rows(deletedRows, idCol, textCol, groupCol, counts, -1L),
+      token)
 
-  /** Merged per-group totals; fully-retracted groups leave. */
-  def totals(): DataFrame =
-    store.read().groupBy("grp")
-      .agg(sum(col("n_docs")).as("n_docs"),
-        sum(col("n_words")).as("n_words"),
-        sum(col("n_pieces")).as("n_pieces"),
-        sum(col("n_chars")).as("n_chars"))
-      .filter(col("n_docs") =!= 0 || col("n_words") =!= 0 ||
-        col("n_pieces") =!= 0 || col("n_chars") =!= 0)
+  /** Merged per-group totals; a group leaves only when every one of its
+    * totals is 0. */
+  def totals(): DataFrame = log.totals()
 
   /** The q142 report over everything shipped minus everything
     * retracted — exact integer fertility arithmetic, loud on negative
     * totals (a retraction exceeded what was observed). */
-  def report(): DataFrame = {
-    val t = totals().localCheckpoint(true)
-    val neg = t.filter(col("n_docs") < 0 || col("n_words") < 0 ||
-      col("n_pieces") < 0 || col("n_chars") < 0).head(1)
-    require(neg.isEmpty,
-      s"fertility store at $root holds a negative total " +
-        s"(${neg.headOption.getOrElse("")}) — a retraction exceeded " +
-        "what was observed")
-    t.withColumn("pieces_per_kchar",
-        expr("n_pieces * 1000L div n_chars"))
+  def report(): DataFrame =
+    log.checkedTotals()
+      .withColumn("pieces_per_kchar", expr("n_pieces * 1000L div n_chars"))
       .withColumn("pieces_per_word_milli",
         expr("n_pieces * 1000L div n_words"))
-  }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.pipeline.MediaCuration
-import graft.store.ClaimLog
+import graft.store.{ClaimLog, Snapshots}
 
 /** The MEDIA curation funnel under continuous ingestion —
   * [[graft.pipeline.MediaCuration]]'s stages recomposed for
@@ -49,7 +49,7 @@ import graft.store.ClaimLog
 object StreamMediaCuration {
 
   private def exactLog(spark: SparkSession, dir: String,
-                       compactEvery: Int = 16): ClaimLog =
+                       compactEvery: Int = Snapshots.DefaultCompactEvery): ClaimLog =
     new ClaimLog(spark, dir, StructType(Seq(
       StructField("digest", StringType, nullable = false),
       StructField("claimant", LongType, nullable = false))),
@@ -101,7 +101,8 @@ object StreamMediaCuration {
               videoMaxHamming: Int = 3,
               videoMinMatch: Int =
                 graft.multimodal.VideoDedup.DefaultMinMatch,
-              dropUnrecognized: Boolean = false, compactEvery: Int = 16,
+              dropUnrecognized: Boolean = false,
+              compactEvery: Int = Snapshots.DefaultCompactEvery,
               onReport: Option[BatchReport => Unit] = None)
       : (DataFrame, Long) => DataFrame = {
     val exactClaims = exactLog(spark, s"$stateDir/exact", compactEvery)

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.Retrieval
+import graft.store.Snapshots
 
 /** Standing BM25 index maintenance under continuous ingestion — the
   * [[StreamDecontam]] `foreachBatch` composition applied to the
@@ -53,9 +54,10 @@ object StreamRetrieval {
     * append, and skipping burns no token (there is nothing a replay
     * could double-count). */
   def indexMaintainer(spark: SparkSession, dir: String, idCol: String,
-                      textCol: String, compactEvery: Int = 16)
+                      textCol: String,
+                      compactEvery: Int = Snapshots.DefaultCompactEvery)
       : (DataFrame, Long) => Unit = {
-    graft.store.Snapshots.requireCompactEvery(compactEvery)
+    Snapshots.requireCompactEvery(compactEvery)
     (batch: DataFrame, batchId: Long) => {
       if (!batch.isEmpty) {
         Retrieval.bm25AppendIndex(batch, idCol, textCol, dir, batchId)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 
 import graft.functions.TextAnalysis.strHash
 import graft.operators.Components
-import graft.store.ClaimLog
+import graft.store.{ClaimLog, Snapshots}
 
 /** LEAKAGE-SAFE train/val splitting under continuous ingestion — the
   * streaming twin of [[graft.operators.Mixing.leakageSafeSplit]] (q96):
@@ -51,7 +51,8 @@ import graft.store.ClaimLog
   * they need two independently-shipped clusters to collide later).
   */
 final class StreamSplit(spark: SparkSession, root: String,
-                        valMilli: Int = 100, compactEvery: Int = 16) {
+                        valMilli: Int = 100,
+                        compactEvery: Int = Snapshots.DefaultCompactEvery) {
   require(valMilli >= 0 && valMilli <= 1000, "valMilli must be in [0, 1000]")
 
   private val claims = StreamSplit.claimLog(spark, root, compactEvery)
@@ -153,7 +154,7 @@ final class StreamSplit(spark: SparkSession, root: String,
 object StreamSplit {
 
   private def claimLog(spark: SparkSession, root: String,
-                       compactEvery: Int = 16): ClaimLog =
+                       compactEvery: Int = Snapshots.DefaultCompactEvery): ClaimLog =
     new ClaimLog(spark, root, StructType(Seq(
       StructField("bkey", StringType, nullable = false),
       StructField("rep", LongType, nullable = false))), "rep", compactEvery)

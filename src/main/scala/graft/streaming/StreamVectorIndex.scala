@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.operators.VectorIndex
+import graft.store.Snapshots
 
 /** Standing ANN (IVF) index maintenance under continuous ingestion — the
   * [[StreamRetrieval]] `foreachBatch` composition applied to the
@@ -41,9 +42,10 @@ object StreamVectorIndex {
     * deltas are outstanding. Empty micro-batches are skipped — nothing
     * to append, and skipping burns no token. */
   def indexMaintainer(spark: SparkSession, dir: String, idCol: String,
-                      vecCol: String, compactEvery: Int = 16)
+                      vecCol: String,
+                      compactEvery: Int = Snapshots.DefaultCompactEvery)
       : (DataFrame, Long) => Unit = {
-    graft.store.Snapshots.requireCompactEvery(compactEvery)
+    Snapshots.requireCompactEvery(compactEvery)
     (batch: DataFrame, batchId: Long) => {
       if (!batch.isEmpty) {
         VectorIndex.appendIndex(batch, idCol, vecCol, dir, batchId)

@@ -3,6 +3,7 @@ package graft.operators
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.TestSpark.countJobs
 
 /** J3 recursive expansion vs a hand-built forest. */
 class TreeExpandSpec extends AnyFunSuite {
@@ -152,20 +153,6 @@ class TreeExpandSpec extends AnyFunSuite {
   /** Output rows as a multiset (duplicate edges make rows repeat). */
   private def bag(df: org.apache.spark.sql.DataFrame): Map[Seq[Any], Int] =
     df.collect().toSeq.map(_.toSeq).groupBy(identity).map { case (k, v) => k -> v.size }
-
-  private def countJobs(f: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.GraftTestBus.flush(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try { f; org.apache.spark.GraftTestBus.flush(spark.sparkContext) }
-    finally spark.sparkContext.removeSparkListener(l)
-    jobs.get
-  }
 
   /** A seeded random forest over ids 1..n: ~n/20 trees, no node deeper
     * than `height`, plus a bare chain of exactly `height` levels below

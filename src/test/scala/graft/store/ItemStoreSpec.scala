@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.TestSpark.countJobs
 import graft.ingest.FakeFetcher
 import graft.schema.Item
 import graft.streaming.LivestreamRunner
@@ -370,19 +371,6 @@ class ItemStoreSpec extends AnyFunSuite {
     assert(c.count() == 400L && manifestOf(dirC).size == 2)
     assertLayout(dirC, clusteredBase = true)
     assert(rowsById(c.current()) == rowsById(ref))
-  }
-
-  private def countJobs(f: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.GraftTestBus.flush(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try { f; org.apache.spark.GraftTestBus.flush(spark.sparkContext) }
-    finally spark.sparkContext.removeSparkListener(l)
-    jobs.get
   }
 
   test("latestId and count read the footers: no job on a clustered store, " +

@@ -8,6 +8,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.TestSpark.countJobs
 
 /** [[Snapshots.init]] on a new store: the empty `snap-0` is an empty
   * directory, made with no Spark job; every write shape reads it back as
@@ -20,19 +21,6 @@ class SnapshotsInitSpec extends AnyFunSuite {
 
   private val schema = StructType(Seq(
     StructField("k", LongType), StructField("p", LongType)))
-
-  private def countJobs(f: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    org.apache.spark.GraftTestBus.flush(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try { f; org.apache.spark.GraftTestBus.flush(spark.sparkContext) }
-    finally spark.sparkContext.removeSparkListener(l)
-    jobs.get
-  }
 
   private def rows(s: Snapshots): Set[(Long, Long)] = s.read().as[(Long, Long)].collect().toSet
 

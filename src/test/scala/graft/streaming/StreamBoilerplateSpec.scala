@@ -6,11 +6,13 @@ import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
+import graft.TestSpark.countJobs
 import graft.operators.Dedup
 
 /** Incremental chunk-count accumulation + periodic re-scrub: exact
   * batch parity (the additivity claim, proven end to end), replay
-  * idempotence, and compaction transparency. */
+  * idempotence, compaction transparency, the per-batch job count and
+  * loud over-retraction. */
 class StreamBoilerplateSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -69,6 +71,14 @@ class StreamBoilerplateSpec extends AnyFunSuite {
     assert(collect(StreamBoilerplate.rescrub(union, "doc_id", "text", counts))
       == collect(Dedup.scrubDupSpans(union, "doc_id", "text", span = 8)),
       "post-compaction counts diverged from the batch operator")
+  }
+
+  test("observe runs 5 Spark jobs per batch and 4 on a replay") {
+    val dir = Files.createTempDirectory("graft-sboiler-jobs").toString
+    val counts = new StreamBoilerplate.ChunkCounts(spark, dir, span = 8)
+    assert(countJobs(counts.observe(b1, "doc_id", "text", batchId = 0L)) == 5)
+    assert(countJobs(counts.observe(b2, "doc_id", "text", batchId = 1L)) == 5)
+    assert(countJobs(counts.observe(b1, "doc_id", "text", batchId = 0L)) == 4)
   }
 
   test("retraction: deleting a chunk's carriers stops the scrub — counts " +
@@ -132,5 +142,11 @@ class StreamBoilerplateSpec extends AnyFunSuite {
       survivors, "doc_id", "text", counts))
     assert(after.values.forall(_._2 == 0L), s"$after")
     assert(after(1L)._1 == s"v1 $para", "survivor was rewritten")
+    // over-retraction: doc 3 was observed once and is retracted twice
+    counts.retract(d2.filter($"doc_id" === 3L), "doc_id", "text", "r1")
+    counts.retract(d2.filter($"doc_id" === 3L), "doc_id", "text", "r2")
+    val e = intercept[IllegalArgumentException](counts.dupChunks(2))
+    assert(e.getMessage.contains(dir) &&
+      e.getMessage.contains("negative total"), e.getMessage)
   }
 }

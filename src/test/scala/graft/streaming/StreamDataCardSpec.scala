@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{Tables, TestSpark}
+import graft.TestSpark.countJobs
 import graft.pipeline.DataCard
 
 /** Cumulative data card for a live corpus ([[StreamDataCard]]): the
@@ -69,6 +70,20 @@ class StreamDataCardSpec extends AnyFunSuite {
     val after = card2.card()
     assert(after.nDocs == 3L && after.langDocs("en") == 2L)
     assert(after.tokenQuantiles(50) == 2L, s"${after.tokenQuantiles}")
+  }
+
+  test("card() on a two-language card runs 10 Spark jobs; an empty " +
+    "card runs none") {
+    val root = Files.createTempDirectory("graft-scard-jobs").toString
+    val card = new StreamDataCard(spark, root)
+    card.init()
+    assert(countJobs(card.card()) == 0)
+    card.observe(Seq((1L, "alpha beta gamma", "en", "web"),
+      (2L, "delta epsilon", "de", "web"))
+      .toDF("doc_id", "text", "lang", "source"), 0L)
+    var c: DataCard.Card = null
+    assert(countJobs { c = card.card() } == 10)
+    assert(c.nDocs == 2L && c.tokenQuantiles(50) == 2L, s"$c")
   }
 
   test("media and funnel reports fold additively; tokenizer totals ride " +

@@ -10,7 +10,8 @@ import graft.operators.Sketches
 
 /** Exact streaming quantiles ([[StreamValueHist]]): additive histograms
   * make the streamed answer EQUAL the batch operator over the union —
-  * under any slicing, across compactions, and through replays. */
+  * under any slicing, across compactions, through replays, and over the
+  * survivors of a retraction. */
 class StreamStatsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -53,6 +54,30 @@ class StreamStatsSpec extends AnyFunSuite {
     h.observe(b0, "v", 0L) // crash replay
     assert(qmap(h.quantiles(pcts)) == before)
     assert(h.hist().agg(sum(col("c"))).head().getLong(0) == 3L)
+  }
+
+  test("retract: quantiles after observe(all) + retract(deleted) equal " +
+    "the batch operator over the survivors; a replayed retraction folds " +
+    "nothing twice; over-retraction fails naming the root") {
+    val root = Files.createTempDirectory("graft-svhist-retract").toString
+    val h = new StreamValueHist(spark, root, compactEvery = 2)
+    h.init()
+    val all = Seq(1L, 5L, 5L, 2L, 9L, 5L, 2L, 40L, 1L, 7L, 7L, 3L)
+    all.grouped(4).zipWithIndex.foreach { case (slice, i) =>
+      h.observe(slice.toDF("v"), "v", i.toLong)
+    }
+    val deleted = Seq(5L, 40L, 1L, 7L)
+    h.retract(deleted.toDF("v"), "v", "r0")
+    h.retract(deleted.toDF("v"), "v", "r0") // crash replay
+    val survivors = all.diff(deleted)
+    assert(qmap(h.quantiles(pcts)) ==
+      qmap(Sketches.exactQuantiles(survivors.toDF("v"), "v", pcts)))
+    assert(h.hist().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ==
+      survivors.groupBy(identity).view.mapValues(_.size.toLong).toMap)
+    h.retract(Seq(40L).toDF("v"), "v", "r1") // 40 is already gone
+    val e = intercept[IllegalArgumentException](h.quantiles(pcts))
+    assert(e.getMessage.contains(root) &&
+      e.getMessage.contains("negative total"), e.getMessage)
   }
 
   test("NULL values are excluded and an all-NULL batch appends nothing") {
