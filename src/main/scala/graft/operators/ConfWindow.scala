@@ -12,15 +12,16 @@ private[graft] object ConfWindow {
         java.util.concurrent.locks.ReentrantLock]]())
 
   /** Scoped override of a session conf (`key` := `want`) for the duration
-    * of an expansion — AQE suspension for a small doubling state, the
-    * one-job head() window below. The conf is session-scoped, so the flip is visible to
-    * any query issued on the SAME session during the window (documented at
-    * the public entry points — use a separate session for
-    * concurrency-sensitive work); only a lock HOLDER ever writes the conf,
-    * so two concurrent expansions cannot clobber each other's saved value.
-    * A contender that fails `tryLock` runs WITHOUT the override (losing
-    * only the latency optimization) instead of blocking behind the other
-    * expansion's whole window. `restore()` is idempotent. */
+    * of an operator's driver loop — the one-job head() and
+    * keep-parallelism windows below. The conf is session-scoped, so the
+    * flip is visible to any query issued on the SAME session during the
+    * window (documented at the public entry points — use a separate
+    * session for concurrency-sensitive work); only a lock HOLDER ever
+    * writes the conf, so two concurrent windows cannot clobber each
+    * other's saved value. A contender that fails `tryLock` runs WITHOUT
+    * the override (losing only the latency optimization) instead of
+    * blocking behind the other operator's whole window. `restore()` is
+    * idempotent. */
   private[graft] final class ConfWindow(spark: org.apache.spark.sql.SparkSession,
                                  key: String, want: String,
                                  default: String) {
@@ -48,9 +49,6 @@ private[graft] object ConfWindow {
       finally { held.unlock(); held = null }
     }
   }
-
-  def aqe(spark: org.apache.spark.sql.SparkSession) =
-    new ConfWindow(spark, "spark.sql.adaptive.enabled", "false", "true")
 
   /** Every frontier measurement is a `head(cap+1)` whose source has ≤ 32
     * partitions; Spark's incremental limit (start at 1 partition, scale by

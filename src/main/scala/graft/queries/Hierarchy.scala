@@ -45,10 +45,10 @@ object Hierarchy {
 
   /** q55: unbounded-depth recursion — a single chain of up to 2000 events
     * (ids < 2000, parent = id - 1; at sf0.001 the table stops at id 999 so
-    * the chain is 1000 there), expanded by pointer doubling
-    * ([[TreeExpand.expandByDoubling]], ~11 rounds) where the per-level BFS
-    * would need one driver round-trip per level. Depth-only mode (paths on
-    * a chain are quadratic in total size); the digest (count, max, sum of
+    * the chain is 1000 there), expanded by [[TreeExpand.expand]]. The
+    * chain's edges and paths fit its driver pass, so every level runs on
+    * the driver with no distributed round (~8 MB of paths against the
+    * pass's 64 MB budget at 2000 nodes). The digest (count, max, sum of
     * depths) pins every node's depth. The id cap keeps the oracle's
     * recursive CTE cost flat from sf0.01 upward. */
   val q55 = Q(
@@ -68,8 +68,8 @@ object Hierarchy {
       .select(col("event_id").as("id"),
         when(col("event_id") === 0, lit(null).cast("long"))
           .otherwise(col("event_id") - 1).as("parent"))
-    TreeExpand.expandByDoubling(edges, edges.filter(col("id") === 0).select("id"),
-        maxDepth = 4000, withPath = false)
+    TreeExpand.expand(edges, edges.filter(col("id") === 0).select("id"),
+        maxDepth = 4000)
       .agg(count(lit(1)).as("n_nodes"),
         max(col("depth")).cast("long").as("max_depth"),
         sum(col("depth")).as("sum_depth"))

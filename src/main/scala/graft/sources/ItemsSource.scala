@@ -1,49 +1,23 @@
 package graft.sources
 
-import java.util
-
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.ingest.{Fetcher, HttpFetcher}
 
-/** DataSource V2 batch source for HN items (SURVEY.md S1-S4 as a
-  * declarative scan): `spark.read.format("graft.sources.ItemsSource")
-  * .option("lower", l).option("upper", u).option("partitions", n).load()`
-  * yields raw `(id, body)` rows; [[graft.schema.Item.normalize]] is the
-  * downstream relational step (F8/P8/P9).
+/** The raw HN item rows (SURVEY.md S1-S4) that [[ItemsStream]] reads:
+  * `(id, body)`, a null body for a missing or deleted id;
+  * [[graft.schema.Item.normalize]] is the downstream relational step
+  * (F8/P8/P9). The batch fetch is [[graft.ingest.BulkFetch]].
   *
-  * Partition planning IS the reference's thread pool re-expressed: the id
-  * interval splits into `partitions` contiguous ranges, one Spark task
-  * each, so fetch parallelism scales with the cluster instead of a
-  * single-process pool (hnarchive.py:133-154). Failures fail the task
-  * (fail-fast, matching the reference's consumer-thread re-raise); Spark's
-  * task retry supplies the outer retry loop around the fetcher's own
-  * per-request backoff.
-  *
-  * The `fetcher` option selects the transport: "http" (the real API, only
-  * usable with egress) or "fake:<key>" resolving through [[ItemsSource
-  * .registerFake]] — test/local-mode injection of scripted fetchers.
+  * A fetcher spec selects the transport: "http" (the real API, only
+  * usable with egress) or "fake:<key>" resolving through [[registerFake]]
+  * — test/local-mode injection of scripted fetchers.
   */
-class ItemsSource extends TableProvider {
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    ItemsSource.schema
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table =
-    new ItemsTable(properties.getOrDefault("lower", "1").toLong,
-      properties.getOrDefault("upper", "1").toLong,
-      properties.getOrDefault("partitions", "4").toInt,
-      properties.getOrDefault("fetcher", "http"))
-}
-
 object ItemsSource {
   val schema: StructType = StructType(Seq(
     StructField("id", LongType, nullable = false),
@@ -64,37 +38,16 @@ object ItemsSource {
   }
 }
 
-final class ItemsTable(lower: Long, upper: Long, partitions: Int,
-                       fetcherSpec: String) extends Table with SupportsRead {
-  override def name(): String = s"hn_items[$lower,$upper]"
-  override def schema(): StructType = ItemsSource.schema
-  override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with Scan with Batch {
-      override def build(): Scan = this
-      override def readSchema(): StructType = ItemsSource.schema
-      override def toBatch: Batch = this
-
-      override def planInputPartitions(): Array[InputPartition] = {
-        val n = math.max(1, math.min(partitions, (upper - lower + 1).toInt))
-        val step = (upper - lower + 1 + n - 1) / n
-        (0 until n).map { i =>
-          val lo = lower + i * step
-          val hi = math.min(upper, lo + step - 1)
-          IdRangePartition(lo, hi, fetcherSpec): InputPartition
-        }.filter { case IdRangePartition(lo, hi, _) => lo <= hi }.toArray
-      }
-
-      override def createReaderFactory(): PartitionReaderFactory =
-        new ItemsReaderFactory
-    }
-}
-
+/** One task's contiguous id interval `[lower, upper]`: the reference's
+  * fetch thread pool (hnarchive.py:133-154) re-expressed as Spark tasks.
+  * A fetch failure fails the task (the reference's consumer-thread
+  * re-raise); Spark's task retry is the outer retry loop around the
+  * fetcher's own per-request backoff. */
 case class IdRangePartition(lower: Long, upper: Long, fetcherSpec: String)
   extends InputPartition
 
+/** Reads an [[IdRangePartition]] as [[ItemsSource.schema]] rows, one
+  * fetch per id. */
 final class ItemsReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[IdRangePartition]

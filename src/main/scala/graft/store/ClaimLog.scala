@@ -65,7 +65,8 @@ class ClaimLog(spark: SparkSession, root: String, schema: StructType,
 
   /** The claim step for callers whose output never reads this log:
     * claims every unheld key of `newClaims`, the delta named by `token`
-    * when given ([[Snapshots.appendDelta]]'s replay protection). */
+    * when given ([[Snapshots.appendDelta]]'s replay protection; a replayed
+    * token runs no job). */
   def claim(newClaims: DataFrame, token: Option[String]): Unit =
     snaps.commit(newClaims.join(read(), keyCols, "left_anti")
       .localCheckpoint(true), token)

@@ -31,8 +31,9 @@ class CountLog(spark: SparkSession, root: String, schema: StructType,
   def init(): Unit = snaps.init()
 
   /** Fold one delta of signed counts under `token` (the delta directory
-    * is `delta-<token>`; a replayed token appends nothing). The delta is
-    * materialized once; an empty one appends nothing. */
+    * is `delta-<token>`; a replayed token appends nothing and runs no
+    * job). The delta is materialized once; an empty one appends
+    * nothing. */
   def add(counts: DataFrame, token: String): Unit =
     snaps.commit(counts.localCheckpoint(true), Some(token), totals())
 

@@ -23,7 +23,8 @@ import org.apache.spark.sql.types.StructType
   *    and all deltas. This is what makes a per-micro-batch writer scale:
   *    the store grows by what the batch added, never rewritten per batch.
   *  - [[commit]] — the delta-log commit policy every streaming writer
-  *    shares: skip an empty delta, append, and compact once
+  *    shares: return on a replayed token before the delta is built, skip
+  *    an empty delta, append, and compact once
   *    [[deltaCount]] reaches `compactEvery` — amortized
   *    O(store / compactEvery) per batch. Its two store users are
   *    [[ClaimLog]] (first-writer-wins keys; compacts to [[read]]) and
@@ -87,7 +88,7 @@ final class Snapshots(spark: SparkSession, root: String, schema: StructType,
             .exists(d.startsWith) && !live(d))
           .toList
         finally listing.close()
-      orphans.foreach(orphan => deleteRecursively(rootPath.resolve(orphan)))
+      orphans.foreach(orphan => ParquetSurgery.deleteRecursively(rootPath.resolve(orphan)))
     }
   }
 
@@ -166,7 +167,37 @@ final class Snapshots(spark: SparkSession, root: String, schema: StructType,
     *   the base. A crash between the directory write and the manifest
     *   commit leaves an orphan that [[init]] sweeps and the retry
     *   overwrites. */
-  def appendDelta(df: DataFrame, token: Option[String] = None): Unit = {
+  def appendDelta(df: DataFrame, token: Option[String] = None): Unit =
+    freshDelta(token).foreach(append(df, _))
+
+  /** The one commit step of a delta log. A `token` already committed
+    * ([[appendDelta]]'s replay check) returns before `delta` is
+    * evaluated, so a crash replay runs no job. Otherwise `delta` is
+    * evaluated once; an empty one is skipped (one `head(1)` job) — an
+    * all-duplicate batch appends nothing and must not advance the
+    * compaction cadence; a non-empty one is appended under `token`, and
+    * once [[deltaCount]] reaches `compactEvery` the log folds into one
+    * base via `replace(compacted)`. `compacted` is evaluated only then:
+    * [[read]] for first-writer-wins stores ([[ClaimLog]]), the
+    * signed-count fold for additive ones ([[CountLog]]). Callers
+    * materialize `delta` when its plan is not already cheap to run
+    * twice. */
+  def commit(delta: => DataFrame, token: Option[String] = None,
+             compacted: => DataFrame = read()): Unit =
+    freshDelta(token).foreach { name =>
+      val df = delta
+      if (df.head(1).nonEmpty) {
+        append(df, name)
+        if (deltaCount >= compactEvery) replace(compacted)
+      }
+    }
+
+  /** The directory name of the next delta under `token` (auto-named
+    * without one), or None when the token was already committed: it is in
+    * the manifest or in the consumed-tokens ledger. The ledger read is
+    * paid only on TOKENED appends — the content-idempotent tokenless path
+    * stays O(batch) with no extra I/O. */
+  private def freshDelta(token: Option[String]): Option[String] = {
     token.foreach { t =>
       require(t.matches("[A-Za-z0-9._-]+"),
         s"delta token must be a plain directory-name fragment, got '$t'")
@@ -175,33 +206,17 @@ final class Snapshots(spark: SparkSession, root: String, schema: StructType,
           "prefix it (e.g. 'epoch-" + t + "') to keep cross-compaction " +
           "replay protection")
     }
-    val old = manifest
     val delta = token.map(t => s"delta-$t").getOrElse(s"delta-${System.nanoTime()}")
-    // the ledger read is paid only on TOKENED appends — the
-    // content-idempotent tokenless path stays O(batch) with no extra I/O
-    val replayed = old.contains(delta) ||
+    val replayed = manifest.contains(delta) ||
       (token.isDefined && consumedTokens.contains(delta))
-    if (!replayed) {
-      write(df, delta)
-      commitManifest(old :+ delta)
-    }
+    if (replayed) None else Some(delta)
   }
 
-  /** The one commit step of a delta log: an empty `delta` is skipped (one
-    * `head(1)` job) — a replayed or all-duplicate batch appends nothing
-    * and must not advance the compaction cadence; otherwise it is
-    * appended under `token` ([[appendDelta]]'s replay protection), and
-    * once [[deltaCount]] reaches `compactEvery` the log folds into one
-    * base via `replace(compacted)`. `compacted` is evaluated only then:
-    * [[read]] for first-writer-wins stores ([[ClaimLog]]), the
-    * signed-count fold for additive ones ([[CountLog]]). Callers materialize `delta` first when its plan is
-    * not already cheap to run twice. */
-  def commit(delta: DataFrame, token: Option[String] = None,
-             compacted: => DataFrame = read()): Unit =
-    if (delta.head(1).nonEmpty) {
-      appendDelta(delta, token)
-      if (deltaCount >= compactEvery) replace(compacted)
-    }
+  /** Write `df` as delta directory `name` and commit it to the manifest. */
+  private def append(df: DataFrame, name: String): Unit = {
+    write(df, name)
+    commitManifest(manifest :+ name)
+  }
 
   /** Write `df` as one new segment directory (`seg-<nanotime>`) and commit
     * it after the last manifest entry, or in its place when
@@ -217,7 +232,7 @@ final class Snapshots(spark: SparkSession, root: String, schema: StructType,
     val seg = s"${Snapshots.SegmentPrefix}${System.nanoTime()}"
     df.write.mode("overwrite").parquet(dir(seg))
     commitManifest(if (replaceLast) old.init :+ seg else old :+ seg)
-    if (replaceLast) deleteRecursively(rootPath.resolve(old.last))
+    if (replaceLast) ParquetSurgery.deleteRecursively(rootPath.resolve(old.last))
   }
 
   /** Write `df` as the next base snapshot, swap the manifest, GC every
@@ -232,7 +247,7 @@ final class Snapshots(spark: SparkSession, root: String, schema: StructType,
     write(df, snap)
     recordConsumed(previous)
     commitManifest(Seq(snap))
-    previous.foreach(d => deleteRecursively(rootPath.resolve(d)))
+    previous.foreach(d => ParquetSurgery.deleteRecursively(rootPath.resolve(d)))
   }
 
   /** Write `df` as directory `entry`, in the store's partition layout. */
@@ -276,13 +291,6 @@ final class Snapshots(spark: SparkSession, root: String, schema: StructType,
     Files.move(tmp, pointer, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
   }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(f => Files.deleteIfExists(f))
-    }
 }
 
 object Snapshots {

@@ -1,11 +1,15 @@
 package graft.operators
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 import graft.TestSpark.countJobs
 
-/** J3 recursive expansion vs a hand-built forest. */
+/** J3 recursive expansion vs a hand-built forest. The tests named for
+  * pointer doubling and its driver tier predate [[TreeExpand.expand]]
+  * being the one expansion; they check the same behaviour on its driver
+  * pass and its distributed rounds. */
 class TreeExpandSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -113,10 +117,6 @@ class TreeExpandSpec extends AnyFunSuite {
     val expected = asMap(TreeExpand.expand(wideDf, Seq(1L).toDF("id")))
     assert(asMap(gated) == expected)
     assert(modes.contains("shuffle"), modes)
-    // pointer doubling under a tiny state-byte budget still matches
-    val dbl = asMap(TreeExpand.expandByDoubling(wideDf, Seq(1L).toDF("id"),
-      broadcastStateBytes = 32L))
-    assert(dbl == expected)
   }
 
   test("mid-flight demotion: path growth flips a small graph to shuffle") {
@@ -139,12 +139,35 @@ class TreeExpandSpec extends AnyFunSuite {
     assert(asStrMap(gated) == expected)
     // a non-empty log proves the rounds ran
     assert(modes.head == "driver" && modes.contains("shuffle"), modes)
-    // pointer doubling: seed segs fit the budget, round-1 concatenations
-    // exceed it — demotes between rounds, output unchanged
-    val dbl = asStrMap(TreeExpand.expandByDoubling(edges, roots,
-      broadcastStateBytes = 6000L))
-    assert(dbl == expected)
   }
+
+  /** [[TreeExpand.expand]] answered by its driver pass: the mode log
+    * stays empty. */
+  private def onDriver(edges: DataFrame, roots: DataFrame, maxDepth: Int): DataFrame = {
+    val modes = scala.collection.mutable.Buffer.empty[String]
+    val out = TreeExpand.expand(edges, roots, maxDepth = maxDepth, modeLog = modes)
+    assert(modes.isEmpty, s"the driver pass declined: $modes")
+    out
+  }
+
+  /** [[TreeExpand.expand]] in its distributed rounds: a one-row budget
+    * declines any larger edge table, and the mode log proves the rounds
+    * ran. */
+  private def inRounds(edges: DataFrame, roots: DataFrame, maxDepth: Int): DataFrame = {
+    val modes = scala.collection.mutable.Buffer.empty[String]
+    val out = TreeExpand.expand(edges, roots, maxDepth = maxDepth,
+      driverFrontierRows = 1, broadcastFrontierRows = 1, modeLog = modes)
+    assert(modes.nonEmpty, "the driver pass answered")
+    out
+  }
+
+  private val bothPaths: Seq[(DataFrame, DataFrame, Int) => DataFrame] =
+    Seq(onDriver, inRounds)
+
+  /** The chain 1 → 2 → … → n, rooted at 1. */
+  private def chainOf(n: Long): DataFrame =
+    (1L to n).map(i =>
+      (i, if (i == 1L) Option.empty[Long] else Option(i - 1))).toDF("id", "parent")
 
   private def asMap(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(r =>
@@ -176,57 +199,44 @@ class TreeExpandSpec extends AnyFunSuite {
   }
 
   test("pointer doubling matches BFS on the forest, incl. subtree roots") {
-    val bfs = asMap(TreeExpand.expand(edges, Seq(1L, 2L).toDF("id")))
-    // default gates take the driver tier; driverStateRows = 0 pins the
-    // distributed contraction rounds to the same answer
-    val dbl = asMap(TreeExpand.expandByDoubling(edges, Seq(1L, 2L).toDF("id")))
-    assert(dbl == bfs)
-    val dblDist = asMap(TreeExpand.expandByDoubling(edges, Seq(1L, 2L).toDF("id"),
-      driverStateRows = 0))
-    assert(dblDist == bfs)
-    val bfsSub = asMap(TreeExpand.expand(edges, Seq(3L).toDF("id")))
-    val dblSub = asMap(TreeExpand.expandByDoubling(edges, Seq(3L).toDF("id")))
-    assert(dblSub == bfsSub)
+    // the driver pass and the rounds agree on the forest and on a subtree
+    for (roots <- Seq(Seq(1L, 2L), Seq(3L))) {
+      val driver = asMap(onDriver(edges, roots.toDF("id"), 1000))
+      assert(asMap(inRounds(edges, roots.toDF("id"), 1000)) == driver, roots)
+    }
+    assert(asMap(onDriver(edges, Seq(3L).toDF("id"), 1000)) ==
+      Map(3L -> ((3L, 0, "3")), 5L -> ((3L, 1, "3/5")), 6L -> ((3L, 1, "3/6"))))
   }
 
   test("pointer doubling handles a deep chain in O(log depth) rounds") {
     val n = 100L
-    val chain = (1L to n).map(i =>
-      (i, if (i == 1L) Option.empty[Long] else Option(i - 1))).toDF("id", "parent")
-    val expected = asMap(TreeExpand.expandByDoubling(chain, Seq(1L).toDF("id"),
-      driverStateRows = 0))
+    val expected = asMap(inRounds(chainOf(n), Seq(1L).toDF("id"), 1000))
     assert(expected.size == n)
     assert(expected(n) == ((1L, (n - 1).toInt, (1L to n).mkString("/"))))
-    // driver tier agrees with the rounds
-    val out = asMap(TreeExpand.expandByDoubling(chain, Seq(1L).toDF("id")))
-    assert(out == expected)
+    assert(asMap(onDriver(chainOf(n), Seq(1L).toDF("id"), 1000)) == expected)
   }
 
   test("driver tier resolves tiny states with fewer jobs than the rounds") {
     val n = 200L
-    val chain = (1L to n).map(i =>
-      (i, if (i == 1L) Option.empty[Long] else Option(i - 1))).toDF("id", "parent")
     var driverOut: Map[Long, (Long, Int, String)] = null
     var roundsOut: Map[Long, (Long, Int, String)] = null
     val driverJobs = countJobs {
-      driverOut = asMap(TreeExpand.expandByDoubling(chain, Seq(1L).toDF("id")))
+      driverOut = asMap(onDriver(chainOf(n), Seq(1L).toDF("id"), 1000))
     }
     val roundJobs = countJobs {
-      roundsOut = asMap(TreeExpand.expandByDoubling(chain, Seq(1L).toDF("id"),
-        driverStateRows = 0))
+      roundsOut = asMap(inRounds(chainOf(n), Seq(1L).toDF("id"), 1000))
     }
     assert(driverOut == roundsOut)
-    // ~8 contraction rounds (one job each) skipped: the gap must be material
+    assert(driverOut(n) == ((1L, (n - 1).toInt, (1L to n).mkString("/"))))
+    // 50 rounds of 4 levels skipped: the gap must be material
     assert(driverJobs + 4 <= roundJobs, s"driver=$driverJobs rounds=$roundJobs")
   }
 
   test("seed checkpoint is eager (deadlock guard)") {
-    // the seed root set is broadcast into the first round, so it must be
-    // materialized before that broadcast is planned: the expansion's
-    // FIRST job is the seed's own checkpoint
-    val n = 200L
-    val chain = (1L to n).map(i =>
-      (i, if (i == 1L) Option.empty[Long] else Option(i - 1))).toDF("id", "parent")
+    // the rounds broadcast a frontier only once it is materialized: the
+    // root frontier's checkpoint job runs before its first measurement
+    // (a lazy checkpoint would be materialized by that head() instead)
+    val n = 40L
     val jobs = scala.collection.mutable.ArrayBuffer.empty[String]
     val l = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
@@ -237,70 +247,53 @@ class TreeExpandSpec extends AnyFunSuite {
     spark.sparkContext.addSparkListener(l)
     val out =
       try {
-        val r = asMap(TreeExpand.expandByDoubling(chain, Seq(1L).toDF("id")))
+        val r = asMap(inRounds(chainOf(n), Seq(1L).toDF("id"), 1000))
         org.apache.spark.GraftTestBus.flush(spark.sparkContext)
         r
       } finally spark.sparkContext.removeSparkListener(l)
     assert(out.size == n && out(n) == ((1L, (n - 1).toInt,
       (1L to n).mkString("/"))), s"chain expansion: ${out.get(n)}")
-    assert(jobs.nonEmpty && jobs.head.startsWith("localCheckpoint at TreeExpand"),
-      s"first job is not the seed checkpoint: ${jobs.take(3)}")
+    val seed = jobs.indexWhere(_.contains("localCheckpoint at TreeExpand"))
+    val firstHead = jobs.indexWhere(_.contains("head at TreeExpand"))
+    assert(seed >= 0 && seed < firstHead,
+      s"the root frontier is not checkpointed before it is measured: ${jobs.take(5)}")
   }
 
   test("pointer doubling fails loud on cycles and over-deep trees") {
     val cyc = Seq((1L, Option(2L)), (2L, Option(1L)), (3L, Option(1L)))
       .toDF("id", "parent")
-    val chain = (1L to 12L).map(i =>
-      (i, if (i == 1L) Option.empty[Long] else Option(i - 1))).toDF("id", "parent")
-    // both tiers must fail loud the same way
-    for (driverRows <- Seq(8192, 0)) {
-      intercept[IllegalStateException] {
-        TreeExpand.expandByDoubling(cyc, Seq(3L).toDF("id"), maxDepth = 5,
-          driverStateRows = driverRows)
-      }
-      val e = intercept[IllegalStateException] {
-        TreeExpand.expandByDoubling(chain, Seq(1L).toDF("id"), maxDepth = 5,
-          driverStateRows = driverRows)
-      }
+    for (run <- bothPaths) {
+      val c = intercept[IllegalStateException] { run(cyc, Seq(1L).toDF("id"), 5) }
+      assert(c.getMessage.contains("maxDepth=5"))
+      val e = intercept[IllegalStateException] { run(chainOf(12L), Seq(1L).toDF("id"), 5) }
       assert(e.getMessage.contains("maxDepth=5"))
     }
   }
 
   test("out-of-scope deep chains: tiers agree (drop within fuse, throw past)") {
-    // maxDepth=5 → round fuse 2^(maxRounds+1)-1=15. A 12-deep chain under
-    // an UNREQUESTED root exceeds maxDepth but fits the fuse: both tiers
-    // must drop it silently (only the requested isolated root 50 returns)
+    // chains under the UNREQUESTED root 1, up to well past maxDepth=5:
+    // expand never visits them, so only the requested isolated root 50
+    // returns, on both paths
     def chainPlus(n: Long) =
       ((1L to n).map(i => (i, if (i == 1L) Option.empty[Long] else Option(i - 1)))
         :+ ((50L, Option.empty[Long]))).toDF("id", "parent")
-    // the EXACT boundary: a 16-node chain (max dist 15) is the deepest both
-    // tiers tolerate; 17 nodes (dist 16) must throw in BOTH — the off-by-one
-    // between 'd > 2^(maxRounds+1)' and the round recurrence was a real
-    // success/failure flip across the size gate
-    for (driverRows <- Seq(8192, 0); n <- Seq(12L, 16L)) {
-      val out = asMap(TreeExpand.expandByDoubling(chainPlus(n),
-        Seq(50L).toDF("id"), maxDepth = 5, driverStateRows = driverRows))
-      assert(out == Map(50L -> ((50L, 0, "50"))), s"driverRows=$driverRows n=$n")
-    }
-    for (driverRows <- Seq(8192, 0)) {
-      intercept[IllegalStateException] {
-        TreeExpand.expandByDoubling(chainPlus(17L), Seq(50L).toDF("id"),
-          maxDepth = 5, driverStateRows = driverRows)
-      }
+    for (run <- bothPaths; n <- Seq(12L, 16L, 17L)) {
+      val out = asMap(run(chainPlus(n), Seq(50L).toDF("id"), 5))
+      assert(out == Map(50L -> ((50L, 0, "50"))), s"n=$n")
     }
   }
 
   test("dangling parent pointers resolve and drop in both tiers") {
     // nodes 10..14 chain up to parent 9, which has NO row (the edge slice
-    // omits it): the chain terminates at the missing id and drops. Pinned
-    // distributed too — a miss used to contract one level per round and
-    // spuriously trip the round fuse on chains deeper than the round count
+    // omits it): outside root 1's tree, so not returned; requested
+    // directly, the chain expands below its root
     val dangling = (Seq((1L, Option.empty[Long])) ++
       (10L to 14L).map(i => (i, Option(i - 1)))).toDF("id", "parent")
-    for (driverRows <- Seq(8192, 0)) {
-      val out = asMap(TreeExpand.expandByDoubling(dangling, Seq(1L).toDF("id"),
-        maxDepth = 5, driverStateRows = driverRows))
-      assert(out == Map(1L -> ((1L, 0, "1"))), s"driverRows=$driverRows")
+    for (run <- bothPaths) {
+      assert(asMap(run(dangling, Seq(1L).toDF("id"), 5)) == Map(1L -> ((1L, 0, "1"))))
+      val sub = asMap(run(dangling, Seq(10L).toDF("id"), 5))
+      assert(sub.keySet == (10L to 14L).toSet &&
+        sub(14L) == ((10L, 4, "10/11/12/13/14")))
     }
   }
 
@@ -353,13 +346,9 @@ class TreeExpandSpec extends AnyFunSuite {
   }
 
   test("pointer doubling emits depth-0 rows for roots absent from edges") {
-    val bfs = asMap(TreeExpand.expand(edges, Seq(1L, 42L).toDF("id")))
-    val dbl = asMap(TreeExpand.expandByDoubling(edges, Seq(1L, 42L).toDF("id")))
-    assert(dbl == bfs)
-    assert(dbl(42L) == ((42L, 0, "42")))
-    val dblDist = asMap(TreeExpand.expandByDoubling(edges, Seq(1L, 42L).toDF("id"),
-      driverStateRows = 0))
-    assert(dblDist == bfs)
+    val driver = asMap(onDriver(edges, Seq(1L, 42L).toDF("id"), 1000))
+    assert(driver(42L) == ((42L, 0, "42")) && driver.size == 6)
+    assert(asMap(inRounds(edges, Seq(1L, 42L).toDF("id"), 1000)) == driver)
   }
 
   test("driver pass matches the rounds on a seeded random forest") {

@@ -76,6 +76,11 @@ class CommitStepSpec extends AnyFunSuite {
     assert(new Snapshots(spark, root, kv).deltaCount == 0, "second delta must compact")
     assert(log.read().as[(String, Long)].collect().toSet ==
       Set(("a", 1L), ("b", 2L), ("c", 3L)))
+    // a tokened replay is recognised before the anti-join is built
+    log.claim(delta(("d", 4L)), Some("e1"))
+    val withE1 = manifest(root)
+    assert(TestSpark.countJobs(log.claim(delta(("d", 4L)), Some("e1"))) == 0)
+    assert(manifest(root) == withE1)
   }
 
   test("compactEvery < 1 fails at construction for every streaming store") {

@@ -73,12 +73,13 @@ class StreamBoilerplateSpec extends AnyFunSuite {
       "post-compaction counts diverged from the batch operator")
   }
 
-  test("observe runs 5 Spark jobs per batch and 4 on a replay") {
+  test("observe runs 5 Spark jobs per batch and none on a replay") {
     val dir = Files.createTempDirectory("graft-sboiler-jobs").toString
     val counts = new StreamBoilerplate.ChunkCounts(spark, dir, span = 8)
     assert(countJobs(counts.observe(b1, "doc_id", "text", batchId = 0L)) == 5)
     assert(countJobs(counts.observe(b2, "doc_id", "text", batchId = 1L)) == 5)
-    assert(countJobs(counts.observe(b1, "doc_id", "text", batchId = 0L)) == 4)
+    // the replayed token is recognised before the delta is built
+    assert(countJobs(counts.observe(b1, "doc_id", "text", batchId = 0L)) == 0)
   }
 
   test("retraction: deleting a chunk's carriers stops the scrub — counts " +
