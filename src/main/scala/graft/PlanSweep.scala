@@ -17,10 +17,19 @@ package graft
   * fine; per-token folds are not.
   *
   * Usage: scripts/run.sh graft.PlanSweep [sfDir]
+  * QueriesSpec asserts [[filterHits]] is empty for every query.
   */
 object PlanSweep {
   private val Needles = Seq("aggregate(", "filter(", "winnow_select", "pin_eval",
     "nearest_centroid", "nearest_residual", "transform(")
+
+  /** The Filter lines of an optimized plan whose condition embeds one of
+    * the needles. */
+  def filterHits(plan: String): Seq[String] =
+    plan.linesIterator.filter { l =>
+      val t = l.dropWhile(c => c == ' ' || c == '+' || c == '-' || c == ':')
+      t.startsWith("Filter ") && Needles.exists(t.contains)
+    }.toSeq
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
@@ -31,11 +40,7 @@ object PlanSweep {
     SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
         val qe = fn(spark, sfDir).queryExecution
-        val plan = qe.optimizedPlan.toString
-        val bad = plan.linesIterator.filter { l =>
-          val t = l.dropWhile(c => c == ' ' || c == '+' || c == '-' || c == ':')
-          t.startsWith("Filter ") && Needles.exists(t.contains)
-        }.toSeq
+        val bad = filterHits(qe.optimizedPlan.toString)
         // join-strategy census (physical plan): a SortMergeJoin whose
         // one side is provably bounded (deletion lists, component maps,
         // sidecars) is a missed broadcast — reviewed by hand

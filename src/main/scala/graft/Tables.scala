@@ -27,15 +27,6 @@ object Tables {
       org.apache.spark.sql.types.StructType]()
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    graft.functions.PolyHash.ensureRegistered(spark)
-    graft.functions.WordShingles.ensureRegistered(spark)
-    graft.functions.WordShingleSet.ensureRegistered(spark)
-    graft.functions.MinHashSig.ensureRegistered(spark)
-    graft.functions.HyperplaneBucket.ensureRegistered(spark)
-    graft.functions.SimHashSig.ensureRegistered(spark)
-    graft.functions.VecDot.ensureRegistered(spark)
-    graft.functions.TokenStats.ensureRegistered(spark)
-    graft.functions.StopHits.ensureRegistered(spark)
     val path = s"$dir/$name.parquet"
     val schema = schemaCache.computeIfAbsent(path,
       p => spark.read.parquet(p).schema)
@@ -73,10 +64,13 @@ object Tables {
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 
   /** Register all tables as temp views for `spark.sql` use (events goes
-    * through its nanos-normalizing loader). */
-  def registerViews(spark: SparkSession, dir: String): Unit =
+    * through its nanos-normalizing loader), plus the native functions SQL
+    * text can call by name ([[graft.functions.register]]). */
+  def registerViews(spark: SparkSession, dir: String): Unit = {
+    graft.functions.register(spark)
     names.foreach { n =>
       val df = if (n == "events") events(spark, dir) else load(spark, dir, n)
       df.createOrReplaceTempView(n)
     }
+  }
 }

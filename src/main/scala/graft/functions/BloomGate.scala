@@ -1,8 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.Columns
+import org.apache.spark.sql.graft.Columns.expression
 import org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain
-import org.apache.spark.sql.functions.call_function
 
 /** Column wrapper over Spark's own codegen'd [[BloomFilterMightContain]]
   * predicate — the expression Spark's runtime row-level filtering injects,
@@ -23,14 +24,7 @@ object BloomGate {
   /** `might_contain(filterBytes, value)` — filterBytes must be a foldable
     * binary column (a `lit` of the serialized filter). */
   def apply(filterBytes: Column, value: Column): Column =
-    call_function("graft_bloom_might_contain", filterBytes, value)
-
-  /** Idempotent per-session registration. */
-  def ensureRegistered(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("graft_bloom_might_contain",
-        exprs => BloomFilterMightContain(exprs.head, exprs(1)), "built-in")
+    Columns(BloomFilterMightContain(expression(filterBytes), expression(value)))
 
   /** Serialize a sketch BloomFilter to the byte form
     * [[BloomFilterMightContain]] deserializes. */

@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.Columns
+import org.apache.spark.sql.graft.Columns.expression
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** 8-bit random-hyperplane LSH bucket of a double vector, in one codegen'd
@@ -116,11 +117,5 @@ object HyperplaneBucket {
     bucket
   }
 
-  def apply(c: Column): Column = call_function("hyperplane_bucket", c)
-
-  def ensureRegistered(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("hyperplane_bucket",
-        exprs => HyperplaneBucket(exprs.head), "built-in")
+  def apply(c: Column): Column = Columns(HyperplaneBucket(expression(c)))
 }

@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.Columns
+import org.apache.spark.sql.graft.Columns.expression
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** 64-bit random-hyperplane (SRP) signature per embedding: bit j is set
@@ -37,7 +38,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
   * the composed per-plane HOF form pays 64 interpreted folds per row.
   *
   * `offset` selects the plane window [offset, offset+64) of the
-  * 192-plane family, so the two registered applications (offsets 32 and
+  * 192-plane family, so the two helpers `apply` and `hi` (offsets 32 and
   * 96) yield 128 independent planes — the streaming claim tier's
   * 4×32-bit band keys ([[graft.streaming.IncrementalEmbedDedup]]).
   *
@@ -122,18 +123,10 @@ object HyperplaneSig {
     sig
   }
 
-  def apply(c: Column): Column = call_function("hyperplane_sig", c)
+  def apply(c: Column): Column = Columns(HyperplaneSig(expression(c)))
 
   /** The [[HiOffset]] window — the second signature of the streaming
     * tier's 128-plane banding. */
-  def hi(c: Column): Column = call_function("hyperplane_sig_hi", c)
-
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val reg = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("hyperplane_sig",
-      exprs => HyperplaneSig(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("hyperplane_sig_hi",
-      exprs => HyperplaneSig(exprs.head, offset = HiOffset), "built-in")
-  }
+  def hi(c: Column): Column =
+    Columns(HyperplaneSig(expression(c), offset = HiOffset))
 }

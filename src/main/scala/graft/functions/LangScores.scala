@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.Columns
+import org.apache.spark.sql.graft.Columns.expression
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -68,11 +69,5 @@ object LangScores {
     new GenericInternalRow(counts.map(c => c: Any))
   }
 
-  def apply(c: Column): Column = call_function("lang_scores", c)
-
-  def ensureRegistered(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("lang_scores",
-        exprs => LangScores(exprs.head), "built-in")
+  def apply(c: Column): Column = Columns(LangScores(expression(c)))
 }

@@ -1,10 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
+import scala.collection.immutable.ArraySeq
+
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.Columns
+import org.apache.spark.sql.graft.Columns.expression
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, typedlit}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** Nearest-centroid assignment as one codegen'd expression: for a row's
@@ -136,35 +139,11 @@ case class NearestCentroid(left: Expression, right: Expression,
 
 object NearestCentroid {
 
-  /** Column form: (vec, norm) against an explicit centroid matrix. The
-    * matrix ships to the registry builder as three array literals and is
-    * absorbed into the expression's object state during analysis — the
-    * analyzed plan never carries per-element literal nodes. */
+  /** Column form: (vec, norm) against an explicit centroid matrix, which
+    * rides as the expression's object state — the plan never carries
+    * per-element literal nodes. */
   def apply(vec: Column, norm: Column, centIds: Seq[Long],
             centFlat: Seq[Double], centNorms: Seq[Double]): Column =
-    call_function("nearest_centroid", vec, norm,
-      typedlit(centIds), typedlit(centFlat), typedlit(centNorms))
-
-  private def doubles(e: Expression): IndexedSeq[Double] = e match {
-    case Literal(a: ArrayData, ArrayType(DoubleType, _)) =>
-      a.toDoubleArray().toIndexedSeq
-    case other =>
-      throw new IllegalArgumentException(
-        s"nearest_centroid centroid args must be ARRAY<DOUBLE> literals, got $other")
-  }
-
-  private def longs(e: Expression): IndexedSeq[Long] = e match {
-    case Literal(a: ArrayData, ArrayType(org.apache.spark.sql.types.LongType, _)) =>
-      a.toLongArray().toIndexedSeq
-    case other =>
-      throw new IllegalArgumentException(
-        s"nearest_centroid id arg must be an ARRAY<BIGINT> literal, got $other")
-  }
-
-  def ensureRegistered(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("nearest_centroid",
-        exprs => NearestCentroid(exprs(0), exprs(1),
-          longs(exprs(2)), doubles(exprs(3)), doubles(exprs(4))), "built-in")
+    Columns(NearestCentroid(expression(vec), expression(norm),
+      ArraySeq.from(centIds), ArraySeq.from(centFlat), ArraySeq.from(centNorms)))
 }

@@ -1,10 +1,13 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
+import scala.collection.immutable.ArraySeq
+
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.Columns
+import org.apache.spark.sql.graft.Columns.expression
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.{call_function, typedlit}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** Level-2 cell assignment of the two-level coarse quantizer: for a row's
@@ -142,41 +145,16 @@ case class NearestResidual(left: Expression, right: Expression,
 object NearestResidual {
 
   /** Column form: (vec, cell1) against explicit codebooks. cent1Ids MUST
-    * be sorted ascending (binary-searched at eval); the registry builder
-    * absorbs the array literals into expression object state during
-    * analysis, so the analyzed plan never carries per-element nodes. */
+    * be sorted ascending (binary-searched at eval); the codebooks ride as
+    * expression object state, so the plan never carries per-element
+    * nodes. */
   def apply(vec: Column, cell1: Column, cent1Ids: Seq[Long],
             cent1Flat: Seq[Double], cent2Ids: Seq[Long],
-            cent2Flat: Seq[Double]): Column =
-    call_function("nearest_residual", vec, cell1,
-      typedlit(cent1Ids), typedlit(cent1Flat),
-      typedlit(cent2Ids), typedlit(cent2Flat))
-
-  private def doubles(e: Expression): IndexedSeq[Double] = e match {
-    case Literal(a: ArrayData, ArrayType(DoubleType, _)) =>
-      a.toDoubleArray().toIndexedSeq
-    case other =>
-      throw new IllegalArgumentException(
-        s"nearest_residual codebook args must be ARRAY<DOUBLE> literals, got $other")
+            cent2Flat: Seq[Double]): Column = {
+    require(cent1Ids == cent1Ids.sorted,
+      "nearest_residual cent1Ids must be sorted ascending")
+    Columns(NearestResidual(expression(vec), expression(cell1),
+      ArraySeq.from(cent1Ids), ArraySeq.from(cent1Flat),
+      ArraySeq.from(cent2Ids), ArraySeq.from(cent2Flat)))
   }
-
-  private def longs(e: Expression): IndexedSeq[Long] = e match {
-    case Literal(a: ArrayData, ArrayType(LongType, _)) =>
-      a.toLongArray().toIndexedSeq
-    case other =>
-      throw new IllegalArgumentException(
-        s"nearest_residual id args must be ARRAY<BIGINT> literals, got $other")
-  }
-
-  def ensureRegistered(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("nearest_residual",
-        exprs => {
-          val ids1 = longs(exprs(2))
-          require(ids1 == ids1.sorted,
-            "nearest_residual cent1Ids must be sorted ascending")
-          NearestResidual(exprs(0), exprs(1),
-            ids1, doubles(exprs(3)), longs(exprs(4)), doubles(exprs(5)))
-        }, "built-in")
 }

@@ -1,6 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.Columns
+import org.apache.spark.sql.graft.Columns.expression
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -60,14 +62,6 @@ case class PinEval(child: Expression) extends UnaryExpression {
 
 object PinEval {
   /** Column-level helper: `pin(expensive)` — same values, one
-    * evaluation site. Call [[ensureRegistered]] on the session first
-    * (the codebase's custom-expression convention). */
-  def pin(c: Column): Column =
-    org.apache.spark.sql.functions.call_function("pin_eval", c)
-
-  def ensureRegistered(spark: org.apache.spark.sql.SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("pin_eval",
-        exprs => PinEval(exprs.head), "built-in")
+    * evaluation site. */
+  def pin(c: Column): Column = Columns(PinEval(expression(c)))
 }

@@ -1,9 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.Columns
+import org.apache.spark.sql.graft.Columns.expression
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -78,17 +79,9 @@ object PolyHash {
     a31 * p + a37
   }
 
-  /** Column API — resolves through the function registry, so
-    * [[ensureRegistered]] must have run on the analyzing session (the
-    * [[graft.Tables]] loaders guarantee it for every query path). */
-  def apply(c: Column): Column = call_function("polyhash", c)
-
-  /** Idempotent per-session registration (also enables SQL `polyhash(s)`). */
-  def ensureRegistered(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("polyhash", exprs => PolyHash(exprs.head),
-        "built-in")
+  /** Column API: wraps the expression directly, so any session can
+    * analyze it. SQL text reaches it through [[graft.functions.register]]. */
+  def apply(c: Column): Column = Columns(PolyHash(expression(c)))
 }
 
 /** WIDE variant of [[PolyHash]] for GLOBAL-scope join keys: a single
@@ -128,13 +121,7 @@ case class WidePolyHash(child: Expression) extends UnaryExpression {
 }
 
 object WidePolyHash {
-  def apply(c: Column): Column = call_function("wide_polyhash", c)
-
-  def ensureRegistered(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("wide_polyhash",
-        exprs => WidePolyHash(exprs.head), "built-in")
+  def apply(c: Column): Column = Columns(WidePolyHash(expression(c)))
 }
 
 /** THIRD hash coordinate for the 93-bit escalation tier (SCALE.md's
@@ -187,11 +174,5 @@ object ThirdPolyHash {
     acc
   }
 
-  def apply(c: Column): Column = call_function("third_polyhash", c)
-
-  def ensureRegistered(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("third_polyhash",
-        exprs => ThirdPolyHash(exprs.head), "built-in")
+  def apply(c: Column): Column = Columns(ThirdPolyHash(expression(c)))
 }

@@ -1,11 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
+import scala.collection.immutable.ArraySeq
+
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.Columns
+import org.apache.spark.sql.graft.Columns.expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit, typedlit}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /** Product-quantization encoder: split a dim = m·subDim vector into `m`
   * subvectors and map each to the index of its nearest (squared L2)
@@ -111,29 +114,7 @@ case class PqCodes(child: Expression, m: Int, k: Int,
 
 object PqCodes {
 
-  /** Column form; the registry builder absorbs the literals into
-    * expression object state during analysis. */
+  /** Column form; the codebook rides as expression object state. */
   def apply(vec: Column, m: Int, k: Int, cbFlat: Seq[Double]): Column =
-    call_function("pq_codes", vec, lit(m), lit(k), typedlit(cbFlat))
-
-  private def intLit(e: Expression, what: String): Int = e match {
-    case Literal(i: Int, IntegerType) => i
-    case other =>
-      throw new IllegalArgumentException(s"pq_codes $what must be an INT literal, got $other")
-  }
-
-  private def doubles(e: Expression): IndexedSeq[Double] = e match {
-    case Literal(a: ArrayData, ArrayType(DoubleType, _)) =>
-      a.toDoubleArray().toIndexedSeq
-    case other =>
-      throw new IllegalArgumentException(
-        s"pq_codes codebook must be an ARRAY<DOUBLE> literal, got $other")
-  }
-
-  def ensureRegistered(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("pq_codes",
-        exprs => PqCodes(exprs(0), intLit(exprs(1), "m"), intLit(exprs(2), "k"),
-          doubles(exprs(3))), "built-in")
+    Columns(PqCodes(expression(vec), m, k, ArraySeq.from(cbFlat)))
 }

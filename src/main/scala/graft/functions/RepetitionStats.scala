@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.Columns
+import org.apache.spark.sql.graft.Columns.expression
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -69,7 +70,7 @@ object RepetitionStats {
       tris.size.toLong))
   }
 
-  def apply(c: Column): Column = call_function("repetition_stats", c)
+  def apply(c: Column): Column = Columns(RepetitionStats(expression(c)))
 
   /** The Gopher-style repetition predicate over the four counters — ONE
     * definition shared by q59 and the curation pipeline so the
@@ -83,10 +84,4 @@ object RepetitionStats {
     (nBigrams > 0 && topBigramN * 1000 >= nBigrams * topBigramMilli) ||
       (nTrigrams > 0 &&
         (nTrigrams - nDistinctTrigrams) * 1000 >= nTrigrams * dupTrigramMilli)
-
-  def ensureRegistered(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("repetition_stats",
-        exprs => RepetitionStats(exprs.head), "built-in")
 }

@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.Columns
+import org.apache.spark.sql.graft.Columns.expression
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -58,13 +59,7 @@ object TokenStats {
     new GenericInternalRow(Array[Any](toks.length.toLong, sum, short))
   }
 
-  def apply(c: Column): Column = call_function("token_stats", c)
-
-  def ensureRegistered(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("token_stats",
-        exprs => TokenStats(exprs.head), "built-in")
+  def apply(c: Column): Column = Columns(TokenStats(expression(c)))
 }
 
 /** Native codegen'd stopword-hit counter: tokens of `child` present in the
@@ -114,22 +109,6 @@ object StopHits {
     n
   }
 
-  /** Column API: the word list travels as an array literal so the registry
-    * builder can recover it at resolution time. */
   def apply(c: Column, words: Seq[String]): Column =
-    call_function("stop_hits", c, org.apache.spark.sql.functions.lit(words.toArray))
-
-  def ensureRegistered(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("stop_hits", {
-        case Seq(child,
-            org.apache.spark.sql.catalyst.expressions.Literal(
-              arr: org.apache.spark.sql.catalyst.util.ArrayData,
-              ArrayType(StringType, _))) =>
-          StopHits(child, arr.toObjectArray(StringType)
-            .map(_.asInstanceOf[UTF8String].toString).toSeq)
-        case _ => throw new IllegalArgumentException(
-          "stop_hits(text, ARRAY<STRING> literal)")
-      }, "built-in")
+    Columns(StopHits(expression(c), words))
 }

@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.Columns
+import org.apache.spark.sql.graft.Columns.expression
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native codegen'd dot product over two array<double> columns, summing in
@@ -97,11 +98,6 @@ object VecDot {
     acc
   }
 
-  def apply(a: Column, b: Column): Column = call_function("vec_dot", a, b)
-
-  def ensureRegistered(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("vec_dot",
-        exprs => VecDot(exprs(0), exprs(1)), "built-in")
+  def apply(a: Column, b: Column): Column =
+    Columns(VecDot(expression(a), expression(b)))
 }

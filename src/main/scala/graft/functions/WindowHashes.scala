@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.Columns
+import org.apache.spark.sql.graft.Columns.expression
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -95,13 +96,7 @@ object WindowHashes {
   }
 
   def apply(text: Column, n: Int): Column =
-    call_function("window_hashes", text, lit(n))
-
-  def ensureRegistered(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("window_hashes",
-        exprs => WindowHashes(exprs.head, exprs(1)), "built-in")
+    Columns(WindowHashes(expression(text), Literal(n)))
 }
 
 /** WIDE variant of [[WindowHashes]] for the GLOBAL duplication tier
@@ -193,13 +188,7 @@ object WideWindowHashes {
   }
 
   def apply(text: Column, n: Int): Column =
-    call_function("wide_window_hashes", text, lit(n))
-
-  def ensureRegistered(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("wide_window_hashes",
-        exprs => WideWindowHashes(exprs.head, exprs(1)), "built-in")
+    Columns(WideWindowHashes(expression(text), Literal(n)))
 }
 
 /** THIRD window-hash coordinate for the 93-bit escalation tier: the
@@ -276,11 +265,5 @@ object ThirdWindowHashes {
   }
 
   def apply(text: Column, n: Int): Column =
-    call_function("third_window_hashes", text, lit(n))
-
-  def ensureRegistered(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("third_window_hashes",
-        exprs => ThirdWindowHashes(exprs.head, exprs(1)), "built-in")
+    Columns(ThirdWindowHashes(expression(text), Literal(n)))
 }

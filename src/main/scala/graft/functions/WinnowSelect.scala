@@ -1,11 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.Columns
+import org.apache.spark.sql.graft.Columns.expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -134,24 +135,5 @@ object WinnowSelect {
   }
 
   def apply(text: Column, k: Int, w: Int, wide: Boolean): Column =
-    call_function("winnow_select", text, lit(k), lit(w), lit(wide))
-
-  private def intLit(e: Expression, what: String): Int = e match {
-    case Literal(i: Int, IntegerType) => i
-    case other => throw new IllegalArgumentException(
-      s"winnow_select $what must be an INT literal, got $other")
-  }
-
-  private def boolLit(e: Expression, what: String): Boolean = e match {
-    case Literal(b: Boolean, BooleanType) => b
-    case other => throw new IllegalArgumentException(
-      s"winnow_select $what must be a BOOLEAN literal, got $other")
-  }
-
-  def ensureRegistered(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("winnow_select",
-        exprs => WinnowSelect(exprs.head, intLit(exprs(1), "k"),
-          intLit(exprs(2), "w"), boolLit(exprs(3), "wide")), "built-in")
+    Columns(WinnowSelect(expression(text), k, w, wide))
 }

@@ -1,10 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.Columns
+import org.apache.spark.sql.graft.Columns.expression
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -71,11 +72,5 @@ object WordShingleSet {
     }
   }
 
-  def apply(c: Column): Column = call_function("word_shingle_set", c)
-
-  def ensureRegistered(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry
-      .createOrReplaceTempFunction("word_shingle_set",
-        exprs => WordShingleSet(exprs.head), "built-in")
+  def apply(c: Column): Column = Columns(WordShingleSet(expression(c)))
 }

@@ -87,7 +87,6 @@ object Classify {
     require(buckets >= 2, "need at least 2 feature buckets")
     require(ngram >= 1 && ngram <= 3, "ngram must be in [1, 3]")
     require(epochs >= 1 && maxPerClass >= 1, "need epochs, maxPerClass >= 1")
-    graft.functions.PolyHash.ensureRegistered(docs.sparkSession)
     val base = docs.select(col(idCol).cast("long").as("id"),
       positive.cast("boolean").as("y"),
       transform(Mixing.dsirFeatStrings(col(textCol), ngram),
@@ -121,8 +120,7 @@ object Classify {
   /** The in-scan score expression: Σ over the text's (non-empty,
     * [[Mixing.dsirFeatStrings]]-contract) features of
     * `weights[hash(feat) % B]`. Exposed for filter predicates that
-    * should not pay a scoring join. Caller must have
-    * [[graft.functions.PolyHash]] registered. */
+    * should not pay a scoring join. */
   def scoreExpr(textCol: Column, weights: IndexedSeq[Long],
                 ngram: Int = 1): Column = {
     val wl = typedlit(weights)
@@ -144,7 +142,6 @@ object Classify {
                   weights: IndexedSeq[Long], ngram: Int = 1): DataFrame = {
     require(weights.length >= 2, "weight table needs at least 2 buckets")
     require(ngram >= 1 && ngram <= 3, "ngram must be in [1, 3]")
-    graft.functions.PolyHash.ensureRegistered(docs.sparkSession)
     docs.select(col(idCol),
       size(Mixing.dsirFeatStrings(col(textCol), ngram)).cast("long")
         .as("n_feat"),
@@ -168,7 +165,6 @@ object Classify {
                    ngram: Int = 1): DataFrame = {
     require(weights.length >= 2, "weight table needs at least 2 buckets")
     require(ngram >= 1 && ngram <= 3, "ngram must be in [1, 3]")
-    graft.functions.PolyHash.ensureRegistered(docs.sparkSession)
     val nf = size(Mixing.dsirFeatStrings(col(textCol), ngram)).cast("long")
     docs.select(col(sourceCol), nf.as("_nf"),
       scoreExpr(col(textCol), weights, ngram).as("_s"))
@@ -198,7 +194,6 @@ object Classify {
     require(thresholds.nonEmpty, "empty threshold ladder")
     require(thresholds.distinct.size == thresholds.size,
       "duplicate thresholds in the ladder")
-    graft.functions.PolyHash.ensureRegistered(docs.sparkSession)
     val ts = thresholds.sorted
     val nf = size(Mixing.dsirFeatStrings(col(textCol), ngram)).cast("long")
     val scored = docs
@@ -228,7 +223,6 @@ object Classify {
                   weights: IndexedSeq[Long], minPerFeatPpm: Long,
                   ngram: Int = 1): DataFrame = {
     require(weights.length >= 2, "weight table needs at least 2 buckets")
-    graft.functions.PolyHash.ensureRegistered(docs.sparkSession)
     val nf = size(Mixing.dsirFeatStrings(col(textCol), ngram)).cast("long")
     docs.filter(
       scoreExpr(col(textCol), weights, ngram) >= lit(minPerFeatPpm) * nf)

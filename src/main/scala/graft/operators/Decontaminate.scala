@@ -94,8 +94,6 @@ object Decontaminate {
     require(saltR >= 1, "saltR must be >= 1")
     require(hashBits == 62 || hashBits == 93,
       s"hashBits must be 62 or 93, got $hashBits")
-    graft.functions.WidePolyHash.ensureRegistered(train.sparkSession)
-    graft.functions.ThirdPolyHash.ensureRegistered(train.sparkSession)
     val keyCols = if (hashBits == 93) Seq("g", "g2") else Seq("g")
     def hashed(sh: DataFrame, idAs: String): DataFrame =
       sh.select(col("id").as(idAs) +: wideStrHash(col("g")).as("g") +:
@@ -133,7 +131,6 @@ object Decontaminate {
         if (keyCols.size == 1) "g" else "_hk", hotMin)
       (e.drop("_hk"), tshAll, Some(hot))
     } else {
-      graft.functions.BloomGate.ensureRegistered(train.sparkSession)
       val (e, _, bloom) =
         checkpointGramsWithSketch(eshBase, "g", expectedGrams, bloomFpp)
       (e, tshAll.filter(graft.functions.BloomGate(
@@ -193,10 +190,6 @@ object Decontaminate {
     require(expectedGrams >= 1, "expectedGrams must be >= 1")
     require(hashBits == 62 || hashBits == 93,
       s"hashBits must be 62 or 93, got $hashBits")
-    val spark = train.sparkSession
-    graft.functions.WidePolyHash.ensureRegistered(spark)
-    graft.functions.ThirdPolyHash.ensureRegistered(spark)
-    graft.functions.BloomGate.ensureRegistered(spark)
     // 93-bit escalation (SCALE.md): the exact join keys on the composite
     // (h62, h41) gram pair; the Bloom sketch still gates on h62 ALONE —
     // the sketch is a volume cut whose false positives the exact join
@@ -355,7 +348,6 @@ object Decontaminate {
     * it once per stream instead of once per micro-batch. */
   private[graft] def evalWindowHashes(eval: DataFrame, textCol: String,
                                       minTokens: Int): DataFrame = {
-    graft.functions.WideWindowHashes.ensureRegistered(eval.sparkSession)
     eval
       .select(posexplode(
         graft.functions.WideWindowHashes(col(textCol), minTokens)))
@@ -368,7 +360,6 @@ object Decontaminate {
       broadcastRuns: Boolean): DataFrame = {
     require(minTokens >= 1, "minTokens must be >= 1")
     val L = minTokens
-    graft.functions.WideWindowHashes.ensureRegistered(train.sparkSession)
     // `keep` are column NAMES already present on `df`; window hashing is
     // the codegen'd [[graft.functions.WideWindowHashes]] — one in-scan loop
     // per document, where the HOF transform/slice/concat_ws formulation
@@ -395,8 +386,6 @@ object Decontaminate {
     val runsSide =
       if (broadcastRuns) broadcast(runs)
       else runs.hint("shuffle_hash")
-    graft.functions.ScrubTokens.ensureRegistered(train.sparkSession)
-    graft.functions.TokenStats.ensureRegistered(train.sparkSession)
     val passthrough = train.columns.filter(_ != textCol).map(col).toSeq
     // rebuild pass, fully codegen'd: TokenStats counts the original
     // tokens, ScrubTokens drops covered positions in one merge-walk —

@@ -49,7 +49,6 @@ object Dedup {
     * of assuming). */
   def exactGroupsHashed(docs: DataFrame, idCol: String,
                         textCol: String): DataFrame = {
-    graft.functions.WidePolyHash.ensureRegistered(docs.sparkSession)
     docs
       .groupBy(graft.functions.TextAnalysis
         .wideStrHash(normalized(col(textCol))).as("_h"))
@@ -65,7 +64,6 @@ object Dedup {
     * aggregation over (hash, distinct-normalized-text) pairs; the texts
     * that ride it are one per DISTINCT (hash, text), not per row. */
   def verifyHashGroups(docs: DataFrame, textCol: String): Long = {
-    graft.functions.WidePolyHash.ensureRegistered(docs.sparkSession)
     docs
       .select(graft.functions.TextAnalysis
         .wideStrHash(normalized(col(textCol))).as("_h"),
@@ -89,8 +87,6 @@ object Dedup {
     */
   def shingles(docs: DataFrame, idCol: String, textCol: String,
                extraCols: Seq[String] = Nil): DataFrame = {
-    graft.functions.WordShingleSet.ensureRegistered(docs.sparkSession)
-    graft.functions.PolyHash.ensureRegistered(docs.sparkSession)
     val grams = graft.functions.WordShingleSet(col(textCol))
     docs
       .select((col(idCol).as("id") +: extraCols.map(col)) :+ explode(grams).as("g"): _*)
@@ -104,8 +100,6 @@ object Dedup {
   private[operators] def shinglesWithSize(docs: DataFrame, idCol: String,
                                           textCol: String,
                                           extraCols: Seq[String] = Nil): DataFrame = {
-    graft.functions.WordShingleSet.ensureRegistered(docs.sparkSession)
-    graft.functions.PolyHash.ensureRegistered(docs.sparkSession)
     val grams = graft.functions.WordShingleSet(col(textCol))
     docs
       .select((col(idCol).as("id") +: extraCols.map(col)) :+ grams.as("gs"): _*)
@@ -184,7 +178,6 @@ object Dedup {
     */
   def minhashPairs(docs: DataFrame, idCol: String, textCol: String,
                    thresholdMilli: Int): DataFrame = {
-    graft.functions.MinHashSig.ensureRegistered(docs.sparkSession)
     // (id, sig[16]) — map-only over the doc scan. NOT materialized: the band
     // self-join below shuffles two IDENTICAL (scan → sig → posexplode)
     // sides, so ReuseExchange computes the scan exactly once — a separate
@@ -265,7 +258,6 @@ object Dedup {
     */
   def simhashSignatures(docs: DataFrame, idCol: String, textCol: String,
                         extraCols: Seq[String] = Nil): DataFrame = {
-    graft.functions.SimHashSig.ensureRegistered(docs.sparkSession)
     docs.select(col(idCol).as("id") +: extraCols.map(col) :+
       graft.functions.SimHashSig(col(textCol)).as("simhash"): _*)
   }
@@ -276,7 +268,6 @@ object Dedup {
   def simhashSignaturesPortable(docs: DataFrame, idCol: String, textCol: String,
                                 extraCols: Seq[String] = Nil): DataFrame = {
     import graft.functions.TextAnalysis.{HplaneA, HplaneB, P}
-    graft.functions.PolyHash.ensureRegistered(docs.sparkSession)
     val keyCols = col(idCol).as("id") +: extraCols.map(col)
     val tok = docs
       .select(keyCols :+ explode(tokens(col(textCol))).as("w"): _*)
@@ -333,8 +324,6 @@ object Dedup {
     require(span >= 1, "span must be >= 1")
     require(minDocs >= 2, "minDocs must be >= 2")
     require(hashBits == 62 || hashBits == 93, s"hashBits must be 62 or 93, got $hashBits")
-    graft.functions.WidePolyHash.ensureRegistered(docs.sparkSession)
-    graft.functions.ThirdPolyHash.ensureRegistered(docs.sparkSession)
     // 93-bit escalation (SCALE.md hash-width policy): the chunk key grows
     // a second column — an independent third polynomial — for corpora
     // whose global chunk sets outgrow the 62-bit birthday regime (~10^10
@@ -426,8 +415,6 @@ object Dedup {
                                  hashBits: Int = graft.functions.TextAnalysis.defaultHashBits): DataFrame = {
     require(span >= 1, "span must be >= 1")
     chunkKeyCols(hashBits) // validates width
-    graft.functions.WidePolyHash.ensureRegistered(docs.sparkSession)
-    graft.functions.ThirdPolyHash.ensureRegistered(docs.sparkSession)
     val w = tokens(col(textCol))
     val chunkStr = (k: org.apache.spark.sql.Column) => concat_ws(" ",
       slice(col("w"), (k * span + 1).cast("int"), lit(span)))
@@ -470,7 +457,6 @@ object Dedup {
     // engine — one O(tokens + chunks) pass per document, bitwise equal
     // to the three-nested-HOF form it replaces, which re-ran
     // interpreted per token)
-    graft.functions.ScrubTokens.ensureRegistered(docs.sparkSession)
     val rkSorted = sort_array(col("rk"))
     // docs with NO removal verdict keep their original text BYTE-identical
     // (whitespace/newlines included): the token rebuild only runs on docs
@@ -645,7 +631,6 @@ object Dedup {
     * ([[graft.streaming.IncrementalLineDedup]]). */
   private[graft] def lineCoords(docs: DataFrame, idCol: String,
                                 textCol: String): DataFrame = {
-    graft.functions.WidePolyHash.ensureRegistered(docs.sparkSession)
     // idCol cast to LONG (the family's documented long-castable
     // contract, matching IncrementalLineDedup.scrubAndClaim): keep-first
     // takes min(struct(id, p)), and a raw string id would order
@@ -729,7 +714,6 @@ object Dedup {
     * is what downstream exchanges carry. */
   def cdcChunks(docs: DataFrame, idCol: String, textCol: String,
                 window: Int = 8, maskBits: Int = 5): DataFrame = {
-    graft.functions.CdcChunks.ensureRegistered(docs.sparkSession)
     docs.filter(col(textCol).isNotNull)
       .select(col(idCol),
         posexplode(graft.functions.CdcChunks(col(textCol).cast("string"),
@@ -825,7 +809,6 @@ object Dedup {
   def scrubCdcWithDups(docs: DataFrame, idCol: String, textCol: String,
                        dup: DataFrame, window: Int = 8,
                        maskBits: Int = 5): DataFrame = {
-    graft.functions.ScrubTokens.ensureRegistered(docs.sparkSession)
     val verdicts = cdcChunks(docs, idCol, textCol, window, maskBits)
       .join(dup.select("h"), Seq("h"))
       .groupBy(col(idCol))

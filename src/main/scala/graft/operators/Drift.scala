@@ -104,7 +104,6 @@ object Drift {
     * slices. */
   def embeddingDrift(a: DataFrame, b: DataFrame, labelCol: String,
                      vecCol: String): DataFrame = {
-    graft.functions.VecDot.ensureRegistered(a.sparkSession)
     def tagged(df: DataFrame, side: Int) =
       df.select(col(labelCol), lit(side).as("_side"),
         posexplode(transform(col(vecCol), _.cast("double")))

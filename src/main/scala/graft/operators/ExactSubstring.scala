@@ -365,9 +365,6 @@ object ExactSubstring {
     require(hashBits == 62 || hashBits == 93, s"hashBits must be 62 or 93, got $hashBits")
     val L = minTokens
     val spark = docs.sparkSession
-    graft.functions.WideWindowHashes.ensureRegistered(spark)
-    graft.functions.ThirdWindowHashes.ensureRegistered(spark)
-    graft.functions.TokenStats.ensureRegistered(spark)
     import org.apache.spark.sql.expressions.Window
     // both passes fully codegen'd in-scan: token counts via TokenStats,
     // window hashes via WindowHashes (the HOF transform/slice/concat_ws

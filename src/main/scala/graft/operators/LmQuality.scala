@@ -55,7 +55,6 @@ object LmQuality {
     */
   def score(docs: DataFrame, refFilter: Column, idCol: String,
             textCol: String, broadcastModel: Boolean = true): DataFrame = {
-    graft.functions.WindowHashes.ensureRegistered(docs.sparkSession)
     def grams(df: DataFrame, n: Int) =
       df.select(explode(graft.functions.WindowHashes(col(textCol), n)).as("h"),
         lit(n).as("n"))
@@ -81,7 +80,6 @@ object LmQuality {
     // per-occurrence (bigram hash, context-unigram hash) via the fused
     // one-pass [[graft.functions.BigramPairs]] — the corpus-side hot
     // loop tokenizes each document once, not once per gram order
-    graft.functions.BigramPairs.ensureRegistered(docs.sparkSession)
     val occ = docs
       .select(col(idCol).as("id"),
         explode(graft.functions.BigramPairs(col(textCol))).as("z"))

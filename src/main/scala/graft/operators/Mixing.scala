@@ -35,7 +35,6 @@ object Mixing {
     require(quota >= 1, "quota must be >= 1")
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.functions.PolyHash.ensureRegistered(spark)
     val base: Dataset[(String, Long, Long)] = docs
       .select(col(groupCol).cast("string").as("g"),
         col(idCol).cast("long").as("id"),
@@ -70,7 +69,6 @@ object Mixing {
   def rateMix(docs: DataFrame, idCol: String, groupCol: String,
               ratesMilli: Map[String, Int],
               defaultMilli: Int = 1000): DataFrame = {
-    graft.functions.PolyHash.ensureRegistered(docs.sparkSession)
     val rate = rateExpr(groupCol, ratesMilli, defaultMilli)
     docs.filter(strHash(col(idCol).cast("string")) % 1000 < rate)
   }
@@ -150,7 +148,6 @@ object Mixing {
     require(budget <= 1000000000L,
       "budget must be <= 1e9 (keeps budget * w inside a long for any " +
         "source up to ~8e13 docs)")
-    graft.functions.PolyHash.ensureRegistered(docs.sparkSession)
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy().rowsBetween(
         org.apache.spark.sql.expressions.Window.unboundedPreceding,
@@ -230,8 +227,6 @@ object Mixing {
     require(budget <= 1000000000L,
       "budget must be <= 1e9 (keeps budget * w inside a long for any " +
         "source up to ~8e13 tokens)")
-    graft.functions.PolyHash.ensureRegistered(docs.sparkSession)
-    graft.functions.TokenStats.ensureRegistered(docs.sparkSession)
     val nTok = graft.functions.TokenStats(col(textCol))
       .getField("n_tokens").cast("long")
     val base = docs.select(col(groupCol).cast("string").as("g"),
@@ -302,7 +297,6 @@ object Mixing {
       "maxEpochs must be in [1, 100]")
     require(weightsPpm.values.forall(w => w >= 0 && w <= 1000000L),
       "recipe weights must be in [0, 1e6] ppm")
-    graft.functions.TokenStats.ensureRegistered(docs.sparkSession)
     val nTok = graft.functions.TokenStats(col(textCol))
       .getField("n_tokens").cast("long")
     val totals = docs
@@ -356,7 +350,6 @@ object Mixing {
   def mixturePlanDocs(docs: DataFrame, idCol: String, sourceCol: String,
                       textCol: String, weightsPpm: Map[String, Long],
                       budget: Long, maxEpochs: Long = 1L): DataFrame = {
-    graft.functions.PolyHash.ensureRegistered(docs.sparkSession)
     val plan = mixturePlan(docs, idCol, sourceCol, textCol, weightsPpm,
       budget, maxEpochs)
     docs
@@ -382,7 +375,6 @@ object Mixing {
   def mixtureEpochsDocs(docs: DataFrame, idCol: String, sourceCol: String,
                         textCol: String, weightsPpm: Map[String, Long],
                         budget: Long, maxEpochs: Long = 1L): DataFrame = {
-    graft.functions.PolyHash.ensureRegistered(docs.sparkSession)
     val plan = mixturePlan(docs, idCol, sourceCol, textCol, weightsPpm,
       budget, maxEpochs)
     val nFull = (col("rate_ppm") / 1000000L).cast("long")
@@ -404,7 +396,6 @@ object Mixing {
   def rateMixSummary(docs: DataFrame, idCol: String, groupCol: String,
                      ratesMilli: Map[String, Int],
                      defaultMilli: Int = 1000): DataFrame = {
-    graft.functions.PolyHash.ensureRegistered(docs.sparkSession)
     val rate = rateExpr(groupCol, ratesMilli, defaultMilli)
     docs
       .select(col(groupCol).as("g"),
@@ -445,7 +436,6 @@ object Mixing {
   def epochShuffle(docs: DataFrame, idCol: String, seed: Long,
                    nShards: Int): DataFrame = {
     require(nShards >= 1, "nShards must be >= 1")
-    graft.functions.PolyHash.ensureRegistered(docs.sparkSession)
     val key = (strHash(concat(lit(seed.toString), lit(":"),
       col(idCol).cast("string"))) * lit(MixK)) %
       lit(graft.functions.TextAnalysis.P)
@@ -489,8 +479,6 @@ object Mixing {
     require(thresholds.nonEmpty, "empty threshold ladder")
     require(thresholds.distinct.size == thresholds.size,
       "duplicate thresholds in the ladder")
-    graft.functions.PolyHash.ensureRegistered(docs.sparkSession)
-    graft.functions.PinEval.ensureRegistered(docs.sparkSession)
     val nf = size(dsirFeatStrings(col(textCol), ngram)).cast("long")
     // pin_eval: `tier` (a window partition key and a downstream
     // join/group key in the pack chains) derives from the evidence
@@ -601,7 +589,6 @@ object Mixing {
   private[operators] def bucketPpm(df: DataFrame, tcol: String,
                                    buckets: Int, ngram: Int,
                                    what: String): Array[Long] = {
-    graft.functions.PolyHash.ensureRegistered(df.sparkSession)
     val rows = df
       .select(explode(dsirFeatStrings(col(tcol), ngram)).as("w"))
       .select((strHash(col("w")) % buckets).as("b"))
@@ -627,7 +614,6 @@ object Mixing {
     require(ratio.length >= 2, "ratio table needs at least 2 buckets")
     require(maxFeatures >= 1, "maxFeatures must be >= 1")
     require(ngram >= 1 && ngram <= 3, "ngram must be in [1, 3]")
-    graft.functions.PolyHash.ensureRegistered(docs.sparkSession)
     val feats = dsirFeatsCol(textCol, ratio.length, maxFeatures, ngram)
     docs.select(col(idCol), feats.as("_fb"))
       .select(col(idCol),
@@ -703,7 +689,6 @@ object Mixing {
       "budget must be in [1, 1e9] documents")
     require(maxW >= 0.001 && maxW <= 1000000.0,
       "maxW must be in [0.001, 1e6]")
-    graft.functions.PolyHash.ensureRegistered(docs.sparkSession)
     val feats = dsirFeatsCol(textCol, ratio.length, maxFeatures, ngram)
     val wMilli = floor(least(dsirWeightOf(feats, ratio), lit(maxW)) * 1000)
       .cast("long")
@@ -727,8 +712,6 @@ object Mixing {
                                     ratio: IndexedSeq[Double],
                                     basePpm: Long, maxFeatures: Int,
                                     ngram: Int, maxW: Double): DataFrame = {
-    graft.functions.PolyHash.ensureRegistered(docs.sparkSession)
-    graft.functions.PinEval.ensureRegistered(docs.sparkSession)
     val feats = dsirFeatsCol(textCol, ratio.length, maxFeatures, ngram)
     docs
       .withColumn("n_feat", size(feats).cast("long"))
@@ -797,8 +780,6 @@ object Mixing {
       "token budget must be in [1, 1e12]")
     require(maxW >= 0.001 && maxW <= 1000000.0,
       "maxW must be in [0.001, 1e6]")
-    graft.functions.PolyHash.ensureRegistered(docs.sparkSession)
-    graft.functions.TokenStats.ensureRegistered(docs.sparkSession)
     val feats = dsirFeatsCol(textCol, ratio.length, maxFeatures, ngram)
     val wMilli = floor(least(dsirWeightOf(feats, ratio), lit(maxW)) * 1000)
       .cast("long")

@@ -522,7 +522,6 @@ object Packing {
     // bounded by the deletion list, which deadIds caps) — broadcast it, or
     // the left join shuffles every pack's token payload on pack_id just to
     // attach it
-    graft.functions.PinEval.ensureRegistered(packs.sparkSession)
     packs
       .join(broadcast(deadIdx), col("pack_id") === col("_fp_pack"), "left")
       .withColumn("_fp_dead_idx",
@@ -592,7 +591,6 @@ object Packing {
     val keep = packs.columns.map(col).toSeq
     // broadcast for the same reason as [[forgetPacks]]: deadIdx is
     // deletion-bounded; a shuffled join would move every token payload
-    graft.functions.PinEval.ensureRegistered(packs.sparkSession)
     packs
       .join(broadcast(deadIdx), col("pack_id") === col("_fp_pack"), "left")
       .withColumn("_fp_dead_idx",

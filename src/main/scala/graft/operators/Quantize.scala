@@ -103,7 +103,6 @@ object Quantize {
     * subsample, [[pqCodebookTrained]], or a persisted sidecar). */
   def pqEncodeWith(df: DataFrame, vecCol: String, m: Int, k: Int,
                    flat: IndexedSeq[Double]): DataFrame = {
-    graft.functions.PqCodes.ensureRegistered(df.sparkSession)
     df.withColumn("codes",
       graft.functions.PqCodes(vecd(col(vecCol)), m, k, flat))
   }
@@ -182,7 +181,6 @@ object Quantize {
   def kmeansStep(df: DataFrame, idCol: String, vecCol: String,
                  every: Int, maxCentroids: Int = 65536): DataFrame = {
     require(every >= 1, "every must be >= 1")
-    graft.functions.NearestResidual.ensureRegistered(df.sparkSession)
     val base = df.select(col(idCol).cast("long").as("id"),
       vecd(col(vecCol)).as("vecd"))
     val centRows = base.filter(col("id") % every === 0)
@@ -247,7 +245,6 @@ object Quantize {
                   init: Option[DataFrame] = None): DataFrame = {
     require(every >= 1, "every must be >= 1")
     require(iters >= 0, "iters must be >= 0")
-    graft.functions.NearestResidual.ensureRegistered(df.sparkSession)
     val base = df.select(col(idCol).cast("long").as("id"),
       vecd(col(vecCol)).as("vecd"))
       .localCheckpoint(true)
@@ -334,7 +331,6 @@ object Quantize {
                        maxCentroids: Int = 65536): DataFrame = {
     require(every >= 1, "every must be >= 1")
     require(iters >= 0, "iters must be >= 0")
-    graft.functions.NearestResidual.ensureRegistered(df.sparkSession)
     val base = df.select(col(idCol).cast("long").as("id"),
       vecd(col(vecCol)).as("vecd"))
       .localCheckpoint(true)
@@ -416,7 +412,6 @@ object Quantize {
                          every1: Int, every2: Int,
                          iters1: Int = 6, iters2: Int = 6,
                          maxCentroids: Int = 65536): Similarity.TwoLevelCodebooks = {
-    graft.functions.NearestCentroid.ensureRegistered(df.sparkSession)
     val cents1 = kmeansTrainExact(df, idCol, vecCol, every1, iters1,
       maxCentroids).localCheckpoint(true)
     val c1 = cents1.orderBy("cent_id").collect()
@@ -542,7 +537,6 @@ object Quantize {
                    centroidEvery: Int = 137): Unit = {
     val spark = df.sparkSession
     import spark.implicits._
-    graft.functions.PqCodes.ensureRegistered(spark)
     val base = Similarity.withNorm(df, vecCol)
     val cents = Similarity.centroidsOf(base, idCol, centroidEvery)
     val (k, subDim, flat) = pqCodebook(df, idCol, vecCol, m, every)
@@ -571,7 +565,6 @@ object Quantize {
                        idCol: String, queryVec: Seq[Double], kNN: Int,
                        nprobe: Int = 2): DataFrame = {
     require(kNN >= 1, "kNN must be >= 1")
-    graft.functions.VecDot.ensureRegistered(spark)
     val qlit = array(queryVec.map(lit): _*)
     val qnorm = math.sqrt(queryVec.map(x => x * x).sum)
     val probed = spark.read.parquet(s"$dir/centroids")
@@ -645,7 +638,6 @@ object Quantize {
                     queryId: Long, kNN: Int, m: Int, k: Int, subDim: Int,
                     flat: IndexedSeq[Double]): DataFrame = {
     require(kNN >= 1, "kNN must be >= 1")
-    graft.functions.PqCodes.ensureRegistered(df.sparkSession)
     val qv = df.filter(col(idCol) === queryId)
       .select(vecd(col(vecCol))).head().getSeq[Double](0)
     require(qv.length == m * subDim, s"query dim ${qv.length} != ${m * subDim}")
@@ -673,7 +665,6 @@ object Quantize {
     // full m-subspace encoder under the projection and every corpus row
     // encodes twice (guide §4.4; the non-selective id filter riding the
     // same predicate costs nothing unpushed)
-    graft.functions.PinEval.ensureRegistered(df.sparkSession)
     val codes = graft.functions.PinEval.pin(
       graft.functions.PqCodes(vecd(col(vecCol)), m, k, flat))
     // explicit left-assoc sum over subspaces — ((d0 + d1) + d2) + ... —
@@ -750,7 +741,6 @@ object Quantize {
                          subDim: Int, flat: IndexedSeq[Double]): DataFrame = {
     require(kNN >= 1, "kNN must be >= 1")
     val spark = df.sparkSession
-    graft.functions.PqCodes.ensureRegistered(spark)
     val qRows = queries
       .select(col(idCol).cast("long"), vecd(col(vecCol))).collect()
     val tabs = qRows.map { r =>
@@ -782,7 +772,6 @@ object Quantize {
     val tabsDf = tabs.toDF("qid", "tab")
     // pin_eval for the same reason as [[pqAdcTopKWith]]: one encode per
     // corpus row, not one per filter substitution
-    graft.functions.PinEval.ensureRegistered(spark)
     val codes = graft.functions.PinEval.pin(
       graft.functions.PqCodes(vecd(col(vecCol)), m, k, flat))
     val dist = (0 until m).map { jj =>

@@ -53,7 +53,6 @@ object Similarity {
 
   /** Adds `vecd` (double vector) and `norm` columns. */
   def withNorm(df: DataFrame, vecCol: String): DataFrame = {
-    graft.functions.VecDot.ensureRegistered(df.sparkSession)
     val d = vecD(col(vecCol))
     df.withColumn("vecd", d).withColumn("norm", normD(col("vecd")))
   }
@@ -113,7 +112,6 @@ object Similarity {
     * Output: (id_a, id_b, cos_r). */
   def hyperplaneSigPairs(df: DataFrame, idCol: String, vecCol: String,
                          minCos: Double): DataFrame = {
-    graft.functions.HyperplaneSig.ensureRegistered(df.sparkSession)
     val sig = withNorm(df, vecCol)
       .select(col(idCol).as("id"), col("vecd"), col("norm"),
         graft.functions.HyperplaneSig(col("vecd")).as("hsig"))
@@ -302,7 +300,6 @@ object Similarity {
       base.join(best, col(idCol) === col("_cell_of"), "left")
         .select(keep: _*)
     } else {
-      graft.functions.NearestCentroid.ensureRegistered(base.sparkSession)
       // the sample IS the full centroid set; NearestCentroid's tie-break
       // contract needs it in ascending cent_id order (driver-side sort of
       // <= maxDriver rows replaces the old orderBy().collect() job)
@@ -331,8 +328,6 @@ object Similarity {
   private[operators] def buildCodebooks(
       base: DataFrame, idCol: String, every1: Int, every2: Int,
       maxDriver: Int): TwoLevelCodebooks = {
-    graft.functions.NearestCentroid.ensureRegistered(base.sparkSession)
-    graft.functions.NearestResidual.ensureRegistered(base.sparkSession)
     val head = base.filter(col(idCol) % every1 === 0)
       .select(col(idCol), col("vecd"), col("norm"))
       .orderBy(col(idCol)).head(maxDriver + 1)
@@ -385,8 +380,6 @@ object Similarity {
       base: DataFrame, idCol: String, every1: Int, every2: Int,
       maxDriver: Int, iters: Int = 10,
       maxSample: Int = 4096): TwoLevelCodebooks = {
-    graft.functions.NearestCentroid.ensureRegistered(base.sparkSession)
-    graft.functions.NearestResidual.ensureRegistered(base.sparkSession)
     val k1 = base.filter(col(idCol) % every1 === 0).count().toInt
     val k2 = base.filter(col(idCol) % every2 === 0).count().toInt
     require(k1 > 0, s"no row has $idCol % $every1 == 0 — pass a smaller every1")
@@ -589,7 +582,6 @@ object Similarity {
   def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession, dir: String,
                      idCol: String, vecCol: String, queryVec: Seq[Double],
                      k: Int, nprobe: Int = 2): DataFrame = {
-    graft.functions.VecDot.ensureRegistered(spark)
     val qlit = array(queryVec.map(lit): _*)
     val qnorm = math.sqrt(queryVec.map(x => x * x).sum)
     val probed = spark.read.parquet(s"$dir/centroids")
@@ -867,8 +859,6 @@ object Similarity {
   def annTopKMultiProbe(df: DataFrame, idCol: String, vecCol: String,
                         queryId: Long, k: Int, radius: Int = 1): DataFrame = {
     require(radius >= 0 && radius <= 8, "radius must be in [0, 8]")
-    graft.functions.HyperplaneBucket.ensureRegistered(df.sparkSession)
-    graft.functions.PinEval.ensureRegistered(df.sparkSession)
     val nb = withNorm(df, vecCol)
     // id filters run BEFORE the bucket projection (so the selective
     // query-row lookup still pushes to the scan) and the corpus-side
@@ -905,7 +895,6 @@ object Similarity {
     * derivable from the query vector alone at probe time. */
   def lshWriteIndex(df: DataFrame, idCol: String, vecCol: String,
                     dir: String): Unit = {
-    graft.functions.HyperplaneBucket.ensureRegistered(df.sparkSession)
     withNorm(df, vecCol)
       .withColumn("bucket", hyperplaneBucket(col("vecd")))
       .select(col(idCol), col(vecCol), col("bucket"))
@@ -923,7 +912,6 @@ object Similarity {
                      idCol: String, vecCol: String, queryVec: Seq[Double],
                      k: Int, radius: Int = 1): DataFrame = {
     require(radius >= 0 && radius <= 8, "radius must be in [0, 8]")
-    graft.functions.VecDot.ensureRegistered(spark)
     val qb = graft.functions.HyperplaneBucket.computeJvm(queryVec.toArray)
     val probed = (0L until 256L)
       .filter(b => java.lang.Long.bitCount(b ^ qb) <= radius)
@@ -941,8 +929,6 @@ object Similarity {
 
   def annTopK(df: DataFrame, idCol: String, vecCol: String,
               queryId: Long, k: Int): DataFrame = {
-    graft.functions.HyperplaneBucket.ensureRegistered(df.sparkSession)
-    graft.functions.PinEval.ensureRegistered(df.sparkSession)
     val nb = withNorm(df, vecCol)
     // same discipline as [[annTopKMultiProbe]]: id filters before the
     // bucket projection, corpus bucket pinned to one evaluation (the
@@ -1001,8 +987,6 @@ object Similarity {
                              idCol: String, vecCol: String, k: Int,
                              radius: Int = 1): DataFrame = {
     require(radius >= 0 && radius <= 8, "radius must be in [0, 8]")
-    graft.functions.HyperplaneBucket.ensureRegistered(corpus.sparkSession)
-    graft.functions.PinEval.ensureRegistered(corpus.sparkSession)
     // both buckets pinned: the probe equi-join's inferred isnotnull
     // would re-expand the 8-plane fold below each projection (no
     // filters need to push through either side — no pushdown lost)

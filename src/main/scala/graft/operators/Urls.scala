@@ -117,7 +117,6 @@ object Urls {
     // NULL text = no links (coalesce, not null-propagation): a stats row
     // per input row, zeros for the unscannable
     val urls = urlArray(textCol)
-    graft.functions.TokenStats.ensureRegistered(docs.sparkSession)
     docs.select(col(idCol),
       size(urls).cast("long").as("n_urls"),
       size(array_distinct(transform(urls, canonicalize _))).cast("long")
@@ -129,8 +128,7 @@ object Urls {
 
   /** In-scan link density (integer per-mille of whitespace tokens) —
     * the expression form, for filter predicates that should not pay a
-    * stats join ([[graft.pipeline.Curation]]'s URL gate). Caller must
-    * have [[graft.functions.TokenStats]] registered. */
+    * stats join ([[graft.pipeline.Curation]]'s URL gate). */
   def linkDensityMilli(textCol: String): Column = {
     val urls = urlArray(textCol)
     val nTok = coalesce(graft.functions.TokenStats(col(textCol))
@@ -179,7 +177,6 @@ object Urls {
     require(cap >= 1, "cap must be >= 1")
     val spark = docs.sparkSession
     import spark.implicits._
-    graft.functions.PolyHash.ensureRegistered(spark)
     val urls = urlArray(textCol)
     val withDom = docs.select(col(idCol).cast("long").as("_id"),
       when(size(urls) > 0, registeredDomain(element_at(urls, 1)))

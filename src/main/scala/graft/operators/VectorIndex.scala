@@ -157,7 +157,6 @@ object VectorIndex {
   def topKIndexed(spark: SparkSession, dir: String, queryVec: Seq[Double],
                   k: Int, nprobe: Int = 2): DataFrame = {
     require(k >= 1 && nprobe >= 1, "k and nprobe must be >= 1")
-    graft.functions.VecDot.ensureRegistered(spark)
     val qlit = array(queryVec.map(lit): _*)
     val qnorm = math.sqrt(queryVec.map(x => x * x).sum)
     val probed = centroidsDf(spark, dir)

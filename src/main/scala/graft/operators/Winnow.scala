@@ -217,8 +217,6 @@ object Winnow {
                             idCol: String, textCol: String, k: Int = 3,
                             w: Int = 4, minShared: Int = 1,
                             hashBits: Int = 62): DataFrame = {
-    graft.functions.ScrubTokens.ensureRegistered(train.sparkSession)
-    graft.functions.TokenStats.ensureRegistered(train.sparkSession)
     val spans = matchedSpansWith(train, evalPosFp, idCol, textCol, k, w,
         minShared, hashBits)
       .groupBy(col("train_id"))
@@ -292,7 +290,6 @@ object Winnow {
       .filter(col("p") >= col("e_start") && col("p") <= col("e_end"))
       .select(col("eval_id"), col("p")).distinct()
       .groupBy("eval_id").agg(count(lit(1)).as("covered_tokens"))
-    graft.functions.TokenStats.ensureRegistered(eval.sparkSession)
     val evalN = eval.select(col(idCol).cast("long").as("eval_id"),
       graft.functions.TokenStats(col(textCol)).getField("n_tokens")
         .cast("long").as("n_tokens"))
@@ -329,7 +326,6 @@ object Winnow {
     // OUTPUT, which cannot be pushed below the Generate. Result rows
     // are identical; WinnowSpec pins "exactly one winnow_select in the
     // executed plan".
-    graft.functions.WinnowSelect.ensureRegistered(docs.sparkSession)
     docs
       .select(col(idCol).as("id"),
         graft.functions.WinnowSelect(col(textCol), k, w,

@@ -156,9 +156,6 @@ object Curation {
     require(outClash.isEmpty,
       s"input already has output column(s) ${outClash.mkString(", ")} — " +
         "rename them before curation")
-    val spark = docs.sparkSession
-    graft.functions.RepetitionStats.ensureRegistered(spark)
-    graft.functions.TokenStats.ensureRegistered(spark)
 
     // stage boundary: materialize once so each count (and the next
     // stage) reads the checkpoint, not the full upstream lineage

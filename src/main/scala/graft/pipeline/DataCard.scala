@@ -122,7 +122,6 @@ object DataCard {
             minDocs: Int = 2,
             classifierWeights: Option[IndexedSeq[Long]] = None,
             classifierNgram: Int = 1): Card = {
-    graft.functions.TokenStats.ensureRegistered(docs.sparkSession)
     // checkpoint ONLY the columns the card reads — a bare
     // docs.localCheckpoint would materialize every caller column
     // (corpus-sized payload for fields the card never touches)

@@ -139,7 +139,6 @@ object TextQ {
          |)
          |GROUP BY actual, predicted
          |ORDER BY actual, predicted""".stripMargin) { (s, dir) =>
-      graft.functions.LangScores.ensureRegistered(s)
       val ls = graft.functions.LangScores(col("text"))
       val scored = Tables.documents(s, dir)
         .select(col("lang").as("actual") +: Stopwords.map { case (l, _) =>
@@ -613,7 +612,6 @@ object TextQ {
        |LEFT JOIN topbi ON t.doc_id = topbi.doc_id
        |LEFT JOIN tri ON t.doc_id = tri.doc_id
        |ORDER BY t.doc_id""".stripMargin) { (s, dir) =>
-    graft.functions.RepetitionStats.ensureRegistered(s)
     val rs = graft.functions.RepetitionStats(col("text"))
     Tables.documents(s, dir)
       .select(col("doc_id"),

@@ -41,7 +41,6 @@ final class IncrementalDedup(spark: SparkSession, root: String,
     * .minhashPairs]]. Docs with < 3 tokens have no signature and pass
     * through undeduplicated (no shingles → nothing to collide on). */
   private def bandKeys(batch: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.MinHashSig.ensureRegistered(batch.sparkSession)
     batch
       .select(col(idCol).as("id"), graft.functions.MinHashSig(col(textCol)).as("sig"))
       .filter(col("sig").isNotNull)
@@ -125,8 +124,6 @@ final class IncrementalEmbedDedup(spark: SparkSession, root: String,
     * rows pass through [[filterAndClaim]] unexamined). */
   private def bandKeys(batch: DataFrame, idCol: String,
                        vecCol: String): DataFrame = {
-    graft.functions.HyperplaneSig.ensureRegistered(batch.sparkSession)
-    graft.functions.VecDot.ensureRegistered(batch.sparkSession)
     val mask = lit(0xFFFFFFFFL)
     batch
       .select(col(idCol).as("id"),

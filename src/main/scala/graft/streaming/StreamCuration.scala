@@ -235,9 +235,6 @@ object StreamCuration {
     require(unigramSampleK == 1 || unigramTokenizer.isDefined,
       "unigramSampleK > 1 requires unigramTokenizer (sampled " +
         "segmentation is a unigram-lattice construct)")
-    graft.functions.RepetitionStats.ensureRegistered(spark)
-    graft.functions.WidePolyHash.ensureRegistered(spark)
-    graft.functions.TokenStats.ensureRegistered(spark)
     val exactClaims = exactLog(spark, s"$stateDir/exact", compactEvery)
     exactClaims.init()
     val nearDup = new IncrementalDedup(spark, s"$stateDir/neardup",

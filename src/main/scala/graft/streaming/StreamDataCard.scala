@@ -81,7 +81,6 @@ final class StreamDataCard(spark: SparkSession, root: String,
   private def batchMetrics(batch: DataFrame, textCol: String,
                            langCol: String,
                            sourceCol: String): Seq[(String, Long)] = {
-    graft.functions.TokenStats.ensureRegistered(spark)
     val t = col(textCol)
     val urls = size(coalesce(
       regexp_extract_all(t, lit(graft.operators.Urls.UrlRe), lit(0)),

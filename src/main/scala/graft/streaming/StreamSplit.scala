@@ -57,15 +57,11 @@ final class StreamSplit(spark: SparkSession, root: String,
 
   private val claims = StreamSplit.claimLog(spark, root, compactEvery)
 
-  def init(): Unit = {
-    graft.functions.PolyHash.ensureRegistered(spark) // strHash placement
-    claims.init()
-  }
+  def init(): Unit = claims.init()
 
   /** (id, bkey) MinHash band keys — the [[IncrementalDedup]] banding. */
   private def bandKeys(batch: DataFrame, idCol: String,
                        textCol: String): DataFrame = {
-    graft.functions.MinHashSig.ensureRegistered(batch.sparkSession)
     batch
       .select(col(idCol).cast("long").as("id"),
         graft.functions.MinHashSig(col(textCol)).as("sig"))

@@ -33,6 +33,9 @@ class QueriesSpec extends AnyFunSuite {
     test(s"$name runs at sf0.001 with a non-empty schema") {
       val df = fn(spark, sfDir)
       assert(df.schema.nonEmpty)
+      // no expensive expression duplicated into a pushed-down Filter
+      val hits = PlanSweep.filterHits(df.queryExecution.optimizedPlan.toString)
+      assert(hits.isEmpty, hits.mkString("\n"))
       assert(df.count() >= 0)
     }
   }

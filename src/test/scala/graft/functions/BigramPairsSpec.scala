@@ -13,8 +13,6 @@ class BigramPairsSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   test("bitwise parity with the zipped WindowHashes twin on corpus text") {
-    WindowHashes.ensureRegistered(spark)
-    BigramPairs.ensureRegistered(spark)
     val diff = Tables.documents(spark, "/root/testdata/sf0.001")
       .select(BigramPairs(col("text")).as("a"),
         WindowHashes(col("text"), 1).as("u"),
@@ -48,7 +46,7 @@ class BigramPairsSpec extends AnyFunSuite {
   }
 
   test("fewer than two tokens is empty; null stays null; codegen path used") {
-    BigramPairs.ensureRegistered(spark)
+    register(spark)
     val r = spark.sql(
       "SELECT bigram_pairs('solo'), bigram_pairs(''), " +
         "bigram_pairs(CAST(NULL AS STRING))").head

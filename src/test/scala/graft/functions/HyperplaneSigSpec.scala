@@ -36,7 +36,6 @@ class HyperplaneSigSpec extends AnyFunSuite {
   }
 
   test("matches the composed 64-fold portable form on a corpus sample") {
-    HyperplaneSig.ensureRegistered(spark)
     // 64 interpreted HOF folds are slow — a 40-row sample is plenty to
     // pin the arithmetic (every plane constant participates in each row)
     val sample = base.limit(40)
@@ -49,7 +48,6 @@ class HyperplaneSigSpec extends AnyFunSuite {
   }
 
   test("hi window == the HiOffset planes of the same composed form") {
-    HyperplaneSig.ensureRegistered(spark)
     val sample = base.limit(12)
     val portableHi = (0 until 64).map(j =>
       when(planeDot(HyperplaneSig.HiOffset + j) > 0, lit(1L << j))
@@ -106,7 +104,6 @@ class HyperplaneSigSpec extends AnyFunSuite {
   }
 
   test("null elements and empty vectors yield signature 0") {
-    HyperplaneSig.ensureRegistered(spark)
     val df = Seq(
       (1L, Seq[Option[Double]](Some(1.0), None, Some(2.0))),
       (2L, Seq.empty[Option[Double]])

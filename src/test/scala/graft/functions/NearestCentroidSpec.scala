@@ -33,7 +33,6 @@ class NearestCentroidSpec extends AnyFunSuite {
 
   test("interpreted eval equals codegen eval") {
     val (base, cents) = baseAndCents
-    NearestCentroid.ensureRegistered(spark)
     val head = cents.orderBy("cent_id").collect()
     val ids = head.map(_.getLong(0)).toIndexedSeq
     val flat = head.flatMap(_.getSeq[Double](1)).toIndexedSeq
@@ -66,7 +65,6 @@ class NearestCentroidSpec extends AnyFunSuite {
     val flat = IndexedSeq(1.0, 0.0, 0.0, 1.0) // dim 2
     val norms = IndexedSeq(1.0, 1.0)
     import spark.implicits._
-    NearestCentroid.ensureRegistered(spark)
     val df = Seq((1L, Array(1.0, 0.0)), (2L, Array(0.3, 0.9, 0.5)))
       .toDF("id", "v")
       .select(col("id"), NearestCentroid(col("v"), lit(1.0), ids, flat, norms).as("cell"))
@@ -111,7 +109,6 @@ class NearestCentroidSpec extends AnyFunSuite {
 
   test("strict-improvement scan keeps the lowest cent_id among exact ties") {
     import spark.implicits._
-    NearestCentroid.ensureRegistered(spark)
     // centroids 5 and 9 are identical: every vector ties — 5 must win
     val ids = IndexedSeq(5L, 9L)
     val flat = IndexedSeq(1.0, 1.0, 1.0, 1.0)

@@ -49,8 +49,6 @@ class NearestResidualSpec extends AnyFunSuite {
 
   test("codegen eval equals a driver-side brute-force twin on every row") {
     val (base, rows, ids1, flat1, norms1, ids2, flat2, dim, cell1Of) = fixture
-    NearestResidual.ensureRegistered(spark)
-    NearestCentroid.ensureRegistered(spark)
     val viaCodegen = base
       .withColumn("cell1",
         NearestCentroid(col("vecd"), col("norm"), ids1, flat1, norms1))
@@ -76,8 +74,6 @@ class NearestResidualSpec extends AnyFunSuite {
 
   test("interpreted eval equals codegen eval") {
     val (base, rows, ids1, flat1, norms1, ids2, flat2, _, cell1Of) = fixture
-    NearestResidual.ensureRegistered(spark)
-    NearestCentroid.ensureRegistered(spark)
     val viaCodegen = base
       .withColumn("cell1",
         NearestCentroid(col("vecd"), col("norm"), ids1, flat1, norms1))
@@ -102,7 +98,6 @@ class NearestResidualSpec extends AnyFunSuite {
 
   test("malformed rows get NULL: wrong dimension, null element, unknown cell1") {
     import spark.implicits._
-    NearestResidual.ensureRegistered(spark)
     val ids1 = IndexedSeq(10L, 20L)
     val flat1 = IndexedSeq(1.0, 0.0, 0.0, 1.0) // dim 2
     val ids2 = IndexedSeq(3L, 4L)
@@ -127,7 +122,6 @@ class NearestResidualSpec extends AnyFunSuite {
 
   test("strict-improvement scan keeps the lowest cent2_id among exact ties") {
     import spark.implicits._
-    NearestResidual.ensureRegistered(spark)
     val ids1 = IndexedSeq(0L)
     val flat1 = IndexedSeq(0.0, 0.0)
     // codebook entries 7 and 9 identical: every residual ties — 7 wins
@@ -160,7 +154,6 @@ class NearestResidualSpec extends AnyFunSuite {
     }
     // the registry builder enforces sorted level-1 ids (binary-searched)
     import spark.implicits._
-    NearestResidual.ensureRegistered(spark)
     val err = intercept[Exception] {
       Seq((1L, Seq(1.0), 2L)).toDF("id", "v", "c1")
         .select(NearestResidual(col("v"), col("c1"),

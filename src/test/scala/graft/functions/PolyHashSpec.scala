@@ -12,7 +12,6 @@ class PolyHashSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("matches DuckDB-validated constants") {
-    PolyHash.ensureRegistered(spark)
     val got = Seq("hash", "the", "a", "merge table", "")
       .toDF("t").select(PolyHash(col("t"))).collect().map(_.getLong(0))
     assert(got.toSeq == Seq(3195150L, 114801L, 97L, 922445077L, 0L))
@@ -28,13 +27,12 @@ class PolyHashSpec extends AnyFunSuite {
   }
 
   test("null input yields null, SQL registration works") {
-    PolyHash.ensureRegistered(spark)
+    register(spark)
     val r = spark.sql("SELECT polyhash(CAST(NULL AS STRING)), polyhash('a')").head
     assert(r.isNullAt(0) && r.getLong(1) == 97L)
   }
 
   test("newlines are hashed (parity with the (?s) oracle regex)") {
-    PolyHash.ensureRegistered(spark)
     val got = Seq("a\nb").toDF("t")
       .select(PolyHash(col("t")).as("a"),
         TextAnalysis.strHashPortable(col("t")).as("b")).head
@@ -44,7 +42,6 @@ class PolyHashSpec extends AnyFunSuite {
   }
 
   test("non-ASCII code points match the unicode() semantics") {
-    PolyHash.ensureRegistered(spark)
     // '中' = U+4E2D (20013): hash = ((0*31+20013) % P)
     val got = Seq("中").toDF("t").select(PolyHash(col("t"))).head.getLong(0)
     assert(got == 20013L)
@@ -63,7 +60,6 @@ class PolyHashSpec extends AnyFunSuite {
   }
 
   test("wide expression agrees with the portable composed fold on corpus grams") {
-    WidePolyHash.ensureRegistered(spark)
     val grams = graft.operators.Dedup.shingles(
       Tables.documents(spark, "/root/testdata/sf0.001"), "doc_id", "text")
     val diff = grams
@@ -74,7 +70,7 @@ class PolyHashSpec extends AnyFunSuite {
   }
 
   test("wide null input yields null, SQL registration works, 62-bit range") {
-    WidePolyHash.ensureRegistered(spark)
+    register(spark)
     val r = spark.sql(
       "SELECT wide_polyhash(CAST(NULL AS STRING)), wide_polyhash('a')").head
     assert(r.isNullAt(0))

@@ -12,7 +12,6 @@ class RepetitionStatsSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("matches the explode/groupBy twin on the real corpus") {
-    RepetitionStats.ensureRegistered(spark)
     val rs = RepetitionStats(col("text"))
     val docs = Tables.documents(spark, "/root/testdata/sf0.001")
     val mine = docs.select(col("doc_id"),
@@ -39,7 +38,6 @@ class RepetitionStatsSpec extends AnyFunSuite {
   }
 
   test("edge cases: empty, short and repetitive strings") {
-    RepetitionStats.ensureRegistered(spark)
     val rows = Seq("", "   ", "ab", "a a a a", "x y x y x").toDF("t")
       .select(RepetitionStats(col("t")).as("r"))
       .select(col("r.n_bigrams"), col("r.top_bigram_n"),

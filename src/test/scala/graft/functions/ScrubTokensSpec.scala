@@ -12,7 +12,6 @@ class ScrubTokensSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("matches the filter/exists/transform twin on constructed intervals") {
-    ScrubTokens.ensureRegistered(spark)
     val rows = Seq(
       ("t1 t2 t3 t4 t5 t6 t7 t8", Seq(2, 6), Seq(3, 7)), // two islands
       ("a b c", Seq(1), Seq(3)),                         // full cover

@@ -11,8 +11,6 @@ class TokenStatsSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def ensure(): Unit = {
-    TokenStats.ensureRegistered(spark)
-    StopHits.ensureRegistered(spark)
   }
 
   test("matches size/aggregate/filter formulations on the real corpus") {

@@ -20,8 +20,6 @@ class WindowHashesSpec extends AnyFunSuite {
   }
 
   test("bitwise parity with the built-ins twin on real corpus text") {
-    PolyHash.ensureRegistered(spark)
-    WindowHashes.ensureRegistered(spark)
     for (l <- Seq(1, 3, 8)) {
       val diff = Tables.documents(spark, "/root/testdata/sf0.001")
         .select(WindowHashes(col("text"), l).as("a"), hofTwin(l).as("b"))
@@ -40,7 +38,7 @@ class WindowHashesSpec extends AnyFunSuite {
   }
 
   test("short documents yield an empty array; null stays null; width checked") {
-    WindowHashes.ensureRegistered(spark)
+    register(spark)
     val r = spark.sql(
       "SELECT window_hashes('a b', 3), window_hashes(CAST(NULL AS STRING), 3)")
       .head
@@ -84,8 +82,6 @@ class WindowHashesSpec extends AnyFunSuite {
 
   test("wide expression matches the 31-bit expression's keys on real " +
       "corpus text (quotient part), codegen path") {
-    WindowHashes.ensureRegistered(spark)
-    WideWindowHashes.ensureRegistered(spark)
     val p = TextAnalysis.P
     for (l <- Seq(1, 8)) {
       val diff = Tables.documents(spark, "/root/testdata/sf0.001")
@@ -100,7 +96,7 @@ class WindowHashesSpec extends AnyFunSuite {
   }
 
   test("wide key edge semantics mirror the narrow expression") {
-    WideWindowHashes.ensureRegistered(spark)
+    register(spark)
     val r = spark.sql(
       "SELECT wide_window_hashes('a b', 3), " +
       "wide_window_hashes(CAST(NULL AS STRING), 3)").head

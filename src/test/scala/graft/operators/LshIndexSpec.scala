@@ -16,7 +16,6 @@ class LshIndexSpec extends AnyFunSuite {
   private val dirData = "/root/testdata/sf0.001"
 
   test("driver bucket twin matches the in-scan expression on every row") {
-    graft.functions.HyperplaneBucket.ensureRegistered(spark)
     val emb = Tables.embeddings(spark, dirData)
     val rows = emb
       .select(col("vec_id"), Similarity.vecD(col("embedding")).as("vecd"))

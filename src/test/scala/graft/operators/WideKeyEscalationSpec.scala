@@ -17,7 +17,6 @@ class WideKeyEscalationSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   test("third_polyhash == composed mult-41 fold; independent of h62") {
-    ThirdPolyHash.ensureRegistered(spark)
     val samples = Seq("", "a", "hello world", "foo bar\n", "中Ωλß é",
       "x" * 300, "a b  c\td", "😀 mixed 😀")
     samples.foreach { s =>
@@ -38,7 +37,6 @@ class WideKeyEscalationSpec extends AnyFunSuite {
   }
 
   test("third_window_hashes == per-window ThirdPolyHash of joined slices") {
-    ThirdWindowHashes.ensureRegistered(spark)
     val texts = Seq("one two three four five six", "a b", "", "x y z\n")
     texts.foreach { t =>
       val toks = TextAnalysis.jvmTokens(t)

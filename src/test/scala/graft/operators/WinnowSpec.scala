@@ -321,8 +321,6 @@ class WinnowSpec extends AnyFunSuite {
     // MIN + count, full-window/short-doc filter, distinct
     import graft.functions.TextAnalysis.{tokens, strHash, wideStrHash}
     import org.apache.spark.sql.expressions.Window
-    graft.functions.PolyHash.ensureRegistered(spark)
-    graft.functions.WidePolyHash.ensureRegistered(spark)
     def legacy(docs: org.apache.spark.sql.DataFrame, idCol: String,
                textCol: String, k: Int, w: Int,
                wide: Boolean): org.apache.spark.sql.DataFrame = {

@@ -46,7 +46,6 @@ class StreamCurationSpec extends AnyFunSuite {
 
     // near-dup contract: no surviving LSH-verified pair at the claim tier's
     // banding (any shared band bucket between two survivors)
-    graft.functions.MinHashSig.ensureRegistered(spark)
     val bands = union
       .select(col("doc_id"), graft.functions.MinHashSig(col("text")).as("sig"))
       .filter(col("sig").isNotNull)
@@ -65,7 +64,6 @@ class StreamCurationSpec extends AnyFunSuite {
     assert(stillFlagged.isEmpty, "a survivor still overlaps the eval set")
 
     // quality contract: no repetitive survivor
-    graft.functions.RepetitionStats.ensureRegistered(spark)
     val rs = graft.functions.RepetitionStats(col("text"))
     val rep = union.withColumn("_rs", rs)
       .filter(graft.functions.RepetitionStats.repetitiveFlag(

@@ -64,7 +64,6 @@ class StreamSplitSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.{col, lit}
     // choose valMilli so rep 3 and rep 10 land in DIFFERENT splits: the
     // divergence must be observable, not hash-coincidentally hidden
-    graft.functions.PolyHash.ensureRegistered(spark)
     val hs = Seq("3", "10").toDF("s")
       .select(graft.functions.TextAnalysis.strHash(col("s")) % 1000)
       .collect().map(_.getLong(0))
